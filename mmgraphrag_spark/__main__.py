@@ -33,8 +33,8 @@ def _local_query(spark, work_dir: str, query: str) -> dict:
     seeds = query_ctx.seed_entities(nodes, edges, query, k)
     ctx_edges = query_ctx.context_edges(nodes, edges, query, k, budget)
     ctx_chunks = query_ctx.context_chunks(nodes, edges, chunks, query, k)
-    ents_csv, _, _ = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, chunks)
-    context = query_ctx.render_context(seeds, ctx_edges, ctx_chunks, chunks)
+    blocks = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, chunks)
+    ents_csv, context = blocks[0], query_ctx.wrap_context(blocks)
     med = media.media_spans(spark.read.parquet(f"{work_dir}/spans"))
     ents = answer.mm_entities_from_context(ents_csv)
     info = answer.media_info_for(med, ents)

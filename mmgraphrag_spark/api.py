@@ -115,17 +115,23 @@ def all_triples(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
 
 
 def nodes(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    # memoized+persisted like the spans/chunks/parsed prefixes: ~15 of the
-    # driver's queries consume the node relation (qctx family, vdb, fused
-    # variants) — one aggregation instead of one per query, and downstream
-    # plans reference an InMemoryRelation instead of inlining this subtree
-    return _memo("nodes", spark, sf_dir, cfg,
-                 lambda: canon.build_nodes(all_mentions(spark, sf_dir, cfg), cfg=cfg))
+    """Pre-stub nodes with the stored ``degree`` (the pipeline's nodes_base).
+
+    Memoized+persisted like the spans/chunks/parsed prefixes: ~15 of the
+    driver's queries consume the node relation (qctx family, vdb, fused
+    variants) — one aggregation instead of one per query, and downstream
+    plans reference an InMemoryRelation instead of inlining this subtree."""
+    return _memo("nodes", spark, sf_dir, cfg, lambda: canon.with_degree(
+        canon.build_nodes(all_mentions(spark, sf_dir, cfg), cfg=cfg),
+        edges(spark, sf_dir, cfg),
+    ))
 
 
 def edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return _memo("edges", spark, sf_dir, cfg,
-                 lambda: canon.build_edges(all_triples(spark, sf_dir, cfg), cfg=cfg))
+    """Edges with the stored ``edge_rank`` (the pipeline's edges)."""
+    return _memo("edges", spark, sf_dir, cfg, lambda: canon.with_edge_rank(
+        canon.build_edges(all_triples(spark, sf_dir, cfg), cfg=cfg)
+    ))
 
 
 def fusion_blocks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -511,8 +517,8 @@ def local_answer_prompts(
     ctx_edges = query_ctx.context_edges(n, e, q, cfg.qctx_k, cfg.qctx_token_budget)
     ch = chunks(spark, sf_dir, cfg)
     ctx_chunks = query_ctx.context_chunks(n, e, ch, q, cfg.qctx_k)
-    ents_csv, _, _ = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, ch)
-    context = query_ctx.render_context(seeds, ctx_edges, ctx_chunks, ch)
+    blocks = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, ch)
+    ents_csv, context = blocks[0], query_ctx.wrap_context(blocks)
     # media info for the mm prompts: scrape the ≤NUM_MM_ENTITIES ORI_IMG
     # names from the entities CSV FIRST, then filter the media table to
     # exactly those names before the (bounded) collect

@@ -12,6 +12,10 @@ Reference semantics (/root/reference/mmgraphrag/text2graph.py:136-272):
   (default 1), description/source_id as above.
 * stub rule: edge endpoints missing from nodes get an '"UNKNOWN"'-typed node
   carrying the edge's source_id/description (text2graph.py:252-261).
+* stored ranks: the graph stage adds ``degree`` to nodes and ``edge_rank``
+  (deg(src)+deg(dst)) to edges (A5, :func:`with_degree` /
+  :func:`with_edge_rank`), a build-time materialized view the query path
+  reads instead of re-aggregating the edge list per request.
 
 Scale notes: one hash-shuffle each on entity_name / (subj,obj); all aggregates
 (count, sum, min, collect_set) have map-side partial aggregation, so hub
@@ -28,6 +32,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..config import GRAPH_FIELD_SEP, PipelineConfig
 
 _SEP = GRAPH_FIELD_SEP
+
+# the merged columns, without the stored ranks (degree / edge_rank)
+NODE_COLS = ["entity_name", "entity_type", "description", "source_id"]
+EDGE_COLS = ["src", "dst", "weight", "description", "source_id", "order"]
 
 
 def summarize_description(col: Column, cfg: PipelineConfig) -> Column:
@@ -223,6 +231,9 @@ def add_stub_nodes(
 
     Missing endpoints become UNKNOWN-typed nodes carrying the edge's
     description/source_id (first edge by (src,dst) order for determinism).
+    When ``nodes`` carries the stored ``degree`` column (:func:`with_degree`),
+    each stub gets its degree from the same aggregate: the endpoint rows
+    grouped per missing name are exactly that name's incident edges.
     """
     g = list(group_cols or [])
     keys = g + ["entity_name"]
@@ -236,21 +247,57 @@ def add_stub_nodes(
     missing = (
         endpoints.join(nodes.select(*keys), keys, "left_anti")
         .groupBy(*keys)
-        .agg(F.min(F.struct("description", "source_id")).alias("s"))
+        .agg(
+            F.min(F.struct("description", "source_id")).alias("s"),
+            F.count(F.lit(1)).alias("degree"),
+        )
         .select(
             *keys,
             F.lit("UNKNOWN").alias("entity_type"),
             F.col("s.description").alias("description"),
             F.col("s.source_id").alias("source_id"),
+            "degree",
         )
     )
-    return nodes.unionByName(missing.select(*keys, "entity_type", "description", "source_id"))
+    return nodes.unionByName(missing.select(*nodes.columns))
 
 
 def degrees(edges: DataFrame) -> DataFrame:
-    """A5: node degree from the undirected edge list."""
+    """A5: node degree from the undirected edge list — the build-time
+    producer of the stored ``degree``/``edge_rank`` columns below."""
     return (
         edges.select(F.explode(F.array("src", "dst")).alias("entity_name"))
         .groupBy("entity_name")
         .agg(F.count(F.lit(1)).alias("degree"))
+    )
+
+
+def with_degree(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """``nodes`` plus ``degree`` (bigint): the A5 degree over ``edges``, 0 for
+    a node no edge touches. Stored at build time so the query path ranks
+    seeds by a column instead of re-aggregating the edge list per request
+    (the reference's O(1) NetworkX node_degree, query.py:327-340)."""
+    return nodes.join(degrees(edges), "entity_name", "left").withColumn(
+        "degree", F.coalesce("degree", F.lit(0)).cast("long")
+    )
+
+
+def with_edge_rank(edges: DataFrame) -> DataFrame:
+    """``edges`` plus ``edge_rank`` (bigint) = deg(src) + deg(dst), the
+    reference's edge ordering key (storage.py:454-461, query.py:190-198).
+    Every endpoint has degree >= 1, so the inner joins keep every edge. The
+    degree table is one row per entity: it joins as a broadcast while it fits
+    the broadcast threshold (AQE decides from its runtime size), so the edge
+    payload is not re-shuffled."""
+    deg = degrees(edges)
+    return (
+        edges.join(
+            deg.select(F.col("entity_name").alias("src"), F.col("degree").alias("_ds")),
+            "src",
+        )
+        .join(
+            deg.select(F.col("entity_name").alias("dst"), F.col("degree").alias("_dd")),
+            "dst",
+        )
+        .select(*edges.columns, (F.col("_ds") + F.col("_dd")).cast("long").alias("edge_rank"))
     )

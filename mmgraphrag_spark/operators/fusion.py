@@ -677,7 +677,8 @@ def fuse_edges_incremental(
     (fusion.py:707-807), which likewise never revisits untouched nodes.
     """
     d = F.broadcast(dirty_names(mm))
-    cold = edges.join(
+    # the stored edge_rank is not carried: fusion changes the degrees
+    cold = edges.select(*canon.EDGE_COLS).join(
         d, F.col("src") == F.col("dirty_name"), "left_anti"
     ).join(d, F.col("dst") == F.col("dirty_name"), "left_anti")
     t2 = _rewire_triples(all_triples, mm)
@@ -707,7 +708,10 @@ def fuse_nodes_incremental(
     incremental output), never passed through.
     """
     d = F.broadcast(dirty_names(mm))
-    cold = nodes_base.join(d, F.col("entity_name") == F.col("dirty_name"), "left_anti")
+    # as in fuse_edges_incremental: a stored degree is not carried
+    cold = nodes_base.select(*canon.NODE_COLS).join(
+        d, F.col("entity_name") == F.col("dirty_name"), "left_anti"
+    )
     m2 = apply_merge_map(all_mentions, mm, ["entity_name"])
     hot = m2.join(d, F.col("entity_name") == F.col("dirty_name"), "left_semi")
     return cold.unionByName(canon.build_nodes(hot, cfg=cfg))

@@ -8,23 +8,34 @@
   count + row_number, the scalable form of the same argmax).
 
 * context assembly — the reference's local query path
-  (/root/reference/mmgraphrag/query.py:313-469): seed entities from the query
-  (T1; the vector top-k is swapped for deterministic token-match seeding so
-  the oracle can replicate it — ann_topk covers the vector path separately),
-  join node attrs + degrees (J7/A5), expand one hop (J8/U4), rank edges by
-  (degree-rank desc, weight desc) (T2), truncate to a token budget with a
-  running-sum window (T4, reference truncate_list_by_token_size
-  base.py:187-214).
+  (/root/reference/mmgraphrag/query.py:313-469) over the graph's stored
+  ranks: the graph stage writes ``nodes.degree`` and ``edges.edge_rank`` =
+  deg(src)+deg(dst) (A5, canonicalize.with_degree / with_edge_rank), the
+  O(1) node_degree of the reference's NetworkX graph. Seeds are the
+  query-named nodes, top-k by (degree desc, name asc) (T1/J7; the vector
+  top-k is swapped for deterministic token-match seeding so the oracle can
+  replicate it — seed_entities_vdb covers the vector path). Their one-hop
+  edges are a semi-join of ``edges`` against the broadcast seeds (J8/U4),
+  ranked by (edge_rank desc, weight desc) (T2); their source chunks are
+  ranked by (chunk_order_index asc, citing one-hop edges desc) (T3). Edges
+  and chunks are truncated to a token budget with a running-sum window (T4,
+  reference truncate_list_by_token_size base.py:187-214).
 
-All pure column ops; the only shuffles are the two groupBys and the seed
-join (broadcast — seeds are tiny).
+A request runs no aggregate over the graph. Spark plans the seed rank as a
+TakeOrderedAndProject, whose top-k merge runs inside the consuming job; the
+exchanges are the seeds' broadcast (shared by the edge and chunk steps), the
+broadcast of the seeds' chunk ids, one single-partition exchange under each
+budget window (inputs bounded by the query) and the broadcast joining the
+kept chunks to their content. :func:`context_blocks` renders all three CSV
+blocks from one collect: 7 Spark jobs, 8 with the answer chain's media
+lookup (tests/test_query_multimodal.py pins at most 10).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .canonicalize import degrees
+from ..config import GRAPH_FIELD_SEP
 
 
 def media_chunk_match(media: DataFrame, chunks: DataFrame) -> DataFrame:
@@ -55,68 +66,67 @@ def media_chunk_match(media: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-def seed_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) -> DataFrame:
-    """T1/J7: top-k seed entities for a query string — entities named by a
-    query token, ranked by (degree desc, name asc)."""
+def _edge_order() -> list[Column]:
+    """T2: the ranking of the context edges (degree or PPR edge_rank)."""
+    return [F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")]
+
+
+def _seed_nodes(nodes: DataFrame, query: str, k: int) -> DataFrame:
+    """The top-k query-named nodes by (degree desc, entity_name asc), every
+    node column plus ``rnk``."""
     toks = [t.upper() for t in query.split() if t]
-    deg = degrees(edges)
-    cand = nodes.filter(F.col("entity_name").isin(toks)).join(deg, "entity_name", "left")
     # unpartitioned window is deliberate and SAFE here (and in the other
     # qctx ranking/budget windows): its input is already filtered to the
     # per-query candidate set — bounded by the query's token count / seed
     # fan-out, never corpus-sized. Do NOT lift this pattern onto a big
-    # relation; use the TakeOrdered/partitioned-window shapes instead.
-    w = Window.orderBy(F.desc(F.coalesce("degree", F.lit(0))), F.asc("entity_name"))
+    # relation. (Spark plans this rank <= k filter as a
+    # TakeOrderedAndProject: no query stage of its own.)
+    w = Window.orderBy(F.desc("degree"), F.asc("entity_name"))
     return (
-        cand.withColumn("rnk", F.row_number().over(w))
+        nodes.filter(F.col("entity_name").isin(toks))
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
-        .select(
-            "entity_name", "entity_type",
-            F.coalesce("degree", F.lit(0)).cast("long").alias("degree"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
     )
+
+
+def _touching(edges: DataFrame, seeds: DataFrame) -> DataFrame:
+    """J8: the edges with an endpoint among ``seeds`` (broadcast: seeds are
+    at most k rows)."""
+    s = F.broadcast(seeds.select("entity_name"))
+    return edges.join(
+        s, (edges["src"] == s["entity_name"]) | (edges["dst"] == s["entity_name"]),
+        "left_semi",
+    )
+
+
+def _within_budget(df: DataFrame, order: list[Column], cost: Column, budget: int) -> DataFrame:
+    """T4: ``df`` plus ``running_tokens`` (the running sum of ``cost`` in
+    ``order``), cut where it passes ``budget``."""
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
+    return df.withColumn("running_tokens", F.sum(cost).over(w).cast("long")).filter(
+        F.col("running_tokens") <= budget
+    )
+
+
+def seed_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) -> DataFrame:
+    """T1/J7: top-k seed entities for a query string — entities named by a
+    query token, ranked by (degree desc, name asc). The degree is the one
+    stored on ``nodes``; ``edges`` is not read (the context steps share one
+    signature)."""
+    return _seed_nodes(nodes, query, k).select("entity_name", "entity_type", "degree", "rnk")
 
 
 def context_edges(
     nodes: DataFrame, edges: DataFrame, query: str,
     k: int = 5, token_budget: int = 4000,
 ) -> DataFrame:
-    """J8 + T2 + T4: one-hop edges of the seeds, ranked by
-    (deg(src)+deg(dst) desc, weight desc), truncated to a running
-    description-length budget."""
-    seeds = seed_entities(nodes, edges, query, k).select("entity_name")
-    touching = edges.join(
-        F.broadcast(seeds),
-        (edges["src"] == seeds["entity_name"]) | (edges["dst"] == seeds["entity_name"]),
-        "left_semi",
-    )
-    deg = degrees(edges)
-    ranked = (
-        touching.join(
-            deg.select(F.col("entity_name").alias("src"), F.col("degree").alias("ds")), "src"
-        )
-        .join(
-            deg.select(F.col("entity_name").alias("dst"), F.col("degree").alias("dd")), "dst"
-        )
-        .withColumn("edge_rank", (F.col("ds") + F.col("dd")).cast("long"))
-    )
-    w = Window.orderBy(
-        F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")
-    )
-    return (
-        ranked.withColumn(
-            "running_tokens",
-            F.sum(F.length("description")).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .filter(F.col("running_tokens") <= token_budget)
-        .select(
-            "src", "dst", "weight", "description", "edge_rank",
-            F.col("running_tokens").cast("long").alias("running_tokens"),
-        )
-    )
+    """J8 + T2 + T4: one-hop edges of the seeds, ranked by the stored
+    edge_rank = deg(src)+deg(dst) desc, then weight desc, truncated to a
+    running description-length budget."""
+    touching = _touching(edges, seed_entities(nodes, edges, query, k))
+    return _within_budget(
+        touching, _edge_order(), F.length("description"), token_budget
+    ).select("src", "dst", "weight", "description", "edge_rank", "running_tokens")
 
 
 def context_edges_ppr(
@@ -136,13 +146,9 @@ def context_edges_ppr(
 
     seeds = seed_entities(nodes, edges, query, k).select("entity_name")
     ppr = personalized_pagerank(nodes, edges, seeds)
-    touching = edges.join(
-        F.broadcast(seeds),
-        (edges["src"] == seeds["entity_name"]) | (edges["dst"] == seeds["entity_name"]),
-        "left_semi",
-    )
     ranked = (
-        touching.join(
+        _touching(edges, seeds).drop("edge_rank")
+        .join(
             ppr.select(F.col("entity_name").alias("src"),
                        F.col("rank_scaled").alias("ps")), "src"
         )
@@ -152,24 +158,9 @@ def context_edges_ppr(
         )
         .withColumn("edge_rank", (F.col("ps") + F.col("pd")).cast("long"))
     )
-    # bounded candidate set (seed one-hop) — see seed_entities on why the
-    # unpartitioned window is safe here
-    w = Window.orderBy(
-        F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")
-    )
-    return (
-        ranked.withColumn(
-            "running_tokens",
-            F.sum(F.length("description")).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-        .filter(F.col("running_tokens") <= token_budget)
-        .select(
-            "src", "dst", "weight", "description", "edge_rank",
-            F.col("running_tokens").cast("long").alias("running_tokens"),
-        )
-    )
+    return _within_budget(
+        ranked, _edge_order(), F.length("description"), token_budget
+    ).select("src", "dst", "weight", "description", "edge_rank", "running_tokens")
 
 
 def context_chunks(
@@ -180,45 +171,32 @@ def context_chunks(
     ranked by (chunk_order_index asc, relation_counts desc) where
     relation_counts = number of context edges citing the chunk (reference
     query.py:121-152), truncated to a running token budget."""
-    seeds = seed_entities(nodes, edges, query, k).select("entity_name")
-    seed_nodes = nodes.join(F.broadcast(seeds), "entity_name", "left_semi")
-    seed_chunks = (
-        seed_nodes.select(
-            F.explode(F.split("source_id", "<SEP>")).alias("chunk_id")
-        )
-        .filter(F.col("chunk_id").startswith("chunk-"))  # P10
-        .distinct()
+    seeds = _seed_nodes(nodes, query, k)
+    seed_chunks = seeds.select(
+        F.explode(F.split("source_id", GRAPH_FIELD_SEP)).alias("chunk_id")
+    ).filter(F.col("chunk_id").startswith("chunk-"))  # P10
+    picked = chunks.join(F.broadcast(seed_chunks), "chunk_id", "left_semi")
+    cites = _touching(edges, seeds).select(
+        F.explode(F.split("source_id", GRAPH_FIELD_SEP)).alias("chunk_id")
     )
-    touching = edges.join(
-        F.broadcast(seeds),
-        (edges["src"] == seeds["entity_name"]) | (edges["dst"] == seeds["entity_name"]),
-        "left_semi",
+    # the seeds' chunks and their one-hop edges' chunk citations, both
+    # bounded by the query, meet in ONE partition: the citation count (a
+    # window per chunk) and the budget window then need no further exchange
+    rows = (
+        picked.select("chunk_id", "doc_id", "chunk_order_index", "tokens",
+                      F.lit(0).alias("cite"))
+        .unionByName(cites.select("chunk_id", F.lit(1).alias("cite")),
+                     allowMissingColumns=True)
+        .repartition(1)
     )
-    edge_cites = (
-        touching.select(F.explode(F.split("source_id", "<SEP>")).alias("chunk_id"))
-        .groupBy("chunk_id")
-        .agg(F.count(F.lit(1)).alias("relation_counts"))
-    )
-    ranked = (
-        seed_chunks.join(chunks, "chunk_id")
-        .join(edge_cites, "chunk_id", "left")
-        .withColumn("relation_counts", F.coalesce("relation_counts", F.lit(0)).cast("long"))
-    )
-    w = Window.orderBy(
-        F.asc("chunk_order_index"), F.desc("relation_counts"), F.asc("chunk_id")
-    )
-    return (
-        ranked.withColumn(
-            "running_tokens",
-            F.sum("tokens").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .filter(F.col("running_tokens") <= token_budget)
-        .select(
-            "chunk_id", "doc_id", "chunk_order_index",
-            F.col("tokens").cast("long").alias("tokens"),
-            "relation_counts",
-            F.col("running_tokens").cast("long").alias("running_tokens"),
-        )
+    ranked = rows.withColumn(
+        "relation_counts", F.sum("cite").over(Window.partitionBy("chunk_id")).cast("long")
+    ).filter(F.col("cite") == 0)
+    order = [F.asc("chunk_order_index"), F.desc("relation_counts"), F.asc("chunk_id")]
+    return _within_budget(ranked, order, F.col("tokens"), token_budget).select(
+        "chunk_id", "doc_id", "chunk_order_index",
+        F.col("tokens").cast("long").alias("tokens"),
+        "relation_counts", "running_tokens",
     )
 
 
@@ -236,12 +214,7 @@ def top_media_entities(nodes: DataFrame, n: int = 3) -> DataFrame:
 
 def one_hop_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) -> DataFrame:
     """J8/U2: distinct neighbor set of the seeds (incl. the seeds)."""
-    seeds = seed_entities(nodes, edges, query, k).select("entity_name")
-    touching = edges.join(
-        F.broadcast(seeds),
-        (edges["src"] == seeds["entity_name"]) | (edges["dst"] == seeds["entity_name"]),
-        "left_semi",
-    )
+    touching = _touching(edges, seed_entities(nodes, edges, query, k))
     hop = touching.select(F.explode(F.array("src", "dst")).alias("entity_name")).distinct()
     return hop.join(nodes, "entity_name").select(
         "entity_name", "entity_type"
@@ -254,23 +227,17 @@ def seed_entities_vdb(
 ) -> DataFrame:
     """J7 via the entity VDB (the reference's actual seeding path,
     query.py:327-340: entities_vdb.query(top_k) -> get_node + node_degree):
-    thresholded vector top-k over name+description embeddings, then node
-    attrs + degree join. rnk = the VDB ranking (not the degree re-sort; the
-    reference keeps vdb order for node_datas)."""
+    thresholded vector top-k over name+description embeddings, then the
+    node attrs and stored degree. rnk = the VDB ranking (not the degree
+    re-sort; the reference keeps vdb order for node_datas). ``edges`` is not
+    read, as in :func:`seed_entities`."""
     from ..config import DEFAULT
     from .entity_vdb import entity_vdb_topk
 
     hits = entity_vdb_topk(nodes, query, k=k, threshold=threshold, cfg=cfg or DEFAULT)
-    deg = degrees(edges)
-    return (
-        hits.join(nodes.select("entity_name", "entity_type"), "entity_name")
-        .join(deg, "entity_name", "left")
-        .select(
-            "entity_name", "entity_type",
-            F.coalesce("degree", F.lit(0)).cast("long").alias("degree"),
-            F.col("rnk").cast("long").alias("rnk"),
-        )
-    )
+    return hits.join(
+        nodes.select("entity_name", "entity_type", "degree"), "entity_name"
+    ).select("entity_name", "entity_type", "degree", F.col("rnk").cast("long").alias("rnk"))
 
 
 # ---------------------------------------------------------------------------
@@ -304,20 +271,24 @@ CONTEXT_WRAPPER = (
 )
 
 
+def wrap_context(blocks: tuple[str, str, str]) -> str:
+    """The (entities, relationships, sources) CSV blocks in the reference's
+    section layout (CONTEXT_WRAPPER)."""
+    w1, w2, w3, w4 = CONTEXT_WRAPPER
+    e, r, t = blocks
+    return f"{w1}{e}{w2}{r}{w3}{t}{w4}"
+
+
 def render_context(
     seeds: DataFrame, edges: DataFrame, chunks: DataFrame, chunk_table: DataFrame
 ) -> str:
     """T-group context assembly (reference query.py:263-311): three CSV
     blocks — entities (id, entity, type, description, rank), relationships
     (id, source, target, description, weight, rank), sources (id, content) —
-    wrapped in the reference's exact section layout.
-
-    Driver-side by design: the inputs are already budget-truncated context
-    sets (tens of rows); this is the serialization boundary, not a bulk
-    operator."""
-    e, r, t = context_blocks(seeds, edges, chunks, chunk_table)
-    w1, w2, w3, w4 = CONTEXT_WRAPPER
-    return f"{w1}{e}{w2}{r}{w3}{t}{w4}"
+    wrapped in the reference's exact section layout. A caller that also
+    needs the blocks calls :func:`context_blocks` and :func:`wrap_context`,
+    so the context is computed once."""
+    return wrap_context(context_blocks(seeds, edges, chunks, chunk_table))
 
 
 def context_blocks(
@@ -325,28 +296,45 @@ def context_blocks(
 ) -> tuple[str, str, str]:
     """The three CSV blocks (entities, relationships, sources) separately —
     the answer-prompt assembler scrapes ORI_IMG rows from the entities block
-    exactly like the reference does (query.py:414-421)."""
+    exactly like the reference does (query.py:414-421).
+
+    One collect of the three context sets as a tagged union, the chunks
+    joined to their ``content`` on the way (the context chunks broadcast:
+    they are budget-truncated). Driver-side by design: the sets are tens of
+    rows; ordering and CSV rendering are the serialization boundary, not a
+    bulk operator."""
+    text = chunk_table.select("chunk_id", "content").join(F.broadcast(chunks), "chunk_id")
+    rows = (
+        seeds.select(F.lit(0).alias("block"), "rnk", "entity_name", "entity_type", "degree")
+        .unionByName(
+            edges.select(F.lit(1).alias("block"), "src", "dst", "weight",
+                         "description", "edge_rank"),
+            allowMissingColumns=True,
+        )
+        .unionByName(
+            text.select(F.lit(2).alias("block"), "chunk_id", "chunk_order_index",
+                        "relation_counts", "content"),
+            allowMissingColumns=True,
+        )
+        .collect()
+    )
+    by_block: list[list] = [[], [], []]
+    for r in rows:
+        by_block[r.block].append(r)
+    # the orders of seed_entities (rnk), _edge_order and context_chunks;
+    # Python's str order is Spark's (UTF-8 bytes sort in code point order)
+    ents = sorted(by_block[0], key=lambda r: r.rnk)
+    rels = sorted(by_block[1], key=lambda r: (-r.edge_rank, -r.weight, r.src, r.dst))
+    texts = sorted(by_block[2], key=lambda r: (r.chunk_order_index, -r.relation_counts,
+                                                r.chunk_id))
     node_rows = [["id", "entity", "type", "description", "rank"]]
-    for i, r in enumerate(seeds.orderBy("rnk").collect()):
-        node_rows.append([i, r.entity_name, r.entity_type, "UNKNOWN", r.degree])
+    node_rows += [[i, r.entity_name, r.entity_type, "UNKNOWN", r.degree]
+                  for i, r in enumerate(ents)]
     rel_rows = [["id", "source", "target", "description", "weight", "rank"]]
-    ordered_edges = edges.orderBy(
-        F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")
-    )
-    for i, r in enumerate(ordered_edges.collect()):
-        rel_rows.append([i, r.src, r.dst, r.description, r.weight, r.edge_rank])
+    rel_rows += [[i, r.src, r.dst, r.description, r.weight, r.edge_rank]
+                 for i, r in enumerate(rels)]
     text_rows = [["id", "content"]]
-    content = {
-        r.chunk_id: r.content
-        for r in chunk_table.join(
-            chunks.select("chunk_id"), "chunk_id", "left_semi"
-        ).collect()
-    }
-    ordered_chunks = chunks.orderBy(
-        F.asc("chunk_order_index"), F.desc("relation_counts"), F.asc("chunk_id")
-    )
-    for i, r in enumerate(ordered_chunks.collect()):
-        text_rows.append([i, content.get(r.chunk_id, "")])
+    text_rows += [[i, r.content] for i, r in enumerate(texts)]
     return (
         list_of_list_to_csv(node_rows),
         list_of_list_to_csv(rel_rows),

@@ -622,12 +622,32 @@ def triples_select() -> str:
     )
 
 
+# A5 node degree over the edge list: the stored nodes.degree /
+# edges.edge_rank columns (canonicalize.with_degree / with_edge_rank)
+_NODE_DEGREE = """(
+  SELECT entity_name, count(*) AS degree FROM (
+    SELECT src AS entity_name FROM edges
+    UNION ALL SELECT dst AS entity_name FROM edges
+  ) u GROUP BY 1
+)"""
+
+
 def nodes_select() -> str:
-    return "SELECT entity_name, entity_type, description, source_id FROM nodes"
+    return f"""
+SELECT n.entity_name, n.entity_type, n.description, n.source_id,
+       CAST(coalesce(d.degree, 0) AS BIGINT) AS degree
+FROM nodes n LEFT JOIN {_NODE_DEGREE} d USING (entity_name)
+"""
 
 
 def edges_select() -> str:
-    return 'SELECT src, dst, weight, description, source_id, "order" FROM edges'
+    return f"""
+SELECT e.src, e.dst, e.weight, e.description, e.source_id, e."order",
+       CAST(ds.degree + dd.degree AS BIGINT) AS edge_rank
+FROM edges e
+JOIN {_NODE_DEGREE} ds ON ds.entity_name = e.src
+JOIN {_NODE_DEGREE} dd ON dd.entity_name = e.dst
+"""
 
 
 def img_mentions_select() -> str:

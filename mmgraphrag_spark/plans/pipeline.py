@@ -366,7 +366,7 @@ class Pipeline:
             }
 
         def _graph():
-            cols_m = ["entity_name", "entity_type", "description", "source_id"]
+            cols_m = canon.NODE_COLS
             cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
             # spread=False: these reads feed straight into keyed aggregations
             # (build_edges/build_nodes), which re-exchange on their group
@@ -382,24 +382,29 @@ class Pipeline:
                 self.read("triples", spread=False).select(cols_t)
                 .unionByName(self.read("img_triples", spread=False).select(cols_t))
             )
-            # nodes' stub rule consumes edges, so naively the edges
-            # aggregation (the stage's biggest groupBy over the triples
-            # relation) runs in BOTH writes. Write edges first and derive
-            # nodes from the CHECKPOINT — zero recompute, zero cache memory
-            # (at 100 TB, re-aggregating the triple relation twice is the
-            # difference between 1x and 2x the stage's shuffle volume).
+            # The edges aggregate (the stage's biggest groupBy, over the
+            # triples relation) feeds the edges write and the degree table
+            # behind the stored ranks (edges.edge_rank, nodes.degree). It is
+            # persisted for the stage's two concurrent writes: column pruning
+            # would otherwise plan the degree branch as a second, keys-only
+            # triples aggregation. The triples exchange runs once; the block
+            # manager's per-block locks make the later reader wait.
+            # nodes (with stubs) derives from the CHECKPOINTS afterwards;
+            # stubs take their degree from add_stub_nodes' own group-by.
             # nodes_base (pre-stub) is checkpointed separately: the fused
             # stage's incremental rewiring passes untouched base rows through
             # unchanged, but stub rows derive from edges and must be re-run
             # against the FUSED edges — so the stub-free relation is the
             # reusable one. It is a tiny table (one row per entity).
+            edges = canon.build_edges(all_t, cfg=cfg).persist()
             return {
-                "edges": canon.build_edges(all_t, cfg=cfg),
-                "nodes_base": canon.build_nodes(all_m, cfg=cfg),
+                "edges": canon.with_edge_rank(edges),
+                "nodes_base": canon.with_degree(canon.build_nodes(all_m, cfg=cfg), edges),
                 "nodes": lambda: canon.add_stub_nodes(
                     self.read("nodes_base", spread=False),
                     self.read("edges", spread=False),
                 ),
+                "__cleanup__": edges.unpersist,
             }
 
         def _fusion():
@@ -412,7 +417,7 @@ class Pipeline:
             }
 
         def _fused_graph():
-            cols_m = ["entity_name", "entity_type", "description", "source_id"]
+            cols_m = canon.NODE_COLS
             cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
             # spread=False as in _graph: the rewiring is broadcast joins
             # (narrow) and both strategies end in keyed aggregations

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM``, else a quarter of host RAM with a 1 GB floor.
+
+    Local mode runs every executor thread inside the driver JVM, so its heap
+    must leave room for the Python workers and the OS: a fixed large heap
+    gets the JVM OOM-killed on a small host mid-run."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "mmgraphrag_spark",
     cores: int | None = None,
@@ -60,7 +73,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # hub-entity rows carry ~270 KB <SEP>-joined strings; untruncated

@@ -99,6 +99,36 @@ def test_degrees(spark):
     assert got == {"A": 2, "B": 2, "C": 2}
 
 
+def test_stored_ranks(spark):
+    """with_degree / with_edge_rank store A5 on the graph tables: an isolated
+    node has degree 0, edge_rank = deg(src) + deg(dst), and a stub added to
+    degree-carrying nodes gets its own degree."""
+    nodes = spark.createDataFrame(
+        [("A", "T", "d", "s"), ("B", "T", "d", "s"), ("Z", "T", "d", "s")],
+        "entity_name string, entity_type string, description string, source_id string",
+    )
+    edges = spark.createDataFrame(
+        [("A", "B", 1.0, "d", "c1", 1), ("A", "C", 1.0, "d", "c1", 1),
+         ("B", "C", 2.0, "d", "c2", 1), ("A", "D", 1.0, "d", "c3", 1)],
+        "src string, dst string, weight double, description string, source_id string, order int",
+    )
+    ranked = canon.with_edge_rank(edges)
+    assert ranked.columns == canon.EDGE_COLS + ["edge_rank"]
+    assert {(r.src, r.dst): r.edge_rank for r in ranked.collect()} == {
+        ("A", "B"): 5, ("A", "C"): 5, ("B", "C"): 4, ("A", "D"): 4,
+    }
+    with_deg = canon.with_degree(nodes, edges)
+    assert with_deg.columns == canon.NODE_COLS + ["degree"]
+    assert {r.entity_name: r.degree for r in with_deg.collect()} == {"A": 3, "B": 2, "Z": 0}
+    full = canon.add_stub_nodes(with_deg, edges)
+    assert full.columns == with_deg.columns
+    assert {r.entity_name: r.degree for r in full.collect()} == {
+        "A": 3, "B": 2, "Z": 0, "C": 2, "D": 1,
+    }
+    # nodes without the stored column get stubs without it (fused tables)
+    assert canon.add_stub_nodes(nodes, edges).columns == canon.NODE_COLS
+
+
 def test_summarization_branch_bounds_hub_descriptions(spark):
     """A1 summarization (reference text2graph.py:70-112): descriptions at or
     over summary_max_tokens are replaced by the deterministic summary; short

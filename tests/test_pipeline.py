@@ -41,6 +41,52 @@ def test_outputs_match_direct_api(spark, pipe):
     assert a.equals(b)
 
 
+def test_stored_ranks_match_recount(spark, pipe, tmp_path):
+    """nodes.degree and edges.edge_rank equal a recount from the edges
+    checkpoint, stub nodes included: the graph stage re-runs over a copy of
+    the run whose mention checkpoints lack three triple endpoints."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    work = tmp_path / "stubs"
+    shutil.copytree(pipe.work_dir, work)
+    gone = [r.subj for r in pipe.read("triples", spread=False)
+            .select("subj").distinct().orderBy("subj").limit(3).collect()]
+    for t in ("mentions", "img_mentions"):
+        (spark.read.parquet(f"{pipe.work_dir}/{t}")
+         .filter(~F.col("entity_name").isin(gone))
+         .write.mode("overwrite").parquet(str(work / t)))
+    for t in ("nodes", "nodes_base", "edges"):
+        shutil.rmtree(work / t)
+    p = Pipeline(spark, SF_TINY, str(work))
+    assert p.run(resume=True)["graph"]
+
+    edges = p.read("edges", spread=False).toPandas()
+    deg = Counter(edges["src"]) + Counter(edges["dst"])
+    assert (edges["edge_rank"] == [deg[s] + deg[d] for s, d in
+                                   zip(edges["src"], edges["dst"])]).all()
+    nodes = p.read("nodes", spread=False).toPandas()
+    stubs = nodes[nodes["entity_type"] == "UNKNOWN"]
+    assert set(gone) <= set(stubs["entity_name"])
+    assert (nodes["degree"] == [deg[n] for n in nodes["entity_name"]]).all()
+    base = p.read("nodes_base", spread=False).toPandas()
+    assert (base["degree"] == [deg[n] for n in base["entity_name"]]).all()
+
+
+def test_fused_tables_keep_their_columns(spark, pipe):
+    """The stored ranks stay on the unfused graph: the fused tables (pipeline
+    checkpoints and the api's full and incremental paths) keep the merged
+    columns only."""
+    node_cols = ["entity_name", "entity_type", "description", "source_id"]
+    edge_cols = ["src", "dst", "weight", "description", "source_id", "order"]
+    assert pipe.read("fused_nodes", spread=False).columns == node_cols
+    assert pipe.read("fused_edges", spread=False).columns == edge_cols
+    for n, e in (api.fused_graph(spark, SF_TINY),
+                 api.fused_graph_incremental(spark, SF_TINY)):
+        assert (n.columns, e.columns) == (node_cols, edge_cols)
+
+
 def test_fused_checkpoints_match_full_recompute(spark, pipe):
     """The pipeline's fused stage uses the INCREMENTAL rewiring
     (fuse_*_incremental over the graph-stage checkpoints); it must equal the

@@ -131,6 +131,61 @@ def test_render_context_reference_layout(spark):
     assert "\n0,\t" in out.replace("\n    ", "\n")
 
 
+def _oracle_blocks(nodes, edges, chunks, query):
+    """oracle.qctx_render_sql over the given graph tables (DuckDB), with the
+    documents->graph CTE chain dropped: the tables are registered views."""
+    from dataclasses import replace
+
+    import duckdb
+
+    from mmgraphrag_spark import oracle
+    from mmgraphrag_spark.config import DEFAULT
+
+    con = duckdb.connect()
+    for name, df in (("nodes", nodes), ("edges", edges), ("chunks", chunks)):
+        con.register(name, df.toPandas())
+    cfg = replace(DEFAULT, qctx_query=query)
+    full, prefix = oracle.qctx_render_sql(cfg), oracle.cte_prefix(cfg)
+    rows = dict(con.execute("WITH " + full[len(prefix) + 1:]).fetchall())
+    con.close()
+    return rows["entities"], rows["relationships"], rows["sources"]
+
+
+def test_request_runs_few_jobs_and_matches_oracle(spark):
+    """One request as perfbench serves it (seeds, context edges and chunks,
+    the rendered blocks, the answer chain with its media lookup) runs at
+    most 10 Spark jobs over the cached SF_TINY graph — it re-aggregates
+    nothing: the ranks are stored — and renders the oracle's blocks (whose
+    own degrees are recounted from the edges)."""
+    from mmgraphrag_spark.config import DEFAULT as cfg
+    from mmgraphrag_spark.operators import answer
+
+    n, e, c = api.nodes(spark, SF_TINY), api.edges(spark, SF_TINY), api.chunks(spark, SF_TINY)
+    media = api.media_table(spark, SF_TINY).cache()
+    img = n.filter("entity_type = 'ORI_IMG'").orderBy("entity_name").first().entity_name
+    query = f"{cfg.qctx_query} {img}"
+    for df in (n, e, c, media):
+        df.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("qctx-request", "one query request")
+    try:
+        seeds = query_ctx.seed_entities(n, e, query, cfg.qctx_k)
+        edges = query_ctx.context_edges(n, e, query, cfg.qctx_k, cfg.qctx_token_budget)
+        chunks = query_ctx.context_chunks(n, e, c, query, cfg.qctx_k)
+        blocks = query_ctx.context_blocks(seeds, edges, chunks, c)
+        ents = answer.mm_entities_from_context(blocks[0])
+        chain = answer.assemble_answer_chain(
+            query_ctx.wrap_context(blocks), blocks[0], answer.media_info_for(media, ents))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    jobs = sc.statusTracker().getJobIdsForGroup("qctx-request")
+    media.unpersist()
+    assert chain["mm_entities"] == [img.lower()]
+    assert 0 < len(jobs) <= 10, len(jobs)
+    assert blocks == _oracle_blocks(n, e, c, query)
+
+
 def test_compress_media_quality_ladder_matches_reference_loop(spark):
     """S10: first-fit quality stepping 90→floor exactly like the reference
     (initial encode at 90, re-encode while over target AND quality > floor;
