@@ -12,9 +12,13 @@ Layout:
   config        pipeline parameters (chunk window, extraction rules, fusion)
   synth         deterministic interleaved-docs (spans) synthesizer
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
-  operators/    chunker, extractor, canonicalize, media, fusion, dedup,
-                similarity, textstats, joins, query_ctx
+  api           DataFrame-in/DataFrame-out public API (the registry bodies)
+  sources/      MinerU, .docx and PDF readers -> spans
+  functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
+  operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
+                query_ctx, answer, graphalgo, multimodal, graphml, replay
   plans/        staged pipeline runner with checkpoints + lineage + metrics
+  streaming/    stream_extract: foreachBatch incremental KG ingest
 """
 
 __version__ = "0.1.0"

@@ -8,7 +8,7 @@ never through the filesystem.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 GRAPH_FIELD_SEP = "<SEP>"  # reference: /root/reference/mmgraphrag/prompt.py:1
 TUPLE_DELIM = "<|>"  # reference prompt delimiters: prompt.py:189-192
@@ -41,11 +41,10 @@ class PipelineConfig:
     # The mock glean pass recovers tokens of length mention_min_len-1.
     gleaning_rounds: int = 0
 
-    # canonicalization
-    salt_buckets: int = 8         # salted pre-aggregation fan-out for hub keys
-    # A1/A2 summarization branch (reference text2graph.py:70-112: descriptions
-    # reaching entity_summary_to_max_tokens=500 get LLM-summarized). Same
-    # default; the deterministic mock keeps the first summary_keep_tokens.
+    # canonicalization: A1/A2 summarization branch (reference
+    # text2graph.py:70-112: descriptions reaching
+    # entity_summary_to_max_tokens=500 get LLM-summarized). Same default;
+    # the deterministic mock keeps the first summary_keep_tokens.
     summary_max_tokens: int = 500
     summary_keep_tokens: int = 16
 
@@ -67,7 +66,6 @@ class PipelineConfig:
     fusion_eps: float = 0.5       # DBSCAN eps, reference fusion.py:245-251
     fusion_knn: int = 3           # kNN label transfer fan-in, fusion.py:256-267
     fusion_window: int = 64       # nearby-context radius in words (J2 analogue)
-    embed_dims: int = 32          # deterministic hash-embedding dimension
     # trigram embedding family (M1 stand-in for the sentence encoder): signed
     # feature-hashed char-3-gram counts. Near-but-unequal surfaces get high
     # cosine (SPARK~SPARKS ≈ 0.87), so the merge judge and clustering are NOT
@@ -84,14 +82,6 @@ class PipelineConfig:
     # (query.py ranks by degree sum); "ppr" = personalized-PageRank mass
     # from the query seeds (query-proximity upgrade, context_edges_ppr)
     qctx_ranking: str = "degree"
-
-    # similarity / dedup
-    minhash_perms: int = 16
-    minhash_bands: int = 4
-    shingle_size: int = 3
-    embedding_round: int = 4      # rounding for float-parity with the oracle
-
-    extra: dict = field(default_factory=dict)
 
 
 DEFAULT = PipelineConfig()

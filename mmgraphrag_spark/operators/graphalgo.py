@@ -1287,7 +1287,7 @@ def community_representatives(
     operators: :func:`label_propagation` × :func:`pagerank`, one equi-join
     on entity_name, one per-community argmax window. The DuckDB twin
     composes the SAME two unrolled CTE chains verbatim (compositional
-    verification, the curation_funnel pattern).
+    verification).
 
     No new scale surface: both inputs are per-node relations; the join
     and both windows key on entity_name / community, and community

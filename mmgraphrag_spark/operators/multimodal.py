@@ -10,8 +10,9 @@ cluster you replace ``_fake_decode`` with PIL/ffmpeg calls per batch and
 nothing else changes.
 
 The deterministic fakes are arithmetic on payload length / content, so every
-query here has an exact DuckDB twin (oracle_extra.mm_*_sql) — the *plumbing*
-is what the parity check exercises.
+query here has an exact DuckDB twin in oracle.py (``mm_decode_select``,
+``mm_frames_select``, ``phash_select`` and siblings) — the *plumbing* is what
+the parity check exercises.
 """
 
 from __future__ import annotations
@@ -223,7 +224,7 @@ def perceptual_hashes(payloads: DataFrame) -> DataFrame:
     bytes covers [j·n/64, (j+1)·n/64); bit = sum_j·n ≥ total·len_j,
     empty windows 0), so the DuckDB twin reproduces every bit via
     ascii()-code list arithmetic — an approximate MEASURE with an exact
-    cross-engine hash, same contract as the HLL/Count-Min sketches.
+    cross-engine hash.
     The 64 bits are carried as 4×16-bit block ints: with 4 blocks, any
     pair within Hamming distance 3 shares at least one equal block
     (pigeonhole), which makes the pair search below index-complete.

@@ -1,4 +1,4 @@
-"""M2–M7 fusion: embeddings, DBSCAN, block determinism, merge semantics."""
+"""M2–M7 fusion: trigram embeddings, DBSCAN, block determinism, merge semantics."""
 
 from __future__ import annotations
 
@@ -10,22 +10,6 @@ from conftest import SF_TINY, make_docs
 from mmgraphrag_spark import api, synth
 from mmgraphrag_spark.config import DEFAULT
 from mmgraphrag_spark.operators import fusion, media
-from mmgraphrag_spark.operators.embedding import with_embedding
-
-
-def test_hash_embedding_separates_vocab(spark):
-    """Hash embeddings (the generic M1 surface): distinct forms near-orthogonal,
-    equal forms cosine 1, unit norm."""
-    toks = (
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-        .selectExpr("explode(split(text, ' ')) AS tok").distinct()
-    )
-    emb = with_embedding(toks, "tok").toPandas()
-    E = np.vstack(emb["embedding"].to_numpy())
-    S = E @ E.T
-    np.fill_diagonal(S, 0.0)
-    assert S.max() < 0.99
-    assert np.allclose((E * E).sum(1), 1.0, atol=1e-9)
 
 
 # ---------------------------------------------------------------------------

@@ -16,16 +16,9 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 from mmgraphrag_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def norm(df, cols):
     """Sort columns by name, round floats, stringify, sort rows."""
-    import pandas as pd
-
     df = df[sorted(cols)].copy()
     for c in df.columns:
         if df[c].dtype == "float64" or df[c].dtype == "float32":
@@ -34,40 +27,56 @@ def norm(df, cols):
     return rows
 
 
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with the ``documents`` view every oracle reads."""
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    return con
+
+
+def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
+    """Run registry query ``name`` in Spark and its DuckDB twin; return
+    (parity, report). Parity means equal column names, equal row counts and
+    equal ``norm`` rows; on a value mismatch the report names up to three
+    rows found on one side only."""
+    sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
+    odf = con.execute(entrymod.oracle_sql()[name]).df()
+    scols, ocols = sorted(sdf.columns), sorted(odf.columns)
+    ok_schema = scols == ocols
+    report = (
+        f"spark_rows={len(sdf)} oracle_rows={len(odf)}"
+        f" schema={'OK' if ok_schema else f'{scols} vs {ocols}'}"
+    )
+    ok = ok_schema and len(sdf) == len(odf)
+    if ok:
+        a, b = norm(sdf, scols), norm(odf, ocols)
+        ok = a == b
+        if not ok:
+            sa, sb = set(a), set(b)
+            report += (f"\n  spark-only: {[x for x in a if x not in sb][:3]}"
+                       f"\n  oracle-only: {[x for x in b if x not in sa][:3]}")
+    return ok, f"{'OK' if ok else 'FAIL'} {report}"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
     spark = get_spark("compare")
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        sdf = fn(spark, sf_dir).toPandas()
         if name not in os_:
-            print(f"{name}: rows={len(sdf)} (no oracle)")
+            print(f"{name}: rows={fn(spark, sf_dir).count()} (no oracle)")
             continue
-        odf = con.execute(os_[name]).df()
-        scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-        ok_schema = scols == ocols
-        ok_rows = len(sdf) == len(odf)
-        ok_vals = ok_schema and ok_rows and norm(sdf, scols) == norm(odf, ocols)
-        status = "OK" if (ok_schema and ok_rows and ok_vals) else "FAIL"
-        print(f"{name}: {status} spark_rows={len(sdf)} oracle_rows={len(odf)}"
-              f" schema={'OK' if ok_schema else f'{scols} vs {ocols}'}")
-        if status == "FAIL":
+        ok, report = compare(spark, con, sf_dir, name)
+        print(f"{name}: {report}")
+        if not ok:
             failed.append(name)
-            if ok_schema and ok_rows:
-                a, b = norm(sdf, scols), norm(odf, ocols)
-                diff = [x for x in a if x not in set(b)][:3]
-                diff2 = [x for x in b if x not in set(a)][:3]
-                print("  spark-only:", diff)
-                print("  oracle-only:", diff2)
     print("FAILED:", failed or "none")
     return 1 if failed else 0
 
