@@ -12,13 +12,17 @@ Layout:
   config        pipeline parameters (chunk window, extraction rules, fusion)
   synth         deterministic interleaved-docs (spans) synthesizer
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
+  oracle_extra  DuckDB-SQL twins of the dedup, similarity, text, curation and
+                event operators
   api           DataFrame-in/DataFrame-out public API (the registry bodies)
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
-                query_ctx, answer, graphalgo, multimodal, graphml, replay
+                query_ctx, answer, graphalgo, multimodal, graphml, replay,
+                dedup, similarity, textstats, curation, events
   plans/        staged pipeline runner with checkpoints + lineage + metrics
-  streaming/    stream_extract: foreachBatch incremental KG ingest
+  streaming/    foreachBatch incremental KG ingest + streaming event, session
+                and near-dup operators
 """
 
 __version__ = "0.1.0"

@@ -83,5 +83,10 @@ class PipelineConfig:
     # from the query seeds (query-proximity upgrade, context_edges_ppr)
     qctx_ranking: str = "degree"
 
+    # similarity / dedup
+    minhash_perms: int = 16
+    minhash_bands: int = 4
+    shingle_size: int = 3
+
 
 DEFAULT = PipelineConfig()

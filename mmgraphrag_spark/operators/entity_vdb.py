@@ -16,8 +16,8 @@ it bit-for-bit). The embedding never materializes as a dense per-row array:
 grams explode into (entity, bucket, ±1) rows, one groupBy builds the sparse
 vector, and the dot product against the *driver-side precomputed* query
 vector folds in the same aggregation — entirely JVM-side whole-stage codegen,
-no UDF, no per-row Python. Scoring is exact int64 (dot², scaled), a
-fixed-point rule the DuckDB twin reproduces exactly.
+no UDF, no per-row Python. Scoring is exact int64 (dot², scaled), the same
+fixed-point rule as similarity.py.
 
 At 100 TB the shuffles are keyed (entity_name, bucket) then (entity_name) —
 partial aggregation combines map-side, and the query vector is a broadcast

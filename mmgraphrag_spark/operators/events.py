@@ -1,9 +1,10 @@
 """Event-stream analytics over the events table: gap sessionization and
-tumbling-window rollups.
+hopping-window rollups.
 
 The batch expression of the engine's streaming surface (§2.11): the same
 relations `streaming/incremental.py` maintains online with watermarks /
-`applyInPandasWithState`, computed here as pure window/groupBy plans with
+`applyInPandasWithState` (``stream_sessions``, hopping
+``windowed_event_counts``), computed here as pure window/groupBy plans with
 exact DuckDB twins. All outputs are integers (epoch microseconds, counts,
 value cents) so cross-engine parity is bit-exact.
 
@@ -77,179 +78,6 @@ def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     )
 
 
-def tumbling_rollup(events: DataFrame, width_us: int = 3_600_000_000) -> DataFrame:
-    """(bucket_us, event_type, n_events, n_users, sum_value_cents): tumbling
-    time-window rollup — the batch twin of the watermarked windowed
-    aggregation in streaming/incremental.py. ``bucket_us`` is the window
-    start in epoch microseconds; monetary values aggregate as exact integer
-    cents (inputs have 2 decimals) so the twin hashes bit-exactly.
-    """
-    return (
-        events.select(
-            (F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(F.col("ts").cast("timestamp")) % width_us).alias(
-                "bucket_us"
-            ),
-            "event_type",
-            "user_id",
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("bucket_us", "event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.countDistinct("user_id").cast("long").alias("n_users"),
-            F.sum("cents").alias("sum_value_cents"),
-        )
-    )
-
-
-def asof_join(
-    events: DataFrame, left_type: str = "purchase", right_type: str = "click"
-) -> DataFrame:
-    """(purchase_event_id, user_id, purchase_ts_us, value_cents,
-    click_event_id, click_ts_us, lag_us): as-of join — each ``left_type``
-    event annotated with the user's latest ``right_type`` event at-or-before
-    it (click→purchase attribution; NULL click columns when no prior click
-    exists). The canonical time-series operator Spark has no native form of.
-
-    Implemented as the union + running ``last(..., ignorenulls)`` trick —
-    ZERO joins: tag both sides into one relation, sort per user by
-    (ts_us, side, event_id) with the right side ordered first at equal
-    timestamps (so a same-instant click counts as at-or-before), and carry
-    the right side's columns forward with an unbounded-preceding window;
-    left rows then read their match off their own row. One hash exchange on
-    user_id total — a merge-join-free plan that beats the naive range-join
-    (which Catalyst plans as a broadcast/cartesian range filter) and scales
-    as O(|events|) rows with per-user partitions. Deterministic tie
-    contract: among right events sharing (user_id, ts_us), the largest
-    event_id wins (the window order makes the carry deterministic).
-
-    The DuckDB twin (`oracle_extra.asof_join_sql`) mirrors the identical
-    window construction rather than DuckDB's native ASOF JOIN, pinning the
-    tie-break; all output columns are integers (epoch µs, cents).
-    """
-    ev = events.filter(F.col("event_type").isin([left_type, right_type])).select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.round(F.col("value") * 100).cast("long").alias("value_cents"),
-        F.when(F.col("event_type") == left_type, F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("side"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us", "side", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    right_ev = F.when(F.col("side") == 0, F.col("event_id"))
-    right_ts = F.when(F.col("side") == 0, F.col("ts_us"))
-    filled = ev.select(
-        "event_id", "user_id", "ts_us", "value_cents", "side",
-        F.last(right_ev, ignorenulls=True).over(w).alias("click_event_id"),
-        F.last(right_ts, ignorenulls=True).over(w).alias("click_ts_us"),
-    )
-    return filled.filter(F.col("side") == 1).select(
-        F.col("event_id").alias("purchase_event_id"),
-        "user_id",
-        F.col("ts_us").alias("purchase_ts_us"),
-        "value_cents",
-        "click_event_id",
-        "click_ts_us",
-        (F.col("ts_us") - F.col("click_ts_us")).alias("lag_us"),
-    )
-
-
-def markov_transitions(events: DataFrame) -> DataFrame:
-    """(prev_type, event_type, n, row_total, p_ppm): the first-order Markov
-    transition matrix over per-user event sequences — how users actually
-    flow between actions (the model behind next-event prediction and
-    funnel-leak analysis). ``p_ppm`` is the exact integer transition
-    probability P(event_type | prev_type); sequence starts appear under
-    prev_type = '^' so rows sum to each user-step total.
-
-    One lag window on the user_id exchange (ties broken by event_id — the
-    same total order every per-user operator here pins), then a
-    (prev, next)-keyed count whose cardinality is |types|² — the second
-    exchange carries a bounded key set at any event volume, map-side
-    combined. The row-total window runs over that tiny aggregate.
-    """
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    pairs = (
-        events.select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
-        .withColumn("prev_type", F.coalesce(F.lag("event_type").over(w), F.lit("^")))
-        .groupBy("prev_type", "event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = Window.partitionBy("prev_type")
-    return pairs.select(
-        "prev_type", "event_type", "n",
-        F.sum("n").over(tot).cast("long").alias("row_total"),
-        F.expr(
-            "n * 1000000 div sum(n) over (partition by prev_type)"
-        ).alias("p_ppm"),
-    )
-
-
-def anomalies(events: DataFrame, k: int = 2) -> DataFrame:
-    """(event_id, event_type, cents, med_cents, mad_cents, dev_ppm,
-    is_anomaly): robust per-type outlier detection — median + MAD (median
-    absolute deviation), the estimator that survives the outliers it hunts
-    (mean/stddev don't). Every event is emitted with its deviation in ppm
-    of the MAD; ``is_anomaly`` flags |x − med| > k·MAD. All medians are
-    EXACT by the percentile_disc rank trick (events.value_quantiles), so
-    the twin hashes bit-exactly — no approximate percentiles.
-
-    Two rank passes on the same event_type key (cents, then |cents − med|)
-    and a broadcast of the per-type med/MAD table back onto the stream —
-    event_type cardinality is bounded, so the broadcast is a few rows at
-    any event volume. At 10^12 events this is two sort exchanges on a
-    bounded key; for few enormous groups swap in range partitioning on
-    (type, cents), same as value_quantiles.
-    """
-    base = events.select(
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-
-    def _median(df: DataFrame, col: str, out: str) -> DataFrame:
-        w = Window.partitionBy("event_type").orderBy(col, "event_id")
-        n = Window.partitionBy("event_type")
-        return (
-            df.select(
-                "event_type",
-                F.col(col).alias("v"),
-                F.row_number().over(w).alias("r"),
-                F.count(F.lit(1)).over(n).alias("n"),
-            )
-            .filter(F.expr("r = (n + 1) div 2"))
-            .select("event_type", F.col("v").alias(out))
-        )
-
-    med = _median(base, "cents", "med_cents")
-    dev = base.join(F.broadcast(med), "event_type").withColumn(
-        "adev", F.abs(F.col("cents") - F.col("med_cents"))
-    )
-    mad = _median(dev, "adev", "mad_cents")
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .select(
-            "event_id", "event_type", "cents", "med_cents", "mad_cents",
-            F.expr("adev * 1000000 div greatest(mad_cents, 1L)").alias(
-                "dev_ppm"
-            ),
-            F.expr(
-                f"CASE WHEN adev > {k} * mad_cents THEN 1L ELSE 0L END"
-            ).alias("is_anomaly"),
-        )
-    )
-
-
 def hopping_rollup(
     events: DataFrame,
     width_us: int = 3_600_000_000,
@@ -269,7 +97,7 @@ def hopping_rollup(
     scale; when it bites, the standard rewrite is tumbling panes at hop
     grain + a second width/hop-row rollup of the panes (same relation, two
     tiny aggs) — this operator keeps the direct form, the pane rewrite is
-    `tumbling_rollup` composed with a 4-row window sum.
+    a hop-grain tumbling rollup composed with a 4-row window sum.
     """
     if width_us % hop_us:
         raise ValueError("width_us must be a multiple of hop_us")
@@ -294,446 +122,5 @@ def hopping_rollup(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.countDistinct("user_id").cast("long").alias("n_users"),
             F.sum("cents").alias("sum_value_cents"),
-        )
-    )
-
-
-def funnel(
-    events: DataFrame, stages: tuple[str, str, str] = ("view", "click", "purchase")
-) -> DataFrame:
-    """(user_id, view_us, click_us, purchase_us, stage): strictly-ordered
-    funnel — per user, the earliest ``stages[0]`` event, then the earliest
-    ``stages[1]`` STRICTLY after it, then the earliest ``stages[2]`` strictly
-    after that. ``stage`` counts completed steps (0–3); later columns are
-    NULL once the chain breaks, so conversion rates fall out of a count.
-
-    Three chained whole-partition windows on ONE user_id exchange: each
-    step's min() can only be evaluated once the previous step's timestamp is
-    known, but since that timestamp is a per-partition constant the filter
-    stays row-local — no joins, no second shuffle. At 10^12 events this is
-    the standard funnel shape: hash-partition by user (per-user history is
-    tiny), constant memory per user, and the final one-row-per-user groupBy
-    reuses the same partitioning.
-    """
-    s0, s1, s2 = stages
-    w = Window.partitionBy("user_id")
-    base = events.filter(F.col("event_type").isin(list(stages))).select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    d = base.withColumn(
-        "view_us", F.min(F.when(F.col("event_type") == s0, F.col("ts_us"))).over(w)
-    )
-    d = d.withColumn(
-        "click_us",
-        F.min(
-            F.when(
-                (F.col("event_type") == s1) & (F.col("ts_us") > F.col("view_us")),
-                F.col("ts_us"),
-            )
-        ).over(w),
-    )
-    d = d.withColumn(
-        "purchase_us",
-        F.min(
-            F.when(
-                (F.col("event_type") == s2) & (F.col("ts_us") > F.col("click_us")),
-                F.col("ts_us"),
-            )
-        ).over(w),
-    )
-    per_user = d.groupBy("user_id").agg(
-        F.max("view_us").alias("view_us"),
-        F.max("click_us").alias("click_us"),
-        F.max("purchase_us").alias("purchase_us"),
-    )
-    return per_user.select(
-        "user_id",
-        "view_us",
-        "click_us",
-        "purchase_us",
-        (
-            F.when(F.col("purchase_us").isNotNull(), F.lit(3))
-            .when(F.col("click_us").isNotNull(), F.lit(2))
-            .when(F.col("view_us").isNotNull(), F.lit(1))
-            .otherwise(F.lit(0))
-        ).cast("long").alias("stage"),
-    )
-
-
-DAY_US = 86_400_000_000
-
-
-def retention(events: DataFrame, grain_us: int = DAY_US) -> DataFrame:
-    """(cohort_us, day_offset, n_users): cohort retention — users grouped by
-    the day of their first event; ``n_users`` counts how many of that cohort
-    were active ``day_offset`` grains later. The classic triangular retention
-    matrix, exact (integer epoch-µs day buckets, integer offsets).
-
-    One user_id exchange (first-day window) feeds a distinct + count on
-    (cohort, offset): the distinct is the only second shuffle and its key
-    cardinality is cohorts × horizon — tiny regardless of event volume, so
-    at 10^12 events the plan is a map-side-combined distinct over ~10^3
-    keys. No joins: the per-user first day is a whole-partition min window,
-    not a self-join back onto the event log.
-    """
-    w = Window.partitionBy("user_id")
-    days = events.select(
-        "user_id",
-        (
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("ts").cast("timestamp")) % grain_us
-        ).alias("day_us"),
-    )
-    tagged = days.withColumn("cohort_us", F.min("day_us").over(w))
-    return (
-        tagged.select(
-            "cohort_us",
-            ((F.col("day_us") - F.col("cohort_us")) / grain_us)
-            .cast("long")
-            .alias("day_offset"),
-            "user_id",
-        )
-        .distinct()
-        .groupBy("cohort_us", "day_offset")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-    )
-
-
-def value_quantiles(events: DataFrame, quantiles_pm=(500_000, 900_000, 990_000)) -> DataFrame:
-    """(event_type, n, p50_cents, p90_cents, p99_cents): EXACT per-group
-    quantiles of the event value by rank arithmetic — the discrete
-    (``percentile_disc``) definition: the q-quantile is the element at rank
-    ceil(q·n) in the sorted group — computed as the INTEGER ceil-division
-    (n·q + 10⁶−1) div 10⁶, so the rank target is exact at any n (a float
-    ceil drifts by one rank once n·q's ulp exceeds the 10⁻⁶ remainder,
-    around n ~ 10¹²) — and the result is always a real data value, so both
-    engines agree bit-for-bit (interpolating/approximate percentiles are
-    float- and implementation-defined — Spark's ``percentile_approx`` and
-    DuckDB's ``quantile`` would never hash-match).
-
-    One sort exchange per group key: rank with row_number over
-    (value_cents, event_id) — the event_id tiebreak makes the rank total —
-    then pick the rows whose rank hits each target. At 10^12 events this is
-    the same shape as any per-group top-k: hash exchange on event_type,
-    per-partition sort; for few huge groups, swap in range partitioning on
-    (event_type, value_cents) — the quantile targets are rank lookups either
-    way. Ties on value collapse via max() in the pivot (all candidate rows
-    carry the same cents value at a given rank by construction).
-    """
-    base = events.select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        "event_id",
-    )
-    w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-    n = Window.partitionBy("event_type")
-    ranked = base.select(
-        "event_type",
-        "cents",
-        F.row_number().over(w).alias("r"),
-        F.count(F.lit(1)).over(n).alias("n"),
-    )
-    labels = {500_000: "p50_cents", 900_000: "p90_cents", 990_000: "p99_cents"}
-    aggs = [
-        F.max(
-            F.when(
-                F.col("r") == F.expr(f"(n * {q} + 999999) div 1000000"),
-                F.col("cents"),
-            )
-        ).alias(labels.get(q, f"p{q}_cents"))
-        for q in quantiles_pm
-    ]
-    return ranked.groupBy("event_type").agg(
-        F.max("n").alias("n"), *aggs
-    )
-
-
-def cooccurrence_lift(
-    events: DataFrame, max_basket: int = 10_000, min_users: int = 1
-) -> DataFrame:
-    """(x, y, n_x, n_y, n_xy, support_ppm, confidence_ppm, lift_ppm):
-    market-basket association over per-user event-type sets (Agrawal &
-    Srikant 1994 support/confidence plus lift), all exact integer ppm with
-    N = number of distinct users:
-
-        support    = n_xy / N
-        confidence = P(y|x) = n_xy / n_x        (directed; both directions emitted)
-        lift       = P(xy) / (P(x)P(y)) = n_xy * N / (n_x * n_y)
-
-    Shape: distinct (user, type) rows -> posting-list self-join on user_id
-    (the basket IS the posting list) -> count users per unordered pair ->
-    join item marginals -> emit both directions from the one pair join.
-    ``max_basket`` drops power-user baskets whose distinct-item count
-    exceeds it BEFORE the pair join (the same hub defense as the dedup
-    inverted index: one 10^6-item basket would emit 10^12 pair rows); the
-    marginals always use ALL users. The single count N broadcasts (1-row
-    cross join). ``min_users`` prunes pairs below a support floor.
-
-    The lift numerator n_xy·N·10^6 runs in DECIMAL(38,0) (the same
-    promotion as graphalgo.cooccurrence_graph): in int64 it would wrap
-    past N ≈ 3·10^6 users when a pair co-occurs for most of them. The
-    result itself is bounded by N·10^6 and stays a clean BIGINT, so the
-    value is unchanged wherever int64 sufficed (`div` on decimals is
-    still exact integral floor).
-    """
-    ut = events.select("user_id", F.col("event_type").alias("item")).distinct()
-    small = (
-        ut.groupBy("user_id").agg(F.count(F.lit(1)).alias("bsz"))
-        .filter(F.col("bsz") <= max_basket)
-        .select("user_id")
-    )
-    basket = ut.join(small, "user_id")
-    pairs = (
-        basket.alias("p")
-        .join(
-            basket.alias("q"),
-            (F.col("p.user_id") == F.col("q.user_id"))
-            & (F.col("p.item") < F.col("q.item")),
-        )
-        .groupBy(F.col("p.item").alias("a"), F.col("q.item").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-        .filter(F.col("n_xy") >= min_users)
-    )
-    marg = ut.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-    total = ut.select("user_id").distinct().agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
-    both = pairs.selectExpr("a AS x", "b AS y", "n_xy").unionByName(
-        pairs.selectExpr("b AS x", "a AS y", "n_xy")
-    )
-    return (
-        both.join(marg.selectExpr("item AS x", "n AS n_x"), "x")
-        .join(marg.selectExpr("item AS y", "n AS n_y"), "y")
-        .crossJoin(F.broadcast(total))
-        .selectExpr(
-            "x", "y", "n_x", "n_y", "n_xy",
-            "n_xy * 1000000L div n_users AS support_ppm",
-            "n_xy * 1000000L div n_x AS confidence_ppm",
-            "cast(cast(n_xy AS DECIMAL(38,0)) * n_users * 1000000"
-            " div (cast(n_x AS DECIMAL(38,0)) * n_y) AS LONG) AS lift_ppm",
-        )
-    )
-
-
-def stickiness(events: DataFrame, window_days: int = 7) -> DataFrame:
-    """(day_us, dau, wau, stickiness_ppm): daily active users, trailing
-    ``window_days``-day active users, and the DAU/WAU stickiness ratio —
-    the canonical product-health rollup, computed with the hopping-window
-    explode (each event-day contributes to the ``window_days`` trailing
-    windows it falls in) so there is NO self-join back onto the event log
-    and no per-day scan: blowup factor is exactly ``window_days``, then
-    two distinct-aggregations. Days are epoch-microsecond bucket starts
-    (exact integers; the twin shares the arithmetic). Only windows with
-    dau > 0 are emitted (a day with no events has no DAU row).
-    """
-    day = DAY_US
-    base = events.select(
-        "user_id",
-        F.expr(
-            f"(unix_micros(cast(ts as timestamp)) div {day}) * {day}"
-        ).alias("day_us"),
-    ).distinct()
-    dau = base.groupBy("day_us").agg(
-        F.countDistinct("user_id").alias("dau")
-    )
-    contrib = base.select(
-        "user_id",
-        F.explode(
-            F.expr(
-                f"sequence(day_us, day_us + {day} * {window_days - 1},"
-                f" {day})"
-            )
-        ).alias("day_us"),
-    ).distinct()
-    wau = contrib.groupBy("day_us").agg(
-        F.countDistinct("user_id").alias("wau")
-    )
-    return (
-        dau.join(wau, "day_us")
-        .selectExpr(
-            "day_us", "dau", "wau",
-            "dau * 1000000L div wau AS stickiness_ppm",
-        )
-    )
-
-
-def interarrival(events: DataFrame) -> DataFrame:
-    """(user_id, n_gaps, min_gap_us, median_gap_us, max_gap_us): per-user
-    inter-event gap profile — the burstiness signal behind bot/abuse
-    heuristics and session-gap calibration (the sessionizer's gap
-    threshold should sit between the median intra-session gap and the
-    inter-session gap). Exact integers: gaps from one lag window over the
-    per-user time sort (ties broken by event_id, the sessionize contract),
-    median by the percentile_disc rank rule — same arithmetic as
-    `value_quantiles`, so no float percentile anywhere. Users with a
-    single event have no gaps and are omitted. One user_id exchange total:
-    the lag window and the per-user aggregate share it.
-    """
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    gaps = (
-        events.select(
-            "user_id", "event_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
-        .withColumn("prev", F.lag("ts_us").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select("user_id", (F.col("ts_us") - F.col("prev")).alias("gap"))
-    )
-    rw = Window.partitionBy("user_id").orderBy("gap")
-    nw = Window.partitionBy("user_id")
-    ranked = gaps.select(
-        "user_id", "gap",
-        F.row_number().over(rw).alias("r"),
-        F.count(F.lit(1)).over(nw).alias("n"),
-    )
-    return ranked.groupBy("user_id").agg(
-        F.max("n").cast("long").alias("n_gaps"),
-        F.min("gap").cast("long").alias("min_gap_us"),
-        F.max(
-            F.when(
-                F.col("r") == F.expr("(n * 500000 + 999999) div 1000000"),
-                F.col("gap"),
-            )
-        ).cast("long").alias("median_gap_us"),
-        F.max("gap").cast("long").alias("max_gap_us"),
-    )
-
-
-def cusum_changepoints(
-    events: DataFrame,
-    slack_pct: int = 25,
-    threshold_x: int = 3,
-    grain_us: int = DAY_US,
-) -> DataFrame:
-    """(event_type, day, x, cusum_ppm, alarm): one-sided CUSUM change-point
-    detection (Page 1954) over the per-type daily event-count series — the
-    drift monitor a continuously-ingesting pipeline runs over its own
-    volume counters.
-
-    The textbook recurrence S_t = max(0, S_{t−1} + (x_t − μ − slack)) is
-    sequential; it is rewritten with the exact prefix identity
-
-        S_t = C_t − min(0, min_{j≤t} C_j),   C_t = Σ_{j≤t} d_j
-
-    so the whole detector is two window functions (a running sum and a
-    running min) — no recursion, no join, exact integer ppm throughout:
-    μ_ppm = (total·10^6) div n_days over the DENSIFIED day grid (zero-event
-    days between a type's first and last day are materialized via
-    sequence(); a silent outage is a NEGATIVE drift CUSUM would otherwise
-    never see), slack = (μ_ppm·slack_pct) div 100, alarm when
-    S_t > threshold_x·μ_ppm.
-
-    Scale shape: one groupBy on (event_type, day) with map-side combine
-    collapses the event log to ≤ types·days rows; everything after runs on
-    that tiny series (per-type window partitions). The day-grid explode is
-    bounded by the observation span, not the event volume.
-    """
-    from pyspark.sql import Window
-
-    # day bucketing must FLOOR like the DuckDB twin's `//` (Spark `div`
-    # truncates toward zero, which would shift pre-1970 timestamps —
-    # negative epoch micros — into the wrong day); the correction term is
-    # exact int64 arithmetic, a no-op for every post-1970 input
-    daily = (
-        events.select(
-            "event_type",
-            F.expr(
-                "unix_micros(cast(ts as timestamp))"
-            ).alias("_us"),
-        )
-        .select(
-            "event_type",
-            F.expr(
-                f"(_us div {grain_us})"
-                f" - (case when _us % {grain_us} < 0 then 1 else 0 end)"
-            ).alias("day"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    span = daily.groupBy("event_type").agg(
-        F.min("day").alias("d0"), F.max("day").alias("d1"),
-        F.sum("x").alias("total"),
-    )
-    grid = span.select(
-        "event_type",
-        F.explode(F.expr("sequence(d0, d1)")).alias("day"),
-        F.expr("(total * 1000000L) div (d1 - d0 + 1)").alias("mean_ppm"),
-    )
-    dense = grid.join(daily, ["event_type", "day"], "left").selectExpr(
-        "event_type", "day", "coalesce(x, 0L) AS x", "mean_ppm",
-        f"coalesce(x, 0L) * 1000000L - mean_ppm"
-        f" - (mean_ppm * {slack_pct}) div 100 AS d",
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = dense.withColumn("ct", F.sum("d").over(w)).withColumn(
-        "cusum_ppm",
-        F.col("ct") - F.least(F.min("ct").over(w), F.lit(0).cast("long")),
-    )
-    return cum.selectExpr(
-        "event_type", "day", "x", "cusum_ppm",
-        f"CAST(cusum_ppm > {threshold_x} * mean_ppm AS BOOLEAN) AS alarm",
-    )
-
-
-def rfm_segments(events: DataFrame, quantiles: int = 4) -> DataFrame:
-    """(user_id, recency_days, frequency, monetary_cents, r_q, f_q, m_q,
-    rfm_code): RFM user segmentation (Hughes 1994) — recency in whole days
-    behind the corpus watermark, event count, exact integer cents total,
-    and per-dimension ``quantiles``-tile ranks with the textbook coding
-    (1 = best: most recent / most frequent / highest spend).
-
-    Determinism contract: ntile over a TOTAL order — ties in the metric
-    break by user_id ascending, so both engines assign identical tiles
-    (ntile itself is deterministic given a total order; without the
-    user_id tiebreak it would not be). Recency quantile ranks ascending
-    (smaller = more recent = tile 1); frequency/monetary rank descending.
-
-    Shape: one map-side-combined groupBy on user_id collapses the event
-    log to one row per user; the corpus watermark is a 1-row broadcast;
-    the three ntile windows are unpartitioned BUT run on the collapsed
-    per-user relation (users ≪ events) — at 10^12 events / 10^8 users the
-    right production variant is percent_rank bucketing by pre-computed
-    quantile bounds; the ntile contract is kept here because it is the
-    bit-exact one. rfm_code = 100·r + 10·f + m.
-    """
-    from pyspark.sql import Window
-
-    per_user = (
-        events.select(
-            "user_id",
-            F.expr("unix_micros(cast(ts as timestamp))").alias("ts_us"),
-            F.expr("cast(round(value * 100) AS long)").alias("cents"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.max("ts_us").alias("last_us"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum("cents").alias("monetary_cents"),
-        )
-    )
-    mark = per_user.agg(F.max("last_us").alias("mark_us"))
-    base = per_user.crossJoin(F.broadcast(mark)).selectExpr(
-        "user_id",
-        f"(mark_us - last_us) div {86_400_000_000} AS recency_days",
-        "frequency", "monetary_cents",
-    )
-    r_w = Window.orderBy(F.asc("recency_days"), F.asc("user_id"))
-    f_w = Window.orderBy(F.desc("frequency"), F.asc("user_id"))
-    m_w = Window.orderBy(F.desc("monetary_cents"), F.asc("user_id"))
-    return (
-        base.withColumn("r_q", F.ntile(quantiles).over(r_w).cast("long"))
-        .withColumn("f_q", F.ntile(quantiles).over(f_w).cast("long"))
-        .withColumn("m_q", F.ntile(quantiles).over(m_w).cast("long"))
-        .selectExpr(
-            "user_id", "recency_days", "frequency", "monetary_cents",
-            "r_q", "f_q", "m_q",
-            "100 * r_q + 10 * f_q + m_q AS rfm_code",
         )
     )

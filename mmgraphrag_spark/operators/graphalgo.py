@@ -1188,7 +1188,7 @@ def cooccurrence_graph(
     the audit the reference cannot run because its graph never coexists
     with a corpus-level count relation.
 
-    Shape (the events.cooccurrence_lift pattern on chunk baskets): distinct
+    Shape (market-basket co-occurrence on chunk baskets): distinct
     (chunk_id, entity) incidence → per-chunk entity-count cap BEFORE the
     pair self-join (a degenerate chunk mentioning 10^4 entities would emit
     10^8 pair rows; marginals always use ALL chunks) → one map-side-combined
@@ -1287,7 +1287,7 @@ def community_representatives(
     operators: :func:`label_propagation` × :func:`pagerank`, one equi-join
     on entity_name, one per-community argmax window. The DuckDB twin
     composes the SAME two unrolled CTE chains verbatim (compositional
-    verification).
+    verification, the curation_funnel pattern).
 
     No new scale surface: both inputs are per-node relations; the join
     and both windows key on entity_name / community, and community

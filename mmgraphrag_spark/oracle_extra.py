@@ -810,20 +810,6 @@ FROM s GROUP BY user_id, session_idx
 """
 
 
-def tumbling_rollup_sql(width_us: int = 3_600_000_000) -> str:
-    """Twin of events.tumbling_rollup: tumbling window counts + cent sums."""
-    return f"""
-SELECT CAST(epoch_us(ts) - epoch_us(ts) % {width_us} AS BIGINT) AS bucket_us,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-         AS sum_value_cents
-FROM events
-GROUP BY 1, 2
-"""
-
-
 def pack_interleaved_sql(
     budget: int = 512, image_tokens: int = 64, shards: int = 8
 ) -> str:
@@ -899,164 +885,6 @@ SELECT term, doc_id, tf, df, score_ppm, rnk FROM (
          ) AS rnk
   FROM tf t2 JOIN qterms t USING (term) JOIN dls l USING (doc_id), n
 ) WHERE rnk <= {k}
-"""
-
-
-def asof_join_sql(left_type: str = "purchase", right_type: str = "click") -> str:
-    """Twin of events.asof_join: the identical union + carry-forward window
-    (not DuckDB's native ASOF JOIN, whose duplicate-timestamp tie-break is
-    unspecified — the shared window order pins it). All-integer outputs."""
-    return f"""
-WITH ev AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-         CAST(round(value * 100) AS BIGINT) AS value_cents,
-         CASE WHEN event_type = '{left_type}' THEN 1 ELSE 0 END AS side
-  FROM events WHERE event_type IN ('{left_type}', '{right_type}')
-),
-filled AS (
-  SELECT event_id, user_id, ts_us, value_cents, side,
-         last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS) OVER w
-           AS click_event_id,
-         last_value(CASE WHEN side = 0 THEN ts_us END IGNORE NULLS) OVER w
-           AS click_ts_us
-  FROM ev
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, side, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_id AS purchase_event_id, user_id, ts_us AS purchase_ts_us,
-       value_cents, click_event_id, click_ts_us,
-       ts_us - click_ts_us AS lag_us
-FROM filled WHERE side = 1
-"""
-
-
-def hll_distinct_sql(group_col: str = "event_type", key_col: str = "user_id") -> str:
-    """Twin of sketches.hll_distinct over the events table: identical md5
-    hash, bucket split, capped leading-zero rank, and integer estimator."""
-    from .operators.sketches import ALPHA_PPM, M, RHO_CAP
-
-    return f"""
-WITH hashed AS (
-  SELECT {group_col} AS grp,
-         ('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15))::BIGINT AS h
-  FROM events
-),
-regs AS (
-  SELECT grp, h % {M} AS j,
-         MAX(least(54 - length(bin(h // {M})), {RHO_CAP})) AS m_j
-  FROM hashed GROUP BY grp, h % {M}
-),
-folded AS (
-  SELECT grp,
-         CAST(SUM(1::BIGINT << ({RHO_CAP} - m_j)) AS BIGINT) AS t_present,
-         COUNT(*) AS v
-  FROM regs GROUP BY grp
-),
-est AS (
-  SELECT grp,
-         (({ALPHA_PPM * M * M * (1 << RHO_CAP)}
-          // (t_present + ({M} - v) * {1 << RHO_CAP}))) // 1000000
-           AS hll_estimate
-  FROM folded
-),
-exact AS (
-  SELECT {group_col} AS grp, COUNT(DISTINCT {key_col}) AS n_exact FROM events
-  GROUP BY {group_col}
-)
-SELECT e.grp AS {group_col}, e.n_exact, s.hll_estimate,
-       abs(s.hll_estimate - e.n_exact) * 1000000 // greatest(e.n_exact, 1)
-         AS err_pm
-FROM exact e JOIN est s ON e.grp = s.grp
-"""
-
-
-def value_quantiles_sql(quantiles_pm=(500_000, 900_000, 990_000)) -> str:
-    """Twin of events.value_quantiles: identical rank arithmetic (row_number
-    over (cents, event_id), integer ceil-division rank target)."""
-    labels = {500_000: "p50_cents", 900_000: "p90_cents", 990_000: "p99_cents"}
-    aggs = ",\n       ".join(
-        f"MAX(CASE WHEN r = (n * {q} + 999999) // 1000000 THEN cents END)"
-        f" AS {labels.get(q, f'p{q}_cents')}"
-        for q in quantiles_pm
-    )
-    return f"""
-WITH base AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents, event_id
-  FROM events
-),
-ranked AS (
-  SELECT event_type, cents,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY cents, event_id) AS r,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM base
-)
-SELECT event_type, MAX(n) AS n,
-       {aggs}
-FROM ranked GROUP BY event_type
-"""
-
-
-def funnel_sql(stages: tuple[str, str, str] = ("view", "click", "purchase")) -> str:
-    """Twin of events.funnel: three chained whole-partition min windows —
-    each stage's earliest timestamp strictly after the previous stage's."""
-    s0, s1, s2 = stages
-    return f"""
-WITH base AS (
-  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events
-  WHERE event_type IN ('{s0}', '{s1}', '{s2}')
-),
-v AS (
-  SELECT user_id, event_type, ts_us,
-         MIN(CASE WHEN event_type = '{s0}' THEN ts_us END)
-           OVER (PARTITION BY user_id) AS view_us
-  FROM base
-),
-c AS (
-  SELECT user_id, event_type, ts_us, view_us,
-         MIN(CASE WHEN event_type = '{s1}' AND ts_us > view_us THEN ts_us END)
-           OVER (PARTITION BY user_id) AS click_us
-  FROM v
-),
-p AS (
-  SELECT user_id, view_us, click_us,
-         MIN(CASE WHEN event_type = '{s2}' AND ts_us > click_us THEN ts_us END)
-           OVER (PARTITION BY user_id) AS purchase_us
-  FROM c
-)
-SELECT user_id,
-       MAX(view_us) AS view_us,
-       MAX(click_us) AS click_us,
-       MAX(purchase_us) AS purchase_us,
-       CAST(CASE WHEN MAX(purchase_us) IS NOT NULL THEN 3
-                 WHEN MAX(click_us) IS NOT NULL THEN 2
-                 WHEN MAX(view_us) IS NOT NULL THEN 1
-                 ELSE 0 END AS BIGINT) AS stage
-FROM p GROUP BY user_id
-"""
-
-
-def retention_sql(grain_us: int = 86_400_000_000) -> str:
-    """Twin of events.retention: first-day window + distinct + count."""
-    return f"""
-WITH days AS (
-  SELECT user_id,
-         epoch_us(ts) - epoch_us(ts) % {grain_us} AS day_us
-  FROM events
-),
-tagged AS (
-  SELECT user_id, day_us,
-         MIN(day_us) OVER (PARTITION BY user_id) AS cohort_us
-  FROM days
-),
-d AS (
-  SELECT DISTINCT cohort_us,
-         CAST((day_us - cohort_us) // {grain_us} AS BIGINT) AS day_offset,
-         user_id
-  FROM tagged
-)
-SELECT cohort_us, day_offset, CAST(COUNT(*) AS BIGINT) AS n_users
-FROM d GROUP BY cohort_us, day_offset
 """
 
 
@@ -1254,69 +1082,6 @@ GROUP BY t.doc_id
 """
 
 
-def anomalies_sql(k: int = 2) -> str:
-    """Twin of events.anomalies: exact rank-median + rank-MAD, identical
-    lower-median rank target (n+1)//2 and integer ppm deviation."""
-    return f"""
-WITH base AS (
-  SELECT event_id, event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-),
-med AS (
-  SELECT event_type, v AS med_cents FROM (
-    SELECT event_type, cents AS v,
-           ROW_NUMBER() OVER (PARTITION BY event_type
-                              ORDER BY cents, event_id) AS r,
-           COUNT(*) OVER (PARTITION BY event_type) AS n
-    FROM base)
-  WHERE r = (n + 1) // 2
-),
-dev AS (
-  SELECT b.event_id, b.event_type, b.cents, m.med_cents,
-         abs(b.cents - m.med_cents) AS adev
-  FROM base b JOIN med m USING (event_type)
-),
-mad AS (
-  SELECT event_type, v AS mad_cents FROM (
-    SELECT event_type, adev AS v,
-           ROW_NUMBER() OVER (PARTITION BY event_type
-                              ORDER BY adev, event_id) AS r,
-           COUNT(*) OVER (PARTITION BY event_type) AS n
-    FROM dev)
-  WHERE r = (n + 1) // 2
-)
-SELECT d.event_id, d.event_type, d.cents, d.med_cents, md.mad_cents,
-       CAST(d.adev * 1000000 // greatest(md.mad_cents, 1) AS BIGINT)
-         AS dev_ppm,
-       CAST(CASE WHEN d.adev > {k} * md.mad_cents THEN 1 ELSE 0 END
-            AS BIGINT) AS is_anomaly
-FROM dev d JOIN mad md USING (event_type)
-"""
-
-
-def markov_sql() -> str:
-    """Twin of events.markov_transitions: identical lag order and integer
-    ppm row-normalization; '^' marks sequence starts."""
-    return """
-WITH seq AS (
-  SELECT COALESCE(lag(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY epoch_us(ts), event_id),
-                  '^') AS prev_type,
-         event_type
-  FROM events
-),
-pairs AS (
-  SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS n
-  FROM seq GROUP BY prev_type, event_type
-)
-SELECT prev_type, event_type, n,
-       CAST(SUM(n) OVER (PARTITION BY prev_type) AS BIGINT) AS row_total,
-       CAST(n * 1000000 // SUM(n) OVER (PARTITION BY prev_type) AS BIGINT)
-         AS p_ppm
-FROM pairs
-"""
-
-
 def gini_sql() -> str:
     """Twin of textstats.gini_diversity: exact integer Gini impurity."""
     return """
@@ -1359,41 +1124,6 @@ FROM documents d
 JOIN q ON d.doc_id = q.doc_id
 LEFT JOIN dd ON d.doc_id = dd.doc_id
 LEFT JOIN samp ON d.doc_id = samp.doc_id
-"""
-
-
-def countmin_sql(d: int = 4, w: int = 256) -> str:
-    """Twin of sketches.countmin_heavy_hitters over (user_id:event_type)
-    keys: identical md5 row hashes, cell build, and min-probe."""
-    return f"""
-WITH keyed AS (
-  SELECT concat(user_id, ':', event_type) AS k FROM events
-),
-rows_ AS (
-  SELECT k, g.i AS i,
-         ('0x' || substr(md5(concat(g.i, ':', k)), 1, 15))::BIGINT % {w}
-           AS bucket
-  FROM keyed, UNNEST(generate_series(0, {d - 1})) AS g(i)
-),
-cells AS (
-  SELECT i, bucket, CAST(COUNT(*) AS BIGINT) AS c
-  FROM rows_ GROUP BY i, bucket
-),
-exact AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_exact FROM keyed GROUP BY k),
-probes AS (
-  SELECT p.k, MIN(c.c) AS cm_estimate
-  FROM (
-    SELECT e.k, g.i AS i,
-           ('0x' || substr(md5(concat(g.i, ':', e.k)), 1, 15))::BIGINT % {w}
-             AS bucket
-    FROM exact e, UNNEST(generate_series(0, {d - 1})) AS g(i)
-  ) p JOIN cells c ON p.i = c.i AND p.bucket = c.bucket
-  GROUP BY p.k
-)
-SELECT e.k AS key, e.n_exact, p.cm_estimate,
-       CAST((p.cm_estimate - e.n_exact) * 1000000
-            // greatest(e.n_exact, 1) AS BIGINT) AS over_pm
-FROM exact e JOIN probes p ON e.k = p.k
 """
 
 
@@ -1494,45 +1224,6 @@ SELECT doc_id, n_words, n_sentences,
        n_words * 1000000 // n_sentences
          + 100 * (n_long * 1000000 // n_words) AS lix_ppm
 FROM base
-"""
-
-
-def cooccurrence_sql(max_basket: int = 10_000, min_users: int = 1) -> str:
-    """Twin of events.cooccurrence_lift: per-user event-type baskets with
-    the identical basket-size cap on the pair join; marginals and N from
-    ALL users."""
-    return f"""
-WITH ut AS (
-  SELECT DISTINCT user_id, event_type AS item FROM events
-),
-small AS (
-  SELECT user_id FROM ut GROUP BY user_id HAVING count(*) <= {max_basket}
-),
-basket AS (
-  SELECT u.user_id, u.item FROM ut u JOIN small s ON s.user_id = u.user_id
-),
-pairs AS (
-  SELECT p.item AS a, q.item AS b, count(*) AS n_xy
-  FROM basket p JOIN basket q
-    ON p.user_id = q.user_id AND p.item < q.item
-  GROUP BY p.item, q.item
-  HAVING count(*) >= {min_users}
-),
-dirs AS (
-  SELECT a AS x, b AS y, n_xy FROM pairs
-  UNION ALL
-  SELECT b AS x, a AS y, n_xy FROM pairs
-),
-marg AS (SELECT item, count(*) AS n FROM ut GROUP BY item),
-total AS (SELECT count(DISTINCT user_id) AS n_users FROM ut)
-SELECT b.x, b.y, mx.n AS n_x, my.n AS n_y, b.n_xy,
-       b.n_xy * 1000000 // t.n_users AS support_ppm,
-       b.n_xy * 1000000 // mx.n AS confidence_ppm,
-       b.n_xy * t.n_users * 1000000 // (mx.n * my.n) AS lift_ppm
-FROM dirs b
-JOIN marg mx ON mx.item = b.x
-JOIN marg my ON my.item = b.y
-CROSS JOIN total t
 """
 
 
@@ -1642,62 +1333,6 @@ FROM canon
 """
 
 
-def stickiness_sql(window_days: int = 7) -> str:
-    """Twin of events.stickiness: same hopping explode and integer day
-    buckets (DAY_US microseconds)."""
-    day = 86_400_000_000
-    return f"""
-WITH base AS (
-  SELECT DISTINCT user_id,
-         (epoch_us(ts) // {day}) * {day} AS day_us
-  FROM events
-),
-dau AS (
-  SELECT day_us, count(DISTINCT user_id) AS dau FROM base GROUP BY day_us
-),
-contrib AS (
-  SELECT DISTINCT b.user_id, b.day_us + {day} * u.k AS day_us
-  FROM base b, UNNEST(range({window_days})) AS u(k)
-),
-wau AS (
-  SELECT day_us, count(DISTINCT user_id) AS wau FROM contrib GROUP BY day_us
-)
-SELECT d.day_us, d.dau, w.wau,
-       d.dau * 1000000 // w.wau AS stickiness_ppm
-FROM dau d JOIN wau w ON w.day_us = d.day_us
-"""
-
-
-def interarrival_sql() -> str:
-    """Twin of events.interarrival: lag over (ts, event_id), percentile_disc
-    rank-rule median, exact integers."""
-    return """
-WITH base AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
-),
-gaps AS (
-  SELECT user_id,
-         ts_us - lag(ts_us) OVER (PARTITION BY user_id
-                                  ORDER BY ts_us, event_id) AS gap
-  FROM base
-  QUALIFY gap IS NOT NULL
-),
-ranked AS (
-  SELECT user_id, gap,
-         row_number() OVER (PARTITION BY user_id ORDER BY gap) AS r,
-         count(*) OVER (PARTITION BY user_id) AS n
-  FROM gaps
-)
-SELECT user_id,
-       max(n) AS n_gaps,
-       min(gap) AS min_gap_us,
-       max(CASE WHEN r = (n * 500000 + 999999) // 1000000 THEN gap END)
-         AS median_gap_us,
-       max(gap) AS max_gap_us
-FROM ranked GROUP BY user_id
-"""
-
-
 def hapax_sql() -> str:
     """Twin of textstats.hapax_stats."""
     return """
@@ -1783,53 +1418,6 @@ FROM aligned GROUP BY source
 """
 
 
-def cusum_sql(
-    slack_pct: int = 25, threshold_x: int = 3, grain_us: int = 86_400_000_000
-) -> str:
-    """Twin of events.cusum_changepoints: the same densified day grid and
-    prefix-sum/prefix-min rewrite of the one-sided CUSUM recurrence."""
-    return f"""
-WITH daily AS (
-  SELECT event_type, epoch_us(ts) // {grain_us} AS day, COUNT(*) AS x
-  FROM events GROUP BY 1, 2
-),
-span AS (
-  SELECT event_type, MIN(day) AS d0, MAX(day) AS d1, SUM(x) AS total
-  FROM daily GROUP BY event_type
-),
-grid AS (
-  SELECT event_type, unnest(range(d0, d1 + 1)) AS day,
-         (total * 1000000) // (d1 - d0 + 1) AS mean_ppm
-  FROM span
-),
-dense AS (
-  SELECT g.event_type, g.day, COALESCE(d.x, 0) AS x, g.mean_ppm,
-         COALESCE(d.x, 0) * 1000000 - g.mean_ppm
-           - (g.mean_ppm * {slack_pct}) // 100 AS dd
-  FROM grid g LEFT JOIN daily d
-    ON d.event_type = g.event_type AND d.day = g.day
-),
-pref AS (
-  SELECT event_type, day, x, mean_ppm,
-         SUM(dd) OVER wp AS ct
-  FROM dense
-  WINDOW wp AS (PARTITION BY event_type ORDER BY day
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-cum AS (
-  SELECT event_type, day, x, mean_ppm,
-         ct - least(MIN(ct) OVER wp, 0) AS cusum_ppm
-  FROM pref
-  WINDOW wp AS (PARTITION BY event_type ORDER BY day
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, CAST(day AS BIGINT) AS day, CAST(x AS BIGINT) AS x,
-       CAST(cusum_ppm AS BIGINT) AS cusum_ppm,
-       cusum_ppm > {threshold_x} * mean_ppm AS alarm
-FROM cum
-"""
-
-
 def bpe_pairs_sql(k: int = 32) -> str:
     """Twin of textstats.bpe_pair_counts: identical in-word adjacent
     char-pair rule and (count DESC, left, right) top-k."""
@@ -1872,37 +1460,6 @@ SELECT doc_id, source, n_tokens,
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
          <= {budget_tokens} AS kept
 FROM toks
-"""
-
-
-def rfm_sql(quantiles: int = 4) -> str:
-    """Twin of events.rfm_segments: identical per-user collapse, day floor
-    division, and total-ordered ntile tie contract."""
-    return f"""
-WITH per_user AS (
-  SELECT user_id, MAX(epoch_us(ts)) AS last_us, COUNT(*) AS frequency,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS monetary_cents
-  FROM events GROUP BY user_id
-),
-mark AS (SELECT MAX(last_us) AS mark_us FROM per_user),
-base AS (
-  SELECT user_id, (mark_us - last_us) // 86400000000 AS recency_days,
-         frequency, monetary_cents
-  FROM per_user CROSS JOIN mark
-)
-SELECT user_id, CAST(recency_days AS BIGINT) AS recency_days,
-       CAST(frequency AS BIGINT) AS frequency, monetary_cents,
-       CAST(r_q AS BIGINT) AS r_q, CAST(f_q AS BIGINT) AS f_q,
-       CAST(m_q AS BIGINT) AS m_q,
-       CAST(100 * r_q + 10 * f_q + m_q AS BIGINT) AS rfm_code
-FROM (
-  SELECT *,
-         ntile({quantiles}) OVER (ORDER BY recency_days ASC, user_id ASC) AS r_q,
-         ntile({quantiles}) OVER (ORDER BY frequency DESC, user_id ASC) AS f_q,
-         ntile({quantiles}) OVER (ORDER BY monetary_cents DESC, user_id ASC) AS m_q
-  FROM base
-)
 """
 
 

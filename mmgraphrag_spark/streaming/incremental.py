@@ -1,14 +1,22 @@
-"""Structured Streaming ingest.
+"""Structured Streaming surfaces.
 
-The reference is strictly batch (SURVEY.md §2.11) — ``stream_extract``
-extends the engine for continuous ingestion, the shape a production KG
-pipeline needs when documents arrive as a feed: a parquet-directory stream
-of documents drives chunk → extract → append-to-mentions via
-``foreachBatch``; each micro-batch reuses the exact batch operators, so
-stream results equal batch results by construction (tested).
+The reference is strictly batch (SURVEY.md §2.11) — these operators extend
+the engine for continuous ingestion, the shape a production KG pipeline needs
+when documents arrive as a feed:
 
-It runs with ``Trigger.AvailableNow`` (drain-and-stop), the recommended
-pattern for backfill + incremental jobs.
+* ``stream_extract`` — incremental KG construction: a parquet-directory
+  stream of documents drives chunk → extract → append-to-mentions via
+  ``foreachBatch``; each micro-batch reuses the exact batch operators, so
+  stream results equal batch results by construction (tested).
+* ``windowed_event_counts`` — the generic streaming demo over the events
+  table: event-time tumbling or hopping windows with a watermark for late
+  data.
+* ``stream_near_duplicates`` — a near-duplicate admission gate over a
+  document stream.
+* ``stream_sessions`` — a stateful gap sessionizer over the events table.
+
+All run with ``Trigger.AvailableNow`` in tests (drain-and-stop), the
+recommended pattern for backfill + incremental jobs.
 """
 
 from __future__ import annotations
@@ -40,7 +48,7 @@ def _read_state(
 
     The foreachBatch state tables are laid out ``path/run=<tok>/batch_id=<n>/``
     and each batch writes its partition with mode("overwrite"), so a replayed
-    batch (failure between the sink writes, or before checkpoint
+    batch (failure between the two state writes, or before checkpoint
     commit) recomputes from exactly the pre-batch state and overwrites its
     own partial output — the batch converges to the same state no matter
     how many times it replays. The run token (:func:`_run_token`) scopes the
@@ -49,7 +57,7 @@ def _read_state(
 
     Only a missing path means "first batch": corrupt files, transient IO,
     and permission errors PROPAGATE and fail the micro-batch (silently
-    treating them as empty state would re-extract every cached chunk).
+    treating them as empty state would re-admit every known duplicate).
     """
     try:
         df = spark.read.parquet(path)
@@ -62,8 +70,49 @@ def _read_state(
         ~((F.col("run") == F.lit(run)) & (F.col("batch_id") == F.lit(batch_id)))
     )
 
-
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string,"
+    " value double, props string"
+)
+
+
+def windowed_event_counts(
+    spark: SparkSession, events_dir: str, window: str = "1 hour",
+    watermark: str = "2 hours", slide: str | None = None,
+) -> DataFrame:
+    """Streaming event-time windowed aggregation with late-data watermark.
+    Pass ``slide`` < ``window`` for HOPPING windows (each event lands in
+    window/slide overlapping instances — the streaming form of
+    operators/events.hopping_rollup, whose batch explode is the exact twin
+    Structured Streaming maintains incrementally as per-instance state)."""
+    stream = (
+        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
+        .withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window, slide or window).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type", "n", "total_value",
+        )
+    )
+    return stream
+
+
+def batch_event_counts(
+    spark: SparkSession, events_path: str, window: str = "1 hour",
+    slide: str | None = None,
+) -> DataFrame:
+    """Batch twin of windowed_event_counts (the correctness yardstick)."""
+    return (
+        spark.read.parquet(events_path)
+        .groupBy(F.window("ts", window, slide or window).alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "event_type", "n", "total_value",
+        )
+    )
 
 
 def stream_extract(
@@ -124,4 +173,246 @@ def stream_extract(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def stream_near_duplicates(
+    spark: SparkSession,
+    docs_stream_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    threshold: float = 0.5,
+    cfg: PipelineConfig = DEFAULT,
+):
+    """Streaming near-duplicate ADMISSION GATE: as documents arrive, admit
+    only those not near-duplicating anything already admitted — the online
+    form of MinHash+LSH dedup a continuously-fed training-data pipeline
+    needs (the batch operators dedup a corpus at rest; this gates a feed).
+
+    State is two batch_id-partitioned parquet tables under ``out_dir``
+    (per-batch partition overwrite → micro-batch replay converges, see
+    :func:`_read_state`):
+
+    * ``admitted`` — the surviving documents (the gate's output relation);
+    * ``lsh_buckets`` — their LSH band rows ``(doc_id, band, bkey)``
+      (:func:`~..operators.dedup.lsh_bucket_rows`), the joinable index the
+      next batch probes.
+
+    Per micro-batch, every step is a distributed equi-join — nothing is
+    collected to the driver:
+
+    1. band rows for the batch docs probe the bucket store on
+       ``(band, bkey)`` → cross candidates (new doc, admitted doc);
+    2. candidates verify with the SAME exact shingle-Jaccard expression as
+       :func:`~..operators.dedup.minhash_near_duplicates` — new-doc shingle
+       sets from the batch, admitted-doc shingle sets re-derived from the
+       ``admitted`` table, BOTH left_semi-restricted to candidate docs, so
+       verification cost follows the candidate count, not the corpus;
+    3. survivors cluster WITHIN the batch (same verified-pair relation the
+       batch collapse uses) and only each cluster's min-doc_id rep is
+       admitted — so a batch containing its own duplicates admits one.
+
+    Equivalence to batch (tested): feeding doc_id-ordered batches through
+    the gate admits exactly the batch pipeline's
+    ``duplicate_clusters(...).cluster_rep`` set whenever near-dup components
+    are clique-like (replica families) — the min-id rep arrives first and
+    every later member verifies against it directly. For stringy components
+    the gate is by construction greedier (a doc is rejected only on a
+    VERIFIED match to an admitted doc — never transitively through another
+    rejected doc), which is the admission semantics a feed wants.
+
+    Scale shape: the bucket store grows with the ADMITTED corpus, bounded
+    by unique content; the probe is a bucketed equi-join against it; at
+    10^12 docs partition/bucket the store by ``bkey`` so batch probes
+    co-locate. Returns the started StreamingQuery (AvailableNow trigger —
+    rerun on arrival, same contract as :func:`stream_extract`).
+    """
+
+    run = _run_token(checkpoint_dir)
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        near_dup_process_batch(
+            spark, batch_df, batch_id, out_dir, threshold, cfg, run=run
+        )
+
+    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(docs_stream_dir)
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def near_dup_process_batch(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    threshold: float = 0.5,
+    cfg: PipelineConfig = DEFAULT,
+    run: str = "direct",
+) -> None:
+    """One micro-batch of the near-dup admission gate (module-level so the
+    replay-idempotency contract is directly testable: calling it twice with
+    the same batch_id must leave the state tables identical)."""
+    from ..operators import dedup
+
+    thr_pm = int(threshold * 1_000_000)
+    store_path = f"{out_dir}/lsh_buckets"
+    admitted_path = f"{out_dir}/admitted"
+
+    def _jaccard(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame) -> DataFrame:
+        """(a, b) candidate pairs -> those with exact Jaccard >= threshold
+        (10^6-scaled integer floor; bit-identical to the batch verifier)."""
+        return (
+            cand.join(sh_a.withColumnRenamed("doc_id", "a")
+                      .withColumnRenamed("sh", "sha"), "a")
+            .join(sh_b.withColumnRenamed("doc_id", "b")
+                  .withColumnRenamed("sh", "shb"), "b")
+            .selectExpr(
+                "a", "b",
+                "size(array_intersect(sha, shb)) * 1000000L"
+                " div size(array_union(sha, shb)) AS jaccard_pm",
+            )
+            .filter(F.col("jaccard_pm") >= thr_pm)
+        )
+
+    if batch_df.isEmpty():
+        return
+    docs = batch_df.select("doc_id", "text")
+    buckets = dedup.lsh_bucket_rows(docs, cfg)
+    store = _read_state(
+        spark, store_path,
+        "doc_id long, band int, bkey string, run string, batch_id long",
+        run, batch_id,
+    )
+    admitted = _read_state(
+        spark, admitted_path,
+        DOCS_SCHEMA + ", run string, batch_id long", run, batch_id,
+    ).select("doc_id", "text")
+    cand = (
+        buckets.alias("n")
+        .join(store.alias("o"), ["band", "bkey"])
+        .select(F.col("n.doc_id").alias("a"), F.col("o.doc_id").alias("b"))
+        .distinct()
+    )
+    sh_new = dedup._shingle_sets(
+        dedup.shingle_rows(docs, cfg)
+        .join(cand.select(F.col("a").alias("doc_id")).distinct(),
+              "doc_id", "left_semi")
+    )
+    sh_old = dedup._shingle_sets(
+        dedup.shingle_rows(admitted, cfg)
+        .join(cand.select(F.col("b").alias("doc_id")).distinct(),
+              "doc_id", "left_semi")
+    )
+    dup_of_old = _jaccard(cand, sh_new, sh_old)
+    novel = docs.join(
+        dup_of_old.select(F.col("a").alias("doc_id")).distinct(),
+        "doc_id", "left_anti",
+    )
+    reps = dedup.duplicate_clusters(
+        novel,
+        pairs=dedup.minhash_near_duplicates(novel, threshold, cfg),
+        cfg=cfg,
+    )
+    admit_ids = (
+        reps.filter(F.col("doc_id") == F.col("cluster_rep"))
+        .select("doc_id")
+        .localCheckpoint(eager=True)  # cut the iterative-clustering plan
+    )
+    # per-batch partition overwrite on BOTH tables: a replayed batch
+    # (e.g. failure between the two writes) recomputes from pre-batch
+    # state (_read_state drops its own partial rows) and overwrites its
+    # partitions — admitted and lsh_buckets can never disagree durably
+    part = f"run={run}/batch_id={batch_id}"
+    batch_df.join(admit_ids, "doc_id", "left_semi").write.mode(
+        "overwrite"
+    ).parquet(f"{admitted_path}/{part}")
+    buckets.join(admit_ids, "doc_id", "left_semi").write.mode(
+        "overwrite"
+    ).parquet(f"{store_path}/{part}")
+
+
+
+def stream_sessions(
+    spark: SparkSession, events_dir: str, gap_us: int = 1_800_000_000
+) -> DataFrame:
+    """Stateful streaming sessionizer (applyInPandasWithState) — the online
+    twin of ``operators/events.sessionize``.
+
+    State per user = the OPEN session (start_us, last_us, n_events,
+    session_idx). Each micro-batch folds the user's new events in event-time
+    order: a gap > ``gap_us`` CLOSES the open session (emitted downstream —
+    append mode) and opens the next. The final open session stays in state —
+    exactly the tail a production sessionizer holds back until the
+    watermark expires it — so emissions are identical no matter how the
+    feed splits into micro-batches, and a restarted query resumes mid-
+    session from the checkpointed state store (tested).
+
+    The fold is VECTORIZED inside each Arrow batch (numpy diff -> cumsum
+    segment ids -> one pandas groupby); Python touches one row per
+    *session*, not per event. Assumes per-user event-time-ordered arrival
+    across micro-batches (the standard sessionizer contract; reorder with a
+    watermarked sort upstream if the feed interleaves).
+    """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def fold(key, pdfs, state: GroupState):
+        parts = [pdf[["ts_us"]] for pdf in pdfs]
+        ts = (
+            pd.concat(parts).sort_values("ts_us")["ts_us"]
+            .to_numpy(dtype="int64")
+        )
+        if state.exists:
+            idx0, start0, last0, n0 = state.get
+            open_sess = [idx0, n0, start0, last0]
+        else:
+            idx0, open_sess = 0, None
+        prev = np.empty_like(ts)
+        prev[1:] = ts[:-1]
+        prev[0] = open_sess[3] if open_sess is not None else ts[0] - gap_us - 1
+        seg = np.cumsum((ts - prev) > gap_us)
+        stats = (
+            pd.DataFrame({"seg": seg, "ts": ts})
+            .groupby("seg")["ts"].agg(["count", "min", "max"]).reset_index()
+        )
+        closed, idx = [], idx0
+        for _seg, cnt, mn, mx in stats.itertuples(index=False):
+            if _seg == 0:
+                open_sess[1] += int(cnt)
+                open_sess[3] = int(mx)
+                continue
+            if open_sess is not None:
+                closed.append(open_sess)
+            idx += 1
+            open_sess = [idx, int(cnt), int(mn), int(mx)]
+        state.update((open_sess[0], open_sess[2], open_sess[3], open_sess[1]))
+        if closed:
+            out = pd.DataFrame(
+                closed, columns=["session_idx", "n_events", "first_us", "last_us"]
+            )
+            out.insert(0, "user_id", key[0])
+            out["duration_us"] = out["last_us"] - out["first_us"]
+            yield out
+
+    stream = (
+        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
+        .select(
+            "user_id",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        )
+    )
+    return stream.groupBy("user_id").applyInPandasWithState(
+        fold,
+        outputStructType=(
+            "user_id long, session_idx long, n_events long, first_us long,"
+            " last_us long, duration_us long"
+        ),
+        stateStructType="idx long, start_us long, last_us long, n long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

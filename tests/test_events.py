@@ -1,4 +1,4 @@
-"""Event-stream analytics: gap sessionization + tumbling rollup vs
+"""Event-stream analytics: gap sessionization + hopping rollup vs
 pure-Python twins and boundary fixtures."""
 
 from __future__ import annotations
@@ -62,230 +62,6 @@ def test_sessionize_gap_boundary(spark):
     assert got == [(1, 2), (2, 1)]
 
 
-def test_tumbling_rollup_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    width = 3_600_000_000
-    epoch = datetime.datetime(1970, 1, 1)
-    want: dict[tuple, list] = {}
-    for r in rows:
-        us = int((r.ts - epoch).total_seconds() * 1_000_000 + 0.5)
-        k = (us - us % width, r.event_type)
-        want.setdefault(k, []).append((r.user_id, round(r.value * 100)))
-    expect = {
-        k: (len(v), len({u for u, _ in v}), sum(c for _, c in v))
-        for k, v in want.items()
-    }
-    got = {
-        (r.bucket_us, r.event_type): (r.n_events, r.n_users, r.sum_value_cents)
-        for r in ev.tumbling_rollup(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == expect
-
-
-def test_asof_join_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    epoch = datetime.datetime(1970, 1, 1)
-
-    def us(ts):
-        return int((ts - epoch).total_seconds() * 1_000_000 + 0.5)
-
-    clicks: dict[int, list] = {}
-    for r in rows:
-        if r.event_type == "click":
-            clicks.setdefault(r.user_id, []).append((us(r.ts), r.event_id))
-    want = {}
-    for r in rows:
-        if r.event_type != "purchase":
-            continue
-        pts = us(r.ts)
-        # latest click at-or-before; among equal ts the max event_id wins
-        best = max(
-            (c for c in clicks.get(r.user_id, []) if c[0] <= pts),
-            default=None,
-        )
-        want[r.event_id] = (
-            r.user_id, pts, round(r.value * 100),
-            best[1] if best else None,
-            best[0] if best else None,
-            pts - best[0] if best else None,
-        )
-    got = {
-        r.purchase_event_id: (
-            r.user_id, r.purchase_ts_us, r.value_cents,
-            r.click_event_id, r.click_ts_us, r.lag_us,
-        )
-        for r in ev.asof_join(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    assert any(v[3] is None for v in got.values()) or len(got) > 0
-
-
-def test_asof_join_same_instant_click_counts_and_ties_break_by_event_id(spark):
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        # two clicks at the SAME instant, then a purchase at that instant:
-        # the click counts (at-or-before) and the larger event_id wins
-        (1, base, 7, "click", 0.0, ""),
-        (2, base, 7, "click", 0.0, ""),
-        (3, base, 7, "purchase", 1.25, ""),
-        # a purchase with no prior click -> NULL match
-        (4, base, 8, "purchase", 2.50, ""),
-        # later click must NOT attach to the earlier purchase
-        (5, base + datetime.timedelta(hours=1), 8, "click", 0.0, ""),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {r.purchase_event_id: r for r in ev.asof_join(df).collect()}
-    assert got[3].click_event_id == 2 and got[3].lag_us == 0
-    assert got[4].click_event_id is None and got[4].lag_us is None
-    assert got[3].value_cents == 125 and got[4].value_cents == 250
-
-
-def test_hll_distinct_matches_python_twin_and_is_accurate(spark):
-    import hashlib
-
-    from mmgraphrag_spark.operators import sketches
-
-    # 3 groups with 50 / 700 / 5000 distinct keys (plus repeats)
-    rows = (
-        [("a", i % 50) for i in range(200)]
-        + [("b", i % 700) for i in range(1400)]
-        + [("c", i) for i in range(5000)]
-    )
-    df = spark.createDataFrame(rows, "grp string, key long")
-    got = {
-        r.grp: (r.n_exact, r.hll_estimate, r.err_pm)
-        for r in sketches.hll_distinct(df, "grp", "key").collect()
-    }
-
-    def twin(keys):
-        regs: dict[int, int] = {}
-        for k in keys:
-            h = int(hashlib.md5(str(k).encode()).hexdigest()[:15], 16)
-            j, w = h % sketches.M, h // sketches.M
-            rho = min(54 - len(bin(w)[2:]) if w else 53, sketches.RHO_CAP)
-            regs[j] = max(regs.get(j, 0), rho)
-        t = sum(1 << (sketches.RHO_CAP - m) for m in regs.values()) + (
-            sketches.M - len(regs)
-        ) * (1 << sketches.RHO_CAP)
-        return (
-            sketches.ALPHA_PPM * sketches.M * sketches.M * (1 << sketches.RHO_CAP)
-            // t
-            // 1_000_000
-        )
-
-    assert got["a"][1] == twin(range(50))
-    assert got["b"][1] == twin(range(700))
-    assert got["c"][1] == twin(range(5000))
-    # raw 128-register HLL: relative std ~9.2%; 30% is a >3-sigma bound
-    for g in ("b", "c"):
-        assert got[g][2] < 300_000, (g, got[g])
-
-
-def test_value_quantiles_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    groups: dict[str, list] = {}
-    for r in rows:
-        groups.setdefault(r.event_type, []).append((round(r.value * 100), r.event_id))
-    want = {}
-    for g, vals in groups.items():
-        s = [c for c, _ in sorted(vals)]
-        n = len(s)
-        pick = lambda q: s[(n * q + 999_999) // 1_000_000 - 1]
-        want[g] = (n, pick(500_000), pick(900_000), pick(990_000))
-    got = {
-        r.event_type: (r.n, r.p50_cents, r.p90_cents, r.p99_cents)
-        for r in ev.value_quantiles(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    # sanity: quantiles are ordered and are real data values
-    for g, (_, p50, p90, p99) in got.items():
-        assert p50 <= p90 <= p99
-
-
-def test_funnel_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    epoch = datetime.datetime(1970, 1, 1)
-    by_user: dict[int, list] = {}
-    for r in rows:
-        if r.event_type in ("view", "click", "purchase"):
-            us = int((r.ts - epoch).total_seconds() * 1_000_000 + 0.5)
-            by_user.setdefault(r.user_id, []).append((us, r.event_type))
-    want = {}
-    for u, evs in by_user.items():
-        v = min((t for t, k in evs if k == "view"), default=None)
-        c = (
-            min((t for t, k in evs if k == "click" and t > v), default=None)
-            if v is not None
-            else None
-        )
-        p = (
-            min((t for t, k in evs if k == "purchase" and t > c), default=None)
-            if c is not None
-            else None
-        )
-        stage = 3 if p is not None else 2 if c is not None else 1 if v is not None else 0
-        want[u] = (v, c, p, stage)
-    got = {
-        r.user_id: (r.view_us, r.click_us, r.purchase_us, r.stage)
-        for r in ev.funnel(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    assert any(s == 3 for *_, s in got.values())  # full conversions exist
-
-
-def test_funnel_strict_ordering_contract(spark):
-    """A click AT the view instant (or before it) does not advance the
-    funnel — each stage must be STRICTLY after the previous one."""
-    t0 = datetime.datetime(2024, 1, 1)
-    us = lambda n: t0 + datetime.timedelta(microseconds=n)  # noqa: E731
-    df = spark.createDataFrame(
-        [
-            (1, us(100), 7, "view", 0.0, "{}"),
-            (2, us(100), 7, "click", 0.0, "{}"),   # same instant: no advance
-            (3, us(50), 8, "click", 0.0, "{}"),    # click BEFORE view
-            (4, us(100), 8, "view", 0.0, "{}"),
-            (5, us(200), 8, "click", 0.0, "{}"),   # this one counts
-            (6, us(300), 8, "purchase", 0.0, "{}"),
-        ],
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {r.user_id: (r.stage, r.click_us) for r in ev.funnel(df).collect()}
-    assert got[7] == (1, None)
-    assert got[8][0] == 3
-    assert got[8][1] == int(
-        (us(200) - datetime.datetime(1970, 1, 1)).total_seconds() * 1_000_000
-    )
-
-
-def test_retention_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    epoch = datetime.datetime(1970, 1, 1)
-    day = 86_400_000_000
-    per_user: dict[int, set] = {}
-    for r in rows:
-        us = int((r.ts - epoch).total_seconds() * 1_000_000 + 0.5)
-        per_user.setdefault(r.user_id, set()).add(us - us % day)
-    want: dict[tuple, int] = {}
-    for _u, days in per_user.items():
-        cohort = min(days)
-        for d in days:
-            key = (cohort, (d - cohort) // day)
-            want[key] = want.get(key, 0) + 1
-    got = {
-        (r.cohort_us, r.day_offset): r.n_users
-        for r in ev.retention(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    assert all(
-        ((c, 0) in got) for c, _off in got
-    )  # every cohort is active on its own day 0
-
-
 def test_hopping_rollup_matches_python_twin(spark):
     rows = ev.events_table(spark, SF_TINY).collect()
     epoch = datetime.datetime(1970, 1, 1)
@@ -315,364 +91,3 @@ def test_hopping_rollup_rejects_unaligned_hop(spark):
 
     with pytest.raises(ValueError):
         ev.hopping_rollup(ev.events_table(spark, SF_TINY), 100, 33)
-
-
-def test_anomalies_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    by_type: dict[str, list] = {}
-    for r in rows:
-        by_type.setdefault(r.event_type, []).append(
-            (round(r.value * 100), r.event_id)
-        )
-
-    def med(vals):  # lower median: rank (n+1)//2 in (value, event_id) order
-        vals = sorted(vals)
-        return vals[(len(vals) + 1) // 2 - 1][0]
-
-    stats = {}
-    for t, vs in by_type.items():
-        m = med(vs)
-        mad = med([(abs(c - m), e) for c, e in vs])
-        stats[t] = (m, mad)
-    want = {}
-    for t, vs in by_type.items():
-        m, mad = stats[t]
-        for c, e in vs:
-            adev = abs(c - m)
-            want[e] = (
-                t, c, m, mad,
-                adev * 1_000_000 // max(mad, 1),
-                int(adev > 2 * mad),
-            )
-    got = {
-        r.event_id: (
-            r.event_type, r.cents, r.med_cents, r.mad_cents, r.dev_ppm,
-            r.is_anomaly,
-        )
-        for r in ev.anomalies(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-
-
-def test_anomalies_flags_injected_outlier(spark):
-    t0 = datetime.datetime(2024, 1, 1)
-    base = [
-        (i, t0, 1, "pay", 10.0 + (i % 5), "{}") for i in range(20)
-    ]
-    spiked = base + [(99, t0, 1, "pay", 10_000.0, "{}")]
-    df = spark.createDataFrame(
-        spiked,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {r.event_id: r.is_anomaly for r in ev.anomalies(df).collect()}
-    assert got[99] == 1
-    assert sum(got.values()) == 1  # only the spike is flagged
-
-
-def test_markov_transitions_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    epoch = datetime.datetime(1970, 1, 1)
-    by_user: dict[int, list] = {}
-    for r in rows:
-        us = int((r.ts - epoch).total_seconds() * 1_000_000 + 0.5)
-        by_user.setdefault(r.user_id, []).append((us, r.event_id, r.event_type))
-    pairs: dict[tuple, int] = {}
-    for _u, evs in by_user.items():
-        evs.sort()
-        prev = "^"
-        for _us, _eid, t in evs:
-            pairs[(prev, t)] = pairs.get((prev, t), 0) + 1
-            prev = t
-    totals: dict[str, int] = {}
-    for (p, _t), n in pairs.items():
-        totals[p] = totals.get(p, 0) + n
-    want = {
-        (p, t): (n, totals[p], n * 1_000_000 // totals[p])
-        for (p, t), n in pairs.items()
-    }
-    got = {
-        (r.prev_type, r.event_type): (r.n, r.row_total, r.p_ppm)
-        for r in ev.markov_transitions(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    # one '^' start per user; matrix rows normalize to ~1e6 (floor rounding)
-    assert sum(n for (p, _t), (n, *_r) in got.items() if p == "^") == len(by_user)
-    for p in {p for p, _ in got}:
-        s = sum(v[2] for (pp, _t), v in got.items() if pp == p)
-        assert 1_000_000 - len([1 for (pp, _) in got if pp == p]) < s <= 1_000_000
-
-
-def test_countmin_matches_python_twin_and_overestimates(spark):
-    import hashlib
-
-    from mmgraphrag_spark.operators import sketches
-
-    d, w = sketches.CM_D, sketches.CM_W
-    rows = ev.events_table(spark, SF_TINY).collect()
-    keys = [f"{r.user_id}:{r.event_type}" for r in rows]
-
-    def bucket(i: int, k: str) -> int:
-        return int(hashlib.md5(f"{i}:{k}".encode()).hexdigest()[:15], 16) % w
-
-    cells: dict[tuple, int] = {}
-    exact: dict[str, int] = {}
-    for k in keys:
-        exact[k] = exact.get(k, 0) + 1
-        for i in range(d):
-            cells[(i, bucket(i, k))] = cells.get((i, bucket(i, k)), 0) + 1
-    want = {}
-    for k, n in exact.items():
-        est = min(cells[(i, bucket(i, k))] for i in range(d))
-        want[k] = (n, est, (est - n) * 1_000_000 // max(n, 1))
-    got = {
-        r.key: (r.n_exact, r.cm_estimate, r.over_pm)
-        for r in sketches.countmin_heavy_hitters(
-            ev.events_table(spark, SF_TINY), "concat(user_id, ':', event_type)"
-        ).collect()
-    }
-    assert got == want
-    # CM never underestimates
-    assert all(est >= n for n, est, _o in got.values())
-
-
-def test_cooccurrence_lift_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    baskets = {}
-    for r in rows:
-        baskets.setdefault(r.user_id, set()).add(r.event_type)
-    n_users = len(baskets)
-    marg = {}
-    for items in baskets.values():
-        for i in items:
-            marg[i] = marg.get(i, 0) + 1
-    pair = {}
-    for items in baskets.values():
-        s = sorted(items)
-        for i, a in enumerate(s):
-            for b in s[i + 1:]:
-                pair[(a, b)] = pair.get((a, b), 0) + 1
-    want = {}
-    for (a, b), nxy in pair.items():
-        for x, y in ((a, b), (b, a)):
-            want[(x, y)] = (
-                marg[x], marg[y], nxy,
-                nxy * 1_000_000 // n_users,
-                nxy * 1_000_000 // marg[x],
-                nxy * n_users * 1_000_000 // (marg[x] * marg[y]),
-            )
-    got = {
-        (r.x, r.y): (r.n_x, r.n_y, r.n_xy, r.support_ppm,
-                     r.confidence_ppm, r.lift_ppm)
-        for r in ev.cooccurrence_lift(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-
-
-def test_cooccurrence_basket_cap_drops_power_users(spark):
-    """A user whose basket exceeds max_basket contributes to NO pair (the
-    cap is pre-join), but still counts in the marginals and N — so lift for
-    surviving pairs shifts down, never silently recomputes on a subset."""
-    data = [
-        (1, "a"), (1, "b"), (1, "c"),   # power user, basket 3
-        (2, "a"), (2, "b"),
-        (3, "a"), (3, "b"),
-    ]
-    df = spark.createDataFrame(data, "user_id long, event_type string")
-    capped = {
-        (r.x, r.y): r.n_xy
-        for r in ev.cooccurrence_lift(df, max_basket=2).collect()
-    }
-    assert capped[("a", "b")] == 2  # users 2,3 only; power user excluded
-    assert ("a", "c") not in capped
-    full = {
-        (r.x, r.y): r.n_xy for r in ev.cooccurrence_lift(df).collect()
-    }
-    assert full[("a", "b")] == 3 and full[("a", "c")] == 1
-
-
-def test_stickiness_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    day = ev.DAY_US
-    base = set()
-    for r in rows:
-        us = int(r.ts.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
-        base.add((r.user_id, (us // day) * day))
-    dau = {}
-    wau = {}
-    for u, d in base:
-        dau.setdefault(d, set()).add(u)
-        for k in range(7):
-            wau.setdefault(d + day * k, set()).add(u)
-    want = {
-        d: (len(dau[d]), len(wau[d]),
-            len(dau[d]) * 1_000_000 // len(wau[d]))
-        for d in dau
-    }
-    got = {
-        r.day_us: (r.dau, r.wau, r.stickiness_ppm)
-        for r in ev.stickiness(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-    # a window covering every user's activity has wau >= dau always
-    assert all(w >= d_ for d_, w, _ in got.values())
-
-
-def test_interarrival_matches_python_twin(spark):
-    rows = ev.events_table(spark, SF_TINY).collect()
-    seqs = {}
-    for r in rows:
-        us = int(r.ts.replace(tzinfo=datetime.timezone.utc).timestamp() * 1_000_000)
-        seqs.setdefault(r.user_id, []).append((us, r.event_id))
-    want = {}
-    for u, s in seqs.items():
-        s.sort()
-        gaps = sorted(s[i + 1][0] - s[i][0] for i in range(len(s) - 1))
-        if not gaps:
-            continue
-        n = len(gaps)
-        med = gaps[(n * 500_000 + 999_999) // 1_000_000 - 1]
-        want[u] = (n, gaps[0], med, gaps[-1])
-    got = {
-        r.user_id: (r.n_gaps, r.min_gap_us, r.median_gap_us, r.max_gap_us)
-        for r in ev.interarrival(ev.events_table(spark, SF_TINY)).collect()
-    }
-    assert got == want
-
-
-def test_cusum_matches_textbook_recurrence_and_alarms_on_shift(spark):
-    """The prefix-sum/prefix-min rewrite equals Page's recursive
-    S_t = max(0, S_{t-1} + d_t) — including across a zero-event gap day —
-    and the alarm fires only after the volume shift."""
-    base = datetime.datetime(2026, 1, 1)
-    rows = []
-    eid = 0
-    # type 'steady': 5 events/day for days 0..9 (never alarms)
-    for day in range(10):
-        for _ in range(5):
-            rows.append((eid, base + datetime.timedelta(days=day), 1, "steady", 1.0, "{}"))
-            eid += 1
-    # type 'burst': 2/day for days 0..5, day 6 SILENT, then 40/day days 7..9
-    for day in range(6):
-        for _ in range(2):
-            rows.append((eid, base + datetime.timedelta(days=day), 2, "burst", 1.0, "{}"))
-            eid += 1
-    for day in range(7, 10):
-        for _ in range(40):
-            rows.append((eid, base + datetime.timedelta(days=day), 2, "burst", 1.0, "{}"))
-            eid += 1
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    got = {
-        (r.event_type, r.day): (r.x, r.cusum_ppm, r.alarm)
-        for r in ev.cusum_changepoints(df).collect()
-    }
-    # python twin: the textbook recursion over the densified grid
-    day_us = ev.DAY_US
-    epoch = datetime.datetime(1970, 1, 1)
-    series = {}
-    for _eid, ts, _u, et, _v, _p in rows:
-        d = int((ts - epoch).total_seconds() * 1_000_000) // day_us
-        series.setdefault(et, {})[d] = series.setdefault(et, {}).get(d, 0) + 1
-    want = {}
-    for et, by_day in series.items():
-        d0, d1 = min(by_day), max(by_day)
-        total = sum(by_day.values())
-        mean = total * 1_000_000 // (d1 - d0 + 1)
-        slack = mean * 25 // 100
-        s = 0
-        for d in range(d0, d1 + 1):
-            x = by_day.get(d, 0)
-            s = max(0, s + x * 1_000_000 - mean - slack)
-            want[(et, d)] = (x, s, s > 3 * mean)
-    assert got == want
-    # steady stream never alarms; the burst type alarms only post-shift
-    assert not any(a for (et, _), (_, _, a) in got.items() if et == "steady")
-    burst_alarm_days = sorted(
-        d for (et, d), (_, _, a) in got.items() if et == "burst" and a
-    )
-    assert burst_alarm_days
-    first_burst_day = min(series["burst"])
-    assert min(burst_alarm_days) >= first_burst_day + 7  # after the shift
-    # the silent gap day exists in the output with x = 0
-    gap_day = first_burst_day + 6
-    assert got[("burst", gap_day)][0] == 0
-
-
-def _py_ntile(keys, q):
-    """keys: list of sort keys in tile order. Returns tile per index."""
-    n = len(keys)
-    base, rem = divmod(n, q)
-    tiles, start = {}, 0
-    for t in range(1, q + 1):
-        size = base + (1 if t <= rem else 0)
-        for i in range(start, start + size):
-            tiles[i] = t
-        start += size
-    return tiles
-
-
-def test_rfm_segments_matches_python_twin(spark):
-    df = ev.events_table(spark, SF_TINY)
-    rows = df.collect()
-    epoch = datetime.datetime(1970, 1, 1)
-    per = {}
-    for r in rows:
-        us = int((r.ts - epoch).total_seconds() * 1_000_000 + 0.5)
-        cents = round(r.value * 100)
-        u = per.setdefault(r.user_id, [0, 0, 0])
-        u[0] = max(u[0], us)
-        u[1] += 1
-        u[2] += int(cents)
-    mark = max(v[0] for v in per.values())
-    base = {
-        uid: ((mark - v[0]) // 86_400_000_000, v[1], v[2])
-        for uid, v in per.items()
-    }
-    q = 4
-    r_order = sorted(base, key=lambda u: (base[u][0], u))
-    f_order = sorted(base, key=lambda u: (-base[u][1], u))
-    m_order = sorted(base, key=lambda u: (-base[u][2], u))
-    r_t, f_t, m_t = (_py_ntile(o, q) for o in (r_order, f_order, m_order))
-    want = {}
-    for uid, (rec, fr, mo) in base.items():
-        rq = r_t[r_order.index(uid)]
-        fq = f_t[f_order.index(uid)]
-        mq = m_t[m_order.index(uid)]
-        want[uid] = (rec, fr, mo, rq, fq, mq, 100 * rq + 10 * fq + mq)
-    got = {
-        r.user_id: (
-            r.recency_days, r.frequency, r.monetary_cents,
-            r.r_q, r.f_q, r.m_q, r.rfm_code,
-        )
-        for r in ev.rfm_segments(df).collect()
-    }
-    assert got == want
-
-
-def test_cusum_single_exchange_per_series(spark):
-    """The detector's windows must reuse the daily-count partitioning:
-    no join in the plan except the grid left join, and no more than the
-    expected exchanges (daily groupBy, span groupBy, grid join shuffle)."""
-    df = ev.events_table(spark, SF_TINY)
-    plan = (
-        ev.cusum_changepoints(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_rfm_codes_are_consistent_with_tiles(spark):
-    got = ev.rfm_segments(ev.events_table(spark, SF_TINY)).collect()
-    for r in got:
-        assert r.rfm_code == 100 * r.r_q + 10 * r.f_q + r.m_q
-        assert 1 <= r.r_q <= 4 and 1 <= r.f_q <= 4 and 1 <= r.m_q <= 4
-    # tiles are balanced: sizes differ by at most 1 per dimension
-    from collections import Counter
-    for dim in ("r_q", "f_q", "m_q"):
-        sizes = Counter(getattr(r, dim) for r in got).values()
-        assert max(sizes) - min(sizes) <= 1

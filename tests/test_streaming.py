@@ -1,4 +1,4 @@
-"""Structured Streaming ingest: stream results equal batch results."""
+"""Structured Streaming: stream results equal batch results."""
 
 from __future__ import annotations
 
@@ -6,7 +6,39 @@ import shutil
 
 from conftest import SF_TINY
 
+from pyspark.sql import functions as F
+
 from mmgraphrag_spark.streaming import incremental
+
+
+def test_windowed_event_counts_stream_equals_batch(spark, tmp_path):
+    # stream source must be a directory of parquet files
+    src = str(tmp_path / "events_src")
+    spark.read.parquet(f"{SF_TINY}/events.parquet").write.parquet(src)
+
+    q = (
+        incremental.windowed_event_counts(spark, src)
+        .writeStream.format("memory")
+        .queryName("evt_counts")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = (
+        spark.sql("select * from evt_counts").toPandas()
+        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
+    )
+    want = (
+        incremental.batch_event_counts(spark, src).toPandas()
+        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
+    )
+    # append mode with availableNow emits only windows older than the
+    # watermark; on a drained finite source Spark finalizes all of them
+    assert len(got) > 0
+    merged = got.merge(want, on=["window_start", "event_type"], suffixes=("_s", "_b"))
+    assert (merged["n_s"] == merged["n_b"]).all()
+    assert len(got) <= len(want)
 
 
 def test_stream_extract_matches_batch(spark, tmp_path):
@@ -75,3 +107,255 @@ def test_resent_docs_cost_zero_extractor_work(spark, tmp_path):
     assert spark.read.parquet(f"{out}/mentions").count() == n1
     assert spark.read.parquet(f"{out}/raw_cache").count() == cache1
     shutil.rmtree(out, ignore_errors=True)
+
+
+def test_stream_near_duplicate_gate_matches_batch_collapse(spark, tmp_path):
+    """Streaming MinHash+LSH admission gate: feeding doc_id-ordered batches
+    admits exactly the batch pipeline's cluster representatives when
+    near-dup components are replica cliques — across TWO separate gate runs
+    sharing state (checkpoint + bucket store), and within one batch that
+    contains its own duplicates."""
+    from mmgraphrag_spark.operators import dedup
+
+    src = str(tmp_path / "gate_src")
+    out = str(tmp_path / "gate_out")
+    ckpt = str(tmp_path / "gate_ckpt")
+
+    base = (
+        spark.read.parquet(f"{SF_TINY}/documents.parquet")
+        .orderBy("doc_id").limit(12)
+    )
+    # replica families: each original gets an exact-duplicate twin at
+    # doc_id+1000 (clique components; Jaccard 1.0)
+    originals = base
+    replicas = base.withColumn("doc_id", F.col("doc_id") + F.lit(1000))
+    # a brand-new family arriving entirely inside batch 2: two duplicates
+    # of each other and of nothing admitted before
+    novel_text = "zebra quantum lattice " * 40
+    novel = spark.createDataFrame(
+        [(2001, novel_text, "en", "synt", len(novel_text)),
+         (2002, novel_text, "en", "synt", len(novel_text))],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    all_docs = originals.unionByName(replicas).unionByName(novel)
+
+    def drain():
+        q = incremental.stream_near_duplicates(spark, src, out, ckpt)
+        q.awaitTermination(180)
+
+    # batch 1: originals only (low ids first = doc_id-ordered feed)
+    originals.write.mode("append").parquet(src)
+    drain()
+    admitted1 = set(
+        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
+    )
+    # originals share no near-dups among themselves at sf_tiny? verify via
+    # the batch operator rather than assuming:
+    want1 = set(
+        r.doc_id
+        for r in dedup.duplicate_clusters(originals)
+        .filter(F.col("doc_id") == F.col("cluster_rep")).collect()
+    )
+    assert admitted1 == want1
+
+    # batch 2: replicas + the novel family, same checkpoint -> state resumes
+    replicas.unionByName(novel).write.mode("append").parquet(src)
+    drain()
+    admitted2 = set(
+        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
+    )
+    want_all = set(
+        r.doc_id
+        for r in dedup.duplicate_clusters(all_docs)
+        .filter(F.col("doc_id") == F.col("cluster_rep")).collect()
+    )
+    assert admitted2 == want_all
+    # every replica was rejected; exactly one of the novel pair admitted
+    assert not any(d >= 1000 and d < 2000 for d in admitted2)
+    assert len(admitted2 & {2001, 2002}) == 1
+    # the bucket store indexes exactly the admitted docs
+    store_docs = set(
+        r.doc_id
+        for r in spark.read.parquet(f"{out}/lsh_buckets")
+        .select("doc_id").distinct().collect()
+    )
+    assert store_docs == admitted2
+
+
+def test_near_dup_gate_micro_batch_replay_is_idempotent(spark, tmp_path):
+    """A replayed micro-batch (same batch_id) must converge to the same
+    state even when the prior attempt was PARTIAL — only the admitted table
+    written, the bucket store not yet (the non-atomic window foreachBatch
+    replay can land in)."""
+    out = str(tmp_path / "replay_out")
+
+    docs = (
+        spark.read.parquet(f"{SF_TINY}/documents.parquet")
+        .orderBy("doc_id").limit(6)
+    )
+    dup = docs.limit(3).withColumn("doc_id", F.col("doc_id") + F.lit(1000))
+
+    # batch 0 admits the originals
+    incremental.near_dup_process_batch(spark, docs, 0, out)
+    admitted0 = {r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()}
+    store0 = sorted(
+        (r.doc_id, r.band, r.bkey)
+        for r in spark.read.parquet(f"{out}/lsh_buckets").collect()
+    )
+
+    # simulate a PARTIAL attempt of batch 1: admitted written, store not.
+    # A naive gate reading that state would see the dup docs as "already
+    # admitted" text but form no candidates (no bucket rows) and re-admit.
+    dup.withColumn("lang", F.col("lang")).write.mode("overwrite").parquet(
+        f"{out}/admitted/run=direct/batch_id=1"
+    )
+
+    # replay batch 1 in full: must ignore its own partial rows, reject the
+    # duplicates of batch 0's admissions, and leave both tables consistent
+    incremental.near_dup_process_batch(spark, dup, 1, out)
+    admitted_replay = {
+        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
+    }
+    store_replay = sorted(
+        (r.doc_id, r.band, r.bkey)
+        for r in spark.read.parquet(f"{out}/lsh_buckets").collect()
+    )
+    assert admitted_replay == admitted0          # every dup rejected
+    assert store_replay == store0                # store matches admitted
+
+    # replaying AGAIN changes nothing (fixpoint)
+    incremental.near_dup_process_batch(spark, dup, 1, out)
+    assert {
+        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
+    } == admitted0
+
+
+def test_stream_sessions_equals_batch_closed_sessions_and_resumes(spark, tmp_path):
+    """Stateful sessionizer: emitted (closed) sessions equal the batch
+    twin's non-final sessions per user — on the first slice of the feed AND
+    after a restart over newly-arrived later events (open sessions straddle
+    the restart via the checkpointed state store)."""
+    from mmgraphrag_spark.operators import events as ev_ops
+
+    src = str(tmp_path / "events_src")
+    ckpt = str(tmp_path / "ckpt")
+    sink = str(tmp_path / "sessions_sink")
+
+    ev = spark.read.parquet(f"{SF_TINY}/events.parquet")
+    cutoff = ev.selectExpr("percentile(unix_micros(cast(ts as timestamp)), 0.6) p").first()["p"]
+    first = ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) < cutoff)
+    rest = ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) >= cutoff)
+    assert first.count() > 0 and rest.count() > 0
+    first.write.mode("append").parquet(src)
+
+    def drain():
+        q = (
+            incremental.stream_sessions(spark, src)
+            .writeStream.foreachBatch(
+                lambda df, bid: df.write.mode("append").parquet(sink)
+            )
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        try:
+            return (
+                spark.read.parquet(sink).toPandas()
+                .sort_values(["user_id", "session_idx"]).reset_index(drop=True)
+            )
+        except Exception:
+            import pandas as pd
+
+            return pd.DataFrame(
+                columns=["user_id", "session_idx", "n_events",
+                         "first_us", "last_us", "duration_us"])
+
+    def batch_closed(df):
+        """Batch twin restricted to CLOSED sessions: drop each user's last
+        (still-open) session."""
+        s = ev_ops.sessionize(df).toPandas()
+        last = s.groupby("user_id")["session_idx"].transform("max")
+        return (
+            s[s["session_idx"] < last]
+            .sort_values(["user_id", "session_idx"]).reset_index(drop=True)
+        )
+
+    got1 = drain()
+    want1 = batch_closed(first)
+    assert got1.to_dict("records") == want1.to_dict("records")
+
+    rest.write.mode("append").parquet(src)
+    got2 = drain()
+    want2 = batch_closed(ev)
+    assert got2.to_dict("records") == want2.to_dict("records")
+    # the restart must have CLOSED at least one session that was open in
+    # state at the end of run 1 (i.e. run 2 emitted something new)
+    assert len(got2) > len(got1)
+
+
+def test_hopping_windowed_counts_stream_equals_batch_and_explode_twin(
+    spark, tmp_path
+):
+    """Hopping windows (1 h sliding by 15 min): the streaming agg, its batch
+    F.window twin, and operators/events.hopping_rollup's explode form all
+    produce the same relation."""
+    import datetime
+
+    src = str(tmp_path / "events_hop_src")
+    spark.read.parquet(f"{SF_TINY}/events.parquet").write.parquet(src)
+
+    q = (
+        incremental.windowed_event_counts(
+            spark, src, window="1 hour", slide="15 minutes"
+        )
+        .writeStream.format("memory")
+        .queryName("evt_hop")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = (
+        spark.sql("select * from evt_hop").toPandas()
+        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
+    )
+    want = (
+        incremental.batch_event_counts(
+            spark, src, window="1 hour", slide="15 minutes"
+        ).toPandas()
+        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
+    )
+    assert len(got) > 0
+    merged = got.merge(
+        want, on=["window_start", "event_type"], suffixes=("_s", "_b")
+    )
+    # append mode emits only watermark-finalized window instances: the
+    # emitted set is a prefix-subset of the batch relation (the unemitted
+    # remainder is the trailing horizon) and every emitted value agrees
+    assert len(merged) == len(got) <= len(want)
+    assert (merged["n_s"] == merged["n_b"]).all()
+    unemitted = want.merge(
+        got[["window_start", "event_type"]],
+        on=["window_start", "event_type"],
+        how="left",
+        indicator=True,
+    )
+    late = unemitted[unemitted["_merge"] == "left_only"]["window_start"]
+    assert late.min() > got["window_start"].max() - datetime.timedelta(hours=3)
+    # the explode-form batch operator (epoch-µs buckets) agrees on counts
+    from mmgraphrag_spark.operators import events as ev
+
+    explode_counts = {
+        (
+            datetime.datetime.utcfromtimestamp(r.win_start_us / 1_000_000),
+            r.event_type,
+        ): r.n_events
+        for r in ev.hopping_rollup(spark.read.parquet(src)).collect()
+    }
+    batch_counts = {
+        (r.window_start, r.event_type): r.n
+        for r in want.itertuples(index=False)
+    }
+    assert explode_counts == batch_counts

@@ -16,6 +16,8 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 from mmgraphrag_spark.session import get_spark  # noqa: E402
 
+TABLES = ["documents", "events", "embeddings"]
+
 
 def norm(df, cols):
     """Sort columns by name, round floats, stringify, sort rows."""
@@ -27,12 +29,34 @@ def norm(df, cols):
     return rows
 
 
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
+    con = oracle_connection(sf_dir)
+    spark = get_spark("compare")
+    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
+    failed = []
+    for name, fn in qs.items():
+        if only and name not in only:
+            continue
+        if name not in os_:
+            print(f"{name}: rows={fn(spark, sf_dir).count()} (no oracle)")
+            continue
+        ok, report = compare(spark, con, sf_dir, name)
+        print(f"{name}: {report}")
+        if not ok:
+            failed.append(name)
+    print("FAILED:", failed or "none")
+    return 1 if failed else 0
+
+
 def oracle_connection(sf_dir: str):
-    """DuckDB connection with the ``documents`` view every oracle reads."""
+    """DuckDB connection with a view of each input table the oracles read."""
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
     return con
 
 
@@ -58,27 +82,6 @@ def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
             report += (f"\n  spark-only: {[x for x in a if x not in sb][:3]}"
                        f"\n  oracle-only: {[x for x in b if x not in sa][:3]}")
     return ok, f"{'OK' if ok else 'FAIL'} {report}"
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    con = oracle_connection(sf_dir)
-    spark = get_spark("compare")
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        if name not in os_:
-            print(f"{name}: rows={fn(spark, sf_dir).count()} (no oracle)")
-            continue
-        ok, report = compare(spark, con, sf_dir, name)
-        print(f"{name}: {report}")
-        if not ok:
-            failed.append(name)
-    print("FAILED:", failed or "none")
-    return 1 if failed else 0
 
 
 if __name__ == "__main__":

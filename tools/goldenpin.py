@@ -1,8 +1,8 @@
-"""Compute (and check stability of) the compare-style value hash of the
-registry query without an oracle, so tests can pin it as a committed golden.
+"""Compute (and check stability of) driver-style value hashes for the two
+no-oracle driver queries, so tests can pin them as committed goldens.
 
 Usage: python tools/goldenpin.py [cores] [sf_dir]
-Prints one line: <name> <rows> <md5-of-normed-rows>.
+Prints one line per query: <name> <rows> <md5-of-normed-rows>.
 """
 
 from __future__ import annotations
@@ -38,8 +38,10 @@ def main() -> None:
     from mmgraphrag_spark.session import get_spark
 
     spark = get_spark("goldenpin", cores=cores)
-    pdf = entry.queries()["kg_spectral"](spark, sf_dir).toPandas()
-    print("kg_spectral", len(pdf), value_hash(pdf), flush=True)
+    qs = entry.queries()
+    for name in ("kg_spectral", "ann_ivf_kmeans_topk"):
+        pdf = qs[name](spark, sf_dir).toPandas()
+        print(name, len(pdf), value_hash(pdf), flush=True)
 
 
 if __name__ == "__main__":
