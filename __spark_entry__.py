@@ -331,10 +331,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_simhash": lambda s, d: dedup.simhash(dedup.docs_table(s, d)),
         "kg_mentions_gleaned": lambda s, d: api.mentions(s, d, GLEANED_CFG),
         "kg_mentions_gleaned2": lambda s, d: api.mentions(s, d, GLEANED2_CFG),
-        # incremental rewiring path (fusion.fuse_graph_incremental): same
-        # result relation, so it shares kg_fused_*'s oracle SQL verbatim
-        "kg_fused_nodes_incr": api.fused_nodes_incremental,
-        "kg_fused_edges_incr": api.fused_edges_incremental,
         # large-star/small-star components (O(log n) rounds on stringy
         # graphs): same relation, same oracle — a physical-strategy variant
         "dup_clusters_star": lambda s, d: dedup.duplicate_clusters(
@@ -395,8 +391,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_clusters": oracle.q(oracle.clusters_select()),
         "kg_fused_nodes": oracle.q(oracle.fused_nodes_select()),
         "kg_fused_edges": oracle.q(oracle.fused_edges_select()),
-        "kg_fused_nodes_incr": oracle.q(oracle.fused_nodes_select()),
-        "kg_fused_edges_incr": oracle.q(oracle.fused_edges_select()),
         "kg_pagerank": oracle.q(oracle.pagerank_select()),
         "kg_triangles": oracle.q(oracle.triangles_select()),
         "kg_neighbor_sim": oracle.q(oracle.neighbor_sim_select()),

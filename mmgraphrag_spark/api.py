@@ -190,39 +190,6 @@ def fused_edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
     return fused_graph(spark, sf_dir, cfg)[1]
 
 
-def fused_graph_incremental(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> tuple[DataFrame, DataFrame]:
-    """The incremental rewiring path (fusion.fuse_graph_incremental) from the
-    pre-fusion aggregated graph — same result relation as fused_graph, so the
-    kg_fused_*_incr driver queries reuse kg_fused_*'s oracle SQL verbatim."""
-    key = _key("fused_incr", spark, sf_dir, cfg)
-    if key not in _fused_cache:
-        mm = merge_map(spark, sf_dir, cfg)
-        n, e = fusion.fuse_graph_incremental(
-            nodes(spark, sf_dir, cfg),
-            edges(spark, sf_dir, cfg),
-            all_mentions(spark, sf_dir, cfg),
-            all_triples(spark, sf_dir, cfg),
-            mm,
-            cfg=cfg,
-        )
-        _fused_cache[key] = (n.persist(), e.persist())
-    return _fused_cache[key]
-
-
-def fused_nodes_incremental(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> DataFrame:
-    return fused_graph_incremental(spark, sf_dir, cfg)[0]
-
-
-def fused_edges_incremental(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> DataFrame:
-    return fused_graph_incremental(spark, sf_dir, cfg)[1]
-
-
 def pagerank(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """Fixed-point integer PageRank over the fused graph (graphalgo.py)."""
     from .operators import graphalgo

@@ -48,20 +48,6 @@ class PipelineConfig:
     summary_max_tokens: int = 500
     summary_keep_tokens: int = 16
 
-    # fused-graph materialization strategy: "incremental" passes
-    # already-aggregated graph rows the merge map cannot touch straight
-    # through and re-aggregates only dirty keys (fusion.fuse_*_incremental);
-    # "full" re-runs A1/A2 over the whole rewired mention/triple relations.
-    # Both are bit-exact (pytest asserts). "auto" (default) measures the
-    # merge map's blast radius first — |dirty_names| / |entity names| — and
-    # picks incremental only when the map is sparse: the pass-through
-    # machinery costs more than it saves once most keys are dirty (measured
-    # on the 100k bench fixture, dirty fraction ~0.8: incremental 19.8 s vs
-    # full 15.3 s at 32 threads; production merge maps touch a few percent
-    # of entities and incremental's shuffle is proportional to that).
-    fused_strategy: str = "auto"
-    fused_auto_dirty_max: float = 0.3  # auto picks incremental below this
-
     # fusion
     fusion_eps: float = 0.5       # DBSCAN eps, reference fusion.py:245-251
     fusion_knn: int = 3           # kNN label transfer fan-in, fusion.py:256-267

@@ -538,8 +538,7 @@ def enhanced_graph(
 ) -> tuple[DataFrame, DataFrame]:
     """M9 composition: J6 merge rewiring, then rename unmerged image entities
     and append their context to descriptions, then re-canonicalize."""
-    m2 = apply_merge_map(all_mentions, mm, ["entity_name"])
-    t2 = apply_merge_map(all_triples, mm, ["subj", "obj"])
+    m2, t2 = fuse_inputs(all_mentions, all_triples, mm)
 
     e = F.broadcast(em.select("old_name", "new_name", "ctx_entity").distinct())
     m3 = (
@@ -554,15 +553,7 @@ def enhanced_graph(
             "source_id",
         )
     )
-    names = F.broadcast(em.select("old_name", "new_name").distinct())
-    t3 = t2
-    for c in ["subj", "obj"]:
-        t3 = (
-            t3.join(names, t3[c] == names["old_name"], "left")
-            .withColumn(c, F.coalesce("new_name", c))
-            .drop("old_name", "new_name")
-        )
-    t3 = t3.select(
+    t3 = apply_merge_map(t2, em, ["subj", "obj"]).select(
         F.least("subj", "obj").alias("subj"),
         F.greatest("subj", "obj").alias("obj"),
         "description", "weight", "source_id", "order",
@@ -625,112 +616,3 @@ def fuse_inputs(
         "description", "weight", "source_id", "order",
     )
     return m2, t2
-
-
-# --- incremental fusion (exact delta rewiring over aggregated checkpoints) --
-
-
-def dirty_names(mm: DataFrame) -> DataFrame:
-    """Every name the merge map can touch: its keys (old names disappear)
-    and its values (new names absorb the merged groups). Any graph key not
-    in this set has an IDENTICAL contributing raw group before and after
-    fusion — the basis for the incremental pass-through below."""
-    return (
-        mm.select(F.col("old_name").alias("dirty_name"))
-        .unionByName(mm.select(F.col("new_name").alias("dirty_name")))
-        .distinct()
-    )
-
-
-def _rewire_triples(all_triples: DataFrame, mm: DataFrame) -> DataFrame:
-    """J6 over triples + endpoint re-canonicalization (least, greatest)."""
-    t2 = apply_merge_map(all_triples, mm, ["subj", "obj"])
-    return t2.select(
-        F.least("subj", "obj").alias("subj"),
-        F.greatest("subj", "obj").alias("obj"),
-        "description", "weight", "source_id", "order",
-    )
-
-
-def fuse_edges_incremental(
-    edges: DataFrame,
-    all_triples: DataFrame,
-    mm: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
-    """Exact incremental A2 after fusion: pass through aggregated edge rows
-    the merge map cannot touch; re-aggregate from raw only the dirty keys.
-
-    The full path (fuse_graph) re-shuffles EVERY raw triple through the
-    (src, dst) groupBy even though the merge map typically renames a small
-    fraction of entities. Because every A2 aggregate is associative over
-    disjoint raw groups (sum, min, set-union) and an untouched key's raw
-    group is identical before/after rewiring, the already-aggregated
-    ``edges`` checkpoint row IS the fused row for any edge with neither
-    endpoint in dirty_names(mm). Shuffle volume drops from O(|triples|) to
-    O(|triples touching a renamed entity|) — at 10^12-doc scale with a
-    sparse merge map that is the difference between re-shuffling the whole
-    triple relation and re-shuffling a few percent of it. The raw relation
-    is still SCANNED once (narrow filter, no exchange for cold rows).
-
-    Equivalent to the reference's compose-then-rewire over built graphs
-    (fusion.py:707-807), which likewise never revisits untouched nodes.
-    """
-    d = F.broadcast(dirty_names(mm))
-    # the stored edge_rank is not carried: fusion changes the degrees
-    cold = edges.select(*canon.EDGE_COLS).join(
-        d, F.col("src") == F.col("dirty_name"), "left_anti"
-    ).join(d, F.col("dst") == F.col("dirty_name"), "left_anti")
-    t2 = _rewire_triples(all_triples, mm)
-    ds = d.withColumnRenamed("dirty_name", "__dirty_s")
-    do = d.withColumnRenamed("dirty_name", "__dirty_o")
-    hot = (
-        t2.join(ds, F.col("subj") == F.col("__dirty_s"), "left")
-        .join(do, F.col("obj") == F.col("__dirty_o"), "left")
-        .filter(F.col("__dirty_s").isNotNull() | F.col("__dirty_o").isNotNull())
-        .drop("__dirty_s", "__dirty_o")
-    )
-    return cold.unionByName(canon.build_edges(hot, cfg=cfg))
-
-
-def fuse_nodes_incremental(
-    nodes_base: DataFrame,
-    all_mentions: DataFrame,
-    mm: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> DataFrame:
-    """Exact incremental A1 after fusion (STUB-FREE base nodes only).
-
-    ``nodes_base`` must be the build_nodes output BEFORE add_stub_nodes:
-    stub rows derive from edges, and an edge merge can change a stub's
-    description even when the stub's own name is untouched — so stubs are
-    re-derived by the caller from the fused edges (add_stub_nodes over the
-    incremental output), never passed through.
-    """
-    d = F.broadcast(dirty_names(mm))
-    # as in fuse_edges_incremental: a stored degree is not carried
-    cold = nodes_base.select(*canon.NODE_COLS).join(
-        d, F.col("entity_name") == F.col("dirty_name"), "left_anti"
-    )
-    m2 = apply_merge_map(all_mentions, mm, ["entity_name"])
-    hot = m2.join(d, F.col("entity_name") == F.col("dirty_name"), "left_semi")
-    return cold.unionByName(canon.build_nodes(hot, cfg=cfg))
-
-
-def fuse_graph_incremental(
-    nodes_base: DataFrame,
-    edges: DataFrame,
-    all_mentions: DataFrame,
-    all_triples: DataFrame,
-    mm: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """fuse_graph, but starting from the pre-fusion aggregated graph
-    (nodes_base = build_nodes output pre-stubs, edges = build_edges output)
-    instead of re-aggregating every raw mention/triple. Bit-exact equal to
-    fuse_graph when the inputs were built with the same cfg (pytest asserts
-    this; the kg_fused_*_incr driver queries share kg_fused_*'s oracle)."""
-    mm = mm.persist()
-    fe = fuse_edges_incremental(edges, all_triples, mm, cfg=cfg)
-    fn = fuse_nodes_incremental(nodes_base, all_mentions, mm, cfg=cfg)
-    return canon.add_stub_nodes(fn, fe), fe

@@ -14,11 +14,20 @@ with table-per-stage checkpoints:
 * ``run(resume=True)`` skips any stage whose outputs are complete, so a
   killed run relaunches mid-pipeline (tested in tests/test_pipeline.py).
 
-DAG (all edges are parquet checkpoints):
+DAG, one line per stage: ``stage{output tables} <- dependency stages``
+(every edge is a parquet checkpoint):
 
-    documents.parquet -> spans -> chunks -> extract{mentions,triples}
-                          |                        \\
-                          +-> media{img_mentions,img_triples} -> graph{nodes,edges}
+    spans{spans}                          <- documents.parquet
+    chunks{chunks}                        <- spans
+    extract_raw{extraction_raw}           <- chunks
+    decode{mentions,triples}              <- extract_raw
+    media{img_mentions,img_triples}       <- spans
+    graph{nodes_base,nodes,edges}         <- decode, media
+    fusion{fusion_blocks}                 <- spans, media
+    fused_graph{fused_nodes,fused_edges}  <- decode, media, fusion
+
+graph and fused_graph are siblings: the fused stage re-aggregates the
+merge-map-rewired mention/triple checkpoints, so it runs alongside graph.
 """
 
 from __future__ import annotations
@@ -122,23 +131,6 @@ class Pipeline:
                 df = df.repartition(want)
         return df
 
-    def _nrows(self, table: str) -> int:
-        """Row count of a written checkpoint from its parquet footers —
-        driver-side metadata only, no Spark job, no data scan, when the
-        work_dir is a local filesystem. On a remote work_dir (hdfs://,
-        s3a://, the documented Iceberg swap) the local glob sees nothing, so
-        fall back to a metadata-only Spark count over the checkpoint (parquet
-        footer aggregation, no column data read) instead of silently
-        returning 0 — a zero here would defeat the fused-graph 'auto'
-        routing by making every merge map look dense."""
-        per_part = self._footer_rows(table)
-        if per_part is not None:
-            return sum(per_part)
-        return (
-            self.spark.read.format(self.checkpoint_format)
-            .load(self._path(table)).count()
-        )
-
     def _footer_rows(self, table: str) -> list[int] | None:
         """Per-file row counts from checkpoint file FOOTERS (driver-side
         metadata, no data scan) — parquet via pyarrow.parquet, orc via
@@ -171,11 +163,10 @@ class Pipeline:
         rows = self._footer_rows(table)
         if rows is None:
             # remote work_dir (hdfs://, s3a://, Iceberg swap): no local
-            # footers — mirror _nrows' metadata-only Spark count rather than
-            # silently recording 0 (a zero row count here would both corrupt
-            # the metrics table and defeat dense-vs-sparse fused-graph
-            # routing downstream); partition granularity is lost, the total
-            # is not
+            # footers — a metadata-only Spark count (parquet footer
+            # aggregation, no column data read) rather than silently
+            # recording 0 in the metrics table; partition granularity is
+            # lost, the total is not
             rows = [
                 self.spark.read.format(self.checkpoint_format)
                 .load(self._path(table)).count()
@@ -251,12 +242,6 @@ class Pipeline:
         self.spark.sparkContext.setJobDescription(f"stage:{name}")
         produced = fn()  # dict[table -> DataFrame | callable -> DataFrame]
         cleanup = produced.pop("__cleanup__", None)
-        # "__note__": free-form physical-plan annotation (e.g. which fused
-        # strategy "auto" resolved to) — recorded with the lineage inputs so
-        # a production run's choices are auditable after the fact
-        note = produced.pop("__note__", None)
-        if note:
-            inputs = [*inputs, f"note:{note}"]
         # Plain DataFrame outputs are INDEPENDENT jobs: submit them from a
         # small thread pool so the second write's tasks back-fill executors
         # freed by the first write's straggler tail (a shared persisted
@@ -389,13 +374,10 @@ class Pipeline:
             # would otherwise plan the degree branch as a second, keys-only
             # triples aggregation. The triples exchange runs once; the block
             # manager's per-block locks make the later reader wait.
-            # nodes (with stubs) derives from the CHECKPOINTS afterwards;
-            # stubs take their degree from add_stub_nodes' own group-by.
-            # nodes_base (pre-stub) is checkpointed separately: the fused
-            # stage's incremental rewiring passes untouched base rows through
-            # unchanged, but stub rows derive from edges and must be re-run
-            # against the FUSED edges — so the stub-free relation is the
-            # reusable one. It is a tiny table (one row per entity).
+            # nodes (with stubs) derives from the nodes_base (pre-stub) and
+            # edges CHECKPOINTS afterwards, instead of recomputing their
+            # plans; stubs take their degree from add_stub_nodes' own
+            # group-by.
             edges = canon.build_edges(all_t, cfg=cfg).persist()
             return {
                 "edges": canon.with_edge_rank(edges),
@@ -420,7 +402,7 @@ class Pipeline:
             cols_m = canon.NODE_COLS
             cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
             # spread=False as in _graph: the rewiring is broadcast joins
-            # (narrow) and both strategies end in keyed aggregations
+            # (narrow) and ends in keyed aggregations
             all_m = (
                 self.read("mentions", spread=False).select(cols_m)
                 .unionByName(self.read("img_mentions", spread=False).select(cols_m))
@@ -432,55 +414,17 @@ class Pipeline:
             mm = fusion.merge_map_from_blocks(
                 self.read("fusion_blocks", spread=False)
             ).persist()
-            # INCREMENTAL rewiring: the graph stage already aggregated the
-            # full mention/triple relations; only keys the merge map touches
-            # re-aggregate from raw (fusion.fuse_edges_incremental docstring
-            # has the exactness argument). Cold rows pass through from the
-            # edges / nodes_base checkpoints with no exchange; at production
-            # scale the fused stage's shuffle is proportional to the merge
-            # map's blast radius, not to the corpus. Stubs re-derive from
-            # the fused_edges CHECKPOINT (same dedup as the graph stage).
-            # "full" re-runs A1/A2 over the whole rewired relations — the
-            # bit-exact fallback (and the A/B baseline, tools/stagebench.py).
-            # "auto" (default) decides from the measured blast radius: the
-            # merge map is tiny and already persisted, so counting dirty
-            # names is O(|mm|); the entity-name count comes from the
-            # nodes_base checkpoint footers (driver-side metadata, no scan).
-            strategy = cfg.fused_strategy
-            if strategy not in ("auto", "incremental", "full"):
-                raise ValueError(
-                    f"fused_strategy={strategy!r}: expected one of "
-                    "'auto', 'incremental', 'full'"
-                )
-            if strategy == "auto":
-                n_dirty = fusion.dirty_names(mm).count()
-                n_names = max(self._nrows("nodes_base"), 1)
-                strategy = ("incremental"
-                            if n_dirty <= cfg.fused_auto_dirty_max * n_names
-                            else "full")
-            if strategy == "full":
-                m2, t2 = fusion.fuse_inputs(all_m, all_t, mm)
-                return {
-                    "fused_edges": canon.build_edges(t2, cfg=cfg),
-                    "fused_nodes": lambda: canon.add_stub_nodes(
-                        canon.build_nodes(m2, cfg=cfg),
-                        self.read("fused_edges", spread=False),
-                    ),
-                    "__cleanup__": lambda: mm.unpersist(),
-                    "__note__": f"strategy={strategy}",
-                }
+            # J6 rewiring, then A1/A2 over the whole rewired relations; stubs
+            # derive from the fused_edges CHECKPOINT (same dedup as the graph
+            # stage)
+            m2, t2 = fusion.fuse_inputs(all_m, all_t, mm)
             return {
-                "fused_edges": fusion.fuse_edges_incremental(
-                    self.read("edges", spread=False), all_t, mm, cfg=cfg
-                ),
+                "fused_edges": canon.build_edges(t2, cfg=cfg),
                 "fused_nodes": lambda: canon.add_stub_nodes(
-                    fusion.fuse_nodes_incremental(
-                        self.read("nodes_base", spread=False), all_m, mm, cfg=cfg
-                    ),
+                    canon.build_nodes(m2, cfg=cfg),
                     self.read("fused_edges", spread=False),
                 ),
                 "__cleanup__": lambda: mm.unpersist(),
-                "__note__": f"strategy={strategy}",
             }
 
         # name -> (dep stages, lineage inputs, output tables, builder)
@@ -500,10 +444,9 @@ class Pipeline:
                       ["nodes", "nodes_base", "edges"], _graph),
             "fusion": (["spans", "media"], ["spans", "img_mentions"],
                        ["fusion_blocks"], _fusion),
-            "fused_graph": (["decode", "media", "fusion", "graph"],
+            "fused_graph": (["decode", "media", "fusion"],
                             ["mentions", "triples", "img_mentions",
-                             "img_triples", "fusion_blocks", "nodes_base",
-                             "edges"],
+                             "img_triples", "fusion_blocks"],
                             ["fused_nodes", "fused_edges"], _fused_graph),
         }
 

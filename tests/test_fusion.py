@@ -242,36 +242,14 @@ def test_jvm_trigram_vectors_equal_python_encoder(spark):
         assert got[s] == want, s
 
 
-def _pdf_sorted(df, keys):
-    return df.toPandas().sort_values(keys).reset_index(drop=True)
-
-
-def test_incremental_fused_graph_equals_full(spark):
-    """fuse_graph_incremental is bit-exact vs fuse_graph on the synth corpus
-    (cold pass-through + hot re-aggregation partition is lossless)."""
-    full_n = _pdf_sorted(api.fused_nodes(spark, SF_TINY), ["entity_name"])
-    incr_n = _pdf_sorted(api.fused_nodes_incremental(spark, SF_TINY), ["entity_name"])
-    assert full_n.equals(incr_n)
-    full_e = _pdf_sorted(api.fused_edges(spark, SF_TINY), ["src", "dst"])
-    incr_e = _pdf_sorted(api.fused_edges_incremental(spark, SF_TINY), ["src", "dst"])
-    assert full_e.equals(incr_e)
-    # the path is genuinely incremental: some base rows are cold
-    mm = api.merge_map(spark, SF_TINY)
-    dirty = {r.dirty_name for r in fusion.dirty_names(mm).collect()}
-    assert dirty and len(dirty) < len(full_n)
-
-
-def test_incremental_refreshes_stub_rows_of_untouched_names(spark):
+def test_fused_graph_refreshes_stub_rows_of_untouched_names(spark):
     """An edge merge can change a STUB node's description even when the
-    stub's own name is never renamed — the incremental path must re-derive
-    stubs from fused edges rather than pass them through."""
-    from pyspark.sql import functions as F
-    from mmgraphrag_spark.operators import canonicalize as canon
-
+    stub's own name is never renamed — stubs are re-derived from the fused
+    edges."""
     # mentions: only A and B exist as real entities; STUB appears only as an
     # edge endpoint. B merges into A, so the two (STUB, ·) edges collapse
     # into one whose description is the set-union — the stub row for STUB
-    # (first-by-description edge) changes while STUB itself is cold.
+    # (first-by-description edge) changes while STUB itself is untouched.
     mcols = "entity_name string, entity_type string, description string, source_id string"
     mentions = spark.createDataFrame(
         [("A", "PERSON", "a-desc", "c1"), ("B", "PERSON", "b-desc", "c1")], mcols
@@ -284,14 +262,8 @@ def test_incremental_refreshes_stub_rows_of_untouched_names(spark):
     )
     mm = spark.createDataFrame([("B", "A")], "old_name string, new_name string")
 
-    nodes_base = canon.build_nodes(mentions)
-    edges = canon.build_edges(triples)
-    full = fusion.fuse_graph(mentions, triples, mm)
-    incr = fusion.fuse_graph_incremental(nodes_base, edges, mentions, triples, mm)
-    for f, i, keys in ((full[0], incr[0], ["entity_name"]),
-                       (full[1], incr[1], ["src", "dst"])):
-        assert _pdf_sorted(f, keys).equals(_pdf_sorted(i, keys))
-    stub = {r.entity_name: r for r in incr[0].collect()}["STUB"]
+    nodes, _ = fusion.fuse_graph(mentions, triples, mm)
+    stub = {r.entity_name: r for r in nodes.collect()}["STUB"]
     assert stub.entity_type == "UNKNOWN"
     # merged edge description is the union join -> stub carries it
     assert "aa-via-b" in stub.description and "zz-via-a" in stub.description

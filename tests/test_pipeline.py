@@ -76,21 +76,19 @@ def test_stored_ranks_match_recount(spark, pipe, tmp_path):
 
 def test_fused_tables_keep_their_columns(spark, pipe):
     """The stored ranks stay on the unfused graph: the fused tables (pipeline
-    checkpoints and the api's full and incremental paths) keep the merged
-    columns only."""
+    checkpoints and the api's fused graph) keep the merged columns only."""
     node_cols = ["entity_name", "entity_type", "description", "source_id"]
     edge_cols = ["src", "dst", "weight", "description", "source_id", "order"]
     assert pipe.read("fused_nodes", spread=False).columns == node_cols
     assert pipe.read("fused_edges", spread=False).columns == edge_cols
-    for n, e in (api.fused_graph(spark, SF_TINY),
-                 api.fused_graph_incremental(spark, SF_TINY)):
-        assert (n.columns, e.columns) == (node_cols, edge_cols)
+    n, e = api.fused_graph(spark, SF_TINY)
+    assert (n.columns, e.columns) == (node_cols, edge_cols)
 
 
 def test_fused_checkpoints_match_full_recompute(spark, pipe):
-    """The pipeline's fused stage uses the INCREMENTAL rewiring
-    (fuse_*_incremental over the graph-stage checkpoints); it must equal the
-    api's full-recompute fuse_graph bit-for-bit."""
+    """The pipeline's fused stage (rewired mention/triple checkpoints, stubs
+    from the fused_edges checkpoint) must equal the api's in-memory
+    fuse_graph bit-for-bit."""
     for table, fn, keys in (
         ("fused_nodes", api.fused_nodes, ["entity_name"]),
         ("fused_edges", api.fused_edges, ["src", "dst"]),
@@ -98,28 +96,6 @@ def test_fused_checkpoints_match_full_recompute(spark, pipe):
         a = (pipe.read(table, spread=False).toPandas()
              .sort_values(keys).reset_index(drop=True))
         b = fn(spark, SF_TINY).toPandas().sort_values(keys).reset_index(drop=True)
-        assert a.equals(b), table
-
-
-@pytest.mark.parametrize("strategy", ["incremental", "full"])
-def test_fused_strategy_variants_match(spark, pipe, tmp_path_factory, strategy):
-    """Both explicit cfg.fused_strategy values produce the same fused tables
-    as the default 'auto' pipeline (which picks by measured merge-map blast
-    radius) — the strategy is a physical-plan choice, never a semantic one."""
-    import dataclasses
-
-    from mmgraphrag_spark.config import DEFAULT
-
-    work = str(tmp_path_factory.mktemp(f"pipe_{strategy}"))
-    p = Pipeline(spark, SF_TINY, work,
-                 cfg=dataclasses.replace(DEFAULT, fused_strategy=strategy))
-    p.run(resume=False)
-    for table, keys in (("fused_nodes", ["entity_name"]),
-                        ("fused_edges", ["src", "dst"])):
-        a = (p.read(table, spread=False).toPandas()
-             .sort_values(keys).reset_index(drop=True))
-        b = (pipe.read(table, spread=False).toPandas()
-             .sort_values(keys).reset_index(drop=True))
         assert a.equals(b), table
 
 
@@ -155,9 +131,6 @@ def test_lineage_and_metrics_rows(pipe):
     per_stage = lin.drop_duplicates("output").set_index("output")["rows_out"]
     for stage in ["spans", "chunks", "mentions", "triples"]:
         assert got[stage] == per_stage[stage]
-    # the fused stage records which physical strategy "auto" resolved to
-    fused_inputs = lin[lin["stage"] == "fused_graph"]["inputs"].iloc[0]
-    assert "note:strategy=" in fused_inputs
 
 
 def test_decode_checkpoints_omit_derived_source_id(spark, pipe):
@@ -195,8 +168,8 @@ def test_checkpoint_format_orc_round_trips(spark, pipe, tmp_path):
     """The checkpoint layer is format-agnostic (the documented Iceberg swap
     is a writer/catalog knob, not a rewrite): the same pipeline run with
     checkpoint_format='orc' produces value-identical tables, per-partition
-    footer metrics, resume markers, and a working fused-graph 'auto' row
-    count — with zero parquet files among the data checkpoints."""
+    footer metrics and resume markers — with zero parquet files among the
+    data checkpoints."""
     from pathlib import Path
 
     p = Pipeline(spark, SF_TINY, str(tmp_path / "orc"), checkpoint_format="orc")
@@ -210,7 +183,7 @@ def test_checkpoint_format_orc_round_trips(spark, pipe, tmp_path):
         assert any(f.suffix == ".orc" for f in files), table
         assert not any(f.suffix == ".parquet" for f in files), table
         # footer metrics (no data scan) agree with the real count
-        assert p._nrows(table) == b.count(), table
+        assert sum(p._footer_rows(table)) == b.count(), table
     # resume still recognizes completed stages; bookkeeping stays parquet
     assert not any(p.run(resume=True).values())
     assert p.lineage().count() > 0 and p.metrics().count() > 0

@@ -6,6 +6,7 @@ Compares row count, column names, and order-insensitive value hash.
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -64,9 +65,16 @@ def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
     """Run registry query ``name`` in Spark and its DuckDB twin; return
     (parity, report). Parity means equal column names, equal row counts and
     equal ``norm`` rows; on a value mismatch the report names up to three
-    rows found on one side only."""
+    rows found on one side only.
+
+    Every CTE of the oracle SQL is materialised: the same rows, but each
+    shared-prefix CTE is evaluated once instead of once per reference (the
+    inlined form of the query-context and fused-graph oracles exhausts
+    DuckDB's temp space at sf0.001)."""
     sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
-    odf = con.execute(entrymod.oracle_sql()[name]).df()
+    sql = re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (",
+                 entrymod.oracle_sql()[name])
+    odf = con.execute(sql).df()
     scols, ocols = sorted(sdf.columns), sorted(odf.columns)
     ok_schema = scols == ocols
     report = (

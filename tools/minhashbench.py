@@ -1,6 +1,5 @@
-"""Before/after A/B for the MinHash signature build (round-2 VERDICT item:
-"de-HOF the MinHash signature build ... stagebench before/after showing the
-signature stage off the interpreted path").
+"""Before/after A/B for the MinHash signature build: shows the signature
+stage off the interpreted higher-order-function path.
 
 OLD shape (reconstructed here verbatim): per-row `transform(sequence, j ->
 concat_ws(slice(...)))` shingle arrays + 16× `array_min(transform(sh, s ->

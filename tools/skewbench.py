@@ -8,7 +8,7 @@ strings per entity so collect_set partials genuinely combine (the all-
 distinct worst case makes the final union irreducible for ANY strategy —
 measured separately with pool=0 = all distinct).
 
-Method: same health-gated min-of-N protocol as stagebench. Usage:
+Method: health-gated (tools/scaling._healthy) min-of-N walls. Usage:
 
   python tools/skewbench.py [cores] [n_rows] [reps]
 
