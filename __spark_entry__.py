@@ -9,6 +9,11 @@ The registry holds the KG build stages, the query path, the ingest readers
 and the graph, media, text, curation, dedup and event analytics, each keyed
 by name. Every entry except ``kg_spectral`` and ``ann_ivf_kmeans_topk`` has
 an exact DuckDB twin, which ``tools/compare.py`` checks.
+
+The KG entries (``kg_*``, ``qctx_*``, ``mm_*`` and the rest of ``api``) read
+the checkpoints of one ``Pipeline`` build per (sf_dir, config) and session
+(``api.build``), so the oracle checks the tables the build writes. Each
+config variant below (gleaning, the answer-chain query) is its own build.
 """
 
 from __future__ import annotations

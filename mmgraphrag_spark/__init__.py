@@ -14,7 +14,8 @@ Layout:
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
   oracle_extra  DuckDB-SQL twins of the dedup, similarity, text, curation and
                 event operators
-  api           DataFrame-in/DataFrame-out public API (the registry bodies)
+  api           DataFrame-in/DataFrame-out public API (the registry bodies;
+                KG tables read a session-scoped Pipeline build)
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,

@@ -21,25 +21,14 @@ import json
 
 def _local_query(spark, work_dir: str, query: str) -> dict:
     """Reference local-query lifecycle (query.py:313-470) over the
-    checkpoint tables a prior index run produced: seed entities, budgeted
-    context edges/chunks, rendered CSV context, filled prompt chain."""
-    from .config import DEFAULT
-    from .operators import answer, media, query_ctx
+    checkpoint tables a prior index run produced (answer.local_answer)."""
+    from .operators import answer, media
 
-    nodes = spark.read.parquet(f"{work_dir}/nodes")
-    edges = spark.read.parquet(f"{work_dir}/edges")
-    chunks = spark.read.parquet(f"{work_dir}/chunks")
-    k, budget = DEFAULT.qctx_k, DEFAULT.qctx_token_budget
-    seeds = query_ctx.seed_entities(nodes, edges, query, k)
-    ctx_edges = query_ctx.context_edges(nodes, edges, query, k, budget)
-    ctx_chunks = query_ctx.context_chunks(nodes, edges, chunks, query, k)
-    blocks = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, chunks)
-    ents_csv, context = blocks[0], query_ctx.wrap_context(blocks)
-    med = media.media_spans(spark.read.parquet(f"{work_dir}/spans"))
-    ents = answer.mm_entities_from_context(ents_csv)
-    info = answer.media_info_for(med, ents)
-    chain = answer.assemble_answer_chain(context, ents_csv, info)
-    chain["context"] = context
+    rd = spark.read.parquet
+    chain = answer.local_answer(
+        rd(f"{work_dir}/nodes"), rd(f"{work_dir}/edges"), rd(f"{work_dir}/chunks"),
+        media.media_spans(rd(f"{work_dir}/spans")), query,
+    )
     chain["query"] = query
     return chain
 

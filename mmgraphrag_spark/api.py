@@ -1,148 +1,61 @@
-"""Public DataFrame-in/DataFrame-out API (SURVEY.md §3.3).
+"""Public DataFrame-in/DataFrame-out API (SURVEY.md §3.3): the driver-checked
+``queries()`` bodies.
 
-Each function composes the package operators into one logical plan from the
-testdata ``documents.parquet`` at ``sf_dir``; Catalyst fuses/prunes across the
-composition. These are the driver-checked ``queries()`` bodies.
+Every KG table is read from one ``Pipeline`` build (plans/pipeline.py) of
+``documents.parquet`` at ``sf_dir``, so the registry checks the tables the
+build writes. The build's work dir is scoped to the Spark session: it lies
+under ``SparkFiles.getRootDirectory()``, which Spark deletes at
+``spark.stop()``, and is named by (sf_dir, cfg). The first call builds; a
+later one resumes, finds every stage complete and runs no Spark job. The
+query and analytics functions compose operators over those tables.
 """
 
 from __future__ import annotations
 
-from dataclasses import replace
+import hashlib
+import os
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import DEFAULT, PipelineConfig
-from .operators import canonicalize as canon
-from .operators import chunker, extractor, fusion, media, query_ctx
-from . import synth
+from .operators import answer, fusion, media, query_ctx
+from .plans.pipeline import Pipeline
 
 
-# Memoized shared sub-plans, persisted: the driver runs ~30 queries against
-# the same (session, sf_dir) and most KG queries share the spans→chunks→
-# extraction prefix — caching it turns the correctness pass from O(queries ×
-# pipeline) into O(pipeline + queries × suffix). Keys use the Spark
-# applicationId (stable per session, never recycled like id()) plus the
-# config's value repr; entries from other/stopped sessions are purged on
-# access so long-lived processes don't leak persisted plans.
-_plan_cache: dict = {}
+def build(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> Pipeline:
+    """The session's Pipeline build of (sf_dir, cfg), run or resumed."""
+    key = hashlib.md5(repr((sf_dir, cfg)).encode()).hexdigest()
+    work = os.path.join(SparkFiles.getRootDirectory(), f"kg-{key}")
+    pipe = Pipeline(spark, sf_dir, work, cfg=cfg)
+    pipe.run(resume=True)
+    return pipe
 
 
-def _purge_other_apps(cache: dict, app_id: str) -> None:
-    for k in [k for k in cache if k[1] != app_id]:
-        v = cache.pop(k)
-        for df in v if isinstance(v, tuple) else (v,):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # owning session already stopped
+def _table(name: str):
+    def read(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+        return build(spark, sf_dir, cfg).read(name, spread=False)
+
+    read.__doc__ = f"The build's ``{name}`` checkpoint."
+    return read
 
 
-def _key(name: str, spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
-    app_id = spark.sparkContext.applicationId
-    _purge_other_apps(_plan_cache, app_id)
-    _purge_other_apps(_fused_cache, app_id)
-    return (name, app_id, sf_dir, repr(cfg))
-
-
-def _memo(name: str, spark: SparkSession, sf_dir: str, cfg: PipelineConfig, build):
-    key = _key(name, spark, sf_dir, cfg)
-    if key not in _plan_cache:
-        _plan_cache[key] = build().persist()
-    return _plan_cache[key]
-
-
-def spans(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return _memo("spans", spark, sf_dir, cfg,
-                 lambda: synth.flat_spans(spark, sf_dir, cfg))
-
-
-def docs(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return synth.nest_spans(spans(spark, sf_dir, cfg))
-
-
-def chunks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return _memo("chunks", spark, sf_dir, cfg,
-                 lambda: chunker.chunk_docs(docs(spark, sf_dir, cfg), cfg))
-
-
-def _parsed(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return _memo(
-        "parsed", spark, sf_dir, cfg,
-        lambda: extractor.parse_records(
-            extractor.extract_raw(chunks(spark, sf_dir, cfg), cfg=cfg)
-        ),
-    )
-
-
-def mentions(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return extractor.decode_mentions(_parsed(spark, sf_dir, cfg))
-
-
-def triples(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return extractor.decode_triples(_parsed(spark, sf_dir, cfg))
+spans = _table("spans")
+chunks = _table("chunks")
+mentions = _table("mentions")
+triples = _table("triples")
+img_mentions = _table("img_mentions")
+img_triples = _table("img_triples")
+# the pre-stub nodes with the stored ``degree``; edges carry ``edge_rank``
+nodes = _table("nodes_base")
+edges = _table("edges")
+fusion_blocks = _table("fusion_blocks")
+fused_nodes = _table("fused_nodes")
+fused_edges = _table("fused_edges")
 
 
 def media_table(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     return media.media_spans(spans(spark, sf_dir, cfg))
-
-
-def img_mentions(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return media.image_mentions(media_table(spark, sf_dir, cfg), cfg)
-
-
-def img_triples(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return media.image_triples(media_table(spark, sf_dir, cfg), cfg)
-
-
-def all_mentions(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    text = mentions(spark, sf_dir, cfg).select(
-        "entity_name", "entity_type", "description", "source_id"
-    )
-    img = img_mentions(spark, sf_dir, cfg).select(
-        "entity_name", "entity_type", "description", "source_id"
-    )
-    return text.unionByName(img)
-
-
-def all_triples(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    text = triples(spark, sf_dir, cfg).select(
-        "subj", "obj", "description", "weight", "source_id", "order"
-    )
-    img = img_triples(spark, sf_dir, cfg).select(
-        "subj", "obj", "description", "weight", "source_id", "order"
-    )
-    return text.unionByName(img)
-
-
-def nodes(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Pre-stub nodes with the stored ``degree`` (the pipeline's nodes_base).
-
-    Memoized+persisted like the spans/chunks/parsed prefixes: ~15 of the
-    driver's queries consume the node relation (qctx family, vdb, fused
-    variants) — one aggregation instead of one per query, and downstream
-    plans reference an InMemoryRelation instead of inlining this subtree."""
-    return _memo("nodes", spark, sf_dir, cfg, lambda: canon.with_degree(
-        canon.build_nodes(all_mentions(spark, sf_dir, cfg), cfg=cfg),
-        edges(spark, sf_dir, cfg),
-    ))
-
-
-def edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Edges with the stored ``edge_rank`` (the pipeline's edges)."""
-    return _memo("edges", spark, sf_dir, cfg, lambda: canon.with_edge_rank(
-        canon.build_edges(all_triples(spark, sf_dir, cfg), cfg=cfg)
-    ))
-
-
-def fusion_blocks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    def build():
-        sp = spans(spark, sf_dir, cfg)
-        med = media.media_spans(sp)
-        return fusion.fusion_blocks(sp, med, media.image_mentions(med, cfg), cfg)
-
-    # memoized: merge_map / clusters / spectral / fused_graph all consume the
-    # same per-block spectral computation — run the applyInPandas stage once
-    return _memo("fusion_blocks", spark, sf_dir, cfg, build)
 
 
 def merge_map(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -157,37 +70,10 @@ def spectral(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) ->
     return fusion.spectral_assignments(fusion_blocks(spark, sf_dir, cfg))
 
 
-_fused_cache: dict = {}
-
-
 def fused_graph(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
 ) -> tuple[DataFrame, DataFrame]:
-    # memoize per (session, sf_dir, cfg): the driver calls fused_nodes and
-    # fused_edges separately — reuse one plan (and its persisted merge map)
-    key = _key("fused", spark, sf_dir, cfg)
-    if key not in _fused_cache:
-        mm = merge_map(spark, sf_dir, cfg)
-        n, e = fusion.fuse_graph(
-            all_mentions(spark, sf_dir, cfg), all_triples(spark, sf_dir, cfg), mm,
-            cfg=cfg,
-        )
-        # persisted, not just memoized: ~15 graph-analytics queries iterate
-        # over this pair — without persist each re-executed the whole fused
-        # suffix AND inlined its ~200-exchange subtree into every plan
-        # (measured: 2.5 MB explain output and 15 MB task binaries for
-        # kg_linkpred; with the persist the consumers plan against an
-        # InMemoryRelation)
-        _fused_cache[key] = (n.persist(), e.persist())
-    return _fused_cache[key]
-
-
-def fused_nodes(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return fused_graph(spark, sf_dir, cfg)[0]
-
-
-def fused_edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return fused_graph(spark, sf_dir, cfg)[1]
+    return fused_nodes(spark, sf_dir, cfg), fused_edges(spark, sf_dir, cfg)
 
 
 def pagerank(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -295,20 +181,15 @@ def qctx_ppr(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) ->
 def enhanced_graph(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
 ) -> tuple[DataFrame, DataFrame]:
-    key = _key("enh", spark, sf_dir, cfg)
-    if key not in _fused_cache:
-        sp = spans(spark, sf_dir, cfg)
-        med = media.media_spans(sp)
-        img = media.image_mentions(med, cfg)
-        blocks = fusion.fusion_blocks(sp, med, img, cfg)
-        mm = fusion.merge_map_from_blocks(blocks).persist()
-        em = fusion.enhance_map(sp, med, img, mm, cfg).persist()
-        n, e = fusion.enhanced_graph(
-            all_mentions(spark, sf_dir, cfg), all_triples(spark, sf_dir, cfg), mm, em,
-            cfg=cfg,
-        )
-        _fused_cache[key] = (n.persist(), e.persist())
-    return _fused_cache[key]
+    """M9 over the build's checkpoints: the merge map from fusion_blocks,
+    the enhance map from the spans and image mentions."""
+    pipe = build(spark, sf_dir, cfg)
+    sp = pipe.read("spans", spread=False)
+    mm = fusion.merge_map_from_blocks(pipe.read("fusion_blocks", spread=False))
+    em = fusion.enhance_map(
+        sp, media.media_spans(sp), pipe.read("img_mentions", spread=False), mm, cfg
+    )
+    return fusion.enhanced_graph(*pipe.graph_inputs(), mm, em, cfg=cfg)
 
 
 def enhanced_nodes(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -379,7 +260,10 @@ def qctx_edges_ppr(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
 ) -> DataFrame:
     """The qctx_ranking="ppr" path driven explicitly (driver query)."""
-    return qctx_edges(spark, sf_dir, replace(cfg, qctx_ranking="ppr"))
+    return query_ctx.context_edges_ppr(
+        nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg),
+        cfg.qctx_query, cfg.qctx_k, cfg.qctx_token_budget,
+    )
 
 
 def qctx_onehop(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -400,15 +284,10 @@ def qctx_top_media(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAU
     return query_ctx.top_media_entities(nodes(spark, sf_dir, cfg))
 
 
-def _qctx_context_dfs(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
-    n, e = nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg)
-    q, k = cfg.qctx_query, cfg.qctx_k
-    ch = chunks(spark, sf_dir, cfg)
-    return (
-        query_ctx.seed_entities(n, e, q, k),
-        query_ctx.context_edges(n, e, q, k, cfg.qctx_token_budget),
-        query_ctx.context_chunks(n, e, ch, q, k),
-        ch,
+def _qctx_blocks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
+    return query_ctx.local_context(
+        nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg),
+        chunks(spark, sf_dir, cfg), cfg.qctx_query, cfg,
     )
 
 
@@ -417,7 +296,7 @@ def qctx_render(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
     driver-checked form of query_ctx.render_context (the rendering itself is
     the documented driver-side serialization boundary over budget-truncated
     context sets; the oracle twin re-derives every byte in SQL)."""
-    e, r, t = query_ctx.context_blocks(*_qctx_context_dfs(spark, sf_dir, cfg))
+    e, r, t = _qctx_blocks(spark, sf_dir, cfg)
     return spark.createDataFrame(
         [("entities", e), ("relationships", r), ("sources", t)],
         "block string, body string",
@@ -428,9 +307,7 @@ def qctx_prompt(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
     """The filled local_rag_response_augmented system prompt — the final
     text-LLM deliverable of the reference's query lifecycle
     (query.py:402-405) as a one-row DataFrame."""
-    from .operators import answer
-
-    ctx = query_ctx.render_context(*_qctx_context_dfs(spark, sf_dir, cfg))
+    ctx = query_ctx.wrap_context(_qctx_blocks(spark, sf_dir, cfg))
     return spark.createDataFrame(
         [(answer.augmented_prompt(ctx),)], "prompt string"
     )
@@ -467,33 +344,13 @@ def local_answer_prompts(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT,
     query: str | None = None, response_type: str | None = None,
 ) -> dict:
-    """The complete query lifecycle deliverable (reference query.py:313-470):
-    seed → context → rendered CSV blocks → the filled answer-prompt chain.
-
-    Returns {"context": str, "augmented": str, "mm_entities": [...],
-    "multimodal": [...], "needs_merge": bool}. The LLM calls themselves are
-    the production swap point; every string here is byte-compatible with
-    what the reference sends its models."""
-    from .functions import prompt_templates as T
-    from .operators import answer
-
-    q = query or cfg.qctx_query
-    rt = response_type or T.DEFAULT_RESPONSE_TYPE
-    n, e = nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg)
-    seeds = query_ctx.seed_entities(n, e, q, cfg.qctx_k)
-    ctx_edges = query_ctx.context_edges(n, e, q, cfg.qctx_k, cfg.qctx_token_budget)
-    ch = chunks(spark, sf_dir, cfg)
-    ctx_chunks = query_ctx.context_chunks(n, e, ch, q, cfg.qctx_k)
-    blocks = query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, ch)
-    ents_csv, context = blocks[0], query_ctx.wrap_context(blocks)
-    # media info for the mm prompts: scrape the ≤NUM_MM_ENTITIES ORI_IMG
-    # names from the entities CSV FIRST, then filter the media table to
-    # exactly those names before the (bounded) collect
-    ents = answer.mm_entities_from_context(ents_csv)
-    info = answer.media_info_for(media_table(spark, sf_dir, cfg), ents)
-    chain = answer.assemble_answer_chain(context, ents_csv, info, rt)
-    chain["context"] = context
-    return chain
+    """:func:`answer.local_answer` over the build's graph: the context and
+    the filled answer-prompt chain for ``query`` (default ``cfg.qctx_query``)."""
+    return answer.local_answer(
+        nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg),
+        chunks(spark, sf_dir, cfg), media_table(spark, sf_dir, cfg),
+        query or cfg.qctx_query, cfg, response_type,
+    )
 
 
 def scc(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:

@@ -24,7 +24,9 @@ same tier as query_ctx.render_context.
 
 from __future__ import annotations
 
+from ..config import DEFAULT, PipelineConfig
 from ..functions import prompt_templates as T
+from .query_ctx import local_context, wrap_context
 
 
 def media_info_for(media_df, ents: list[str]) -> dict[str, tuple[str, str]]:
@@ -136,3 +138,28 @@ def assemble_answer_chain(
         "multimodal": mm_prompts,
         "needs_merge": bool(mm_prompts),
     }
+
+
+def local_answer(
+    nodes, edges, chunks, media_df, query: str,
+    cfg: PipelineConfig = DEFAULT, response_type: str | None = None,
+) -> dict:
+    """The local query lifecycle (reference query.py:313-470) over a built
+    graph: seeds → budgeted context edges/chunks → rendered CSV blocks → the
+    filled answer-prompt chain. ``media_df`` is the media relation
+    (media.media_spans) the image captions come from.
+
+    Returns :func:`assemble_answer_chain`'s dict plus ``"context"``. The LLM
+    calls themselves are the production swap point; every string here is
+    byte-compatible with what the reference sends its models."""
+    blocks = local_context(nodes, edges, chunks, query, cfg)
+    context = wrap_context(blocks)
+    # media info for the mm prompts: scrape the ≤NUM_MM_ENTITIES ORI_IMG
+    # names from the entities CSV FIRST, then filter the media table to
+    # exactly those names before the (bounded) collect
+    info = media_info_for(media_df, mm_entities_from_context(blocks[0]))
+    chain = assemble_answer_chain(
+        context, blocks[0], info, response_type or T.DEFAULT_RESPONSE_TYPE
+    )
+    chain["context"] = context
+    return chain

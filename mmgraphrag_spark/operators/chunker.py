@@ -7,15 +7,20 @@ overlap_tokens overlap (step = max - overlap, windows start at 0, step, 2*step,
 ``chunk-<md5(content)>`` which also exact-dedups identical chunk text across
 the corpus (A6/P6).
 
+Both chunkers take the flat spans relation (doc_id, kind, text, media_ref,
+offset), the form the pipeline checkpoints and the ingest stream derive;
+:func:`doc_text` reassembles each doc's text once for either of them.
+
 Spark-first re-expression: whitespace tokens (the synthetic corpus is clean
 single-spaced text) make the whole chunker pure column expressions — split /
 sequence / explode / slice / md5 — fully inside whole-stage codegen, zero
 Python. A pluggable-tokenizer mapInPandas variant (``chunk_docs_udf``) covers
 real tokenizers (tiktoken/BPE) at production scale with the same output schema.
 
-Scale notes: one narrow explode per doc (fan-out = #chunks, bounded by doc
-length / step); the dedup window shuffles on md5(content), which is uniformly
-distributed → no skew by construction.
+Scale notes: the text reassembly shuffles on doc_id; one narrow explode per
+doc (fan-out = #chunks, bounded by doc length / step); the dedup aggregate
+shuffles on md5(content), which is uniformly distributed → no skew by
+construction.
 """
 
 from __future__ import annotations
@@ -31,13 +36,27 @@ CHUNK_SCHEMA = (
 )
 
 
-def doc_text(docs: DataFrame) -> DataFrame:
-    """(doc_id, text): concatenation of the doc's text spans in offset order."""
-    return docs.select(
-        "doc_id",
-        F.expr(
-            "array_join(transform(filter(spans, s -> s.kind = 'text'), s -> s.text), ' ')"
-        ).alias("text"),
+def doc_text(spans: DataFrame) -> DataFrame:
+    """(doc_id, text) from the flat spans relation: each doc's text spans
+    joined with single spaces in offset order.
+
+    One text-only aggregation, collect_list((offset, text)) sorted and
+    joined: the shuffle carries only the bytes the chunker consumes (no
+    media rows, no kind/media_ref columns). Offsets are unique per doc, so
+    the (offset, text) sort order is the span order.
+    """
+    return (
+        spans.filter(F.col("kind") == "text")
+        .groupBy("doc_id")
+        .agg(
+            F.array_join(
+                F.expr(
+                    "transform(array_sort(collect_list(struct(offset, text))),"
+                    " s -> s.text)"
+                ),
+                " ",
+            ).alias("text")
+        )
     )
 
 
@@ -68,12 +87,13 @@ def _dedup_chunks(raw: DataFrame) -> DataFrame:
     )
 
 
-def _chunk_text(doc: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(doc_id, text) -> deduped chunk rows (the shared chunking body)."""
+def chunk_docs(spans: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
+    """spans(doc_id, kind, text, media_ref, offset) ->
+    chunks(chunk_id, doc_id, chunk_order_index, tokens, content)."""
     step = cfg.chunk_max_tokens - cfg.chunk_overlap_tokens
     mx = cfg.chunk_max_tokens
     raw = (
-        doc.select("doc_id", F.split("text", " ").alias("w"))
+        doc_text(spans).select("doc_id", F.split("text", " ").alias("w"))
         .withColumn("n_chunks", F.ceil(F.size("w") / step).cast("int"))
         .select(
             "doc_id", "w",
@@ -90,40 +110,8 @@ def _chunk_text(doc: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return _dedup_chunks(raw)
 
 
-def chunk_docs(docs: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """docs(doc_id, spans) -> chunks(chunk_id, doc_id, chunk_order_index, tokens, content)."""
-    return _chunk_text(doc_text(docs), cfg)
-
-
-def chunk_flat_spans(flat: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Chunker over the FLAT spans relation (the pipeline checkpoint form).
-
-    Reassembles each doc's text with ONE text-only aggregation —
-    collect_list((offset, text)) over the text spans, sorted, joined —
-    instead of nesting every span (media rows, kind/media_ref columns
-    included) into the docs form and re-deriving text from the structs.
-    Same output as ``chunk_docs(nest_spans(flat))`` (offsets are unique per
-    doc, so the (offset, text) sort order equals the span order); the
-    shuffle carries only the bytes the chunker consumes.
-    """
-    doc = (
-        flat.filter(F.col("kind") == "text")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(offset, text))),"
-                    " s -> s.text)"
-                ),
-                " ",
-            ).alias("text")
-        )
-    )
-    return _chunk_text(doc, cfg)
-
-
 def chunk_docs_udf(
-    docs: DataFrame,
+    spans: DataFrame,
     tokenize: Callable[[str], list[str]] | None = None,
     detokenize: Callable[[list[str]], str] | None = None,
     cfg: PipelineConfig = DEFAULT,
@@ -163,5 +151,5 @@ def chunk_docs_udf(
                     out["content"].append(content)
             yield pd.DataFrame(out)
 
-    raw = doc_text(docs).mapInPandas(run, schema=CHUNK_SCHEMA)
+    raw = doc_text(spans).mapInPandas(run, schema=CHUNK_SCHEMA)
     return _dedup_chunks(raw)

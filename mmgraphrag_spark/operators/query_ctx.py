@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..config import GRAPH_FIELD_SEP
+from ..config import DEFAULT, GRAPH_FIELD_SEP, PipelineConfig
 
 
 def media_chunk_match(media: DataFrame, chunks: DataFrame) -> DataFrame:
@@ -277,6 +277,22 @@ def wrap_context(blocks: tuple[str, str, str]) -> str:
     w1, w2, w3, w4 = CONTEXT_WRAPPER
     e, r, t = blocks
     return f"{w1}{e}{w2}{r}{w3}{t}{w4}"
+
+
+def local_context(
+    nodes: DataFrame, edges: DataFrame, chunks: DataFrame, query: str,
+    cfg: PipelineConfig = DEFAULT,
+) -> tuple[str, str, str]:
+    """The three context CSV blocks of ``query`` over a built graph: its
+    seed entities, budgeted context edges and context chunks, rendered from
+    one collect (:func:`context_blocks`)."""
+    k = cfg.qctx_k
+    return context_blocks(
+        seed_entities(nodes, edges, query, k),
+        context_edges(nodes, edges, query, k, cfg.qctx_token_budget),
+        context_chunks(nodes, edges, chunks, query, k),
+        chunks,
+    )
 
 
 def render_context(

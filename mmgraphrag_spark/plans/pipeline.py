@@ -28,6 +28,10 @@ DAG, one line per stage: ``stage{output tables} <- dependency stages``
 
 graph and fused_graph are siblings: the fused stage re-aggregates the
 merge-map-rewired mention/triple checkpoints, so it runs alongside graph.
+
+This is the one definition of the build: ``api`` reads every KG table from
+these checkpoints (``api.build``), and ``stream_extract`` calls the same
+operators per micro-batch.
 """
 
 from __future__ import annotations
@@ -38,12 +42,23 @@ import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT, PipelineConfig
 from ..operators import canonicalize as canon
 from ..operators import chunker, extractor, fusion, media
 from .. import synth
+
+
+def _pinned_threads() -> bool:
+    """PySpark pinned-thread mode (the default since Spark 3.2): each Python
+    thread has its own JVM thread and so its own local properties (job
+    group, description, tags, scheduler pool), which
+    ``inheritable_thread_target`` copies into a pool thread. Without it,
+    threads running at once would share them, so the pipeline runs its
+    stages and writes one at a time."""
+    return os.environ.get("PYSPARK_PIN_THREAD", "true").lower() != "false"
 
 
 @dataclass
@@ -130,6 +145,30 @@ class Pipeline:
             if df.rdd.getNumPartitions() < want:
                 df = df.repartition(want)
         return df
+
+    def graph_inputs(self) -> tuple[DataFrame, DataFrame]:
+        """The text+image mention and triple unions, read from the decode
+        and media checkpoints: the relations the graph, fused and enhanced
+        graphs aggregate.
+
+        spread=False: these reads feed straight into keyed aggregations
+        (build_edges/build_nodes), which re-exchange on their group keys
+        anyway — a round-robin repartition first would shuffle the full
+        mention/triple payload twice for no extra map parallelism beyond the
+        scan's own splits (A/B at the 100k-doc fixture: see
+        OPTIMIZATION_r06.md).
+        """
+        cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
+        mentions = (
+            self.read("mentions", spread=False).select(canon.NODE_COLS)
+            .unionByName(
+                self.read("img_mentions", spread=False).select(canon.NODE_COLS))
+        )
+        triples = (
+            self.read("triples", spread=False).select(cols_t)
+            .unionByName(self.read("img_triples", spread=False).select(cols_t))
+        )
+        return mentions, triples
 
     def _footer_rows(self, table: str) -> list[int] | None:
         """Per-file row counts from checkpoint file FOOTERS (driver-side
@@ -254,15 +293,17 @@ class Pipeline:
         plain = [(t, df) for t, df in produced.items() if not callable(df)]
         derived = [(t, df) for t, df in produced.items() if callable(df)]
         counts: dict[str, int] = {}
-        if len(plain) > 1:
+        if len(plain) > 1 and _pinned_threads():
             import concurrent.futures as cf
 
-            def _w(t, df, desc=f"stage:{name}"):
-                self.spark.sparkContext.setJobDescription(desc)
+            def _w(t, df):
                 return t, self._write(df, t)
 
+            # each write thread inherits this thread's local properties: the
+            # caller's job group and tags, and the stage's job description
             with cf.ThreadPoolExecutor(max_workers=len(plain)) as pool:
-                futs = [pool.submit(_w, t, df) for t, df in plain]
+                futs = [pool.submit(inheritable_thread_target(self.spark)(_w), t, df)
+                        for t, df in plain]
                 for fut in futs:
                     t, n = fut.result()  # re-raises
                     counts[t] = n
@@ -302,7 +343,7 @@ class Pipeline:
             return {"spans": synth.spans_from_docs(docs, cfg)}
 
         def _chunks():
-            return {"chunks": chunker.chunk_flat_spans(self.read("spans"), cfg)}
+            return {"chunks": chunker.chunk_docs(self.read("spans"), cfg)}
 
         # raw grammar strings get their own checkpoint: (a) the expensive
         # Python stage (LLM in production) runs exactly once even though two
@@ -351,22 +392,7 @@ class Pipeline:
             }
 
         def _graph():
-            cols_m = canon.NODE_COLS
-            cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
-            # spread=False: these reads feed straight into keyed aggregations
-            # (build_edges/build_nodes), which re-exchange on their group
-            # keys anyway — a round-robin repartition first would shuffle
-            # the full mention/triple payload twice for no extra map
-            # parallelism beyond the scan's own splits (A/B at the 100k-doc
-            # fixture: see OPTIMIZATION_r06.md)
-            all_m = (
-                self.read("mentions", spread=False).select(cols_m)
-                .unionByName(self.read("img_mentions", spread=False).select(cols_m))
-            )
-            all_t = (
-                self.read("triples", spread=False).select(cols_t)
-                .unionByName(self.read("img_triples", spread=False).select(cols_t))
-            )
+            all_m, all_t = self.graph_inputs()
             # The edges aggregate (the stage's biggest groupBy, over the
             # triples relation) feeds the edges write and the degree table
             # behind the stored ranks (edges.edge_rank, nodes.degree). It is
@@ -399,18 +425,7 @@ class Pipeline:
             }
 
         def _fused_graph():
-            cols_m = canon.NODE_COLS
-            cols_t = ["subj", "obj", "description", "weight", "source_id", "order"]
-            # spread=False as in _graph: the rewiring is broadcast joins
-            # (narrow) and ends in keyed aggregations
-            all_m = (
-                self.read("mentions", spread=False).select(cols_m)
-                .unionByName(self.read("img_mentions", spread=False).select(cols_m))
-            )
-            all_t = (
-                self.read("triples", spread=False).select(cols_t)
-                .unionByName(self.read("img_triples", spread=False).select(cols_t))
-            )
+            all_m, all_t = self.graph_inputs()
             mm = fusion.merge_map_from_blocks(
                 self.read("fusion_blocks", spread=False)
             ).persist()
@@ -450,11 +465,7 @@ class Pipeline:
                             ["fused_nodes", "fused_edges"], _fused_graph),
         }
 
-        # concurrent _stage calls need PySpark pinned-thread mode (default
-        # since Spark 3.2) so setJobDescription / per-thread local properties
-        # (scheduler pools, tags) don't leak across stages running at once
-        if parallel and os.environ.get("PYSPARK_PIN_THREAD", "true").lower() == "false":
-            parallel = False
+        parallel = parallel and _pinned_threads()
 
         ran: dict[str, bool] = {}
         # flush lineage/metrics even when a stage raises or the run is
@@ -475,8 +486,11 @@ class Pipeline:
                         for name in list(pending):
                             deps, inputs, outputs, fn = pending[name]
                             if all(d in ran for d in deps):
+                                # the stage thread inherits the caller's
+                                # job group and tags
                                 futures[pool.submit(
-                                    self._stage, name, inputs, outputs, fn, resume
+                                    inheritable_thread_target(self.spark)(self._stage),
+                                    name, inputs, outputs, fn, resume,
                                 )] = name
                                 del pending[name]
                         if not futures:

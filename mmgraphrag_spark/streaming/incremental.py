@@ -145,8 +145,7 @@ def stream_extract(
         if batch_df.isEmpty():
             return
         part = f"run={run}/batch_id={batch_id}"
-        docs = synth.nest_spans(synth.spans_from_docs(batch_df, cfg))
-        chunks = chunker.chunk_docs(docs, cfg)
+        chunks = chunker.chunk_docs(synth.spans_from_docs(batch_df, cfg), cfg)
         cache = _read_state(
             spark, cache_path,
             "doc_id string, chunk_id string, output string,"

@@ -15,8 +15,8 @@ CFG = PipelineConfig(chunk_max_tokens=10, chunk_overlap_tokens=3)  # step 7
 
 def test_window_math(spark):
     words = [f"w{i:02d}" for i in range(20)]
-    docs = make_docs(spark, [("d1", [("text", " ".join(words), "", 0)])])
-    got = chunker.chunk_docs(docs, CFG).orderBy("chunk_order_index").collect()
+    spans = synth.explode_spans(make_docs(spark, [("d1", [("text", " ".join(words), "", 0)])]))
+    got = chunker.chunk_docs(spans, CFG).orderBy("chunk_order_index").collect()
     # starts 0,7,14 -> lengths 10,10,6 (trailing partial kept, like the
     # reference's range(0, n, step) loop preprocessing.py:30-68)
     assert [r.chunk_order_index for r in got] == [0, 1, 2]
@@ -30,29 +30,29 @@ def test_window_math(spark):
 
 def test_exact_dedup_deterministic_winner(spark):
     text = " ".join(["tok"] * 5)
-    docs = make_docs(spark, [
+    spans = synth.explode_spans(make_docs(spark, [
         ("d2", [("text", text, "", 0)]),
         ("d1", [("text", text, "", 0)]),
-    ])
-    got = chunker.chunk_docs(docs, CFG).collect()
+    ]))
+    got = chunker.chunk_docs(spans, CFG).collect()
     assert len(got) == 1
     assert got[0].doc_id == "d1"  # lexicographically first wins
 
 
 def test_text_spans_only(spark):
-    docs = make_docs(spark, [
+    spans = synth.explode_spans(make_docs(spark, [
         ("d1", [("text", "a b", "", 0), ("image", "cap", "d1/image_1", 1),
                  ("text", "c d", "", 2)]),
-    ])
-    got = chunker.chunk_docs(docs, CFG).collect()
+    ]))
+    got = chunker.chunk_docs(spans, CFG).collect()
     assert len(got) == 1
     assert got[0].content == "a b c d"  # media text excluded, order kept
 
 
 def test_udf_chunker_matches_column_chunker(spark):
-    docs = synth.interleaved_docs(spark, SF_TINY).limit(50)
-    a = chunker.chunk_docs(docs).toPandas().sort_values("chunk_id").reset_index(drop=True)
-    b = chunker.chunk_docs_udf(docs).toPandas().sort_values("chunk_id").reset_index(drop=True)
+    spans = synth.flat_spans(spark, SF_TINY)
+    a = chunker.chunk_docs(spans).toPandas().sort_values("chunk_id").reset_index(drop=True)
+    b = chunker.chunk_docs_udf(spans).toPandas().sort_values("chunk_id").reset_index(drop=True)
     assert a.equals(b)
 
 
@@ -84,12 +84,12 @@ def test_udf_chunker_matches_reference_window_math_with_bpe_style_tokenizer(spar
 
     text = ("interleaved documents need canonicalization pipelines "
             "spanning extraction fusion graphs materialization")
-    docs = make_docs(spark, [("docA", [("text", text, "", 0)])])
+    spans = synth.explode_spans(make_docs(spark, [("docA", [("text", text, "", 0)])]))
     cfg = replace(DEFAULT, chunk_max_tokens=12, chunk_overlap_tokens=3)
 
     got = sorted(
         (r.chunk_order_index, r.tokens, r.content)
-        for r in chunk_docs_udf(docs, tokenize, detokenize, cfg).collect()
+        for r in chunk_docs_udf(spans, tokenize, detokenize, cfg).collect()
     )
 
     # the reference loop (chunking_by_token_size), verbatim semantics

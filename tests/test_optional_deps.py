@@ -38,13 +38,14 @@ def test_chunk_docs_udf_with_real_tiktoken(spark):
     except Exception as exc:  # BPE asset fetch needs network
         pytest.skip(f"tiktoken BPE asset unavailable: {exc}")
 
+    from mmgraphrag_spark import synth
     from mmgraphrag_spark.config import DEFAULT
     from mmgraphrag_spark.operators import chunker
 
     text = " ".join(f"token{i} word" for i in range(900))
-    docs = make_docs(spark, [("d1", [("text", text, "", 0)])])
+    spans = synth.explode_spans(make_docs(spark, [("d1", [("text", text, "", 0)])]))
     got = chunker.chunk_docs_udf(
-        docs, tokenize=enc.encode, detokenize=enc.decode
+        spans, tokenize=enc.encode, detokenize=enc.decode
     ).collect()
     assert len(got) > 1  # long doc must split
     mx = DEFAULT.chunk_max_tokens

@@ -7,7 +7,7 @@ import shutil
 import pytest
 from conftest import SF_TINY
 
-from mmgraphrag_spark import api
+from mmgraphrag_spark.operators import fusion
 from mmgraphrag_spark.plans.pipeline import Pipeline
 
 
@@ -25,20 +25,6 @@ def test_all_stages_ran_and_checkpointed(pipe):
               "nodes", "nodes_base", "edges", "fusion_blocks",
               "fused_nodes", "fused_edges"]:
         assert pipe._complete(t), t
-
-
-def test_outputs_match_direct_api(spark, pipe):
-    a = pipe.read("edges").toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
-    b = api.edges(spark, SF_TINY).toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
-    assert a.equals(b)
-    # nodes too (api.nodes is the pre-stub relation == the pipeline's
-    # nodes_base): hub entities cross the A1 summary_max_tokens threshold at
-    # SF_TINY, so this pins the pipeline's cfg plumbing (summarization branch)
-    a = (pipe.read("nodes_base").toPandas()
-         .sort_values(["entity_name"]).reset_index(drop=True))
-    b = (api.nodes(spark, SF_TINY).toPandas()
-         .sort_values(["entity_name"]).reset_index(drop=True))
-    assert a.equals(b)
 
 
 def test_stored_ranks_match_recount(spark, pipe, tmp_path):
@@ -75,27 +61,28 @@ def test_stored_ranks_match_recount(spark, pipe, tmp_path):
 
 
 def test_fused_tables_keep_their_columns(spark, pipe):
-    """The stored ranks stay on the unfused graph: the fused tables (pipeline
-    checkpoints and the api's fused graph) keep the merged columns only."""
+    """The stored ranks stay on the unfused graph: the fused checkpoints
+    keep the merged columns only."""
     node_cols = ["entity_name", "entity_type", "description", "source_id"]
     edge_cols = ["src", "dst", "weight", "description", "source_id", "order"]
     assert pipe.read("fused_nodes", spread=False).columns == node_cols
     assert pipe.read("fused_edges", spread=False).columns == edge_cols
-    n, e = api.fused_graph(spark, SF_TINY)
-    assert (n.columns, e.columns) == (node_cols, edge_cols)
 
 
 def test_fused_checkpoints_match_full_recompute(spark, pipe):
     """The pipeline's fused stage (rewired mention/triple checkpoints, stubs
-    from the fused_edges checkpoint) must equal the api's in-memory
-    fuse_graph bit-for-bit."""
-    for table, fn, keys in (
-        ("fused_nodes", api.fused_nodes, ["entity_name"]),
-        ("fused_edges", api.fused_edges, ["src", "dst"]),
+    from the fused_edges checkpoint) must equal ``fusion.fuse_graph`` run
+    in memory over the same mention, triple and fusion_blocks checkpoints,
+    bit-for-bit."""
+    mm = fusion.merge_map_from_blocks(pipe.read("fusion_blocks", spread=False))
+    nodes, edges = fusion.fuse_graph(*pipe.graph_inputs(), mm, cfg=pipe.cfg)
+    for table, df, keys in (
+        ("fused_nodes", nodes, ["entity_name"]),
+        ("fused_edges", edges, ["src", "dst"]),
     ):
         a = (pipe.read(table, spread=False).toPandas()
              .sort_values(keys).reset_index(drop=True))
-        b = fn(spark, SF_TINY).toPandas().sort_values(keys).reset_index(drop=True)
+        b = df.toPandas().sort_values(keys).reset_index(drop=True)
         assert a.equals(b), table
 
 
@@ -117,6 +104,25 @@ def test_mid_pipeline_resume(spark, pipe):
     after = pipe.lineage().filter("stage = 'spans'").count()
     assert after == before
     assert pipe._complete("edges")
+
+
+def test_parallel_resume_runs_in_the_callers_job_group(spark, pipe):
+    """The stage threads and their write threads inherit the caller's job
+    group, so the caller sees (and can cancel) every Spark job of the
+    build."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "pipeline-caller"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    shutil.rmtree(pipe._path("edges"))
+    sc.setJobGroup(group, "parallel resume")
+    try:
+        assert pipe.run(resume=True, parallel=True)["graph"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_lineage_and_metrics_rows(pipe):

@@ -57,7 +57,7 @@ def test_mineru_spans_drive_chunker_and_extractor(spark):
     spans = mineru.content_list_spans(
         mineru.read_content_lists(spark, REF_CONTENT_LIST)
     )
-    chunks = chunker.chunk_docs(synth.nest_spans(spans))
+    chunks = chunker.chunk_docs(spans)
     n_chunks = chunks.count()
     assert n_chunks > 1  # 192 text spans -> multi-chunk doc
     mentions, triples = extractor.extract_mentions_and_triples(chunks)
@@ -191,7 +191,7 @@ def test_docx_reader_extracts_text_images_and_context(spark, tmp_path):
 def test_docx_spans_drive_pipeline(spark, tmp_path):
     _fixture_docx(tmp_path)
     spans = docx.docx_spans(spark, str(tmp_path / "*.docx"))
-    chunks = chunker.chunk_docs(synth.nest_spans(spans))
+    chunks = chunker.chunk_docs(spans)
     mentions, _ = extractor.extract_mentions_and_triples(chunks)
     assert mentions.count() > 0
     assert media.media_spans(spans).count() == 1
@@ -226,7 +226,7 @@ def test_pdf_spans_drive_pipeline(spark, tmp_path):
         str(tmp_path / "tiny.pdf"),
     )
     spans = pdf.pdf_spans(spark, str(tmp_path / "*.pdf"))
-    chunks = chunker.chunk_docs(synth.nest_spans(spans))
+    chunks = chunker.chunk_docs(spans)
     mentions, triples = extractor.extract_mentions_and_triples(chunks)
     assert mentions.count() > 0 and triples.count() > 0
 
@@ -432,7 +432,7 @@ def test_pdf_and_mineru_front_ends_agree_on_the_same_paper(spark):
     come from PDF line-break hyphenation and footnote text MinerU folds
     away, so containment, not equality, is the right bar.)"""
     def names(spans):
-        chunks = chunker.chunk_docs(synth.nest_spans(spans))
+        chunks = chunker.chunk_docs(spans)
         m, _ = extractor.extract_mentions_and_triples(chunks)
         return {r.entity_name for r in m.select("entity_name").distinct().collect()}
 

@@ -61,8 +61,8 @@ def test_stream_extract_matches_batch(spark, tmp_path):
     from mmgraphrag_spark import synth
     from mmgraphrag_spark.operators import chunker, extractor
 
-    bdocs = synth.nest_spans(synth.spans_from_docs(spark.read.parquet(src)))
-    m, _ = extractor.extract_mentions_and_triples(chunker.chunk_docs(bdocs))
+    spans = synth.spans_from_docs(spark.read.parquet(src))
+    m, _ = extractor.extract_mentions_and_triples(chunker.chunk_docs(spans))
     want = (
         m.toPandas()
         .sort_values(["chunk_id", "entity_name", "entity_type", "description"])
