@@ -6,14 +6,16 @@ twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
 The registry holds the KG build stages, the query path, the ingest readers
-and the graph, media, text, curation, dedup and event analytics, each keyed
-by name. Every entry except ``kg_spectral`` and ``ann_ivf_kmeans_topk`` has
-an exact DuckDB twin, which ``tools/compare.py`` checks.
+and the one-pass graph, media, text, curation, dedup and event analytics,
+each keyed by name. Every entry except ``kg_spectral`` and
+``ann_ivf_kmeans_topk`` has an exact DuckDB twin, which ``tools/compare.py``
+checks.
 
 The KG entries (``kg_*``, ``qctx_*``, ``mm_*`` and the rest of ``api``) read
 the checkpoints of one ``Pipeline`` build per (sf_dir, config) and session
-(``api.build``), so the oracle checks the tables the build writes. Each
-config variant below (gleaning, the answer-chain query) is its own build.
+(``api.build``), so the oracle checks the tables the build writes. The
+gleaning variants below are builds of their own; the answer-chain variant
+changes only query fields, so it reads the default build.
 """
 
 from __future__ import annotations
@@ -76,9 +78,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # skip-gram (center, context) pair counts over the walk corpus —
         # the node2vec trainer's positive-sample relation
         "kg_walk_pairs": api.walk_pairs,
-        # per-community argmax-PageRank representative (LPA × PageRank,
-        # compositional twin)
-        "kg_community_reps": api.community_reps,
         # canonical-document election: keep the highest-quality member of
         # each near-dup cluster (clusters × quality, compositional twin)
         "dup_canonical": lambda s, d: dedup.canonical_documents(
@@ -102,12 +101,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_readability": lambda s, d: textstats.readability(
             curation.docs_table(s, d)
         ),
-        # strongly connected components of the DIRECTED fused graph
-        # (trim + FW-BW min-label peeling; closed-form mutual-reach twin)
-        "kg_scc": api.scc,
-        # HITS hubs/authorities on the directed graph — max-normalized
-        # exact-integer recurrence (unrolled-CTE twin)
-        "kg_hits": api.hits,
         # SemDeDup-style semantic duplicate clusters: LSH-verified embedding
         # pairs + large/small-star collapse (compositional twin)
         "dup_semantic_clusters": lambda s, d: dedup.semantic_clusters(s, d),
@@ -127,9 +120,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_phash_pairs": api.mm_phash_pairs,
         # per-node directed-edge reciprocity (symmetric-relation detector)
         "kg_reciprocity": api.reciprocity,
-        # Watts-Strogatz local clustering coefficient (exact ppm ratio
-        # over the hub-safe oriented triangle enumeration)
-        "kg_clustering": api.clustering,
         # per-doc vocabulary profile: type-token ratio + hapax share
         "text_hapax": lambda s, d: textstats.hapax_stats(
             curation.docs_table(s, d)
@@ -140,12 +130,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_pii": lambda s, d: curation.pii_scrub(
             curation.pii_seeded_docs(curation.docs_table(s, d))
         ),
-        # 3-truss: edge-grain triangle-support peeling — the cohesive-core
-        # cut above kcore (converge-early engine vs fixed-unroll twin)
-        "kg_truss": api.truss,
-        # landmark closeness: L synchronized BFS waves from the top-degree
-        # landmark set, exact hop distances in integer ppm
-        "kg_closeness": api.closeness,
         # resource-allocation link prediction: top-k missing edges by
         # exact-integer RA index (Zhou et al. 2009), hub-capped wedges
         "kg_linkpred": api.linkpred,
@@ -189,18 +173,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_paragraph": lambda s, d: dedup.paragraph_dedup(
             dedup.docs_table(s, d)
         ),
-        # weight-proportional PageRank: rank mass flows by merged
-        # relationship strength (milli-unit integer weights), not degree
-        "kg_pagerank_weighted": api.pagerank_weighted,
         # BM25 retrieval: rarest-terms query set, exact-integer scoring
         # (raw-ratio idf + integer-cleared tf saturation, k1=1.2 b=0.75)
         "text_bm25": lambda s, d: textstats.bm25_topk(dedup.docs_table(s, d)),
-        # 2-core of the fused graph: iterative peeling of deg<2 nodes,
-        # converge-early engine vs fixed-unroll oracle (monotone no-ops)
-        "kg_kcore": api.kcore,
-        # label-propagation communities over the fused graph: sync LPA,
-        # fixed rounds, deterministic (count desc, label asc) tie-break
-        "kg_communities": api.communities,
         # SQ8 scalar-quantized ANN: per-dim [min,max] -> uint8 codes (8×
         # memory shrink), exact integer reconstruction for scoring
         "ann_sq8_topk": similarity.ann_sq8_topk,
@@ -234,9 +209,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_repetition": lambda s, d: textstats.repetition_scores(
             dedup.docs_table(s, d)
         ),
-        # PPR-mass context ordering (cfg qctx_ranking="ppr"): the documented
-        # query-proximity upgrade over the reference's degree ordering
-        "qctx_edges_ppr": api.qctx_edges_ppr,
         # exact-count variant: top-k by hash bucket within each stratum
         "curation_budget": lambda s, d: curation.stratified_budget(
             curation.docs_table(s, d)
@@ -267,8 +239,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_fingerprints": lambda s, d: textstats.fingerprints(dedup.docs_table(s, d)),
         # changed this round: hub-center cap (engine + oracle in lockstep)
         "kg_neighbor_sim": api.neighbor_sim,
-        # changed this round: loud non-convergence guard
-        "kg_components": api.components,
         # ---- core pipeline -------------------------------------------------
         "kg_spans": api.spans,
         "kg_chunks": api.chunks,
@@ -288,14 +258,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                       # (NumPy-oracle-verified in pytest)
         "kg_fused_nodes": api.fused_nodes,
         "kg_fused_edges": api.fused_edges,
-        # beyond-reference KG analytics: fixed-point integer PageRank over
-        # the fused graph — exactly reproducible, full value-hash oracle
-        # (unrolled-iteration DuckDB CTEs)
-        "kg_pagerank": api.pagerank,
-        "kg_triangles": api.triangles,
-        # personalized PageRank from the qctx seed set: query-proximity
-        # ranking (upgrades the reference's degree-only context ordering)
-        "qctx_ppr": api.qctx_ppr,
         "kg_enhanced_nodes": api.enhanced_nodes,
         "kg_enhanced_edges": api.enhanced_edges,
         # S3 MinerU ingestion: serializer ∘ parser round trip over the
@@ -361,21 +323,17 @@ def oracle_sql() -> dict[str, str]:
         "text_drift": oracle_extra.source_drift_sql(),
         "kg_cooccur": oracle.q(oracle.cooccurrence_graph_select()),
         "kg_walk_pairs": oracle.q(oracle.walk_pairs_select()),
-        "kg_community_reps": oracle.q(oracle.community_reps_select()),
         "dup_canonical": oracle_extra.canonical_docs_sql(),
         "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
         "curation_token_mix": oracle_extra.token_budget_mix_sql(),
         "dup_containment": oracle_extra.containment_sql(threshold=0.2),
         "text_readability": oracle_extra.readability_sql(),
-        "kg_scc": oracle.q(oracle.scc_select()),
-        "kg_hits": oracle.q(oracle.hits_select()),
         "dup_semantic_clusters": oracle_extra.semantic_clusters_sql(),
         "curation_urls": oracle_extra.url_normalize_sql(),
         "mm_frame_dedup": oracle.q(oracle.frame_dedup_select()),
         "mm_phash": oracle.q(oracle.phash_select()),
         "mm_phash_pairs": oracle.q(oracle.phash_pairs_select()),
         "kg_reciprocity": oracle.q(oracle.reciprocity_select()),
-        "kg_clustering": oracle.q(oracle.clustering_select()),
         "text_hapax": oracle_extra.hapax_sql(),
         "text_pii": oracle_extra.pii_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
@@ -396,12 +354,7 @@ def oracle_sql() -> dict[str, str]:
         "kg_clusters": oracle.q(oracle.clusters_select()),
         "kg_fused_nodes": oracle.q(oracle.fused_nodes_select()),
         "kg_fused_edges": oracle.q(oracle.fused_edges_select()),
-        "kg_pagerank": oracle.q(oracle.pagerank_select()),
-        "kg_triangles": oracle.q(oracle.triangles_select()),
         "kg_neighbor_sim": oracle.q(oracle.neighbor_sim_select()),
-        "kg_components": oracle.q(oracle.components_select()),
-        "qctx_ppr": oracle.qctx_ppr_sql(),
-        "qctx_edges_ppr": oracle.qctx_edges_ppr_sql(),
         "kg_enhanced_nodes": oracle.q(oracle.enh_nodes_select()),
         "kg_enhanced_edges": oracle.q(oracle.enh_edges_select()),
         "mm_decode": oracle.q(oracle.mm_decode_select()),
@@ -443,13 +396,8 @@ def oracle_sql() -> dict[str, str]:
         "curation_quality_gate": oracle_extra.quality_gate_sql(),
         "mm_pack_interleaved": oracle_extra.pack_interleaved_sql(),
         "events_sessions": oracle_extra.sessionize_sql(),
-        "kg_communities": oracle.q(oracle.communities_select()),
         "ann_sq8_topk": oracle_extra.ann_sq8_topk_sql(),
         "text_bm25": oracle_extra.bm25_sql(),
-        "kg_kcore": oracle.q(oracle.kcore_select()),
-        "kg_truss": oracle.q(oracle.truss_select()),
-        "kg_closeness": oracle.q(oracle.closeness_select()),
-        "kg_pagerank_weighted": oracle.q(oracle.pagerank_weighted_select()),
         "curation_dsir": oracle_extra.dsir_sql(),
         "events_hopping": oracle_extra.hopping_rollup_sql(),
         "text_lm_score": oracle_extra.lm_scores_sql(),

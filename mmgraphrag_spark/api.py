@@ -5,15 +5,17 @@ Every KG table is read from one ``Pipeline`` build (plans/pipeline.py) of
 ``documents.parquet`` at ``sf_dir``, so the registry checks the tables the
 build writes. The build's work dir is scoped to the Spark session: it lies
 under ``SparkFiles.getRootDirectory()``, which Spark deletes at
-``spark.stop()``, and is named by (sf_dir, cfg). The first call builds; a
-later one resumes, finds every stage complete and runs no Spark job. The
-query and analytics functions compose operators over those tables.
+``spark.stop()``, and is named by (sf_dir, cfg without its query fields).
+The first call builds; a later one resumes, finds every stage complete and
+runs no Spark job. The query and analytics functions compose operators over
+those tables.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from dataclasses import replace
 
 from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
@@ -24,7 +26,14 @@ from .plans.pipeline import Pipeline
 
 
 def build(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> Pipeline:
-    """The session's Pipeline build of (sf_dir, cfg), run or resumed."""
+    """The session's Pipeline build of (sf_dir, cfg), run or resumed.
+
+    No stage reads the query fields, so configs that differ only in them
+    share one build."""
+    cfg = replace(
+        cfg, qctx_query=DEFAULT.qctx_query, qctx_k=DEFAULT.qctx_k,
+        qctx_token_budget=DEFAULT.qctx_token_budget,
+    )
     key = hashlib.md5(repr((sf_dir, cfg)).encode()).hexdigest()
     work = os.path.join(SparkFiles.getRootDirectory(), f"kg-{key}")
     pipe = Pipeline(spark, sf_dir, work, cfg=cfg)
@@ -76,52 +85,12 @@ def fused_graph(
     return fused_nodes(spark, sf_dir, cfg), fused_edges(spark, sf_dir, cfg)
 
 
-def pagerank(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Fixed-point integer PageRank over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.pagerank(n, e)
-
-
-def triangles(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Per-node triangle counts over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.triangle_counts(n, e)
-
-
 def neighbor_sim(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """Neighborhood-Jaccard entity pairs over the fused graph (graphalgo.py)."""
     from .operators import graphalgo
 
     _, e = fused_graph(spark, sf_dir, cfg)
     return graphalgo.neighbor_similarity(e)
-
-
-def components(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Connected components of the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.connected_components(n, e)
-
-
-def communities(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Label-propagation communities over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.label_propagation(n, e)
-
-
-def pagerank_weighted(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Weight-proportional PageRank over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.pagerank_weighted(n, e)
 
 
 def linkpred(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
@@ -138,44 +107,6 @@ def degree_dist(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
 
     _, e = fused_graph(spark, sf_dir, cfg)
     return graphalgo.degree_distribution(e)
-
-
-def kcore(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """2-core of the fused graph: pendant chains peeled off (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.kcore(n, e)
-
-
-def truss(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """3-truss of the fused graph: only triangle-supported edges survive
-    (graphalgo.py support peeling)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.truss(n, e)
-
-
-def closeness(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Landmark closeness centrality: exact hop distances to the top-degree
-    landmark set, folded into the Potamias estimator (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.closeness_landmarks(n, e)
-
-
-def qctx_ppr(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Personalized PageRank from the query-context seed entities — the
-    query-proximity ranking that upgrades degree-only context ordering."""
-    from .operators import graphalgo
-
-    return graphalgo.personalized_pagerank(
-        nodes(spark, sf_dir, cfg),
-        edges(spark, sf_dir, cfg),
-        qctx_seeds(spark, sf_dir, cfg).select("entity_name"),
-    )
 
 
 def enhanced_graph(
@@ -245,22 +176,7 @@ def qctx_seeds(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) 
 
 
 def qctx_edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    fn = (
-        query_ctx.context_edges_ppr
-        if cfg.qctx_ranking == "ppr"
-        else query_ctx.context_edges
-    )
-    return fn(
-        nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg),
-        cfg.qctx_query, cfg.qctx_k, cfg.qctx_token_budget,
-    )
-
-
-def qctx_edges_ppr(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> DataFrame:
-    """The qctx_ranking="ppr" path driven explicitly (driver query)."""
-    return query_ctx.context_edges_ppr(
+    return query_ctx.context_edges(
         nodes(spark, sf_dir, cfg), edges(spark, sf_dir, cfg),
         cfg.qctx_query, cfg.qctx_k, cfg.qctx_token_budget,
     )
@@ -353,23 +269,6 @@ def local_answer_prompts(
     )
 
 
-def scc(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Strongly connected components of the DIRECTED fused graph (triples
-    keep their subj→obj orientation here) — trim + FW-BW peeling."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.strongly_connected_components(n, e)
-
-
-def hits(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """HITS hubs/authorities over the DIRECTED fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.hits(n, e)
-
-
 def mm_frame_dedup(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """Cross-media duplicate-frame coverage over the sampled frames."""
     from .operators import multimodal
@@ -401,14 +300,6 @@ def reciprocity(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT)
     return graphalgo.reciprocity(n, e)
 
 
-def clustering(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Local clustering coefficients over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.clustering_coefficients(n, e)
-
-
 def walks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """Deterministic DeepWalk corpus over the fused graph (graphalgo.py)."""
     from .operators import graphalgo
@@ -432,9 +323,3 @@ def walk_pairs(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) 
     return graphalgo.walk_skipgram_pairs(n, e)
 
 
-def community_reps(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Per-community argmax-PageRank representatives (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.community_representatives(n, e)

@@ -64,10 +64,6 @@ class PipelineConfig:
     qctx_query: str = "spark window stream table"
     qctx_k: int = 5
     qctx_token_budget: int = 4000
-    # context-edge ordering: "degree" = the reference's semantics
-    # (query.py ranks by degree sum); "ppr" = personalized-PageRank mass
-    # from the query seeds (query-proximity upgrade, context_edges_ppr)
-    qctx_ranking: str = "degree"
 
     # similarity / dedup
     minhash_perms: int = 16

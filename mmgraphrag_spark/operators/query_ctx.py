@@ -67,7 +67,7 @@ def media_chunk_match(media: DataFrame, chunks: DataFrame) -> DataFrame:
 
 
 def _edge_order() -> list[Column]:
-    """T2: the ranking of the context edges (degree or PPR edge_rank)."""
+    """T2: the ranking of the context edges (the stored edge_rank)."""
     return [F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")]
 
 
@@ -126,40 +126,6 @@ def context_edges(
     touching = _touching(edges, seed_entities(nodes, edges, query, k))
     return _within_budget(
         touching, _edge_order(), F.length("description"), token_budget
-    ).select("src", "dst", "weight", "description", "edge_rank", "running_tokens")
-
-
-def context_edges_ppr(
-    nodes: DataFrame, edges: DataFrame, query: str,
-    k: int = 5, token_budget: int = 4000,
-) -> DataFrame:
-    """PPR-ordered variant of :func:`context_edges` (cfg-gated upgrade, see
-    config.qctx_ranking): identical seed set, one-hop candidate edges and
-    running token budget, but edge_rank = personalized-PageRank mass
-    ppr(src)+ppr(dst) instead of degree sum. Degree ordering (the
-    reference's semantics, query.py) lets a globally-hubby but
-    query-irrelevant entity outrank a locally-central one; PPR mass
-    concentrates on entities reachable from the query's seeds, so the token
-    budget is spent on query-proximate evidence. Exact-integer ranks
-    (graphalgo.personalized_pagerank) keep the DuckDB twin hash-exact."""
-    from .graphalgo import personalized_pagerank
-
-    seeds = seed_entities(nodes, edges, query, k).select("entity_name")
-    ppr = personalized_pagerank(nodes, edges, seeds)
-    ranked = (
-        _touching(edges, seeds).drop("edge_rank")
-        .join(
-            ppr.select(F.col("entity_name").alias("src"),
-                       F.col("rank_scaled").alias("ps")), "src"
-        )
-        .join(
-            ppr.select(F.col("entity_name").alias("dst"),
-                       F.col("rank_scaled").alias("pd")), "dst"
-        )
-        .withColumn("edge_rank", (F.col("ps") + F.col("pd")).cast("long"))
-    )
-    return _within_budget(
-        ranked, _edge_order(), F.length("description"), token_budget
     ).select("src", "dst", "weight", "description", "edge_rank", "running_tokens")
 
 

@@ -508,7 +508,7 @@ def docsim_topk(
     bm25_topk convention), weight w = min(tf, tf_cap) · idf_mil; the score
     is the UNNORMALIZED dot Σ w_a·w_b — like BM25, ranking-oriented, no
     float norm anywhere, so the DuckDB twin hashes bit-identically. Ties
-    break by other_id asc. Overflow contract (the hits() pattern): each
+    break by other_id asc. Overflow contract: each
     w fits int64 up to ~10^12 docs (w ≤ tf_cap·1000·N), but the PAIR
     product w_a·w_b wraps int64 at only N ≈ 6000 for a df=2 term hitting
     both caps — so the product and its sum accumulate in DECIMAL(38,0)

@@ -1157,199 +1157,6 @@ def fused_edges_select() -> str:
     return 'SELECT src, dst, weight, description, source_id, "order" FROM fused_edges'
 
 
-def _pagerank_ctes(
-    iters: int = 5, damping_pct: int = 85, scale: int = 1_000_000_000
-) -> str:
-    """CTE chain of the pagerank twin (ends at pr_r{iters}) — shared by
-    pagerank_select and community_reps_select so composition never parses
-    rendered SQL (the _random_walk_ctes pattern).
-
-    Twin of operators/graphalgo.pagerank: the same fixed-point integer
-    recurrence unrolled as chained CTEs (one per iteration). Integer sums
-    are order-independent, so the value-hash match is exact.
-
-    Every pagerank CTE is MATERIALIZED: DuckDB inlines plain CTEs, and each
-    iteration references the previous one twice (plus pr_edges, which sits
-    on top of the ENTIRE fused-graph pipeline twin) — inlined, the plan
-    expands exponentially in `iters` and exhausts file handles re-scanning
-    the base parquet; materialized, each relation is computed once, exactly
-    like the engine's reused edge+degree DataFrame."""
-    base = (100 - damping_pct) * scale // 100
-    s = f"""
-, pr_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), pr_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM pr_edges GROUP BY u
-), pr_r0 AS MATERIALIZED (
-  SELECT entity_name AS name, CAST({scale} AS BIGINT) AS rank FROM fused_nodes
-)"""
-    for i in range(iters):
-        s += f"""
-, pr_r{i + 1} AS MATERIALIZED (
-  SELECT n.name,
-         CAST({base} AS BIGINT)
-           + CAST(({damping_pct} * COALESCE(s.contrib, 0)) // 100
-                  AS BIGINT) AS rank
-  FROM pr_r{i} n LEFT JOIN (
-    SELECT e.v AS name, SUM(r.rank // d.deg) AS contrib
-    FROM pr_edges e
-    JOIN pr_r{i} r ON e.u = r.name
-    JOIN pr_deg d ON e.u = d.u
-    GROUP BY e.v
-  ) s ON n.name = s.name
-)"""
-    return s
-
-
-def pagerank_select(
-    iters: int = 5, damping_pct: int = 85, scale: int = 1_000_000_000
-) -> str:
-    """Twin of operators/graphalgo.pagerank (see _pagerank_ctes)."""
-    return (
-        _pagerank_ctes(iters, damping_pct, scale)
-        + f"\nSELECT name AS entity_name, rank AS rank_scaled FROM pr_r{iters}"
-    )
-
-
-def triangles_select() -> str:
-    """Twin of operators/graphalgo.triangle_counts: degree-orientation
-    triangle enumeration (orient low->high by (deg, name), wedge self-join
-    on the center, closure against the symmetric edge set), each triangle
-    charged to all three corners. All-integer => exact hash."""
-    return """
-, tr_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), tr_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM tr_edges GROUP BY u
-), tr_or AS MATERIALIZED (
-  SELECT e.u, e.v
-  FROM tr_edges e JOIN tr_deg a ON e.u = a.u JOIN tr_deg b ON e.v = b.u
-  WHERE (a.deg < b.deg) OR (a.deg = b.deg AND e.u < e.v)
-), tr AS (
-  SELECT w1.u AS a, w1.v AS b, w2.v AS c
-  FROM tr_or w1
-  JOIN tr_or w2 ON w1.u = w2.u AND w1.v < w2.v
-  JOIN tr_edges s ON s.u = w1.v AND s.v = w2.v
-), tr_pn AS (
-  SELECT name, COUNT(*) AS t FROM (
-    SELECT a AS name FROM tr
-    UNION ALL SELECT b FROM tr
-    UNION ALL SELECT c FROM tr
-  ) GROUP BY name
-)
-SELECT n.entity_name, COALESCE(p.t, 0) AS triangles
-FROM fused_nodes n LEFT JOIN tr_pn p ON n.entity_name = p.name"""
-
-
-def _ppr_chain(
-    iters: int = 5, damping_pct: int = 85, scale: int = 1_000_000_000
-) -> str:
-    """The unrolled personalized-PageRank CTE chain (seed-indicator base,
-    exact-integer recurrence) over the pipeline twin's nodes/edges and the
-    shared qctx ``seeds`` CTE; the final relation is ``ppr_r{iters}``
-    (name, seed, rank). Shared by qctx_ppr_sql and qctx_edges_ppr_sql."""
-    base = (100 - damping_pct) * scale // 100
-    s = f""",
-ppr_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM edges
-  UNION
-  SELECT dst AS u, src AS v FROM edges
-), ppr_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM ppr_edges GROUP BY u
-), ppr_r0 AS MATERIALIZED (
-  SELECT n.entity_name AS name,
-         CASE WHEN s.entity_name IS NULL THEN 0 ELSE 1 END AS seed,
-         CAST({scale} AS BIGINT)
-           * CASE WHEN s.entity_name IS NULL THEN 0 ELSE 1 END AS rank
-  FROM nodes n LEFT JOIN seeds s ON n.entity_name = s.entity_name
-)"""
-    for i in range(iters):
-        s += f""",
-ppr_r{i + 1} AS MATERIALIZED (
-  SELECT n.name, n.seed,
-         CAST({base} AS BIGINT) * n.seed
-           + CAST(({damping_pct} * COALESCE(c.contrib, 0)) // 100
-                  AS BIGINT) AS rank
-  FROM ppr_r{i} n LEFT JOIN (
-    SELECT e.v AS name, SUM(r.rank // d.deg) AS contrib
-    FROM ppr_edges e
-    JOIN ppr_r{i} r ON e.u = r.name
-    JOIN ppr_deg d ON e.u = d.u
-    GROUP BY e.v
-  ) c ON n.name = c.name
-)"""
-    return s
-
-
-def qctx_ppr_sql(
-    cfg: PipelineConfig = DEFAULT,
-    iters: int = 5,
-    damping_pct: int = 85,
-    scale: int = 1_000_000_000,
-) -> str:
-    """Twin of operators/graphalgo.personalized_pagerank seeded by the qctx
-    seed set: the pagerank recurrence with the teleport restricted to seeds
-    (seed-indicator base), unrolled as MATERIALIZED CTEs over the pipeline
-    twin's nodes/edges + the shared qctx seeds CTE."""
-    return (
-        cte_prefix(cfg) + "," + _qctx_ctes(cfg)
-        + _ppr_chain(iters, damping_pct, scale)
-        + f"\nSELECT name AS entity_name, rank AS rank_scaled FROM ppr_r{iters}"
-    )
-
-
-def qctx_edges_ppr_sql(cfg: PipelineConfig = DEFAULT, iters: int = 5) -> str:
-    """Twin of operators/query_ctx.context_edges_ppr: the qctx_edges ranking
-    with edge_rank = ppr(src) + ppr(dst) from the unrolled PPR chain instead
-    of the degree sum."""
-    return (
-        cte_prefix(cfg) + "," + _qctx_ctes(cfg) + _ppr_chain(iters) + f""",
-ppr_ranked AS (
-  SELECT t.src, t.dst, t.weight, t.description,
-         CAST(ps.rank + pd.rank AS BIGINT) AS edge_rank
-  FROM touching t
-  JOIN ppr_r{iters} ps ON ps.name = t.src
-  JOIN ppr_r{iters} pd ON pd.name = t.dst
-),
-ppr_runn AS (
-  SELECT src, dst, weight, description, edge_rank,
-         sum(length(description)) OVER (
-           ORDER BY edge_rank DESC, weight DESC, src ASC, dst ASC
-           ROWS UNBOUNDED PRECEDING) AS running_tokens
-  FROM ppr_ranked
-)
-SELECT src, dst, weight, description, edge_rank,
-       CAST(running_tokens AS BIGINT) AS running_tokens
-FROM ppr_runn WHERE running_tokens <= {cfg.qctx_token_budget}
-"""
-    )
-
-
-def components_select() -> str:
-    """Twin of operators/graphalgo.connected_components: min reachable name
-    per node via a recursive label-spread CTE (cte_prefix opens WITH
-    RECURSIVE, so recursion composes with the pipeline chain). UNION set
-    semantics bound the recursion at |V|·|component| rows — fine at oracle
-    scale; the engine side is the O(log diameter) pointer-jumping fixpoint."""
-    return """
-, cc_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), cc_reach AS (
-  SELECT entity_name AS name, entity_name AS lbl FROM fused_nodes
-  UNION
-  SELECT e.v AS name, r.lbl
-  FROM cc_reach r JOIN cc_edges e ON e.u = r.name
-)
-SELECT name AS entity_name, MIN(lbl) AS component
-FROM cc_reach GROUP BY name"""
-
-
 def neighbor_sim_select(
     threshold_pm: int = 200_000, max_center_deg: int = 10_000
 ) -> str:
@@ -1379,118 +1186,6 @@ FROM ns_common c
 JOIN ns_deg da ON c.a = da.u
 JOIN ns_deg db ON c.b = db.u
 WHERE c.common * 1000000 // (da.deg + db.deg - c.common) >= {threshold_pm}"""
-
-
-def _communities_ctes(iters: int = 4) -> str:
-    """CTE chain of the LPA twin (ends at lp_r{iters}) — shared by
-    communities_select and community_reps_select.
-
-    Twin of operators/graphalgo.label_propagation: synchronous LPA
-    unrolled as one (count, argmax) CTE pair per round. The argmax is a
-    ROW_NUMBER window ordered (count DESC, label ASC) — the identical
-    deterministic tie-break the engine uses — and nodes with no neighbors
-    COALESCE to their previous label, so the value hash is exact at any
-    fixed round count. MATERIALIZED for the same reason as pagerank: each
-    round references the previous relation and the shared edge set."""
-    s = """
-, lp_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), lp_r0 AS MATERIALIZED (
-  SELECT entity_name AS name, entity_name AS lbl FROM fused_nodes
-)"""
-    for i in range(iters):
-        s += f"""
-, lp_c{i} AS (
-  SELECT e.v AS name, r.lbl, COUNT(*) AS c
-  FROM lp_edges e JOIN lp_r{i} r ON e.u = r.name
-  GROUP BY e.v, r.lbl
-), lp_b{i} AS (
-  SELECT name, lbl FROM (
-    SELECT name, lbl,
-           ROW_NUMBER() OVER (PARTITION BY name ORDER BY c DESC, lbl ASC) AS rn
-    FROM lp_c{i}
-  ) WHERE rn = 1
-), lp_r{i + 1} AS MATERIALIZED (
-  SELECT r.name, COALESCE(b.lbl, r.lbl) AS lbl
-  FROM lp_r{i} r LEFT JOIN lp_b{i} b ON r.name = b.name
-)"""
-    return s
-
-
-def communities_select(iters: int = 4) -> str:
-    """Twin of operators/graphalgo.label_propagation (see _communities_ctes)."""
-    return (
-        _communities_ctes(iters)
-        + f"\nSELECT name AS entity_name, lbl AS community FROM lp_r{iters}"
-    )
-
-
-def pagerank_weighted_select(
-    iters: int = 5, damping_pct: int = 85, scale: int = 1_000_000_000
-) -> str:
-    """Twin of operators/graphalgo.pagerank_weighted: milli-unit integer
-    weights, weight-proportional contributions, the same unrolled
-    MATERIALIZED recurrence as pagerank_select."""
-    base = (100 - damping_pct) * scale // 100
-    s = f"""
-, wpr_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v, CAST(round(weight * 1000) AS BIGINT) AS w
-  FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v, CAST(round(weight * 1000) AS BIGINT) AS w
-  FROM fused_edges
-), wpr_deg AS MATERIALIZED (
-  SELECT u, CAST(SUM(w) AS BIGINT) AS wsum FROM wpr_edges GROUP BY u
-), wpr_r0 AS MATERIALIZED (
-  SELECT entity_name AS name, CAST({scale} AS BIGINT) AS rank FROM fused_nodes
-)"""
-    for i in range(iters):
-        s += f"""
-, wpr_r{i + 1} AS MATERIALIZED (
-  SELECT n.name,
-         CAST({base} AS BIGINT)
-           + CAST(({damping_pct} * COALESCE(s.contrib, 0)) // 100
-                  AS BIGINT) AS rank
-  FROM wpr_r{i} n LEFT JOIN (
-    SELECT e.v AS name, SUM((r.rank * e.w) // d.wsum) AS contrib
-    FROM wpr_edges e
-    JOIN wpr_r{i} r ON e.u = r.name
-    JOIN wpr_deg d ON e.u = d.u
-    GROUP BY e.v
-  ) s ON n.name = s.name
-)"""
-    return s + f"\nSELECT name AS entity_name, rank AS rank_scaled FROM wpr_r{iters}"
-
-
-def kcore_select(k: int = 2, max_rounds: int = 12) -> str:
-    """Twin of operators/graphalgo.kcore: the peeling recurrence unrolled as
-    one (degree-filter, edge-restrict) CTE pair per round. Peeling is
-    monotone — once the fixpoint is reached every further round is a no-op —
-    so unrolling exactly ``max_rounds`` rounds hashes the identical
-    surviving relation as the engine's converge-early loop (the engine
-    raises before returning anything unconverged)."""
-    s = """
-, kc_e0 AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-)"""
-    for i in range(max_rounds):
-        s += f"""
-, kc_k{i} AS (
-  SELECT u FROM kc_e{i} GROUP BY u HAVING COUNT(*) >= {k}
-), kc_e{i + 1} AS MATERIALIZED (
-  SELECT e.u, e.v FROM kc_e{i} e
-  JOIN kc_k{i} a ON e.u = a.u
-  JOIN kc_k{i} b ON e.v = b.u
-)"""
-    return (
-        s
-        + f"\nSELECT u AS entity_name, COUNT(*) AS core_deg"
-        f" FROM kc_e{max_rounds} GROUP BY u"
-    )
 
 
 def enh_nodes_select() -> str:
@@ -1553,155 +1248,6 @@ SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket,
        MIN(deg) AS min_deg,
        MAX(deg) AS max_deg
 FROM dd_deg GROUP BY 1"""
-
-
-def truss_select(k: int = 3, max_rounds: int = 12) -> str:
-    """Twin of operators/graphalgo.truss: support-peeling unrolled as one
-    (wedge-support, edge-filter) CTE pair per round. Peeling is monotone,
-    so unrolling exactly ``max_rounds`` rounds hashes the identical
-    surviving relation as the engine's converge-early loop (the engine
-    raises before returning anything unconverged). MATERIALIZED for the
-    same exponential-inlining reason as pagerank_select."""
-    ms = k - 2
-    s = """
-, tr_e0 AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges WHERE src < dst
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges WHERE dst < src
-)"""
-    for i in range(max_rounds):
-        s += f"""
-, tr_s{i} AS MATERIALIZED (
-  SELECT u, v FROM tr_e{i} UNION ALL SELECT v, u FROM tr_e{i}
-), tr_e{i + 1} AS MATERIALIZED (
-  SELECT a AS u, b AS v FROM (
-    SELECT x.v AS a, y.v AS b, COUNT(*) AS support
-    FROM tr_s{i} x
-    JOIN tr_s{i} y ON x.u = y.u AND x.v < y.v
-    JOIN tr_e{i} e ON e.u = x.v AND e.v = y.v
-    GROUP BY x.v, y.v
-  ) WHERE support >= {ms}
-)"""
-    return (
-        s
-        + f"""
-, tr_sf AS (
-  SELECT u, v FROM tr_e{max_rounds} UNION ALL SELECT v, u FROM tr_e{max_rounds}
-)
-SELECT x.v AS u, y.v AS v, CAST(COUNT(*) AS BIGINT) AS support
-FROM tr_sf x
-JOIN tr_sf y ON x.u = y.u AND x.v < y.v
-JOIN tr_e{max_rounds} e ON e.u = x.v AND e.v = y.v
-GROUP BY x.v, y.v"""
-    )
-
-
-def closeness_select(n_landmarks: int = 8, max_rounds: int = 12) -> str:
-    """Twin of operators/graphalgo.closeness_landmarks: the synchronous
-    min-relaxation unrolled as one CTE per BFS round (the recursive-CTE
-    form would need WITH RECURSIVE at the prefix head). Monotone + the
-    engine's raise-on-non-convergence ⇒ identical fixpoint at
-    ``max_rounds``. Landmark pick is the same total order (deg DESC,
-    name ASC)."""
-    s = f"""
-, cl_sym AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), cl_deg AS (
-  SELECT u, COUNT(*) AS deg FROM cl_sym GROUP BY u
-), cl_seeds AS MATERIALIZED (
-  SELECT u AS seed FROM cl_deg ORDER BY deg DESC, u ASC LIMIT {n_landmarks}
-), cl_d0 AS MATERIALIZED (
-  SELECT seed, seed AS name, CAST(0 AS BIGINT) AS dist FROM cl_seeds
-)"""
-    for i in range(max_rounds):
-        s += f"""
-, cl_d{i + 1} AS MATERIALIZED (
-  SELECT seed, name, MIN(dist) AS dist FROM (
-    SELECT seed, name, dist FROM cl_d{i}
-    UNION ALL
-    SELECT d.seed, s.v AS name, d.dist + 1 AS dist
-    FROM cl_d{i} d JOIN cl_sym s ON d.name = s.u
-  ) GROUP BY seed, name
-)"""
-    return (
-        s
-        + f"""
-, cl_pn AS (
-  SELECT name, CAST(COUNT(*) AS BIGINT) AS reached,
-         CAST(SUM(dist) AS BIGINT) AS dist_sum
-  FROM cl_d{max_rounds} GROUP BY name
-)
-SELECT n.entity_name,
-       CAST(COALESCE(p.reached, 0) AS BIGINT) AS reached,
-       CAST(COALESCE(p.dist_sum, 0) AS BIGINT) AS dist_sum,
-       CAST(CASE WHEN COALESCE(p.dist_sum, 0) = 0 THEN 0
-            ELSE COALESCE(p.reached, 0) * 1000000 // p.dist_sum END AS BIGINT)
-         AS closeness_pm
-FROM fused_nodes n LEFT JOIN cl_pn p ON n.entity_name = p.name"""
-    )
-
-
-def scc_select() -> str:
-    """Twin of operators/graphalgo.strongly_connected_components: closed-
-    form mutual reachability — reach(u,v) via a recursive CTE over the
-    directed edges, SCC(u) = {v : reach(u,v) AND reach(v,u)}, label =
-    MIN over that set (u itself is in it via the base rows). No unroll
-    depth to keep in sync with the engine's peeling loop."""
-    return """
-, scc_edges AS MATERIALIZED (
-  SELECT DISTINCT src AS u, dst AS v FROM fused_edges WHERE src <> dst
-), scc_reach AS (
-  SELECT entity_name AS u, entity_name AS v FROM fused_nodes
-  UNION
-  SELECT r.u, e.v FROM scc_reach r JOIN scc_edges e ON e.u = r.v
-)
-SELECT r1.u AS entity_name, MIN(r1.v) AS scc
-FROM scc_reach r1 JOIN scc_reach r2 ON r1.u = r2.v AND r1.v = r2.u
-GROUP BY r1.u"""
-
-
-def hits_select(iters: int = 5, scale: int = 1_000_000_000) -> str:
-    """Twin of operators/graphalgo.hits: the max-normalized integer HITS
-    recurrence unrolled as chained MATERIALIZED CTEs (the pagerank_select
-    inlining lesson applies — each round references the previous twice)."""
-    s = """
-, ht_edges AS MATERIALIZED (
-  SELECT DISTINCT src AS u, dst AS v FROM fused_edges WHERE src <> dst
-), ht_s0 AS MATERIALIZED (
-  SELECT entity_name AS name,
-         CAST({sc} AS BIGINT) AS h, CAST({sc} AS BIGINT) AS a
-  FROM fused_nodes
-)""".format(sc=scale)
-    for i in range(iters):
-        s += f"""
-, ht_ra{i} AS MATERIALIZED (
-  SELECT e.v AS name, SUM(p.h) AS raw
-  FROM ht_edges e JOIN ht_s{i} p ON e.u = p.name GROUP BY e.v
-), ht_a{i} AS MATERIALIZED (
-  SELECT n.name,
-         CAST(COALESCE(r.raw, 0)::HUGEINT * {scale}
-              // greatest((SELECT MAX(raw) FROM ht_ra{i}), 1)
-              AS BIGINT) AS a
-  FROM ht_s{i} n LEFT JOIN ht_ra{i} r ON n.name = r.name
-), ht_rh{i} AS MATERIALIZED (
-  SELECT e.u AS name, SUM(p.a) AS raw
-  FROM ht_edges e JOIN ht_a{i} p ON e.v = p.name GROUP BY e.u
-), ht_s{i + 1} AS MATERIALIZED (
-  SELECT n.name,
-         CAST(COALESCE(r.raw, 0)::HUGEINT * {scale}
-              // greatest((SELECT MAX(raw) FROM ht_rh{i}), 1)
-              AS BIGINT) AS h,
-         a.a AS a
-  FROM ht_s{i} n
-  LEFT JOIN ht_rh{i} r ON n.name = r.name
-  JOIN ht_a{i} a ON n.name = a.name
-)"""
-    return s + (
-        f"\nSELECT name AS entity_name, h AS hub_scaled, a AS auth_scaled"
-        f" FROM ht_s{iters}"
-    )
 
 
 def frame_dedup_select(n_frames: int = 3, frame_bytes: int = 16) -> str:
@@ -1821,33 +1367,15 @@ LEFT JOIN rc_rec r ON r.name = n.entity_name
 """
 
 
-def clustering_select() -> str:
-    """Twin of operators/graphalgo.clustering_coefficients: the
-    triangles_select chain joined back to degrees, ratio in exact ppm."""
-    return triangles_select().replace(
-        """
-SELECT n.entity_name, COALESCE(p.t, 0) AS triangles
-FROM fused_nodes n LEFT JOIN tr_pn p ON n.entity_name = p.name""",
-        """
-SELECT n.entity_name,
-       COALESCE(d.deg, 0) AS deg,
-       COALESCE(p.t, 0) AS triangles,
-       CASE WHEN COALESCE(d.deg, 0) >= 2
-            THEN 2 * COALESCE(p.t, 0) * 1000000
-                 // (d.deg * (d.deg - 1))
-            ELSE 0 END AS clustering_ppm
-FROM fused_nodes n
-LEFT JOIN tr_pn p ON n.entity_name = p.name
-LEFT JOIN tr_deg d ON n.entity_name = d.u""")
-
-
 def _random_walk_ctes(walks_per_node: int = 2, length: int = 3) -> str:
     """Shared CTE chain for the walk-corpus twins (random_walks_select and
     walk_pairs_select): identical md5-rank hop rule over the rank-indexed
     symmetric adjacency, one MATERIALIZED CTE per step (each step
-    references the previous frontier; materialization keeps the plan
-    linear in ``length``, the pagerank_select lesson). Ends with ``rw_out``
-    = the (walk_id, step, node) corpus relation."""
+    references the previous frontier; DuckDB inlines plain CTEs, so an
+    unmaterialized chain re-expands every earlier step and re-scans the
+    base parquet, while materialization keeps the plan linear in
+    ``length``). Ends with ``rw_out`` = the (walk_id, step, node) corpus
+    relation."""
     s = f"""
 , rw_sym AS MATERIALIZED (
   SELECT src AS u, dst AS v FROM fused_edges
@@ -1945,23 +1473,3 @@ JOIN co_marg y ON p.dst = y.item
 CROSS JOIN co_tot t"""
 
 
-def community_reps_select(iters: int = 4, pr_iters: int = 5) -> str:
-    """Twin of operators/graphalgo.community_representatives: the
-    _pagerank_ctes and _communities_ctes chains composed verbatim (no
-    parsing of rendered SQL), then one argmax window per community."""
-    return (
-        _pagerank_ctes(pr_iters)
-        + _communities_ctes(iters)
-        + f"""
-, cr AS (
-  SELECT r.lbl AS community, r.name, p.rank
-  FROM lp_r{iters} r JOIN pr_r{pr_iters} p ON r.name = p.name
-)
-SELECT community, name AS rep, rank AS rep_rank_scaled, n_members FROM (
-  SELECT community, name, rank,
-         ROW_NUMBER() OVER (PARTITION BY community
-                            ORDER BY rank DESC, name ASC) AS rn,
-         CAST(COUNT(*) OVER (PARTITION BY community) AS BIGINT) AS n_members
-  FROM cr
-) WHERE rn = 1"""
-    )

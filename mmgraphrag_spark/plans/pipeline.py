@@ -277,43 +277,50 @@ class Pipeline:
         """Run one stage unless all outputs are complete. Returns ran?"""
         if resume and all(self._complete(t) for t in outputs):
             return False
+        sc = self.spark.sparkContext
+        # the label is this thread's local property: restore the caller's
+        prev = sc.getLocalProperty("spark.job.description")
         t0 = time.perf_counter()
-        self.spark.sparkContext.setJobDescription(f"stage:{name}")
-        produced = fn()  # dict[table -> DataFrame | callable -> DataFrame]
-        cleanup = produced.pop("__cleanup__", None)
-        # Plain DataFrame outputs are INDEPENDENT jobs: submit them from a
-        # small thread pool so the second write's tasks back-fill executors
-        # freed by the first write's straggler tail (a shared persisted
-        # subtree — e.g. decode's parsed cache — is computed once either
-        # way: the block manager's per-block locks make the loser wait,
-        # not recompute). A callable value is resolved only after EVERY
-        # plain output has been written, in dict order — lets a later
-        # output derive from an earlier output's checkpoint instead of
-        # recomputing its plan.
-        plain = [(t, df) for t, df in produced.items() if not callable(df)]
-        derived = [(t, df) for t, df in produced.items() if callable(df)]
-        counts: dict[str, int] = {}
-        if len(plain) > 1 and _pinned_threads():
-            import concurrent.futures as cf
+        sc.setJobDescription(f"stage:{name}")
+        try:
+            produced = fn()  # dict[table -> DataFrame | callable -> DataFrame]
+            cleanup = produced.pop("__cleanup__", None)
+            # Plain DataFrame outputs are INDEPENDENT jobs: submit them from
+            # a small thread pool so the second write's tasks back-fill
+            # executors freed by the first write's straggler tail (a shared
+            # persisted subtree — e.g. decode's parsed cache — is computed
+            # once either way: the block manager's per-block locks make the
+            # loser wait, not recompute). A callable value is resolved only
+            # after EVERY plain output has been written, in dict order —
+            # lets a later output derive from an earlier output's
+            # checkpoint instead of recomputing its plan.
+            plain = [(t, df) for t, df in produced.items() if not callable(df)]
+            derived = [(t, df) for t, df in produced.items() if callable(df)]
+            counts: dict[str, int] = {}
+            if len(plain) > 1 and _pinned_threads():
+                import concurrent.futures as cf
 
-            def _w(t, df):
-                return t, self._write(df, t)
+                def _w(t, df):
+                    return t, self._write(df, t)
 
-            # each write thread inherits this thread's local properties: the
-            # caller's job group and tags, and the stage's job description
-            with cf.ThreadPoolExecutor(max_workers=len(plain)) as pool:
-                futs = [pool.submit(inheritable_thread_target(self.spark)(_w), t, df)
-                        for t, df in plain]
-                for fut in futs:
-                    t, n = fut.result()  # re-raises
-                    counts[t] = n
-        else:
-            for t, df in plain:
-                counts[t] = self._write(df, t)
-        for t, df in derived:
-            counts[t] = self._write(df(), t)
-        if cleanup is not None:
-            cleanup()
+                # each write thread inherits this thread's local properties:
+                # the caller's job group and tags, and the stage's job
+                # description
+                with cf.ThreadPoolExecutor(max_workers=len(plain)) as pool:
+                    futs = [pool.submit(inheritable_thread_target(self.spark)(_w), t, df)
+                            for t, df in plain]
+                    for fut in futs:
+                        t, n = fut.result()  # re-raises
+                        counts[t] = n
+            else:
+                for t, df in plain:
+                    counts[t] = self._write(df, t)
+            for t, df in derived:
+                counts[t] = self._write(df(), t)
+            if cleanup is not None:
+                cleanup()
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
         self._log_lineage(name, counts, inputs, int((time.perf_counter() - t0) * 1000))
         return True
 

@@ -1,88 +1,8 @@
-"""Fixed-point PageRank: engine vs an independent pure-Python twin."""
+"""One-pass graph analytics: known graphs and independent pure-Python twins."""
 
 from __future__ import annotations
 
-from conftest import SF_TINY
-
-from mmgraphrag_spark import api
 from mmgraphrag_spark.operators import graphalgo
-
-
-def _py_pagerank(names, undirected_edges, iters=5, damping_pct=85,
-                 scale=graphalgo.SCALE):
-    """The same integer recurrence, dict-and-loop (no Spark, no SQL)."""
-    adj: dict[str, set[str]] = {n: set() for n in names}
-    for a, b in undirected_edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    rank = {n: scale for n in names}
-    base = (100 - damping_pct) * scale // 100
-    for _ in range(iters):
-        contrib = {n: 0 for n in names}
-        for u, vs in adj.items():
-            if u not in rank or not vs:
-                continue
-            share = rank[u] // len(vs)
-            for v in vs:
-                if v in contrib:
-                    contrib[v] += share
-        rank = {n: base + (damping_pct * contrib[n]) // 100 for n in names}
-    return rank
-
-
-def test_pagerank_matches_python_twin_and_ranks_hub_first(spark):
-    # star (hub h, leaves l1..l4) + a disjoint pair + an isolated node
-    names = ["h", "l1", "l2", "l3", "l4", "p1", "p2", "iso"]
-    edges = [("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4"), ("p1", "p2")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-
-    got = {
-        r.entity_name: r.rank_scaled
-        for r in graphalgo.pagerank(ndf, edf).collect()
-    }
-    want = _py_pagerank(names, edges)
-    assert got == want
-    # the hub dominates its leaves; leaves are symmetric; isolated node
-    # holds exactly the teleport fixpoint of the recurrence
-    assert got["h"] > got["l1"] == got["l2"] == got["l3"] == got["l4"]
-    assert got["iso"] == (100 - 85) * graphalgo.SCALE // 100
-    assert got["p1"] == got["p2"]
-
-
-def test_pagerank_fused_graph_mass_and_determinism(spark):
-    df = api.pagerank(spark, SF_TINY)
-    rows = df.collect()
-    assert len(rows) > 0
-    n, e = api.fused_graph(spark, SF_TINY)
-    # one rank per fused node, every rank >= the teleport floor
-    assert len(rows) == n.count()
-    floor = (100 - 85) * graphalgo.SCALE // 100
-    assert all(r.rank_scaled >= floor for r in rows)
-    # integer contract => bit-identical across a re-run (fresh plan)
-    again = {r.entity_name: r.rank_scaled for r in api.pagerank(spark, SF_TINY).collect()}
-    assert {r.entity_name: r.rank_scaled for r in rows} == again
-
-
-def test_triangle_counts_known_graph(spark):
-    # diamond: a-b, a-c, b-c, b-d, c-d  (two triangles: abc, bcd) + isolate
-    names = ["a", "b", "c", "d", "iso"]
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.entity_name: r.triangles for r in graphalgo.triangle_counts(ndf, edf).collect()}
-    assert got == {"a": 1, "b": 2, "c": 2, "d": 1, "iso": 0}
-
-
-def test_triangle_counts_double_stored_pair_harmless(spark):
-    # the same undirected edge stored in both directions must not create
-    # phantom triangles (symmetric_edges dedups)
-    ndf = spark.createDataFrame([("a",), ("b",), ("c",)], "entity_name string")
-    edf = spark.createDataFrame(
-        [("a", "b"), ("b", "a"), ("b", "c"), ("a", "c")], "src string, dst string"
-    )
-    got = {r.entity_name: r.triangles for r in graphalgo.triangle_counts(ndf, edf).collect()}
-    assert got == {"a": 1, "b": 1, "c": 1}
 
 
 def test_neighbor_similarity_known_graph(spark):
@@ -147,201 +67,6 @@ def test_neighbor_similarity_hub_center_cap(spark):
     assert base == want
 
 
-def test_connected_components_known_graph(spark):
-    # path a-b-c (component 'a'), pair x-y (component 'x'), isolate z
-    names = ["a", "b", "c", "x", "y", "z"]
-    edges = [("b", "a"), ("b", "c"), ("y", "x")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.component
-        for r in graphalgo.connected_components(ndf, edf).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "z"}
-
-
-def test_connected_components_long_path_converges(spark):
-    # 33-node path: diameter 32 >> max_iter 20 rounds would fail a plain
-    # fixpoint; pointer jumping converges in O(log n) rounds
-    names = [f"n{str(i).zfill(2)}" for i in range(33)]
-    edges = [(names[i], names[i + 1]) for i in range(32)]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.component
-        for r in graphalgo.connected_components(ndf, edf, max_iter=8).collect()
-    }
-    assert set(got.values()) == {"n00"} and len(got) == 33
-
-
-def _py_ppr(names, undirected_edges, seeds, iters=5, damping_pct=85,
-            scale=graphalgo.SCALE):
-    """Personalized variant of _py_pagerank: teleport only to seeds."""
-    adj: dict[str, set[str]] = {n: set() for n in names}
-    for a, b in undirected_edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    rank = {n: (scale if n in seeds else 0) for n in names}
-    base = (100 - damping_pct) * scale // 100
-    for _ in range(iters):
-        contrib = {n: 0 for n in names}
-        for u, vs in adj.items():
-            if u not in rank or not vs:
-                continue
-            share = rank[u] // len(vs)
-            for v in vs:
-                if v in contrib:
-                    contrib[v] += share
-        rank = {
-            n: (base if n in seeds else 0) + (damping_pct * contrib[n]) // 100
-            for n in names
-        }
-    return rank
-
-
-def test_personalized_pagerank_matches_twin_and_localizes(spark):
-    # two lobes joined by a bridge; seed in the left lobe
-    names = ["s", "a", "b", "bridge", "x", "y", "iso"]
-    edges = [("s", "a"), ("s", "b"), ("a", "b"), ("b", "bridge"),
-             ("bridge", "x"), ("x", "y")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    sdf = spark.createDataFrame([("s",)], "entity_name string")
-    got = {
-        r.entity_name: r.rank_scaled
-        for r in graphalgo.personalized_pagerank(ndf, edf, sdf).collect()
-    }
-    assert got == _py_ppr(names, edges, {"s"})
-    # mass concentrates near the seed: its own lobe outranks the far lobe
-    assert got["a"] > got["x"] and got["s"] > got["y"]
-    # unreachable node holds zero mass (teleport is seed-only)
-    assert got["iso"] == 0
-
-
-def _py_lpa(names, undirected_edges, iters=4):
-    """Synchronous LPA, dict-and-loop: most-frequent neighbor label, ties ->
-    lexicographically smallest; no neighbors -> keep current label."""
-    adj: dict[str, set[str]] = {n: set() for n in names}
-    for a, b in undirected_edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    lbl = {n: n for n in names}
-    for _ in range(iters):
-        nxt = {}
-        for v in names:
-            if not adj[v]:
-                nxt[v] = lbl[v]
-                continue
-            freq: dict[str, int] = {}
-            for u in adj[v]:
-                freq[lbl[u]] = freq.get(lbl[u], 0) + 1
-            nxt[v] = min(freq, key=lambda l: (-freq[l], l))
-        lbl = nxt
-    return lbl
-
-
-def test_label_propagation_matches_python_twin(spark):
-    # two dense cliques bridged by one edge + an isolated node: LPA should
-    # give each clique a single label and leave the isolate alone
-    names = ["a1", "a2", "a3", "a4", "b1", "b2", "b3", "b4", "iso"]
-    edges = (
-        [("a1", "a2"), ("a1", "a3"), ("a1", "a4"), ("a2", "a3"),
-         ("a2", "a4"), ("a3", "a4")]
-        + [("b1", "b2"), ("b1", "b3"), ("b1", "b4"), ("b2", "b3"),
-           ("b2", "b4"), ("b3", "b4")]
-        + [("a4", "b1")]
-    )
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r["entity_name"]: r["community"]
-        for r in graphalgo.label_propagation(ndf, edf, iters=4).collect()
-    }
-    assert got == _py_lpa(names, edges, iters=4)
-    # structural expectations: clique A converges to one community, the
-    # isolate keeps its own name
-    assert len({got[n] for n in ["a1", "a2", "a3"]}) == 1
-    assert got["iso"] == "iso"
-
-
-def test_label_propagation_tie_break_is_lexicographic_min(spark):
-    # v has exactly two neighbors with distinct labels (count tie) ->
-    # the lexicographically smaller label must win deterministically
-    names = ["m", "x", "z"]
-    edges = [("x", "m"), ("z", "m")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r["entity_name"]: r["community"]
-        for r in graphalgo.label_propagation(ndf, edf, iters=1).collect()
-    }
-    assert got["m"] == "x"
-    assert got == _py_lpa(names, edges, iters=1)
-
-
-def test_kcore_peels_pendant_chain_keeps_cycle(spark):
-    # triangle (a,b,c) + pendant chain c-d-e + isolated edge x-y:
-    # the 2-core is exactly the triangle; the chain and the stray edge peel
-    names = ["a", "b", "c", "d", "e", "x", "y"]
-    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e"), ("x", "y")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.core_deg for r in graphalgo.kcore(ndf, edf, k=2).collect()
-    }
-    assert got == {"a": 2, "b": 2, "c": 2}
-
-
-def test_kcore_raises_when_peeling_exceeds_round_budget(spark):
-    # a path of 2n+1 nodes peels one layer per round from each end: n rounds
-    # to empty — with max_rounds < n the loop must fail loudly, never return
-    # a half-peeled (wrong) subgraph
-    import pytest
-
-    n = 8
-    names = [f"p{i}" for i in range(2 * n + 1)]
-    edges = [(names[i], names[i + 1]) for i in range(2 * n)]
-    ndf = spark.createDataFrame([(x,) for x in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        graphalgo.kcore(ndf, edf, k=2, max_rounds=3)
-    # and with budget: the path has an empty 2-core
-    assert graphalgo.kcore(ndf, edf, k=2, max_rounds=12).count() == 0
-
-
-def test_pagerank_weighted_matches_twin_and_follows_weight(spark):
-    """Integer twin on a 4-node star where one spoke carries 10x the weight:
-    the heavy spoke must outrank the light ones, and every value must match
-    the dict-and-loop fixed-point recurrence exactly."""
-    names = ["hub", "heavy", "l1", "l2"]
-    edges = [("hub", "heavy", 50.0), ("hub", "l1", 5.0), ("hub", "l2", 5.0)]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string, weight double")
-
-    SCALE, D, ITERS = graphalgo.SCALE, 85, 5
-    sym = {}
-    for a, b, w in edges:
-        wi = round(w * 1000)
-        sym.setdefault(a, {})[b] = wi
-        sym.setdefault(b, {})[a] = wi
-    wsum = {u: sum(vs.values()) for u, vs in sym.items()}
-    rank = {n: SCALE for n in names}
-    base = (100 - D) * SCALE // 100
-    for _ in range(ITERS):
-        contrib = {n: 0 for n in names}
-        for u, vs in sym.items():
-            for v, w in vs.items():
-                contrib[v] += rank[u] * w // wsum[u]
-        rank = {n: base + D * contrib[n] // 100 for n in names}
-
-    got = {
-        r.entity_name: r.rank_scaled
-        for r in graphalgo.pagerank_weighted(ndf, edf).collect()
-    }
-    assert got == rank
-    assert got["heavy"] > got["l1"] == got["l2"]
-
-
 def test_linkpred_ra_finds_the_missing_edge(spark):
     # a 4-clique missing one edge: (a, d) share two degree-3 neighbors ->
     # ra = 2 * (1e6 // 3); plus a weakly-linked pair through a high-degree
@@ -398,239 +123,6 @@ def test_degree_distribution_buckets(spark):
     )
 
 
-def test_truss_keeps_triangle_drops_tail(spark):
-    # triangle a-b-c plus a pendant tail c-d and a disjoint pair x-y:
-    # the 3-truss is exactly the triangle, every edge with support 1
-    names = ["a", "b", "c", "d", "x", "y"]
-    edges = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("x", "y")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {(r.u, r.v): r.support for r in graphalgo.truss(ndf, edf).collect()}
-    assert got == {("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 1}
-
-
-def test_truss_cascading_peel_two_rounds(spark):
-    # two triangles sharing edge b-c, plus edge c-e whose only triangle
-    # support comes through d-e; peeling d-e (support 0) must cascade:
-    # round 1 drops d-e, round 2 drops c-e/c-d... construct: triangle
-    # (b,c,d), triangle (a,b,c), chain d-e-f. d-e and e-f have support 0
-    # -> dropped round 1; the two triangles survive with b-c support 2.
-    edges = [
-        ("a", "b"), ("b", "c"), ("a", "c"),
-        ("b", "d"), ("c", "d"),
-        ("d", "e"), ("e", "f"),
-    ]
-    names = sorted({n for e in edges for n in e})
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {(r.u, r.v): r.support for r in graphalgo.truss(ndf, edf).collect()}
-    assert got == {
-        ("a", "b"): 1, ("a", "c"): 1, ("b", "c"): 2,
-        ("b", "d"): 1, ("c", "d"): 1,
-    }
-
-
-def _py_closeness(names, undirected_edges, n_landmarks=8):
-    """Dict-and-loop twin: exact BFS from the top-(deg, name) landmarks."""
-    from collections import deque
-
-    adj = {n: set() for n in names}
-    for a, b in undirected_edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    deg = {n: len(vs) for n, vs in adj.items() if vs}
-    seeds = [u for u in sorted(deg, key=lambda u: (-deg[u], u))][:n_landmarks]
-    dist_sum = {n: 0 for n in names}
-    reached = {n: 0 for n in names}
-    for s in seeds:
-        dist = {s: 0}
-        dq = deque([s])
-        while dq:
-            u = dq.popleft()
-            for v in adj[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    dq.append(v)
-        for v, d in dist.items():
-            if v in dist_sum:
-                dist_sum[v] += d
-                reached[v] += 1
-    return {
-        n: (
-            reached[n],
-            dist_sum[n],
-            0 if dist_sum[n] == 0 else reached[n] * 1_000_000 // dist_sum[n],
-        )
-        for n in names
-    }
-
-
-def test_closeness_matches_python_twin(spark):
-    # path graph a-b-c-d-e plus disjoint pair x-y and isolated z:
-    # with 8 landmarks every connected node is a landmark, so this is
-    # exact all-pairs closeness on each component
-    names = ["a", "b", "c", "d", "e", "x", "y", "z"]
-    edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: (r.reached, r.dist_sum, r.closeness_pm)
-        for r in graphalgo.closeness_landmarks(ndf, edf).collect()
-    }
-    assert got == _py_closeness(names, edges)
-    # center of the path is closer to everything than the endpoint
-    assert got["c"][2] > got["a"][2]
-    # isolated node: zero landmarks reached, closeness 0
-    assert got["z"] == (0, 0, 0)
-
-
-def test_closeness_landmark_subset_is_deterministic(spark):
-    # more nodes than landmarks: L=2 must pick the two hubs by
-    # (deg DESC, name ASC) — h1 (deg 4) and h2 (deg 3); ties by name
-    edges = [
-        ("h1", "l1"), ("h1", "l2"), ("h1", "l3"), ("h1", "h2"),
-        ("h2", "m1"), ("h2", "m2"),
-    ]
-    names = sorted({n for e in edges for n in e})
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: (r.reached, r.dist_sum, r.closeness_pm)
-        for r in graphalgo.closeness_landmarks(
-            ndf, edf, n_landmarks=2
-        ).collect()
-    }
-    assert got == _py_closeness(names, edges, n_landmarks=2)
-    # every node reaches both landmarks on this connected graph
-    assert all(v[0] == 2 for v in got.values())
-
-
-def _py_scc(names, directed_edges):
-    """Mutual reachability by brute force (the DuckDB twin's shape)."""
-    reach = {n: {n} for n in names}
-    changed = True
-    while changed:
-        changed = False
-        for u, v in directed_edges:
-            for s in list(reach):
-                if u in reach[s] and v not in reach[s]:
-                    reach[s].add(v)
-                    changed = True
-    return {
-        u: min(v for v in reach[u] if u in reach[v]) for u in names
-    }
-
-
-def test_scc_cycle_chain_and_isolate(spark):
-    # directed 3-cycle a->b->c->a (SCC 'a'); chain p->q->r (3 singletons
-    # — forward-reachable but never mutually); isolate z; plus a bridge
-    # c->p so the whole thing is ONE weak component but 5 SCCs
-    names = ["a", "b", "c", "p", "q", "r", "z"]
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "p"),
-             ("p", "q"), ("q", "r")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.scc
-        for r in graphalgo.strongly_connected_components(ndf, edf).collect()
-    }
-    assert got == _py_scc(names, edges)
-    assert got == {"a": "a", "b": "a", "c": "a",
-                   "p": "p", "q": "q", "r": "r", "z": "z"}
-    # sanity: undirected components would have merged the chain into 'a'
-    cc = {
-        r.entity_name: r.component
-        for r in graphalgo.connected_components(ndf, edf).collect()
-    }
-    assert cc["r"] == "a"
-
-
-def test_scc_two_cycles_joined_by_dag_edge(spark):
-    # two 2-cycles linked one-way: {a,b} and {m,n} stay separate SCCs; the
-    # trim step never fires (no in/out-deg-0 node), so this exercises the
-    # FW/BW finalize-and-peel path for BOTH rounds
-    names = ["a", "b", "m", "n"]
-    edges = [("a", "b"), ("b", "a"), ("b", "m"), ("m", "n"), ("n", "m")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.scc
-        for r in graphalgo.strongly_connected_components(ndf, edf).collect()
-    }
-    assert got == {"a": "a", "b": "a", "m": "m", "n": "m"}
-
-
-def test_scc_matches_python_twin_on_fixture_graph(spark):
-    # randomized-shape (but seeded/deterministic) digraph vs brute force
-    names = [f"v{i:02d}" for i in range(14)]
-    edges = []
-    for i in range(14):
-        edges.append((names[i], names[(i * 3 + 1) % 14]))
-        if i % 2 == 0:
-            edges.append((names[(i * 5 + 2) % 14], names[i]))
-    edges = sorted(set((u, v) for u, v in edges if u != v))
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: r.scc
-        for r in graphalgo.strongly_connected_components(ndf, edf).collect()
-    }
-    assert got == _py_scc(names, edges)
-
-
-def _py_hits(names, directed_edges, iters=5, scale=graphalgo.SCALE):
-    h = {n: scale for n in names}
-    a = {n: scale for n in names}
-    for _ in range(iters):
-        ra = {n: 0 for n in names}
-        for u, v in directed_edges:
-            ra[v] += h[u]
-        mx = max(max(ra.values()), 1)
-        a = {n: ra[n] * scale // mx for n in names}
-        rh = {n: 0 for n in names}
-        for u, v in directed_edges:
-            rh[u] += a[v]
-        mx = max(max(rh.values()), 1)
-        h = {n: rh[n] * scale // mx for n in names}
-    return h, a
-
-
-def test_hits_matches_python_twin(spark):
-    # hub x points at three authorities; y points at one; chain adds noise
-    names = ["x", "y", "p", "q", "r", "s"]
-    edges = [("x", "p"), ("x", "q"), ("x", "r"), ("y", "p"),
-             ("r", "s"), ("s", "r")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: (r.hub_scaled, r.auth_scaled)
-        for r in graphalgo.hits(ndf, edf).collect()
-    }
-    h, a = _py_hits(names, edges)
-    assert got == {n: (h[n], a[n]) for n in names}
-    # x is the best hub; p the best authority (two in-links)
-    assert got["x"][0] == max(v[0] for v in got.values())
-    assert got["p"][1] == max(v[1] for v in got.values())
-    # sinks are zero hubs; sources are zero authorities
-    assert got["p"][0] == 0 and got["x"][1] == 0
-
-
-def test_hits_hub_degree_beyond_int64_scale(spark):
-    # 20 hubs all pointing at one authority: raw_a = 20e9, and raw*scale
-    # would be 2e19 > int64 max — the DECIMAL(38,0) product must carry it
-    names = [f"h{i:02d}" for i in range(20)] + ["star"]
-    edges = [(f"h{i:02d}", "star") for i in range(20)]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: (r.hub_scaled, r.auth_scaled)
-        for r in graphalgo.hits(ndf, edf).collect()
-    }
-    h, a = _py_hits(names, edges)
-    assert got == {n: (h[n], a[n]) for n in names}
-    assert got["star"][1] == graphalgo.SCALE
-
-
 def test_reciprocity_known_digraph(spark):
     # a<->b mutual; a->c one-way; d isolated
     names = ["a", "b", "c", "d"]
@@ -646,25 +138,6 @@ def test_reciprocity_known_digraph(spark):
         "b": (1, 1, 1_000_000),
         "c": (0, 0, 0),
         "d": (0, 0, 0),
-    }
-
-
-def test_clustering_coefficient_known_graph(spark):
-    # K3 triangle abc (+pendant d off a): C(b)=C(c)=1, C(a)=2*1/(3*2)=1/3,
-    # C(d)=0 (deg 1)
-    names = ["a", "b", "c", "d"]
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.entity_name: (r.deg, r.triangles, r.clustering_ppm)
-        for r in graphalgo.clustering_coefficients(ndf, edf).collect()
-    }
-    assert got == {
-        "a": (3, 1, 333_333),
-        "b": (2, 1, 1_000_000),
-        "c": (2, 1, 1_000_000),
-        "d": (1, 0, 0),
     }
 
 
@@ -790,32 +263,3 @@ def test_walk_skipgram_pairs_matches_python_twin(spark):
     assert all(got[(b, a)] == n for (a, b), n in got.items())
 
 
-def test_community_representatives_composition(spark):
-    # two triangles bridged by nothing + an isolated pair
-    names = ["a", "b", "c", "x", "y", "z", "p", "q"]
-    edges = [("a", "b"), ("b", "c"), ("a", "c"),
-             ("x", "y"), ("y", "z"), ("x", "z"), ("p", "q")]
-    ndf = spark.createDataFrame([(n,) for n in names], "entity_name string")
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r.community: (r.rep, r.rep_rank_scaled, r.n_members)
-        for r in graphalgo.community_representatives(ndf, edf).collect()
-    }
-    # composition invariant: rep == argmax of the engine's own pagerank
-    # within the engine's own LPA community (ties by name)
-    comm = {
-        r.entity_name: r.community
-        for r in graphalgo.label_propagation(ndf, edf).collect()
-    }
-    pr = {
-        r.entity_name: r.rank_scaled
-        for r in graphalgo.pagerank(ndf, edf).collect()
-    }
-    want = {}
-    for c in set(comm.values()):
-        members = [n for n, cc in comm.items() if cc == c]
-        rep = min(members, key=lambda n: (-pr[n], n))
-        want[c] = (rep, pr[rep], len(members))
-    assert got == want
-    # every node is in exactly one community; sizes sum to n
-    assert sum(v[2] for v in got.values()) == len(names)

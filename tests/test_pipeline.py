@@ -125,6 +125,41 @@ def test_parallel_resume_runs_in_the_callers_job_group(spark, pipe):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def test_sequential_resume_restores_the_callers_job_description(spark, pipe):
+    """A stage labels its jobs ``stage:<name>`` on the calling thread and
+    hands the caller's own description back when it ends."""
+    sc = spark.sparkContext
+    shutil.rmtree(pipe._path("edges"))
+    sc.setJobDescription("caller")
+    try:
+        assert pipe.run(resume=True, parallel=False)["graph"]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_query_fields_reuse_the_build(spark):
+    """No stage reads the query fields, so a config that differs only in
+    them resumes the default build and runs no Spark job."""
+    from dataclasses import replace
+
+    from mmgraphrag_spark import api
+    from mmgraphrag_spark.config import DEFAULT
+
+    api.build(spark, SF_TINY)
+    sc = spark.sparkContext
+    group = "query-fields-build"
+    sc.setJobGroup(group, "build with other query fields")
+    try:
+        api.build(spark, SF_TINY, replace(
+            DEFAULT, qctx_query="x", qctx_k=6, qctx_token_budget=100
+        ))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_lineage_and_metrics_rows(pipe):
     lin = pipe.lineage().toPandas()
     assert set(lin["output"]) >= {"spans", "chunks", "mentions", "triples",

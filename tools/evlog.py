@@ -2,7 +2,8 @@
 every Spark stage, to find parallelism collapses (single-task stages).
 
 Usage:
-  SPARK_GRAFT_EVLOG=/dev/shm/evlog python bench.py ...   # writes the log
+  SPARK_GRAFT_EVLOG=/dev/shm/evlog python tools/compare.py <sf_dir> kg_edges
+                                                # any get_spark() run writes it
   python tools/evlog.py /dev/shm/evlog/<app-id>          # analyze
 """
 

@@ -27,6 +27,32 @@ import sys
 import textwrap
 import time
 
+
+def _healthy(max_wait_s: int = 900) -> None:
+    """Block until the host looks calm. Two probes, because the sick phases
+    come in two flavors (stack-sampled, PLANS.md): CPU contention (single-
+    thread loop slows) and page-allocation/IO stalls (tmpfs writes and mmap
+    crawl while CPUs idle). Healthy nominals: loop ~0.3 s, 200 MB tmpfs
+    write ~0.3 s."""
+    t0 = time.perf_counter()
+    while True:
+        s = time.perf_counter()
+        x = 0
+        for i in range(3_000_000):
+            x += i * i % 7
+        cpu_dt = time.perf_counter() - s
+
+        s = time.perf_counter()
+        with open("/dev/shm/_health_probe", "wb") as f:
+            f.write(b"\x5a" * (200 * 1024 * 1024))
+        os.remove("/dev/shm/_health_probe")
+        io_dt = time.perf_counter() - s
+
+        if (cpu_dt < 0.6 and io_dt < 0.9) or time.perf_counter() - t0 > max_wait_s:
+            return
+        time.sleep(30)
+
+
 _BURN_N = 30_000_000
 
 

@@ -49,7 +49,7 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/dev/shm/kg_bench_fixture"
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from tools.scaling import _healthy
+    from tools.hostprobe import _healthy
 
     from mmgraphrag_spark.config import DEFAULT
     from mmgraphrag_spark.operators import dedup

@@ -8,7 +8,7 @@ strings per entity so collect_set partials genuinely combine (the all-
 distinct worst case makes the final union irreducible for ANY strategy —
 measured separately with pool=0 = all distinct).
 
-Method: health-gated (tools/scaling._healthy) min-of-N walls. Usage:
+Method: health-gated (tools/hostprobe._healthy) min-of-N walls. Usage:
 
   python tools/skewbench.py [cores] [n_rows] [reps]
 
@@ -54,7 +54,7 @@ def main() -> None:
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 
-    from tools.scaling import _healthy
+    from tools.hostprobe import _healthy
 
     from mmgraphrag_spark.operators import canonicalize as canon
     from mmgraphrag_spark.session import get_spark

@@ -37,10 +37,32 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from tools.scaling import _healthy, gen_fixture  # noqa: E402
+from tools.hostprobe import _healthy  # noqa: E402
 
 MASTER_PORT = 7077
 MASTER_URL = f"spark://127.0.0.1:{MASTER_PORT}"
+
+
+def gen_fixture(sf_dir: str, replicas: int, out_dir: str) -> int:
+    """Replicate documents.parquet with per-replica token suffixes (DuckDB)."""
+    import duckdb
+
+    os.makedirs(out_dir, exist_ok=True)
+    out = f"{out_dir}/documents.parquet"
+    n_base = duckdb.sql(
+        f"SELECT count(*), max(doc_id) FROM '{sf_dir}/documents.parquet'"
+    ).fetchone()
+    stride = int(n_base[1]) + 1
+    duckdb.sql(f"""
+      COPY (
+        SELECT doc_id + {stride} * CAST(u.r AS BIGINT) AS doc_id,
+               array_to_string([x || CAST(u.r AS VARCHAR)
+                                for x in string_split(text, ' ')], ' ') AS text,
+               lang, source, n_chars
+        FROM '{sf_dir}/documents.parquet', UNNEST(range({replicas})) AS u(r)
+      ) TO '{out}' (FORMAT PARQUET)
+    """)
+    return int(n_base[0]) * replicas
 
 
 def _spark_bin() -> Path:
@@ -181,7 +203,7 @@ jobs submitted via `spark-submit --py-files mmgraphrag_spark.zip` (the
 literal mechanism BASELINE.json's north rule names). Each executor is its
 own JVM with its own 4 GiB heap — separate GC, separate Python worker pool,
 cross-JVM (localhost-socket) shuffle. Input: {n_docs} docs ({replicas}x
-sf0.1 replica fixture, tools/scaling.gen_fixture).
+sf0.1 replica fixture, tools/standalone.gen_fixture).
 
 | level | executors x cores | wall (s) | docs/s | schedule | rep walls |
 |---|---|---|---|---|---|

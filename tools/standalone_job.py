@@ -40,17 +40,17 @@ def main() -> None:
     tmp_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     work = tempfile.mkdtemp(prefix="kg_standalone_", dir=tmp_root)
     try:
-        # same warm-up contract as bench.py: spin up executor Python worker
-        # pools + codegen once (a deploy-time cost on a long-lived cluster)
+        # warm-up: spin up executor Python worker pools + codegen once (a
+        # deploy-time cost on a long-lived cluster)
         warm = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1000)
         warm_dir = os.path.join(work, "_warm")
         warm.coalesce(4).write.parquet(f"{warm_dir}/documents.parquet")
         Pipeline(spark, warm_dir, os.path.join(work, "_warm_out")).run(resume=False)
 
-        # bench.py's schedule-alternation contract: even reps run the
-        # serial stage DAG, odd reps the concurrent one (the engine default
-        # on real clusters); min-of-reps picks whichever wins in this
-        # topology/regime, and the schedule is tagged per rep
+        # schedule alternation: even reps run the serial stage DAG, odd
+        # reps the concurrent one (the engine default on real clusters);
+        # min-of-reps picks whichever wins in this topology/regime, and the
+        # schedule is tagged per rep
         walls = []
         scheds = []
         for rep in range(reps):
