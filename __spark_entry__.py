@@ -6,8 +6,8 @@ twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
 The registry holds the KG build stages, the query path, the ingest readers
-and the one-pass graph, media, text, curation, dedup and event analytics,
-each keyed by name. Every entry except ``kg_spectral`` and
+and the text, curation, dedup and event analytics over the documents, each
+keyed by name. Every entry except ``kg_spectral`` and
 ``ann_ivf_kmeans_topk`` has an exact DuckDB twin, which ``tools/compare.py``
 checks.
 
@@ -59,10 +59,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # ---- analytics over the graph, the media and the documents -------
-        # deterministic DeepWalk corpus over the fused graph (md5 hop rule,
-        # rank-indexed adjacency join — one row per hop, hub-safe)
-        "kg_walks": api.walks,
+        # ---- text, curation, dedup and event analytics over the documents --
         # sparse TF-IDF dot-product document similarity via df-capped
         # inverted index (the encoder-free sibling of embedding near-dup)
         "text_docsim": lambda s, d: textstats.docsim_topk(
@@ -72,12 +69,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_drift": lambda s, d: textstats.source_drift(
             curation.docs_table(s, d)
         ),
-        # entity co-occurrence graph mined from the extractor's mentions
-        # (chunk-basket pair join, pre-join cap; lift in exact ppm)
-        "kg_cooccur": api.cooccur,
-        # skip-gram (center, context) pair counts over the walk corpus —
-        # the node2vec trainer's positive-sample relation
-        "kg_walk_pairs": api.walk_pairs,
         # canonical-document election: keep the highest-quality member of
         # each near-dup cluster (clusters × quality, compositional twin)
         "dup_canonical": lambda s, d: dedup.canonical_documents(
@@ -109,17 +100,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "curation_urls": lambda s, d: curation.url_normalize(
             curation.url_seeded_docs(curation.docs_table(s, d))
         ),
-        # cross-media duplicate-frame coverage (fingerprint-grain counts,
-        # never pairwise) over the sampled frame relation
-        "mm_frame_dedup": api.mm_frame_dedup,
-        # 64-bit perceptual average-hash per media item (mapInPandas; the
-        # PIL-resize swap point) — approximate measure, exact value hash
-        "mm_phash": api.mm_phash,
-        # near-dup media pairs: block-banded candidates (complete for
-        # hamming<=3) + exact xor popcount verify
-        "mm_phash_pairs": api.mm_phash_pairs,
-        # per-node directed-edge reciprocity (symmetric-relation detector)
-        "kg_reciprocity": api.reciprocity,
         # per-doc vocabulary profile: type-token ratio + hapax share
         "text_hapax": lambda s, d: textstats.hapax_stats(
             curation.docs_table(s, d)
@@ -130,11 +110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_pii": lambda s, d: curation.pii_scrub(
             curation.pii_seeded_docs(curation.docs_table(s, d))
         ),
-        # resource-allocation link prediction: top-k missing edges by
-        # exact-integer RA index (Zhou et al. 2009), hub-capped wedges
-        "kg_linkpred": api.linkpred,
-        # log2-bucket degree distribution (bit-length buckets, no float log)
-        "kg_degree_dist": api.degree_dist,
         # the END-TO-END curation funnel: quality gate -> exact dedup ->
         # stratified sample as one relation with per-doc stage attribution
         "curation_funnel": lambda s, d: curation.curation_funnel(
@@ -237,8 +212,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality": lambda s, d: textstats.quality_scores(dedup.docs_table(s, d)),
         "text_langid": lambda s, d: textstats.language_id(dedup.docs_table(s, d)),
         "text_fingerprints": lambda s, d: textstats.fingerprints(dedup.docs_table(s, d)),
-        # changed this round: hub-center cap (engine + oracle in lockstep)
-        "kg_neighbor_sim": api.neighbor_sim,
         # ---- core pipeline -------------------------------------------------
         "kg_spans": api.spans,
         "kg_chunks": api.chunks,
@@ -307,7 +280,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_simhash_pairs": lambda s, d: dedup.simhash_near_duplicates(dedup.docs_table(s, d)),
         "dup_embedding": lambda s, d: dedup.embedding_near_duplicates(s, d),
         "ann_topk": lambda s, d: similarity.ann_bruteforce_topk(s, d),
-        "mm_frames": api.mm_frames,
         "qctx_seeds_vdb": api.qctx_seeds_vdb,
         # the final query deliverables: rendered context CSV blocks + the
         # filled answer system prompt (reference query.py:263-311, 402-405)
@@ -318,11 +290,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "kg_walks": oracle.q(oracle.random_walks_select()),
         "text_docsim": oracle_extra.docsim_sql(),
         "text_drift": oracle_extra.source_drift_sql(),
-        "kg_cooccur": oracle.q(oracle.cooccurrence_graph_select()),
-        "kg_walk_pairs": oracle.q(oracle.walk_pairs_select()),
         "dup_canonical": oracle_extra.canonical_docs_sql(),
         "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
         "curation_token_mix": oracle_extra.token_budget_mix_sql(),
@@ -330,10 +299,6 @@ def oracle_sql() -> dict[str, str]:
         "text_readability": oracle_extra.readability_sql(),
         "dup_semantic_clusters": oracle_extra.semantic_clusters_sql(),
         "curation_urls": oracle_extra.url_normalize_sql(),
-        "mm_frame_dedup": oracle.q(oracle.frame_dedup_select()),
-        "mm_phash": oracle.q(oracle.phash_select()),
-        "mm_phash_pairs": oracle.q(oracle.phash_pairs_select()),
-        "kg_reciprocity": oracle.q(oracle.reciprocity_select()),
         "text_hapax": oracle_extra.hapax_sql(),
         "text_pii": oracle_extra.pii_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
@@ -354,11 +319,9 @@ def oracle_sql() -> dict[str, str]:
         "kg_clusters": oracle.q(oracle.clusters_select()),
         "kg_fused_nodes": oracle.q(oracle.fused_nodes_select()),
         "kg_fused_edges": oracle.q(oracle.fused_edges_select()),
-        "kg_neighbor_sim": oracle.q(oracle.neighbor_sim_select()),
         "kg_enhanced_nodes": oracle.q(oracle.enh_nodes_select()),
         "kg_enhanced_edges": oracle.q(oracle.enh_edges_select()),
         "mm_decode": oracle.q(oracle.mm_decode_select()),
-        "mm_frames": oracle.q(oracle.mm_frames_select()),
         "media_chunk_match": oracle.q(oracle.media_chunk_match_select()),
         "qctx_seeds": oracle.qctx_seeds_sql(),
         "qctx_edges": oracle.qctx_edges_sql(),
@@ -402,8 +365,6 @@ def oracle_sql() -> dict[str, str]:
         "events_hopping": oracle_extra.hopping_rollup_sql(),
         "text_lm_score": oracle_extra.lm_scores_sql(),
         "curation_funnel": oracle_extra.curation_funnel_sql(),
-        "kg_linkpred": oracle.q(oracle.linkpred_ra_select()),
-        "kg_degree_dist": oracle.q(oracle.degree_dist_select()),
         "text_gini": oracle_extra.gini_sql(),
         "text_winnow": oracle_extra.winnow_sql(),
         "curation_domain_mix": oracle_extra.domain_mix_sql(),

@@ -19,8 +19,8 @@ Layout:
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
-                query_ctx, answer, graphalgo, multimodal, graphml, replay,
-                dedup, similarity, textstats, curation, events
+                query_ctx, answer, multimodal, graphml, replay, dedup,
+                similarity, textstats, curation, events
   plans/        staged pipeline runner with checkpoints + lineage + metrics
   streaming/    foreachBatch incremental KG ingest + streaming event, session
                 and near-dup operators

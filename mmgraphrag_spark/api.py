@@ -7,8 +7,8 @@ build writes. The build's work dir is scoped to the Spark session: it lies
 under ``SparkFiles.getRootDirectory()``, which Spark deletes at
 ``spark.stop()``, and is named by (sf_dir, cfg without its query fields).
 The first call builds; a later one resumes, finds every stage complete and
-runs no Spark job. The query and analytics functions compose operators over
-those tables.
+runs no Spark job. The query, media and answer functions compose operators
+over those tables.
 """
 
 from __future__ import annotations
@@ -79,36 +79,6 @@ def spectral(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) ->
     return fusion.spectral_assignments(fusion_blocks(spark, sf_dir, cfg))
 
 
-def fused_graph(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> tuple[DataFrame, DataFrame]:
-    return fused_nodes(spark, sf_dir, cfg), fused_edges(spark, sf_dir, cfg)
-
-
-def neighbor_sim(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Neighborhood-Jaccard entity pairs over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    _, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.neighbor_similarity(e)
-
-
-def linkpred(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Top-k resource-allocation link predictions over the fused graph."""
-    from .operators import graphalgo
-
-    _, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.linkpred_ra(e)
-
-
-def degree_dist(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Log2-bucket degree distribution of the fused graph."""
-    from .operators import graphalgo
-
-    _, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.degree_distribution(e)
-
-
 def enhanced_graph(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
 ) -> tuple[DataFrame, DataFrame]:
@@ -150,14 +120,6 @@ def mm_decode(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -
     from .operators import multimodal
 
     return multimodal.decode_media(
-        multimodal.media_payloads(media_table(spark, sf_dir, cfg))
-    )
-
-
-def mm_frames(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    from .operators import multimodal
-
-    return multimodal.frame_samples(
         multimodal.media_payloads(media_table(spark, sf_dir, cfg))
     )
 
@@ -267,59 +229,3 @@ def local_answer_prompts(
         chunks(spark, sf_dir, cfg), media_table(spark, sf_dir, cfg),
         query or cfg.qctx_query, cfg, response_type,
     )
-
-
-def mm_frame_dedup(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Cross-media duplicate-frame coverage over the sampled frames."""
-    from .operators import multimodal
-
-    return multimodal.frame_dedup(mm_frames(spark, sf_dir, cfg))
-
-
-def mm_phash(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """64-bit perceptual average-hash per media item (multimodal.py)."""
-    from .operators import multimodal
-
-    return multimodal.perceptual_hashes(
-        multimodal.media_payloads(media_table(spark, sf_dir, cfg))
-    )
-
-
-def mm_phash_pairs(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Near-duplicate media pairs within perceptual-hash Hamming distance 3."""
-    from .operators import multimodal
-
-    return multimodal.phash_pairs(mm_phash(spark, sf_dir, cfg))
-
-
-def reciprocity(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Per-node directed-edge reciprocity over the fused graph."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.reciprocity(n, e)
-
-
-def walks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Deterministic DeepWalk corpus over the fused graph (graphalgo.py)."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.random_walks(n, e)
-
-
-def cooccur(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Entity co-occurrence graph mined from the mention relation."""
-    from .operators import graphalgo
-
-    return graphalgo.cooccurrence_graph(mentions(spark, sf_dir, cfg))
-
-
-def walk_pairs(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    """Skip-gram (center, context) pair counts over the walk corpus."""
-    from .operators import graphalgo
-
-    n, e = fused_graph(spark, sf_dir, cfg)
-    return graphalgo.walk_skipgram_pairs(n, e)
-
-

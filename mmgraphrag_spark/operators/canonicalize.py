@@ -19,10 +19,9 @@ Reference semantics (/root/reference/mmgraphrag/text2graph.py:136-272):
 
 Scale notes: one hash-shuffle each on entity_name / (subj,obj); all aggregates
 (count, sum, min, collect_set) have map-side partial aggregation, so hub
-entities (Zipf head) arrive at the reducer pre-combined per mapper. For
-extreme skew the ``salted=True`` path does an explicit two-phase aggregate:
-groupBy(key, salt) partials then groupBy(key) finals — the aggregates are all
-commutative+associative (sum/min/set-union/count-sum) so the rewrite is exact.
+entities (Zipf head) arrive at the reducer pre-combined per mapper. That is
+why no two-phase salting rewrite is kept: at 30% single-key skew it measured
+1.4-1.7x slower than this plain plan (BENCH/SKEW.md).
 """
 
 from __future__ import annotations
@@ -113,8 +112,6 @@ def _mode_type(pairs: DataFrame, keys: list[str]) -> DataFrame:
 
 def build_nodes(
     mentions: DataFrame,
-    salted: bool = False,
-    buckets: int = 8,
     group_cols: list[str] | None = None,
     cfg: PipelineConfig | None = None,
 ) -> DataFrame:
@@ -127,33 +124,14 @@ def build_nodes(
     """
     g = list(group_cols or [])
     keys = g + ["entity_name"]
-    if salted:
-        salt = F.pmod(F.xxhash64("description", "source_id"), F.lit(buckets))
-        partial = (
-            mentions.withColumn("salt", salt)
-            .groupBy(*keys, "salt")
-            .agg(
-                F.collect_set("description").alias("ds"),
-                F.collect_set("source_id").alias("ss"),
-            )
-        )
-        agg = partial.groupBy(*keys).agg(
-            F.array_join(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("ds")))), _SEP
-            ).alias("description"),
-            F.array_join(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("ss")))), _SEP
-            ).alias("source_id"),
-        )
-    else:
-        agg = mentions.groupBy(*keys).agg(
-            F.array_join(F.array_sort(F.collect_set("description")), _SEP).alias(
-                "description"
-            ),
-            F.array_join(F.array_sort(F.collect_set("source_id")), _SEP).alias(
-                "source_id"
-            ),
-        )
+    agg = mentions.groupBy(*keys).agg(
+        F.array_join(F.array_sort(F.collect_set("description")), _SEP).alias(
+            "description"
+        ),
+        F.array_join(F.array_sort(F.collect_set("source_id")), _SEP).alias(
+            "source_id"
+        ),
+    )
     top = _mode_type(mentions.select(*keys, "entity_type"), keys)
     if cfg is not None:
         agg = agg.withColumn(
@@ -167,8 +145,6 @@ def build_nodes(
 
 def build_edges(
     triples: DataFrame,
-    salted: bool = False,
-    buckets: int = 8,
     group_cols: list[str] | None = None,
     cfg: PipelineConfig | None = None,
 ) -> DataFrame:
@@ -184,39 +160,16 @@ def build_edges(
         "weight", "description", "source_id", "order",
     )
     keys = g + ["src", "dst"]
-    if salted:
-        salt = F.pmod(F.xxhash64("source_id", "description"), F.lit(buckets))
-        partial = (
-            t.withColumn("salt", salt)
-            .groupBy(*keys, "salt")
-            .agg(
-                F.sum("weight").alias("w"),
-                F.min("order").alias("o"),
-                F.collect_set("description").alias("ds"),
-                F.collect_set("source_id").alias("ss"),
-            )
-        )
-        out = partial.groupBy(*keys).agg(
-            F.sum("w").alias("weight"),
-            F.array_join(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("ds")))), _SEP
-            ).alias("description"),
-            F.array_join(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("ss")))), _SEP
-            ).alias("source_id"),
-            F.min("o").alias("order"),
-        )
-    else:
-        out = t.groupBy(*keys).agg(
-            F.sum("weight").alias("weight"),
-            F.array_join(F.array_sort(F.collect_set("description")), _SEP).alias(
-                "description"
-            ),
-            F.array_join(F.array_sort(F.collect_set("source_id")), _SEP).alias(
-                "source_id"
-            ),
-            F.min("order").alias("order"),
-        )
+    out = t.groupBy(*keys).agg(
+        F.sum("weight").alias("weight"),
+        F.array_join(F.array_sort(F.collect_set("description")), _SEP).alias(
+            "description"
+        ),
+        F.array_join(F.array_sort(F.collect_set("source_id")), _SEP).alias(
+            "source_id"
+        ),
+        F.min("order").alias("order"),
+    )
     if cfg is not None:
         out = out.withColumn(
             "description", summarize_description(F.col("description"), cfg)

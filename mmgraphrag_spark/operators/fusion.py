@@ -27,8 +27,8 @@ Spark-first re-architecture:
   M5/M7 merges: kNN majority-label transfer (k = fusion_knn over the exact
   cosine order) then *merge iff the nearest in-cluster text entity clears
   merge_cos* (reference fusion.py:256-267,387-464);
-* J6 rewiring = broadcast merge-map join + re-canonicalization (A1/A2) —
-  the salted/AQE path of canonicalize.py handles hub skew.
+* J6 rewiring = broadcast merge-map join + re-canonicalization (A1/A2),
+  whose map-side-combined aggregates absorb hub skew (canonicalize.py).
 
 Blocks are small (≤ ~2·fusion_window/min_len + scene entities), so per-block
 O(n³) eigendecomposition is microseconds; the stage parallelizes over blocks

@@ -635,7 +635,7 @@ def bpe_pair_counts(docs: DataFrame, k: int = 32) -> DataFrame:
     by |alphabet|² — the partial aggregate collapses the char stream
     before the exchange, so the shuffle is ~constant-size regardless of
     corpus bytes; the global top-k row_number plans as
-    TakeOrderedAndProject (the linkpred_ra pattern), never a
+    TakeOrderedAndProject (limit pushed below the rank window), never a
     single-partition sort of the full count relation.
     """
     from pyspark.sql import Window

@@ -1127,16 +1127,6 @@ FROM media
 """
 
 
-def mm_frames_select(n_frames: int = 3, frame_bytes: int = 16) -> str:
-    return f"""
-SELECT media_ref, CAST(u.k AS BIGINT) AS frame_idx,
-       md5(substr(media_ref || ':' || context,
-                  CAST(u.k AS INT) * {frame_bytes} + 1, {frame_bytes})) AS frame_md5
-FROM media, UNNEST(range({n_frames})) AS u(k)
-WHERE length(media_ref || ':' || context) > CAST(u.k AS INT) * {frame_bytes}
-"""
-
-
 def merge_map_select() -> str:
     return "SELECT doc_id, media_ref, old_name, new_name FROM merge_map"
 
@@ -1157,37 +1147,6 @@ def fused_edges_select() -> str:
     return 'SELECT src, dst, weight, description, source_id, "order" FROM fused_edges'
 
 
-def neighbor_sim_select(
-    threshold_pm: int = 200_000, max_center_deg: int = 10_000
-) -> str:
-    """Twin of operators/graphalgo.neighbor_similarity: wedge counting on
-    the shared-neighbor posting key, exact integer Jaccard of the open
-    neighborhoods. Applies the identical hub-center cap (deg <=
-    max_center_deg before the wedge self-join; full degrees in the
-    denominator) so parity is bit-exact at any setting."""
-    return f"""
-, ns_edges AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), ns_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM ns_edges GROUP BY u
-), ns_posted AS MATERIALIZED (
-  SELECT e.u, e.v FROM ns_edges e
-  JOIN ns_deg d ON e.u = d.u AND d.deg <= {max_center_deg}
-), ns_common AS (
-  SELECT x.v AS a, y.v AS b, COUNT(*) AS common
-  FROM ns_posted x JOIN ns_posted y ON x.u = y.u AND x.v < y.v
-  GROUP BY x.v, y.v
-)
-SELECT c.a, c.b, c.common,
-       c.common * 1000000 // (da.deg + db.deg - c.common) AS jaccard_pm
-FROM ns_common c
-JOIN ns_deg da ON c.a = da.u
-JOIN ns_deg db ON c.b = db.u
-WHERE c.common * 1000000 // (da.deg + db.deg - c.common) >= {threshold_pm}"""
-
-
 def enh_nodes_select() -> str:
     return "SELECT entity_name, entity_type, description, source_id FROM enh_nodes"
 
@@ -1199,277 +1158,3 @@ def enh_edges_select() -> str:
 def q(select: str, cfg: PipelineConfig = DEFAULT) -> str:
     """Full oracle query: shared CTE prefix + a final SELECT."""
     return cte_prefix(cfg) + select
-
-
-def linkpred_ra_select(k: int = 50, max_center_deg: int = 10_000) -> str:
-    """Twin of operators/graphalgo.linkpred_ra: wedge generation with
-    center 10^6 div deg weights, existing edges anti-joined out, global
-    top-k by (ra_pm DESC, a, b)."""
-    return f"""
-, lp_sym AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), lp_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM lp_sym GROUP BY u
-), lp_posted AS MATERIALIZED (
-  SELECT e.u, e.v, 1000000 // d.deg AS cw
-  FROM lp_sym e JOIN lp_deg d ON e.u = d.u AND d.deg <= {max_center_deg}
-), lp_scored AS (
-  SELECT x.v AS a, y.v AS b,
-         CAST(COUNT(*) AS BIGINT) AS common,
-         CAST(SUM(x.cw) AS BIGINT) AS ra_pm
-  FROM lp_posted x JOIN lp_posted y ON x.u = y.u AND x.v < y.v
-  GROUP BY x.v, y.v
-), lp_nonadj AS (
-  SELECT s.* FROM lp_scored s
-  ANTI JOIN lp_sym e ON s.a = e.u AND s.b = e.v
-)
-SELECT a, b, common, ra_pm, rnk FROM (
-  SELECT a, b, common, ra_pm,
-         CAST(ROW_NUMBER() OVER (ORDER BY ra_pm DESC, a, b) AS BIGINT) AS rnk
-  FROM lp_nonadj
-) WHERE rnk <= {k}"""
-
-
-def degree_dist_select() -> str:
-    """Twin of operators/graphalgo.degree_distribution: log2 degree buckets
-    via integer bit length (length(bin(deg)) - 1 in both engines)."""
-    return """
-, dd_sym AS (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), dd_deg AS (
-  SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM dd_sym GROUP BY u
-)
-SELECT CAST(length(bin(deg)) - 1 AS BIGINT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_nodes,
-       MIN(deg) AS min_deg,
-       MAX(deg) AS max_deg
-FROM dd_deg GROUP BY 1"""
-
-
-def frame_dedup_select(n_frames: int = 3, frame_bytes: int = 16) -> str:
-    """Twin of operators/multimodal.frame_dedup over the mm_frames frame
-    relation (embedded verbatim as a CTE)."""
-    return f"""
-, fd_frames AS (
-  SELECT media_ref,
-         md5(substr(media_ref || ':' || context,
-                    CAST(u.k AS INT) * {frame_bytes} + 1, {frame_bytes}))
-           AS frame_md5
-  FROM media, UNNEST(range({n_frames})) AS u(k)
-  WHERE length(media_ref || ':' || context) > CAST(u.k AS INT) * {frame_bytes}
-), fd_sharing AS (
-  SELECT frame_md5, count(DISTINCT media_ref) AS n_media
-  FROM fd_frames GROUP BY frame_md5
-)
-SELECT f.media_ref,
-       count(*) AS n_frames,
-       CAST(sum(CASE WHEN s.n_media >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_shared,
-       CAST(sum(CASE WHEN s.n_media >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         * 1000000 // count(*) AS shared_ppm
-FROM fd_frames f JOIN fd_sharing s ON s.frame_md5 = f.frame_md5
-GROUP BY f.media_ref
-"""
-
-
-def _phash_ctes() -> str:
-    """Shared CTE chain reproducing multimodal.perceptual_hashes bit-for-bit
-    via ascii-code list arithmetic (the stand-in 'pixels' are the payload
-    characters, which are ASCII by construction). The hex string is built
-    per 16-bit part (%04x of h3..h0) — identical to %016x of the combined
-    64-bit value without ever forming it (bit 63 would overflow BIGINT)."""
-    return """
-, ph_base AS (
-  SELECT media_ref, media_ref || ':' || context AS t FROM media
-), ph_codes AS (
-  SELECT media_ref,
-         [ascii(substring(t, i + 1, 1)) for i in range(length(t))] AS codes
-  FROM ph_base
-), ph_bits AS (
-  SELECT media_ref,
-         [CASE WHEN ((j + 1) * len(codes)) // 64 - (j * len(codes)) // 64 > 0
-               AND list_sum(list_slice(codes, (j * len(codes)) // 64 + 1,
-                                       ((j + 1) * len(codes)) // 64))
-                     * len(codes)
-                   >= list_sum(codes)
-                     * (((j + 1) * len(codes)) // 64 - (j * len(codes)) // 64)
-               THEN 1 ELSE 0 END for j in range(64)] AS bits
-  FROM ph_codes
-), ph_h AS (
-  SELECT media_ref,
-         CAST(list_sum([bits[t + 1] * (1 << t) for t in range(16)]) AS BIGINT) AS h0,
-         CAST(list_sum([bits[16 + t + 1] * (1 << t) for t in range(16)]) AS BIGINT) AS h1,
-         CAST(list_sum([bits[32 + t + 1] * (1 << t) for t in range(16)]) AS BIGINT) AS h2,
-         CAST(list_sum([bits[48 + t + 1] * (1 << t) for t in range(16)]) AS BIGINT) AS h3
-  FROM ph_bits
-)"""
-
-
-def phash_select() -> str:
-    """Twin of operators/multimodal.perceptual_hashes."""
-    return _phash_ctes() + """
-SELECT media_ref, h0, h1, h2, h3,
-       printf('%04x%04x%04x%04x', h3, h2, h1, h0) AS phash
-FROM ph_h
-"""
-
-
-def phash_pairs_select(max_hamming: int = 3) -> str:
-    """Twin of operators/multimodal.phash_pairs: block-equal candidates
-    (complete for hamming <= 3 with 4 blocks) + exact xor popcount."""
-    return _phash_ctes() + f"""
-, ph_blocks AS (
-  SELECT media_ref, u.k AS k,
-         CASE u.k WHEN 0 THEN h0 WHEN 1 THEN h1 WHEN 2 THEN h2 ELSE h3 END AS v
-  FROM ph_h, UNNEST(range(4)) AS u(k)
-), ph_cand AS (
-  SELECT DISTINCT x.media_ref AS a, y.media_ref AS b
-  FROM ph_blocks x JOIN ph_blocks y
-    ON x.k = y.k AND x.v = y.v AND x.media_ref < y.media_ref
-)
-SELECT c.a, c.b,
-       CAST(bit_count(xor(ha.h0, hb.h0)) + bit_count(xor(ha.h1, hb.h1))
-            + bit_count(xor(ha.h2, hb.h2)) + bit_count(xor(ha.h3, hb.h3))
-            AS BIGINT) AS hamming
-FROM ph_cand c
-JOIN ph_h ha ON ha.media_ref = c.a
-JOIN ph_h hb ON hb.media_ref = c.b
-WHERE bit_count(xor(ha.h0, hb.h0)) + bit_count(xor(ha.h1, hb.h1))
-      + bit_count(xor(ha.h2, hb.h2)) + bit_count(xor(ha.h3, hb.h3))
-      <= {max_hamming}
-"""
-
-
-def reciprocity_select() -> str:
-    """Twin of operators/graphalgo.reciprocity."""
-    return """
-, rc_e AS MATERIALIZED (
-  SELECT DISTINCT src, dst FROM fused_edges WHERE src <> dst
-), rc_out AS (
-  SELECT src AS name, count(*) AS n_out FROM rc_e GROUP BY src
-), rc_rec AS (
-  SELECT e.src AS name, count(*) AS n_reciprocal
-  FROM rc_e e JOIN rc_e r ON r.src = e.dst AND r.dst = e.src
-  GROUP BY e.src
-)
-SELECT n.entity_name,
-       COALESCE(o.n_out, 0) AS n_out,
-       COALESCE(r.n_reciprocal, 0) AS n_reciprocal,
-       COALESCE(r.n_reciprocal, 0) * 1000000
-         // greatest(COALESCE(o.n_out, 0), 1) AS reciprocity_ppm
-FROM (SELECT DISTINCT entity_name FROM fused_nodes) n
-LEFT JOIN rc_out o ON o.name = n.entity_name
-LEFT JOIN rc_rec r ON r.name = n.entity_name
-"""
-
-
-def _random_walk_ctes(walks_per_node: int = 2, length: int = 3) -> str:
-    """Shared CTE chain for the walk-corpus twins (random_walks_select and
-    walk_pairs_select): identical md5-rank hop rule over the rank-indexed
-    symmetric adjacency, one MATERIALIZED CTE per step (each step
-    references the previous frontier; DuckDB inlines plain CTEs, so an
-    unmaterialized chain re-expands every earlier step and re-scans the
-    base parquet, while materialization keeps the plan linear in
-    ``length``). Ends with ``rw_out`` = the (walk_id, step, node) corpus
-    relation."""
-    s = f"""
-, rw_sym AS MATERIALIZED (
-  SELECT src AS u, dst AS v FROM fused_edges
-  UNION
-  SELECT dst AS u, src AS v FROM fused_edges
-), rw_deg AS MATERIALIZED (
-  SELECT u, COUNT(*) AS deg FROM rw_sym GROUP BY u
-), rw_adj AS MATERIALIZED (
-  SELECT u, v, ROW_NUMBER() OVER (PARTITION BY u ORDER BY v) - 1 AS r
-  FROM rw_sym
-), rw_f0 AS MATERIALIZED (
-  SELECT n.entity_name || '#' || CAST(w.w AS VARCHAR) AS walk_id,
-         n.entity_name AS cur
-  FROM fused_nodes n
-  CROSS JOIN (SELECT unnest(range(0, {walks_per_node})) AS w) w
-)"""
-    for step in range(1, length + 1):
-        s += f"""
-, rw_f{step} AS MATERIALIZED (
-  SELECT f.walk_id, a.v AS cur
-  FROM rw_f{step - 1} f
-  JOIN rw_deg d ON d.u = f.cur
-  JOIN rw_adj a ON a.u = f.cur
-   AND a.r = ('0x' || substr(md5(f.walk_id || ':{step}'), 1, 15))::BIGINT
-              % d.deg
-)"""
-    parts = [
-        f"SELECT walk_id, CAST({i} AS BIGINT) AS step, cur AS node FROM rw_f{i}"
-        for i in range(0, length + 1)
-    ]
-    return (
-        s
-        + "\n, rw_out AS MATERIALIZED (\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\n)"
-    )
-
-
-def random_walks_select(walks_per_node: int = 2, length: int = 3) -> str:
-    """Twin of operators/graphalgo.random_walks (see _random_walk_ctes)."""
-    return (
-        _random_walk_ctes(walks_per_node, length)
-        + "\nSELECT walk_id, step, node FROM rw_out"
-    )
-
-
-def walk_pairs_select(
-    walks_per_node: int = 2, length: int = 3, window: int = 2
-) -> str:
-    """Twin of operators/graphalgo.walk_skipgram_pairs: self-join of the
-    walk corpus on walk_id with |Δstep| ∈ [1, window], global pair count."""
-    return (
-        _random_walk_ctes(walks_per_node, length)
-        + f"""
-SELECT a.node AS center, b.node AS context,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs
-FROM rw_out a JOIN rw_out b
-  ON a.walk_id = b.walk_id
- AND a.step <> b.step
- AND abs(a.step - b.step) <= {window}
-GROUP BY 1, 2"""
-    )
-
-
-def cooccurrence_graph_select(
-    max_chunk_entities: int = 1000, min_chunks: int = 1
-) -> str:
-    """Twin of operators/graphalgo.cooccurrence_graph: chunk-basket pair
-    join capped pre-join, marginals over ALL chunks, exact ppm lift."""
-    return f"""
-, co_inc AS (
-  SELECT DISTINCT chunk_id, entity_name AS item FROM mentions
-), co_small AS (
-  SELECT chunk_id FROM co_inc GROUP BY chunk_id
-  HAVING COUNT(*) <= {max_chunk_entities}
-), co_basket AS (
-  SELECT i.chunk_id, i.item FROM co_inc i JOIN co_small s USING (chunk_id)
-), co_pairs AS (
-  SELECT a.item AS src, b.item AS dst, CAST(COUNT(*) AS BIGINT) AS n_xy
-  FROM co_basket a JOIN co_basket b
-    ON a.chunk_id = b.chunk_id AND a.item < b.item
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= {min_chunks}
-), co_marg AS (
-  SELECT item, CAST(COUNT(*) AS BIGINT) AS n FROM co_inc GROUP BY item
-), co_tot AS (
-  SELECT CAST(COUNT(DISTINCT chunk_id) AS BIGINT) AS n_chunks FROM co_inc
-)
-SELECT p.src, p.dst, p.n_xy, x.n AS n_x, y.n AS n_y, t.n_chunks,
-       CAST(CAST(p.n_xy AS HUGEINT) * t.n_chunks * 1000000
-            // (CAST(x.n AS HUGEINT) * y.n) AS BIGINT) AS lift_ppm
-FROM co_pairs p
-JOIN co_marg x ON p.src = x.item
-JOIN co_marg y ON p.dst = y.item
-CROSS JOIN co_tot t"""
-
-

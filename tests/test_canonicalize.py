@@ -52,27 +52,6 @@ def test_edge_merge_sum_min(spark):
     assert e.source_id == "c1<SEP>c2"
 
 
-def test_salted_equals_plain(spark):
-    rows = [
-        ("d", f"c{i}", "HUB" if i % 2 else f"E{i}", "T", f"d{i % 5}", f"c{i}", 1)
-        for i in range(50)
-    ]
-    m = spark.createDataFrame(
-        [(r[0], r[1], r[2], r[3], r[4], r[5]) for r in rows], MENT_SCHEMA
-    )
-    a = canon.build_nodes(m, salted=False).toPandas().sort_values("entity_name").reset_index(drop=True)
-    b = canon.build_nodes(m, salted=True).toPandas().sort_values("entity_name").reset_index(drop=True)
-    assert a.equals(b)
-
-    t = spark.createDataFrame(
-        [("d", f"c{i}", "A", "HUB" if i % 2 else f"B{i}", f"r{i % 3}", 1.0, f"c{i}", i + 1)
-         for i in range(50)], TRIP_SCHEMA
-    )
-    ea = canon.build_edges(t, salted=False).toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
-    eb = canon.build_edges(t, salted=True).toPandas().sort_values(["src", "dst"]).reset_index(drop=True)
-    assert ea.equals(eb)
-
-
 def test_stub_nodes(spark):
     nodes = spark.createDataFrame(
         [("A", "T", "d", "s")],

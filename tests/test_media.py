@@ -70,89 +70,3 @@ def test_ori_img_node_per_media_span(spark):
     ori = media.ori_img_mentions(m)
     assert ori.count() == n_media
     assert all(r.entity_type == "ORI_IMG" for r in ori.collect())
-
-
-def test_frame_dedup_counts_sharing_at_fingerprint_grain(spark):
-    """Hand-built frames: m1/m2 share f_a; m3 is unique; a frame repeated
-    WITHIN one media (m3's f_c twice) is not 'shared'."""
-    from mmgraphrag_spark.operators import multimodal
-
-    rows = [
-        ("m1", 0, "f_a"), ("m1", 1, "f_b"),
-        ("m2", 0, "f_a"),
-        ("m3", 0, "f_c"), ("m3", 1, "f_c"),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_ref string, frame_idx long, frame_md5 string"
-    )
-    got = {
-        r.media_ref: (r.n_frames, r.n_shared, r.shared_ppm)
-        for r in multimodal.frame_dedup(df).collect()
-    }
-    assert got == {
-        "m1": (2, 1, 500_000),
-        "m2": (1, 1, 1_000_000),
-        "m3": (2, 0, 0),
-    }
-
-
-def _py_ahash(payload: bytes):
-    n, tot = len(payload), sum(payload)
-    bits = []
-    for j in range(64):
-        lo, hi = j * n // 64, (j + 1) * n // 64
-        lj = hi - lo
-        sj = sum(payload[lo:hi])
-        bits.append(1 if lj > 0 and sj * n >= tot * lj else 0)
-    return [sum(bits[k * 16 + t] << t for t in range(16)) for k in range(4)]
-
-
-def test_phash_matches_python_twin_and_hex(spark):
-    from mmgraphrag_spark.operators import multimodal
-
-    payloads = [
-        ("m1", b"hello world, a modest payload with enough bytes to fill"),
-        ("m2", b"hello world, a modest payload with enough bytes to filL"),
-        ("m3", b"completely different content here that hashes elsewhere!"),
-        ("m4", b"xy"),  # shorter than 64: most windows empty -> bits 0
-    ]
-    df = spark.createDataFrame(payloads, "media_ref string, payload binary")
-    got = {
-        r.media_ref: ([r.h0, r.h1, r.h2, r.h3], r.phash)
-        for r in multimodal.perceptual_hashes(df).collect()
-    }
-    for ref, b in payloads:
-        hs = _py_ahash(b)
-        val = hs[0] | (hs[1] << 16) | (hs[2] << 32) | (hs[3] << 48)
-        assert got[ref] == (hs, format(val, "016x")), ref
-
-
-def test_phash_pairs_complete_within_hamming_3(spark):
-    """m1/m2 differ by one byte -> tiny hamming, must pair; exhaustive
-    cross-check: every pair within 3 by brute force is found (pigeonhole
-    over the 4 blocks), none beyond 3 is emitted."""
-    from mmgraphrag_spark.operators import multimodal
-
-    payloads = [
-        (f"m{i}", ("base payload text nr %d with stable filler ........" % (i % 3)).encode())
-        for i in range(9)
-    ] + [("q1", b"hello world, a modest payload with enough bytes to fill"),
-         ("q2", b"hello world, a modest payload with enough bytes to filL")]
-    df = spark.createDataFrame(payloads, "media_ref string, payload binary")
-    got = {
-        (r.a, r.b): r.hamming
-        for r in multimodal.phash_pairs(
-            multimodal.perceptual_hashes(df)
-        ).collect()
-    }
-    hashes = {ref: _py_ahash(b) for ref, b in payloads}
-    want = {}
-    refs = sorted(hashes)
-    for i, a in enumerate(refs):
-        for b in refs[i + 1:]:
-            d = sum(bin(x ^ y).count("1")
-                    for x, y in zip(hashes[a], hashes[b]))
-            if d <= 3:
-                want[(a, b)] = d
-    assert got == want
-    assert ("q1", "q2") in got

@@ -160,6 +160,21 @@ def test_query_fields_reuse_the_build(spark):
     assert not sc.statusTracker().getJobIdsForGroup(group)
 
 
+def test_cli_query_answers_like_the_api(spark, pipe):
+    """``python -m mmgraphrag_spark --query`` (``_local_query``) serves from
+    the work dir's stub-bearing ``nodes`` table; its context and prompt
+    chain equal the api's over the same build. The query seeds an ORI_IMG
+    node, so the multimodal prompts are compared too."""
+    from mmgraphrag_spark import api
+    from mmgraphrag_spark.__main__ import _local_query
+
+    query = "doc102/image_1 spark window stream"
+    got = _local_query(spark, pipe.work_dir, query)
+    assert got.pop("query") == query
+    assert got["multimodal"]
+    assert got == api.local_answer_prompts(spark, SF_TINY, query=query)
+
+
 def test_lineage_and_metrics_rows(pipe):
     lin = pipe.lineage().toPandas()
     assert set(lin["output"]) >= {"spans", "chunks", "mentions", "triples",

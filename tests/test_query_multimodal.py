@@ -41,7 +41,7 @@ def test_entity_vdb_topk_plans_as_takeordered(spark):
     """entity_vdb_topk's global top-k must plan as TakeOrderedAndProject
     (limit pushed below the unpartitioned rank window), never a
     single-partition sort/window over the whole thresholded candidate set
-    — the same contract as linkpred_ra / bpe_pair_counts."""
+    — the same contract as bpe_pair_counts."""
     plan = (
         api.entity_vdb_topk(spark, SF_TINY)
         ._jdf.queryExecution().executedPlan().toString()
@@ -82,20 +82,6 @@ def test_multimodal_real_decoder_is_marked_unimplemented(spark):
     pay = multimodal.media_payloads(api.media_table(spark, SF_TINY))
     with pytest.raises(NotImplementedError):
         multimodal.decode_media(pay, decoder="real")
-
-
-def test_frame_samples_hash_actual_bytes(spark):
-    import hashlib
-
-    pay = multimodal.media_payloads(api.media_table(spark, SF_TINY))
-    frames = multimodal.frame_samples(pay).toPandas()
-    raw = {r.media_ref: bytes(r.payload) for r in pay.collect()}
-    sample = frames.head(10)
-    for r in sample.itertuples():
-        expect = hashlib.md5(
-            raw[r.media_ref][r.frame_idx * 16 : (r.frame_idx + 1) * 16]
-        ).hexdigest()
-        assert r.frame_md5 == expect
 
 
 def test_render_context_reference_layout(spark):
