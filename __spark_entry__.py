@@ -231,8 +231,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                       # (NumPy-oracle-verified in pytest)
         "kg_fused_nodes": api.fused_nodes,
         "kg_fused_edges": api.fused_edges,
-        "kg_enhanced_nodes": api.enhanced_nodes,
-        "kg_enhanced_edges": api.enhanced_edges,
         # S3 MinerU ingestion: serializer ∘ parser round trip over the
         # interleaved table — the oracle is the INDEPENDENT DuckDB spans
         # derivation, so a defect in either direction breaks parity
@@ -319,8 +317,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_clusters": oracle.q(oracle.clusters_select()),
         "kg_fused_nodes": oracle.q(oracle.fused_nodes_select()),
         "kg_fused_edges": oracle.q(oracle.fused_edges_select()),
-        "kg_enhanced_nodes": oracle.q(oracle.enh_nodes_select()),
-        "kg_enhanced_edges": oracle.q(oracle.enh_edges_select()),
         "mm_decode": oracle.q(oracle.mm_decode_select()),
         "media_chunk_match": oracle.q(oracle.media_chunk_match_select()),
         "qctx_seeds": oracle.qctx_seeds_sql(),

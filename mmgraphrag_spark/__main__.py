@@ -84,8 +84,8 @@ def main() -> None:
         from .operators.graphml import export_graphml
 
         export_graphml(
-            spark.read.parquet(f"{args.work_dir}/fused_nodes"),
-            spark.read.parquet(f"{args.work_dir}/fused_edges"),
+            spark.read.parquet(f"{args.work_dir}/nodes"),
+            spark.read.parquet(f"{args.work_dir}/edges"),
             args.export_graphml,
         )
     lin = pipe.lineage().toPandas()

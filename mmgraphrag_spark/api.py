@@ -55,8 +55,9 @@ mentions = _table("mentions")
 triples = _table("triples")
 img_mentions = _table("img_mentions")
 img_triples = _table("img_triples")
-# the pre-stub nodes with the stored ``degree``; edges carry ``edge_rank``
-nodes = _table("nodes_base")
+# the served (fused) graph: nodes carry the stored ``degree``, edges
+# ``edge_rank``; fused_nodes/fused_edges are their merged-column projections
+nodes = _table("nodes")
 edges = _table("edges")
 fusion_blocks = _table("fusion_blocks")
 fused_nodes = _table("fused_nodes")
@@ -77,28 +78,6 @@ def clusters(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) ->
 
 def spectral(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     return fusion.spectral_assignments(fusion_blocks(spark, sf_dir, cfg))
-
-
-def enhanced_graph(
-    spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT
-) -> tuple[DataFrame, DataFrame]:
-    """M9 over the build's checkpoints: the merge map from fusion_blocks,
-    the enhance map from the spans and image mentions."""
-    pipe = build(spark, sf_dir, cfg)
-    sp = pipe.read("spans", spread=False)
-    mm = fusion.merge_map_from_blocks(pipe.read("fusion_blocks", spread=False))
-    em = fusion.enhance_map(
-        sp, media.media_spans(sp), pipe.read("img_mentions", spread=False), mm, cfg
-    )
-    return fusion.enhanced_graph(*pipe.graph_inputs(), mm, em, cfg=cfg)
-
-
-def enhanced_nodes(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return enhanced_graph(spark, sf_dir, cfg)[0]
-
-
-def enhanced_edges(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
-    return enhanced_graph(spark, sf_dir, cfg)[1]
 
 
 def entity_vdb_topk(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:

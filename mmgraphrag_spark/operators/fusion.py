@@ -482,87 +482,6 @@ def merge_map(
     return merge_map_from_blocks(fusion_blocks(flat_spans, media, img_mentions, cfg))
 
 
-def enhance_map(
-    flat_spans: DataFrame,
-    media: DataFrame,
-    img_mentions: DataFrame,
-    mm: DataFrame,
-    cfg: PipelineConfig = DEFAULT,
-) -> DataFrame:
-    """M9 — enhancement of image entities that fusion did NOT merge.
-
-    Reference semantics (/root/reference/mmgraphrag/fusion.py:504-594): image
-    entities with no text match get LLM-enriched names/descriptions from
-    nearby chunks, then the graph is relabeled. Deterministic analogue: every
-    unmerged scene entity is renamed to ``ENH:<surface>@<REF>`` and its
-    description is extended with its lexicographically-first nearby text
-    entity (the deterministic stand-in for "enrich from nearby context");
-    entities with no nearby text keep ``none`` as context. Output columns
-    (old_name, new_name, new_description) feed the same J6 rename machinery
-    as the merge map.
-    """
-    scene = (
-        img_mentions.filter(~F.col("entity_type").isin("ORI_IMG", "IMG"))
-        .select("doc_id", "entity_name", F.col("source_id").alias("media_ref"))
-        .distinct()
-    )
-    unmerged = scene.join(
-        mm.select(F.col("old_name").alias("entity_name")).distinct(),
-        "entity_name", "left_anti",
-    )
-    nearest = (
-        nearby_text_entities(flat_spans, media, cfg)
-        .groupBy("media_ref")
-        .agg(F.min("entity_name").alias("ctx_entity"))
-    )
-    surface = F.expr("split(entity_name, '@')[0]")
-    return (
-        unmerged.join(nearest, "media_ref", "left")
-        .select(
-            "doc_id", "media_ref",
-            F.col("entity_name").alias("old_name"),
-            F.concat(
-                F.lit("ENH:"), surface, F.lit("@"), F.upper("media_ref")
-            ).alias("new_name"),
-            F.coalesce(F.col("ctx_entity"), F.lit("none")).alias("ctx_entity"),
-        )
-    )
-
-
-def enhanced_graph(
-    all_mentions: DataFrame,
-    all_triples: DataFrame,
-    mm: DataFrame,
-    em: DataFrame,
-    cfg: PipelineConfig | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """M9 composition: J6 merge rewiring, then rename unmerged image entities
-    and append their context to descriptions, then re-canonicalize."""
-    m2, t2 = fuse_inputs(all_mentions, all_triples, mm)
-
-    e = F.broadcast(em.select("old_name", "new_name", "ctx_entity").distinct())
-    m3 = (
-        m2.join(e, m2["entity_name"] == e["old_name"], "left")
-        .select(
-            F.coalesce("new_name", "entity_name").alias("entity_name"),
-            "entity_type",
-            F.when(
-                F.col("new_name").isNotNull(),
-                F.concat("description", F.lit(" | context: "), "ctx_entity"),
-            ).otherwise(F.col("description")).alias("description"),
-            "source_id",
-        )
-    )
-    t3 = apply_merge_map(t2, em, ["subj", "obj"]).select(
-        F.least("subj", "obj").alias("subj"),
-        F.greatest("subj", "obj").alias("obj"),
-        "description", "weight", "source_id", "order",
-    )
-    nodes = canon.build_nodes(m3, cfg=cfg)
-    edges = canon.build_edges(t3, cfg=cfg)
-    return canon.add_stub_nodes(nodes, edges), edges
-
-
 def apply_merge_map(df: DataFrame, mm: DataFrame, cols: list[str]) -> DataFrame:
     """J6 rewiring: replace every occurrence of an old name in ``cols`` with
     its canonical name. The merge map is small (≤ scene entities) →
@@ -606,8 +525,8 @@ def fuse_inputs(
     all_mentions: DataFrame, all_triples: DataFrame, mm: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Merge-map-rewritten mention/triple relations (the J6 rewiring step
-    alone — callers that checkpoint edges separately re-canonicalize from
-    these without recomputing the other output's aggregation)."""
+    alone): the relations the Pipeline's graph stage aggregates into the
+    served graph, storing the ranks itself."""
     m2 = apply_merge_map(all_mentions, mm, ["entity_name"])
     t2 = apply_merge_map(all_triples, mm, ["subj", "obj"])
     t2 = t2.select(

@@ -5,14 +5,21 @@ etc.) and compares each ``queries()`` DataFrame against the matching SQL here
 (row count + schema + order-insensitive value hash). The CTE chain below
 re-derives, in pure ANSI-ish SQL, exactly what the Spark operators compute:
 
-    documents -> spans -> chunks -> mentions/triples -> nodes/edges
-                       -> media spans -> image nodes/edges -> unified graph
+    documents -> spans -> chunks -> mentions/triples
+                       -> media spans -> image mentions/triples
+                       -> fusion merge_map
+    text + image mentions/triples, rewired by merge_map -> nodes/edges
+
+``nodes``/``edges`` are the one graph the build serves, the fused graph
+(the ``Pipeline`` graph stage); the query CTEs read them under those names.
 
 Keeping this in one place guarantees all oracles share one definition of the
 synthetic derivation rules (mmgraphrag_spark.synth / config.py).
 """
 
 from __future__ import annotations
+
+import re
 
 from .config import DEFAULT, PipelineConfig
 
@@ -47,7 +54,11 @@ def cte_prefix(cfg: PipelineConfig = DEFAULT) -> str:
     desc_agg = "string_agg(DISTINCT {t}description, '<SEP>' ORDER BY {t}description)"
     node_desc = _sum(desc_agg.format(t="n.")) + " AS description"
     edge_desc = _sum(desc_agg.format(t="")) + " AS description"
-    return f"""
+    # Every CTE after the first is MATERIALIZED, so DuckDB evaluates each once
+    # instead of once per reference. Inlined, the fusion chain under the
+    # served nodes/edges (comp, mmap and the fused relations are each read
+    # more than once) exhausts DuckDB's memory on 20 documents.
+    return re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (", f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id AS orig_id,
          'doc' || CAST(doc_id AS VARCHAR) AS doc_id,
@@ -246,31 +257,6 @@ all_triples AS (
   UNION ALL
   SELECT subj, obj, description, weight, source_id, "order" FROM img_triples
 ),
-typecnt AS (
-  SELECT entity_name, entity_type, count(*) AS cnt FROM all_mentions GROUP BY 1, 2
-),
-toptype AS (
-  SELECT entity_name, entity_type FROM (
-    SELECT *, row_number() OVER (PARTITION BY entity_name
-                                 ORDER BY cnt DESC, entity_type ASC) AS rn
-    FROM typecnt
-  ) t WHERE rn = 1
-),
-nodes AS (
-  SELECT n.entity_name, t.entity_type,
-         {node_desc},
-         string_agg(DISTINCT n.source_id, '<SEP>' ORDER BY n.source_id) AS source_id
-  FROM all_mentions n JOIN toptype t USING (entity_name)
-  GROUP BY n.entity_name, t.entity_type
-),
-edges AS (
-  SELECT subj AS src, obj AS dst,
-         sum(weight) AS weight,
-         {edge_desc},
-         string_agg(DISTINCT source_id, '<SEP>' ORDER BY source_id) AS source_id,
-         min("order") AS "order"
-  FROM all_triples GROUP BY 1, 2
-),
 wordpos AS (
   SELECT doc_id, CAST(u.i AS INT) AS wpos, w[CAST(u.i AS INT) + 1] AS tok
   FROM toks, UNNEST(range(len(w))) AS u(i)
@@ -438,86 +424,32 @@ fused_triples AS (
     LEFT JOIN mmap m2 ON t.obj = m2.old_name
   ) x
 ),
-fused_typecnt AS (
+typecnt AS (
   SELECT entity_name, entity_type, count(*) AS cnt FROM fused_mentions GROUP BY 1, 2
 ),
-fused_toptype AS (
+toptype AS (
   SELECT entity_name, entity_type FROM (
     SELECT *, row_number() OVER (PARTITION BY entity_name
                                  ORDER BY cnt DESC, entity_type ASC) AS rn
-    FROM fused_typecnt
+    FROM typecnt
   ) t WHERE rn = 1
 ),
-fused_nodes AS (
+nodes AS (
   SELECT n.entity_name, t.entity_type,
          {node_desc},
          string_agg(DISTINCT n.source_id, '<SEP>' ORDER BY n.source_id) AS source_id
-  FROM fused_mentions n JOIN fused_toptype t USING (entity_name)
+  FROM fused_mentions n JOIN toptype t USING (entity_name)
   GROUP BY n.entity_name, t.entity_type
 ),
-fused_edges AS (
+edges AS (
   SELECT subj AS src, obj AS dst,
          sum(weight) AS weight,
          {edge_desc},
          string_agg(DISTINCT source_id, '<SEP>' ORDER BY source_id) AS source_id,
          min("order") AS "order"
   FROM fused_triples GROUP BY 1, 2
-),
-enh_map AS (
-  SELECT s.media_ref, s.entity_name AS old_name,
-         'ENH:' || split_part(s.entity_name, '@', 1) || '@' || upper(s.media_ref) AS new_name,
-         coalesce(n.ctx_entity, 'none') AS ctx_entity
-  FROM (SELECT DISTINCT entity_name, source_id AS media_ref FROM img_scene) s
-  LEFT JOIN (SELECT media_ref, min(entity_name) AS ctx_entity
-             FROM nearby GROUP BY 1) n USING (media_ref)
-  WHERE NOT EXISTS (SELECT 1 FROM mmap m WHERE m.old_name = s.entity_name)
-),
-enh_mentions AS (
-  SELECT coalesce(e.new_name, fm.entity_name) AS entity_name, fm.entity_type,
-         CASE WHEN e.new_name IS NOT NULL
-              THEN fm.description || ' | context: ' || e.ctx_entity
-              ELSE fm.description END AS description,
-         fm.source_id
-  FROM fused_mentions fm LEFT JOIN enh_map e ON fm.entity_name = e.old_name
-),
-enh_triples AS (
-  SELECT least(s2, o2) AS subj, greatest(s2, o2) AS obj,
-         description, weight, source_id, "order"
-  FROM (
-    SELECT coalesce(m1.new_name, t.subj) AS s2,
-           coalesce(m2.new_name, t.obj) AS o2,
-           t.description, t.weight, t.source_id, t."order"
-    FROM fused_triples t
-    LEFT JOIN enh_map m1 ON t.subj = m1.old_name
-    LEFT JOIN enh_map m2 ON t.obj = m2.old_name
-  ) x
-),
-enh_typecnt AS (
-  SELECT entity_name, entity_type, count(*) AS cnt FROM enh_mentions GROUP BY 1, 2
-),
-enh_toptype AS (
-  SELECT entity_name, entity_type FROM (
-    SELECT *, row_number() OVER (PARTITION BY entity_name
-                                 ORDER BY cnt DESC, entity_type ASC) AS rn
-    FROM enh_typecnt
-  ) t WHERE rn = 1
-),
-enh_nodes AS (
-  SELECT n.entity_name, t.entity_type,
-         {node_desc},
-         string_agg(DISTINCT n.source_id, '<SEP>' ORDER BY n.source_id) AS source_id
-  FROM enh_mentions n JOIN enh_toptype t USING (entity_name)
-  GROUP BY n.entity_name, t.entity_type
-),
-enh_edges AS (
-  SELECT subj AS src, obj AS dst,
-         sum(weight) AS weight,
-         {edge_desc},
-         string_agg(DISTINCT source_id, '<SEP>' ORDER BY source_id) AS source_id,
-         min("order") AS "order"
-  FROM enh_triples GROUP BY 1, 2
 )
-"""
+""")
 
 
 # ---- final SELECTs, one per driver-checked query ---------------------------
@@ -1139,20 +1071,14 @@ def clusters_select() -> str:
     )
 
 
+# the served graph's merged columns, under the names of the build's
+# fused_nodes/fused_edges projections
 def fused_nodes_select() -> str:
-    return "SELECT entity_name, entity_type, description, source_id FROM fused_nodes"
+    return "SELECT entity_name, entity_type, description, source_id FROM nodes"
 
 
 def fused_edges_select() -> str:
-    return 'SELECT src, dst, weight, description, source_id, "order" FROM fused_edges'
-
-
-def enh_nodes_select() -> str:
-    return "SELECT entity_name, entity_type, description, source_id FROM enh_nodes"
-
-
-def enh_edges_select() -> str:
-    return 'SELECT src, dst, weight, description, source_id, "order" FROM enh_edges'
+    return 'SELECT src, dst, weight, description, source_id, "order" FROM edges'
 
 
 def q(select: str, cfg: PipelineConfig = DEFAULT) -> str:

@@ -22,12 +22,13 @@ DAG, one line per stage: ``stage{output tables} <- dependency stages``
     extract_raw{extraction_raw}           <- chunks
     decode{mentions,triples}              <- extract_raw
     media{img_mentions,img_triples}       <- spans
-    graph{nodes_base,nodes,edges}         <- decode, media
     fusion{fusion_blocks}                 <- spans, media
-    fused_graph{fused_nodes,fused_edges}  <- decode, media, fusion
+    graph{nodes,edges,fused_nodes,fused_edges} <- decode, media, fusion
 
-graph and fused_graph are siblings: the fused stage re-aggregates the
-merge-map-rewired mention/triple checkpoints, so it runs alongside graph.
+graph is the one aggregation of the mention/triple checkpoints: it rewires
+them through the fusion merge map and serves the fused graph as
+nodes/edges. fused_nodes/fused_edges are projections of those two tables
+to the merged columns.
 
 This is the one definition of the build: ``api`` reads every KG table from
 these checkpoints (``api.build``), and ``stream_extract`` calls the same
@@ -148,8 +149,9 @@ class Pipeline:
 
     def graph_inputs(self) -> tuple[DataFrame, DataFrame]:
         """The text+image mention and triple unions, read from the decode
-        and media checkpoints: the relations the graph, fused and enhanced
-        graphs aggregate.
+        and media checkpoints: the relations the graph stage rewires and
+        aggregates (with an empty merge map they aggregate to the
+        pre-fusion graph).
 
         spread=False: these reads feed straight into keyed aggregations
         (build_edges/build_nodes), which re-exchange on their group keys
@@ -226,7 +228,7 @@ class Pipeline:
     # and flushed as ONE pyarrow file per table per run. The earlier
     # createDataFrame(...).coalesce(1).write per stage cost a single-task
     # Spark job each — measured 4-6 s apiece on this host, ~60 s of serial
-    # wall across the 8-stage pipeline, the dominant anti-scaling term.
+    # wall across the pipeline's stages, the dominant anti-scaling term.
     def _flush_meta(self) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -398,30 +400,6 @@ class Pipeline:
                 "__cleanup__": lambda: (scene.unpersist(), objs.unpersist()),
             }
 
-        def _graph():
-            all_m, all_t = self.graph_inputs()
-            # The edges aggregate (the stage's biggest groupBy, over the
-            # triples relation) feeds the edges write and the degree table
-            # behind the stored ranks (edges.edge_rank, nodes.degree). It is
-            # persisted for the stage's two concurrent writes: column pruning
-            # would otherwise plan the degree branch as a second, keys-only
-            # triples aggregation. The triples exchange runs once; the block
-            # manager's per-block locks make the later reader wait.
-            # nodes (with stubs) derives from the nodes_base (pre-stub) and
-            # edges CHECKPOINTS afterwards, instead of recomputing their
-            # plans; stubs take their degree from add_stub_nodes' own
-            # group-by.
-            edges = canon.build_edges(all_t, cfg=cfg).persist()
-            return {
-                "edges": canon.with_edge_rank(edges),
-                "nodes_base": canon.with_degree(canon.build_nodes(all_m, cfg=cfg), edges),
-                "nodes": lambda: canon.add_stub_nodes(
-                    self.read("nodes_base", spread=False),
-                    self.read("edges", spread=False),
-                ),
-                "__cleanup__": edges.unpersist,
-            }
-
         def _fusion():
             sp = self.read("spans")
             med = media.media_spans(sp)
@@ -431,22 +409,36 @@ class Pipeline:
                 )
             }
 
-        def _fused_graph():
-            all_m, all_t = self.graph_inputs()
+        def _graph():
+            # J6 rewiring through the merge map, then A1/A2 once over the
+            # rewired relations. The edges aggregate (the stage's biggest
+            # groupBy, over the triples relation) feeds the edges write, the
+            # degree table behind the stored ranks (edges.edge_rank,
+            # nodes.degree) and the stub rule; the ranked nodes feed the
+            # stub rule's anti-join and its union. Both are persisted for
+            # the stage's two concurrent writes: column pruning would
+            # otherwise plan each pruned reader as a second, keys-only
+            # aggregation of the same relation. Each exchange runs once; the
+            # block manager's per-block locks make the later reader wait.
+            # Stubs take their degree from add_stub_nodes' own group-by.
             mm = fusion.merge_map_from_blocks(
                 self.read("fusion_blocks", spread=False)
             ).persist()
-            # J6 rewiring, then A1/A2 over the whole rewired relations; stubs
-            # derive from the fused_edges CHECKPOINT (same dedup as the graph
-            # stage)
-            m2, t2 = fusion.fuse_inputs(all_m, all_t, mm)
+            all_m, all_t = fusion.fuse_inputs(*self.graph_inputs(), mm)
+            edges = canon.build_edges(all_t, cfg=cfg).persist()
+            nodes = canon.with_degree(
+                canon.build_nodes(all_m, cfg=cfg), edges
+            ).persist()
             return {
-                "fused_edges": canon.build_edges(t2, cfg=cfg),
-                "fused_nodes": lambda: canon.add_stub_nodes(
-                    canon.build_nodes(m2, cfg=cfg),
-                    self.read("fused_edges", spread=False),
+                "edges": canon.with_edge_rank(edges),
+                "nodes": canon.add_stub_nodes(nodes, edges),
+                "fused_nodes": lambda: self.read("nodes", spread=False)
+                .select(canon.NODE_COLS),
+                "fused_edges": lambda: self.read("edges", spread=False)
+                .select(canon.EDGE_COLS),
+                "__cleanup__": lambda: (
+                    nodes.unpersist(), edges.unpersist(), mm.unpersist()
                 ),
-                "__cleanup__": lambda: mm.unpersist(),
             }
 
         # name -> (dep stages, lineage inputs, output tables, builder)
@@ -461,15 +453,12 @@ class Pipeline:
             "decode": (["extract_raw"], ["extraction_raw"],
                        ["mentions", "triples"], _decode),
             "media": (["spans"], ["spans"], ["img_mentions", "img_triples"], _media),
-            "graph": (["decode", "media"],
-                      ["mentions", "triples", "img_mentions", "img_triples"],
-                      ["nodes", "nodes_base", "edges"], _graph),
             "fusion": (["spans", "media"], ["spans", "img_mentions"],
                        ["fusion_blocks"], _fusion),
-            "fused_graph": (["decode", "media", "fusion"],
-                            ["mentions", "triples", "img_mentions",
-                             "img_triples", "fusion_blocks"],
-                            ["fused_nodes", "fused_edges"], _fused_graph),
+            "graph": (["decode", "media", "fusion"],
+                      ["mentions", "triples", "img_mentions", "img_triples",
+                       "fusion_blocks"],
+                      ["nodes", "edges", "fused_nodes", "fused_edges"], _graph),
         }
 
         parallel = parallel and _pinned_threads()

@@ -8,7 +8,8 @@ import numpy as np
 from conftest import SF_TINY, make_docs
 
 from mmgraphrag_spark import api, synth
-from mmgraphrag_spark.config import DEFAULT
+from mmgraphrag_spark.config import DEFAULT, GRAPH_FIELD_SEP
+from mmgraphrag_spark.operators import canonicalize as canon
 from mmgraphrag_spark.operators import fusion, media
 
 
@@ -210,11 +211,39 @@ def test_fused_graph_drops_merged_scene_names(spark):
     assert set(mm["new_name"]) <= set(fused["entity_name"])
 
 
+def _pre_fusion_edges(spark):
+    """The build's triples aggregated with an empty merge map."""
+    return canon.build_edges(api.build(spark, SF_TINY).graph_inputs()[1]).toPandas()
+
+
 def test_fused_edges_rewired_weights_conserved(spark):
-    pre = api.edges(spark, SF_TINY).toPandas()
+    pre = _pre_fusion_edges(spark)
     post = api.fused_edges(spark, SF_TINY).toPandas()
     assert math.isclose(pre["weight"].sum(), post["weight"].sum())
     assert len(post) <= len(pre)
+
+
+def test_fusion_reaches_the_served_graph(spark):
+    """The served graph is the fused one: a merged image name is gone from
+    ``api.nodes``, its text target's served degree exceeds its pre-fusion
+    degree, and a query naming the target reaches an edge the image
+    contributed."""
+    from collections import Counter
+    from dataclasses import replace
+
+    row = api.merge_map(spark, SF_TINY).orderBy("old_name").first()
+    pre = _pre_fusion_edges(spark)
+    pre_degree = Counter(pre["src"]) + Counter(pre["dst"])
+    nodes = api.nodes(spark, SF_TINY).toPandas().set_index("entity_name")
+    assert row.old_name not in nodes.index
+    assert nodes.loc[row.new_name, "degree"] > pre_degree[row.new_name]
+
+    cfg = replace(DEFAULT, qctx_query=row.new_name)
+    ctx = api.qctx_edges(spark, SF_TINY, cfg).join(
+        api.edges(spark, SF_TINY).select("src", "dst", "source_id"), ["src", "dst"]
+    )
+    sources = {s for r in ctx.collect() for s in r.source_id.split(GRAPH_FIELD_SEP)}
+    assert row.media_ref in sources
 
 
 def test_jvm_trigram_vectors_equal_python_encoder(spark):

@@ -22,7 +22,7 @@ def pipe(spark, tmp_path_factory):
 def test_all_stages_ran_and_checkpointed(pipe):
     for t in ["spans", "chunks", "extraction_raw",
               "mentions", "triples", "img_mentions", "img_triples",
-              "nodes", "nodes_base", "edges", "fusion_blocks",
+              "nodes", "edges", "fusion_blocks",
               "fused_nodes", "fused_edges"]:
         assert pipe._complete(t), t
 
@@ -30,20 +30,26 @@ def test_all_stages_ran_and_checkpointed(pipe):
 def test_stored_ranks_match_recount(spark, pipe, tmp_path):
     """nodes.degree and edges.edge_rank equal a recount from the edges
     checkpoint, stub nodes included: the graph stage re-runs over a copy of
-    the run whose mention checkpoints lack three triple endpoints."""
+    the run whose mention checkpoints lack three triple endpoints. They are
+    endpoints no image entity merges into, whose renamed image mentions
+    would otherwise give them a node again."""
     from collections import Counter
 
     from pyspark.sql import functions as F
 
     work = tmp_path / "stubs"
     shutil.copytree(pipe.work_dir, work)
+    targets = fusion.merge_map_from_blocks(
+        pipe.read("fusion_blocks", spread=False)
+    ).select(F.col("new_name").alias("subj"))
     gone = [r.subj for r in pipe.read("triples", spread=False)
-            .select("subj").distinct().orderBy("subj").limit(3).collect()]
+            .select("subj").distinct().join(targets, "subj", "left_anti")
+            .orderBy("subj").limit(3).collect()]
     for t in ("mentions", "img_mentions"):
         (spark.read.parquet(f"{pipe.work_dir}/{t}")
          .filter(~F.col("entity_name").isin(gone))
          .write.mode("overwrite").parquet(str(work / t)))
-    for t in ("nodes", "nodes_base", "edges"):
+    for t in ("nodes", "edges"):
         shutil.rmtree(work / t)
     p = Pipeline(spark, SF_TINY, str(work))
     assert p.run(resume=True)["graph"]
@@ -56,13 +62,11 @@ def test_stored_ranks_match_recount(spark, pipe, tmp_path):
     stubs = nodes[nodes["entity_type"] == "UNKNOWN"]
     assert set(gone) <= set(stubs["entity_name"])
     assert (nodes["degree"] == [deg[n] for n in nodes["entity_name"]]).all()
-    base = p.read("nodes_base", spread=False).toPandas()
-    assert (base["degree"] == [deg[n] for n in base["entity_name"]]).all()
 
 
 def test_fused_tables_keep_their_columns(spark, pipe):
-    """The stored ranks stay on the unfused graph: the fused checkpoints
-    keep the merged columns only."""
+    """fused_nodes/fused_edges are projections of the served nodes/edges
+    to the merged columns: the stored ranks are left out."""
     node_cols = ["entity_name", "entity_type", "description", "source_id"]
     edge_cols = ["src", "dst", "weight", "description", "source_id", "order"]
     assert pipe.read("fused_nodes", spread=False).columns == node_cols
@@ -70,9 +74,9 @@ def test_fused_tables_keep_their_columns(spark, pipe):
 
 
 def test_fused_checkpoints_match_full_recompute(spark, pipe):
-    """The pipeline's fused stage (rewired mention/triple checkpoints, stubs
-    from the fused_edges checkpoint) must equal ``fusion.fuse_graph`` run
-    in memory over the same mention, triple and fusion_blocks checkpoints,
+    """The graph stage (rewired mention/triple checkpoints, stubs from the
+    rewired edges aggregate) must equal ``fusion.fuse_graph`` run in memory
+    over the same mention, triple and fusion_blocks checkpoints,
     bit-for-bit."""
     mm = fusion.merge_map_from_blocks(pipe.read("fusion_blocks", spread=False))
     nodes, edges = fusion.fuse_graph(*pipe.graph_inputs(), mm, cfg=pipe.cfg)
@@ -99,7 +103,7 @@ def test_mid_pipeline_resume(spark, pipe):
     ran = pipe.run(resume=True)
     assert ran == {"spans": False, "chunks": False, "extract_raw": False,
                    "decode": False, "media": False,
-                   "graph": True, "fusion": False, "fused_graph": False}
+                   "fusion": False, "graph": True}
     # earlier stages were not recomputed: no new lineage rows for them
     after = pipe.lineage().filter("stage = 'spans'").count()
     assert after == before

@@ -67,10 +67,10 @@ def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
     equal ``norm`` rows; on a value mismatch the report names up to three
     rows found on one side only.
 
-    Every CTE of the oracle SQL is materialised: the same rows, but each
-    shared-prefix CTE is evaluated once instead of once per reference (the
-    inlined form of the query-context and fused-graph oracles exhausts
-    DuckDB's temp space at sf0.001)."""
+    Every CTE of the oracle SQL is materialised, as ``oracle.cte_prefix``
+    does for its own: the same rows, but each CTE is evaluated once instead
+    of once per reference (the inlined ``oracle_extra`` dedup twins run up
+    to 7x slower at sf0.001)."""
     sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
     sql = re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (",
                  entrymod.oracle_sql()[name])
