@@ -24,7 +24,83 @@ import re
 from .config import DEFAULT, PipelineConfig
 
 
+def materialized(sql: str) -> str:
+    """``sql`` with every CTE but the first marked ``MATERIALIZED``: the same
+    rows, but DuckDB evaluates each CTE once instead of once per reference.
+    Inlined, the fusion chain under the served nodes/edges (comp, mmap and
+    the fused relations are each read more than once) exhausts DuckDB's
+    memory on five documents."""
+    return re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
+
+
 def cte_prefix(cfg: PipelineConfig = DEFAULT) -> str:
+    """The shared CTE chain every oracle query reads, materialized."""
+    return materialized(_ctes(cfg))
+
+
+def _sum(desc_expr: str, cfg: PipelineConfig) -> str:
+    """A1/A2 summarization twin (canonicalize.summarize_description)."""
+    toks = f"string_split({desc_expr}, ' ')"
+    return (
+        f"CASE WHEN len({toks}) >= {cfg.summary_max_tokens}"
+        f" THEN array_to_string(list_slice({toks}, 1, {cfg.summary_keep_tokens}), ' ')"
+        f" || ' <SUMMARY ' || CAST(len({toks}) AS VARCHAR) || ' tokens>'"
+        f" ELSE {desc_expr} END"
+    )
+
+
+def graph_ctes(cfg: PipelineConfig = DEFAULT) -> str:
+    """The served ``nodes``/``edges`` (the Pipeline graph stage) from
+    ``fused_mentions``/``fused_triples``: A1/A2, then the stub rule
+    (canonicalize.add_stub_nodes): an edge endpoint without a node becomes
+    an UNKNOWN node carrying its first incident edge by (description,
+    source_id)."""
+    desc_agg = "string_agg(DISTINCT {t}description, '<SEP>' ORDER BY {t}description)"
+    node_desc = _sum(desc_agg.format(t="n."), cfg) + " AS description"
+    edge_desc = _sum(desc_agg.format(t=""), cfg) + " AS description"
+    return f"""typecnt AS (
+  SELECT entity_name, entity_type, count(*) AS cnt FROM fused_mentions GROUP BY 1, 2
+),
+toptype AS (
+  SELECT entity_name, entity_type FROM (
+    SELECT *, row_number() OVER (PARTITION BY entity_name
+                                 ORDER BY cnt DESC, entity_type ASC) AS rn
+    FROM typecnt
+  ) t WHERE rn = 1
+),
+merged_nodes AS (
+  SELECT n.entity_name, t.entity_type,
+         {node_desc},
+         string_agg(DISTINCT n.source_id, '<SEP>' ORDER BY n.source_id) AS source_id
+  FROM fused_mentions n JOIN toptype t USING (entity_name)
+  GROUP BY n.entity_name, t.entity_type
+),
+edges AS (
+  SELECT subj AS src, obj AS dst,
+         sum(weight) AS weight,
+         {edge_desc},
+         string_agg(DISTINCT source_id, '<SEP>' ORDER BY source_id) AS source_id,
+         min("order") AS "order"
+  FROM fused_triples GROUP BY 1, 2
+),
+nodes AS (
+  SELECT * FROM merged_nodes
+  UNION ALL
+  SELECT entity_name, 'UNKNOWN' AS entity_type, description, source_id FROM (
+    SELECT e.*, row_number() OVER (
+             PARTITION BY entity_name
+             ORDER BY description NULLS FIRST, source_id NULLS FIRST) AS rn
+    FROM (SELECT src AS entity_name, description, source_id FROM edges
+          UNION ALL SELECT dst, description, source_id FROM edges) e
+    WHERE NOT EXISTS (SELECT 1 FROM merged_nodes m
+                      WHERE m.entity_name = e.entity_name)
+  ) s WHERE rn = 1
+)
+"""
+
+
+def _ctes(cfg: PipelineConfig) -> str:
+    """``cte_prefix`` with every CTE inlined, DuckDB's default."""
     w = cfg.span_words
     every = cfg.media_every
     mod = cfg.media_doc_mod
@@ -40,25 +116,7 @@ def cte_prefix(cfg: PipelineConfig = DEFAULT) -> str:
     RS = 10**12  # fusion.RANK_SCALE
     merge_t2 = int(round(cfg.merge_cos * cfg.merge_cos * SC))
     cluster_t2 = int(round(cfg.cluster_cos * cfg.cluster_cos * SC))
-
-    def _sum(desc_expr: str) -> str:
-        """A1/A2 summarization twin (canonicalize.summarize_description)."""
-        toks = f"string_split({desc_expr}, ' ')"
-        return (
-            f"CASE WHEN len({toks}) >= {cfg.summary_max_tokens}"
-            f" THEN array_to_string(list_slice({toks}, 1, {cfg.summary_keep_tokens}), ' ')"
-            f" || ' <SUMMARY ' || CAST(len({toks}) AS VARCHAR) || ' tokens>'"
-            f" ELSE {desc_expr} END"
-        )
-
-    desc_agg = "string_agg(DISTINCT {t}description, '<SEP>' ORDER BY {t}description)"
-    node_desc = _sum(desc_agg.format(t="n.")) + " AS description"
-    edge_desc = _sum(desc_agg.format(t="")) + " AS description"
-    # Every CTE after the first is MATERIALIZED, so DuckDB evaluates each once
-    # instead of once per reference. Inlined, the fusion chain under the
-    # served nodes/edges (comp, mmap and the fused relations are each read
-    # more than once) exhausts DuckDB's memory on 20 documents.
-    return re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (", f"""
+    return f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id AS orig_id,
          'doc' || CAST(doc_id AS VARCHAR) AS doc_id,
@@ -424,32 +482,7 @@ fused_triples AS (
     LEFT JOIN mmap m2 ON t.obj = m2.old_name
   ) x
 ),
-typecnt AS (
-  SELECT entity_name, entity_type, count(*) AS cnt FROM fused_mentions GROUP BY 1, 2
-),
-toptype AS (
-  SELECT entity_name, entity_type FROM (
-    SELECT *, row_number() OVER (PARTITION BY entity_name
-                                 ORDER BY cnt DESC, entity_type ASC) AS rn
-    FROM typecnt
-  ) t WHERE rn = 1
-),
-nodes AS (
-  SELECT n.entity_name, t.entity_type,
-         {node_desc},
-         string_agg(DISTINCT n.source_id, '<SEP>' ORDER BY n.source_id) AS source_id
-  FROM fused_mentions n JOIN toptype t USING (entity_name)
-  GROUP BY n.entity_name, t.entity_type
-),
-edges AS (
-  SELECT subj AS src, obj AS dst,
-         sum(weight) AS weight,
-         {edge_desc},
-         string_agg(DISTINCT source_id, '<SEP>' ORDER BY source_id) AS source_id,
-         min("order") AS "order"
-  FROM fused_triples GROUP BY 1, 2
-)
-""")
+{graph_ctes(cfg)}"""
 
 
 # ---- final SELECTs, one per driver-checked query ---------------------------

@@ -6,7 +6,6 @@ Compares row count, column names, and order-insensitive value hash.
 
 from __future__ import annotations
 
-import re
 import sys
 from pathlib import Path
 
@@ -15,6 +14,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
+from mmgraphrag_spark import oracle  # noqa: E402
 from mmgraphrag_spark.session import get_spark  # noqa: E402
 
 TABLES = ["documents", "events", "embeddings"]
@@ -67,13 +67,12 @@ def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
     equal ``norm`` rows; on a value mismatch the report names up to three
     rows found on one side only.
 
-    Every CTE of the oracle SQL is materialised, as ``oracle.cte_prefix``
-    does for its own: the same rows, but each CTE is evaluated once instead
-    of once per reference (the inlined ``oracle_extra`` dedup twins run up
-    to 7x slower at sf0.001)."""
+    Every CTE of the oracle SQL is materialised (``oracle.materialized``,
+    which ``oracle.cte_prefix`` already applies to its own): the same rows,
+    but each CTE is evaluated once instead of once per reference (the
+    inlined ``oracle_extra`` dedup twins run up to 7x slower at sf0.001)."""
     sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
-    sql = re.sub(r"(?m)^(\w+) AS \(", r"\1 AS MATERIALIZED (",
-                 entrymod.oracle_sql()[name])
+    sql = oracle.materialized(entrymod.oracle_sql()[name])
     odf = con.execute(sql).df()
     scols, ocols = sorted(sdf.columns), sorted(odf.columns)
     ok_schema = scols == ocols
