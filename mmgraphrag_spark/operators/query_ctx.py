@@ -15,24 +15,29 @@
   query-named nodes, top-k by (degree desc, name asc) (T1/J7; the vector
   top-k is swapped for deterministic token-match seeding so the oracle can
   replicate it — seed_entities_vdb covers the vector path). Their one-hop
-  edges are a semi-join of ``edges`` against the broadcast seeds (J8/U4),
-  ranked by (edge_rank desc, weight desc) (T2); their source chunks are
-  ranked by (chunk_order_index asc, citing one-hop edges desc) (T3). Edges
-  and chunks are truncated to a token budget with a running-sum window (T4,
-  reference truncate_list_by_token_size base.py:187-214).
+  edges (J8/U4) are ranked by (edge_rank desc, weight desc) (T2); their
+  source chunks by (chunk_order_index asc, citing one-hop edges desc) (T3).
+  Edges and chunks are truncated to a running token budget (T4, reference
+  truncate_list_by_token_size base.py:187-214).
 
-A request runs no aggregate over the graph. Spark plans the seed rank as a
-TakeOrderedAndProject, whose top-k merge runs inside the consuming job; the
-exchanges are the seeds' broadcast (shared by the edge and chunk steps), the
-broadcast of the seeds' chunk ids, one single-partition exchange under each
-budget window (inputs bounded by the query) and the broadcast joining the
-kept chunks to their content. :func:`context_blocks` renders all three CSV
-blocks from one collect: 7 Spark jobs, 8 with the answer chain's media
-lookup (tests/test_query_multimodal.py pins at most 10).
+As in the reference, a request ranks on the driver: its candidate sets are
+bounded by the query, not by the graph — at most one node per distinct
+token (names are unique) and those nodes' one-hop edges. Each step runs one
+narrow, exchange-free Spark job over the graph tables (filtered scans,
+collected as Arrow), ranks, cuts and counts with pyarrow compute, and
+returns its rows as a local DataFrame. An edge description longer than the
+budget is never collected: such an edge cannot be kept. A request runs 5
+single-stage jobs: the seeds, the context edges, the context chunks (two:
+the seeds, then the seeds' chunk rows with their one-hop edges' citations
+of them) and, in :func:`context_blocks`, the kept chunks' ``content``; 6
+with the answer chain's media lookup (tests/test_query_multimodal.py pins
+both).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..config import DEFAULT, GRAPH_FIELD_SEP, PipelineConfig
@@ -66,46 +71,85 @@ def media_chunk_match(media: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-def _edge_order() -> list[Column]:
-    """T2: the ranking of the context edges (the stored edge_rank)."""
-    return [F.desc("edge_rank"), F.desc("weight"), F.asc("src"), F.asc("dst")]
+# T2 and T3: the rankings of the context edges (the stored edge_rank) and
+# chunks. pyarrow orders strings by their UTF-8 bytes, as Spark and DuckDB do.
+_EDGE_ORDER = [("edge_rank", "descending"), ("weight", "descending"),
+               ("src", "ascending"), ("dst", "ascending")]
+_CHUNK_ORDER = [("chunk_order_index", "ascending"), ("relation_counts", "descending"),
+                ("chunk_id", "ascending")]
 
 
-def _seed_nodes(nodes: DataFrame, query: str, k: int) -> DataFrame:
-    """The top-k query-named nodes by (degree desc, entity_name asc), every
-    node column plus ``rnk``."""
-    toks = [t.upper() for t in query.split() if t]
-    # unpartitioned window is deliberate and SAFE here (and in the other
-    # qctx ranking/budget windows): its input is already filtered to the
-    # per-query candidate set — bounded by the query's token count / seed
-    # fan-out, never corpus-sized. Do NOT lift this pattern onto a big
-    # relation. (Spark plans this rank <= k filter as a
-    # TakeOrderedAndProject: no query stage of its own.)
-    w = Window.orderBy(F.desc("degree"), F.asc("entity_name"))
-    return (
-        nodes.filter(F.col("entity_name").isin(toks))
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
+def _in(col: str, values: pa.Array | pa.ChunkedArray) -> Column:
+    """``col IN (values)`` as one SQL expression, the values escaped as
+    Spark string literals: one py4j call however many values there are
+    (``Column.isin`` makes one per literal)."""
+    vals = pc.unique(values)
+    if len(vals) == 0:
+        return F.lit(False)
+    esc = pc.replace_substring(pc.replace_substring(vals, "\\", "\\\\"), "'", "\\'")
+    lits = pc.binary_join(pa.ListArray.from_arrays([0, len(esc)], esc), "', '")[0]
+    return F.expr(f"{col} IN ('{lits.as_py()}')")
+
+
+def _tokens(query: str) -> pa.Array:
+    """The query's tokens, upper-cased as node names are."""
+    return pa.array([t.upper() for t in query.split()], pa.string())
+
+
+def _touching(edges: DataFrame, names: pa.Array | pa.ChunkedArray) -> DataFrame:
+    """J8: the edges with an endpoint in ``names``."""
+    return edges.filter(_in("src", names) | _in("dst", names))
+
+
+def _collect(*parts: DataFrame) -> list[pa.Table]:
+    """Each of ``parts`` (narrow plans over the graph tables) as an Arrow
+    table, collected in ONE single-stage Spark job: a tagged union of the
+    filtered scans."""
+    tagged = [p.select(F.lit(i).alias("_part"), *p.columns) for i, p in enumerate(parts)]
+    union = tagged[0]
+    for t in tagged[1:]:
+        union = union.unionByName(t, allowMissingColumns=True)
+    rows = union.toArrow()
+    return [rows.filter(pc.equal(rows["_part"], i)).select(p.columns)
+            for i, p in enumerate(parts)]
+
+
+def _top_k(named: pa.Table, k: int) -> pa.Table:
+    """T1: the top-k of the query-named nodes by (degree desc, entity_name
+    asc), plus their ``rnk``."""
+    order = pc.sort_indices(named, [("degree", "descending"), ("entity_name", "ascending")])
+    top = named.take(order[:k])
+    return top.append_column("rnk", pa.array(range(1, top.num_rows + 1), pa.int64()))
+
+
+def _one_hop(nodes: DataFrame, edges: DataFrame, query: str, k: int,
+             *edge_cols: str | Column) -> pa.Table:
+    """J8: the one-hop edges of the query's top-k seeds (src, dst and
+    ``edge_cols``), from one lookup of the query-named nodes and the edges
+    touching them."""
+    toks = _tokens(query)
+    named, cand = _collect(
+        nodes.filter(_in("entity_name", toks)).select("entity_name", "degree"),
+        _touching(edges, toks).select("src", "dst", *edge_cols),
     )
+    seeds = _top_k(named, k)["entity_name"]
+    return cand.filter(pc.or_(pc.is_in(cand["src"], value_set=seeds),
+                              pc.is_in(cand["dst"], value_set=seeds)))
 
 
-def _touching(edges: DataFrame, seeds: DataFrame) -> DataFrame:
-    """J8: the edges with an endpoint among ``seeds`` (broadcast: seeds are
-    at most k rows)."""
-    s = F.broadcast(seeds.select("entity_name"))
-    return edges.join(
-        s, (edges["src"] == s["entity_name"]) | (edges["dst"] == s["entity_name"]),
-        "left_semi",
-    )
+def _within_budget(rows: pa.Table, order: list, cost: str, budget: int) -> pa.Table:
+    """T4: ``rows`` in ``order`` plus ``running_tokens`` (the running sum of
+    ``cost``), cut where it passes ``budget``."""
+    rows = rows.take(pc.sort_indices(rows, order))
+    running = pc.cumulative_sum(rows[cost])
+    return rows.append_column("running_tokens", running).filter(
+        pc.less_equal(running, budget))
 
 
-def _within_budget(df: DataFrame, order: list[Column], cost: Column, budget: int) -> DataFrame:
-    """T4: ``df`` plus ``running_tokens`` (the running sum of ``cost`` in
-    ``order``), cut where it passes ``budget``."""
-    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn("running_tokens", F.sum(cost).over(w).cast("long")).filter(
-        F.col("running_tokens") <= budget
-    )
+def _frame(like: DataFrame, rows: pa.Table, cols: list[str]) -> DataFrame:
+    """``rows[cols]`` as a local DataFrame (a LocalRelation: collecting it
+    runs no Spark job)."""
+    return like.sparkSession.createDataFrame(rows.select(cols))
 
 
 def seed_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) -> DataFrame:
@@ -113,7 +157,9 @@ def seed_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) ->
     query token, ranked by (degree desc, name asc). The degree is the one
     stored on ``nodes``; ``edges`` is not read (the context steps share one
     signature)."""
-    return _seed_nodes(nodes, query, k).select("entity_name", "entity_type", "degree", "rnk")
+    (named,) = _collect(nodes.filter(_in("entity_name", _tokens(query)))
+                        .select("entity_name", "entity_type", "degree"))
+    return _frame(nodes, _top_k(named, k), ["entity_name", "entity_type", "degree", "rnk"])
 
 
 def context_edges(
@@ -123,10 +169,15 @@ def context_edges(
     """J8 + T2 + T4: one-hop edges of the seeds, ranked by the stored
     edge_rank = deg(src)+deg(dst) desc, then weight desc, truncated to a
     running description-length budget."""
-    touching = _touching(edges, seed_entities(nodes, edges, query, k))
-    return _within_budget(
-        touching, _edge_order(), F.length("description"), token_budget
-    ).select("src", "dst", "weight", "description", "edge_rank", "running_tokens")
+    cost = F.length("description")
+    touching = _one_hop(
+        nodes, edges, query, k, "weight", "edge_rank", cost.cast("long").alias("cost"),
+        # an edge whose description alone passes the budget is never kept:
+        # its text stays in the JVM
+        F.when(cost <= token_budget, F.col("description")).alias("description"),
+    )
+    return _frame(nodes, _within_budget(touching, _EDGE_ORDER, "cost", token_budget),
+                  ["src", "dst", "weight", "description", "edge_rank", "running_tokens"])
 
 
 def context_chunks(
@@ -137,33 +188,28 @@ def context_chunks(
     ranked by (chunk_order_index asc, relation_counts desc) where
     relation_counts = number of context edges citing the chunk (reference
     query.py:121-152), truncated to a running token budget."""
-    seeds = _seed_nodes(nodes, query, k)
-    seed_chunks = seeds.select(
-        F.explode(F.split("source_id", GRAPH_FIELD_SEP)).alias("chunk_id")
-    ).filter(F.col("chunk_id").startswith("chunk-"))  # P10
-    picked = chunks.join(F.broadcast(seed_chunks), "chunk_id", "left_semi")
-    cites = _touching(edges, seeds).select(
-        F.explode(F.split("source_id", GRAPH_FIELD_SEP)).alias("chunk_id")
+    (named,) = _collect(nodes.filter(_in("entity_name", _tokens(query)))
+                        .select("entity_name", "degree", "source_id"))
+    seeds = _top_k(named, k)
+    ids = pc.list_flatten(pc.split_pattern(seeds["source_id"], GRAPH_FIELD_SEP))
+    ids = ids.filter(pc.starts_with(ids, "chunk-"))  # P10
+    # an edge cites chunks that mention its endpoints, so the citations of
+    # the seeds' edges are (nearly all) the seeds' own chunks: they come
+    # unfiltered (a second IN list costs more than the few extra rows), and
+    # only the picked chunks' counts are read
+    picked, cites = _collect(
+        chunks.filter(_in("chunk_id", ids)).select(
+            "chunk_id", "doc_id", "chunk_order_index", F.col("tokens").cast("long").alias("tokens")),
+        _touching(edges, seeds["entity_name"])
+        .select(F.explode(F.split("source_id", GRAPH_FIELD_SEP)).alias("chunk_id")),
     )
-    # the seeds' chunks and their one-hop edges' chunk citations, both
-    # bounded by the query, meet in ONE partition: the citation count (a
-    # window per chunk) and the budget window then need no further exchange
-    rows = (
-        picked.select("chunk_id", "doc_id", "chunk_order_index", "tokens",
-                      F.lit(0).alias("cite"))
-        .unionByName(cites.select("chunk_id", F.lit(1).alias("cite")),
-                     allowMissingColumns=True)
-        .repartition(1)
-    )
-    ranked = rows.withColumn(
-        "relation_counts", F.sum("cite").over(Window.partitionBy("chunk_id")).cast("long")
-    ).filter(F.col("cite") == 0)
-    order = [F.asc("chunk_order_index"), F.desc("relation_counts"), F.asc("chunk_id")]
-    return _within_budget(ranked, order, F.col("tokens"), token_budget).select(
-        "chunk_id", "doc_id", "chunk_order_index",
-        F.col("tokens").cast("long").alias("tokens"),
-        "relation_counts", "running_tokens",
-    )
+    counts = pc.value_counts(cites["chunk_id"])
+    at = pc.index_in(picked["chunk_id"], value_set=counts.field("values"))
+    ranked = picked.append_column(
+        "relation_counts", pc.fill_null(pc.take(counts.field("counts"), at), 0))
+    return _frame(nodes, _within_budget(ranked, _CHUNK_ORDER, "tokens", token_budget),
+                  ["chunk_id", "doc_id", "chunk_order_index", "tokens",
+                   "relation_counts", "running_tokens"])
 
 
 def top_media_entities(nodes: DataFrame, n: int = 3) -> DataFrame:
@@ -180,11 +226,9 @@ def top_media_entities(nodes: DataFrame, n: int = 3) -> DataFrame:
 
 def one_hop_entities(nodes: DataFrame, edges: DataFrame, query: str, k: int = 5) -> DataFrame:
     """J8/U2: distinct neighbor set of the seeds (incl. the seeds)."""
-    touching = _touching(edges, seed_entities(nodes, edges, query, k))
-    hop = touching.select(F.explode(F.array("src", "dst")).alias("entity_name")).distinct()
-    return hop.join(nodes, "entity_name").select(
-        "entity_name", "entity_type"
-    )
+    hop = _one_hop(nodes, edges, query, k)
+    names = pa.chunked_array(hop["src"].chunks + hop["dst"].chunks, pa.string())
+    return nodes.filter(_in("entity_name", names)).select("entity_name", "entity_type")
 
 
 def seed_entities_vdb(
@@ -280,35 +324,15 @@ def context_blocks(
     the answer-prompt assembler scrapes ORI_IMG rows from the entities block
     exactly like the reference does (query.py:414-421).
 
-    One collect of the three context sets as a tagged union, the chunks
-    joined to their ``content`` on the way (the context chunks broadcast:
-    they are budget-truncated). Driver-side by design: the sets are tens of
-    rows; ordering and CSV rendering are the serialization boundary, not a
-    bulk operator."""
-    text = chunk_table.select("chunk_id", "content").join(F.broadcast(chunks), "chunk_id")
-    rows = (
-        seeds.select(F.lit(0).alias("block"), "rnk", "entity_name", "entity_type", "degree")
-        .unionByName(
-            edges.select(F.lit(1).alias("block"), "src", "dst", "weight",
-                         "description", "edge_rank"),
-            allowMissingColumns=True,
-        )
-        .unionByName(
-            text.select(F.lit(2).alias("block"), "chunk_id", "chunk_order_index",
-                        "relation_counts", "content"),
-            allowMissingColumns=True,
-        )
-        .collect()
-    )
-    by_block: list[list] = [[], [], []]
-    for r in rows:
-        by_block[r.block].append(r)
-    # the orders of seed_entities (rnk), _edge_order and context_chunks;
-    # Python's str order is Spark's (UTF-8 bytes sort in code point order)
-    ents = sorted(by_block[0], key=lambda r: r.rnk)
-    rels = sorted(by_block[1], key=lambda r: (-r.edge_rank, -r.weight, r.src, r.dst))
-    texts = sorted(by_block[2], key=lambda r: (r.chunk_order_index, -r.relation_counts,
-                                                r.chunk_id))
+    The three context sets are collected in the order they hold: the steps
+    return them ranked, as local frames whose collect runs no Spark job. The
+    kept chunks' ``content`` is fetched in one narrow filter of
+    ``chunk_table``. Driver-side by design: the sets are tens of rows; CSV
+    rendering is the serialization boundary, not a bulk operator."""
+    ents, rels, texts = seeds.collect(), edges.collect(), chunks.collect()
+    kept = pa.array([r.chunk_id for r in texts], pa.string())
+    (content,) = _collect(chunk_table.filter(_in("chunk_id", kept)).select("chunk_id", "content"))
+    text = dict(zip(content["chunk_id"].to_pylist(), content["content"].to_pylist()))
     node_rows = [["id", "entity", "type", "description", "rank"]]
     node_rows += [[i, r.entity_name, r.entity_type, "UNKNOWN", r.degree]
                   for i, r in enumerate(ents)]
@@ -316,7 +340,7 @@ def context_blocks(
     rel_rows += [[i, r.src, r.dst, r.description, r.weight, r.edge_rank]
                  for i, r in enumerate(rels)]
     text_rows = [["id", "content"]]
-    text_rows += [[i, r.content] for i, r in enumerate(texts)]
+    text_rows += [[i, text[r.chunk_id]] for i, r in enumerate(texts)]
     return (
         list_of_list_to_csv(node_rows),
         list_of_list_to_csv(rel_rows),

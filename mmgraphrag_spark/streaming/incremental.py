@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..config import DEFAULT, PipelineConfig
 from ..operators import chunker, extractor
@@ -65,7 +67,11 @@ def _read_state(
         msg = str(exc)
         if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
             raise
-        return spark.createDataFrame([], fallback_schema)
+        # empty and local, from Arrow: a LocalRelation, which the optimizer
+        # folds away (an empty Python list plans a Python-RDD scan, a job
+        # on Python workers)
+        schema = StructType.fromDDL(fallback_schema)
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     return df.filter(
         ~((F.col("run") == F.lit(run)) & (F.col("batch_id") == F.lit(batch_id)))
     )

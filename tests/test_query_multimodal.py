@@ -117,32 +117,41 @@ def test_render_context_reference_layout(spark):
     assert "\n0,\t" in out.replace("\n    ", "\n")
 
 
-def _oracle_blocks(nodes, edges, chunks, query):
-    """oracle.qctx_render_sql over the given graph tables (DuckDB), with the
-    documents->graph CTE chain dropped: the tables are registered views."""
-    from dataclasses import replace
-
+def _oracle_connection(nodes, edges, chunks):
+    """DuckDB over the given graph tables, registered as views."""
     import duckdb
-
-    from mmgraphrag_spark import oracle
-    from mmgraphrag_spark.config import DEFAULT
 
     con = duckdb.connect()
     for name, df in (("nodes", nodes), ("edges", edges), ("chunks", chunks)):
         con.register(name, df.toPandas())
-    cfg = replace(DEFAULT, qctx_query=query)
-    full, prefix = oracle.qctx_render_sql(cfg), oracle.cte_prefix(cfg)
-    rows = dict(con.execute("WITH " + full[len(prefix) + 1:]).fetchall())
-    con.close()
+    return con
+
+
+def _oracle_rows(con, sql: str, cfg):
+    """Oracle ``sql`` (built for ``cfg``) over ``con``'s graph tables: the
+    documents->graph CTE chain is dropped, only the config is replaced."""
+    from mmgraphrag_spark import oracle
+
+    return con.execute("WITH " + sql[len(oracle.cte_prefix(cfg)) + 1:]).df()
+
+
+def _oracle_blocks(con, cfg):
+    """oracle.qctx_render_sql's three rendered blocks for ``cfg``."""
+    from mmgraphrag_spark import oracle
+
+    rows = dict(_oracle_rows(con, oracle.qctx_render_sql(cfg), cfg).values.tolist())
     return rows["entities"], rows["relationships"], rows["sources"]
 
 
 def test_request_runs_few_jobs_and_matches_oracle(spark):
     """One request as perfbench serves it (seeds, context edges and chunks,
     the rendered blocks, the answer chain with its media lookup) runs at
-    most 10 Spark jobs over the cached SF_TINY graph — it re-aggregates
-    nothing: the ranks are stored — and renders the oracle's blocks (whose
-    own degrees are recounted from the edges)."""
+    most 6 Spark jobs over the cached SF_TINY graph, each a single stage —
+    narrow lookups, ranked on the driver: no exchange, no broadcast — and
+    renders the oracle's blocks (whose own degrees are recounted from the
+    edges)."""
+    from dataclasses import replace
+
     from mmgraphrag_spark.config import DEFAULT as cfg
     from mmgraphrag_spark.operators import answer
 
@@ -165,11 +174,60 @@ def test_request_runs_few_jobs_and_matches_oracle(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    jobs = sc.statusTracker().getJobIdsForGroup("qctx-request")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("qctx-request")
     media.unpersist()
     assert chain["mm_entities"] == [img.lower()]
-    assert 0 < len(jobs) <= 10, len(jobs)
-    assert blocks == _oracle_blocks(n, e, c, query)
+    assert 0 < len(jobs) <= 6, len(jobs)
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1] * len(jobs)
+    con = _oracle_connection(n, e, c)
+    assert blocks == _oracle_blocks(con, replace(cfg, qctx_query=query))
+    con.close()
+
+
+def test_context_steps_match_oracle_where_cuts_drop_rows(spark):
+    """The three context frames and the rendered blocks equal the oracle's
+    qctx_* SQL on the cases the default query never reaches: a top-k cut
+    inside a degree tie (broken by name), a token that names nothing, and
+    an edge budget below the first ranked edge's description length (no
+    edge is kept). A token with a quote and a backslash names nothing and
+    breaks no lookup."""
+    from dataclasses import replace
+
+    from mmgraphrag_spark import oracle
+    from mmgraphrag_spark.config import DEFAULT
+    from tools.compare import norm
+
+    n, e, c = api.nodes(spark, SF_TINY), api.edges(spark, SF_TINY), api.chunks(spark, SF_TINY)
+    con = _oracle_connection(n, e, c)
+    degree = dict(n.filter("entity_name IN ('GROUP', 'COLUMN', 'SPARK')")
+                  .select("entity_name", "degree").collect())
+    assert degree["GROUP"] > degree["COLUMN"] == degree["SPARK"]  # the tie the cut splits
+    first = _oracle_rows(con, oracle.qctx_edges_sql(DEFAULT), DEFAULT).sort_values(
+        ["edge_rank", "weight", "src", "dst"], ascending=[False, False, True, True])
+    cases = {
+        "tie at k": replace(DEFAULT, qctx_query="spark column group nosuchtoken", qctx_k=2),
+        "no edge fits": replace(
+            DEFAULT, qctx_token_budget=len(first["description"].iloc[0]) - 1),
+    }
+    for case, cfg in cases.items():
+        q, k = cfg.qctx_query, cfg.qctx_k
+        steps = {
+            "seeds": (query_ctx.seed_entities(n, e, q, k), oracle.qctx_seeds_sql(cfg)),
+            "edges": (query_ctx.context_edges(n, e, q, k, cfg.qctx_token_budget),
+                      oracle.qctx_edges_sql(cfg)),
+            "chunks": (query_ctx.context_chunks(n, e, c, q, k), oracle.qctx_chunks_sql(cfg)),
+        }
+        for step, (got, sql) in steps.items():
+            want = _oracle_rows(con, sql, cfg)
+            got = got.toPandas()
+            assert sorted(got.columns) == sorted(want.columns), (case, step)
+            assert norm(got, got.columns) == norm(want, want.columns), (case, step)
+            assert len(got) > 0 or (case, step) == ("no edge fits", "edges")
+        assert query_ctx.local_context(n, e, c, q, cfg) == _oracle_blocks(con, cfg), case
+    con.close()
+    assert [r.entity_name for r in query_ctx.seed_entities(
+        n, e, "o'brien a\\b spark", 5).collect()] == ["SPARK"]
 
 
 def test_compress_media_quality_ladder_matches_reference_loop(spark):
