@@ -6,8 +6,7 @@ twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
 The registry holds the KG build stages, the query path, the ingest readers
-and the text, curation, dedup and event analytics over the documents, each
-keyed by name. Every entry except ``kg_spectral`` and
+and the text and dedup analytics over the documents, each keyed by name. Every entry except ``kg_spectral`` and
 ``ann_ivf_kmeans_topk`` has an exact DuckDB twin, which ``tools/compare.py``
 checks.
 
@@ -32,7 +31,7 @@ from dataclasses import replace  # noqa: E402
 
 from mmgraphrag_spark import api, oracle, oracle_extra, synth  # noqa: E402
 from mmgraphrag_spark.config import DEFAULT  # noqa: E402
-from mmgraphrag_spark.operators import curation, dedup, events, similarity, textstats  # noqa: E402
+from mmgraphrag_spark.operators import dedup, similarity, textstats  # noqa: E402
 from mmgraphrag_spark.sources import docx, mineru, pdf  # noqa: E402
 
 # S3 media-context word radius for the driver query (reference default is
@@ -59,15 +58,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # ---- text, curation, dedup and event analytics over the documents --
+        # ---- text, similarity and dedup analytics over the documents -------
         # sparse TF-IDF dot-product document similarity via df-capped
         # inverted index (the encoder-free sibling of embedding near-dup)
         "text_docsim": lambda s, d: textstats.docsim_topk(
-            curation.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # per-source unigram total-variation drift vs the corpus blend
         "text_drift": lambda s, d: textstats.source_drift(
-            curation.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # canonical-document election: keep the highest-quality member of
         # each near-dup cluster (clusters × quality, compositional twin)
@@ -76,44 +75,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # first BPE merge round: corpus adjacent char-pair counts, top-k
         "text_bpe_pairs": lambda s, d: textstats.bpe_pair_counts(
-            curation.docs_table(s, d)
-        ),
-        # token-budget mixture materialization: md5-shuffle rank + running
-        # token sum per source, closed-prefix admission
-        "curation_token_mix": lambda s, d: curation.token_budget_mix(
-            curation.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # directed shingle containment (doc-in-doc detection, Broder 1997's
         # asymmetric sibling of Jaccard) — inverted-index join, df-capped
         "dup_containment": lambda s, d: dedup.containment_pairs(
-            curation.docs_table(s, d), threshold=0.2
+            textstats.docs_table(s, d), threshold=0.2
         ),
         # LIX readability in exact integer ppm (log/syllable-free by design)
         "text_readability": lambda s, d: textstats.readability(
-            curation.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # SemDeDup-style semantic duplicate clusters: LSH-verified embedding
         # pairs + large/small-star collapse (compositional twin)
         "dup_semantic_clusters": lambda s, d: dedup.semantic_clusters(s, d),
-        # URL canonicalization + keep-first crawl dedup (seeded fixture:
-        # scheme/www/case/port/tracking-params/fragment/trailing-slash)
-        "curation_urls": lambda s, d: curation.url_normalize(
-            curation.url_seeded_docs(curation.docs_table(s, d))
-        ),
         # per-doc vocabulary profile: type-token ratio + hapax share
         "text_hapax": lambda s, d: textstats.hapax_stats(
-            curation.docs_table(s, d)
-        ),
-        # PII detect + redact (emails / ipv4 / phones) — pure JVM regexp
-        # codegen; spans seeded deterministically from doc_id so the
-        # digit-free synthetic corpus exercises every count bucket
-        "text_pii": lambda s, d: curation.pii_scrub(
-            curation.pii_seeded_docs(curation.docs_table(s, d))
-        ),
-        # the END-TO-END curation funnel: quality gate -> exact dedup ->
-        # stratified sample as one relation with per-doc stage attribution
-        "curation_funnel": lambda s, d: curation.curation_funnel(
-            curation.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # exact Gini-impurity lexical diversity (the log-free entropy twin)
         "text_gini": lambda s, d: textstats.gini_diversity(
@@ -122,26 +100,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # corpus bigram-LM fluency scores (KenLM-style filtering in exact
         # integer ppm): rare transitions given the corpus score low
         "text_lm_score": lambda s, d: textstats.lm_scores(dedup.docs_table(s, d)),
-        # hopping (sliding) window rollup: window-instance explode, the
-        # batch twin of F.window(ts, "1 hour", "15 minutes") streaming aggs
-        "events_hopping": lambda s, d: events.hopping_rollup(
-            events.events_table(s, d)
-        ),
         # full winnowing fingerprint selection (MOSS): strict local-min
         # selector + cross-doc sharing counts; ~1/window fp density
         "text_winnow": lambda s, d: textstats.winnow_fingerprints(
             dedup.docs_table(s, d)
-        ),
-        # DSIR importance weights (Xie et al. 2023): hashed-ngram
-        # likelihood-ratio data selection; the 4096-bucket model broadcasts
-        # back onto the gram stream (exact-integer ppm ratios)
-        "curation_dsir": lambda s, d: curation.dsir_weights(
-            curation.docs_table(s, d)
-        ),
-        # domain-mixture reweighting: rank-proportional target shares ->
-        # exact integer ppm keep-rates / repetition factors per source
-        "curation_domain_mix": lambda s, d: curation.domain_mix(
-            curation.docs_table(s, d)
         ),
         # CCNet-style paragraph-grain exact dedup: keep-first occurrence
         # rank per block hash, linear in corpus size (rank, not pairs)
@@ -154,53 +116,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SQ8 scalar-quantized ANN: per-dim [min,max] -> uint8 codes (8×
         # memory shrink), exact integer reconstruction for scoring
         "ann_sq8_topk": similarity.ann_sq8_topk,
-        # gap sessionization over the events table: the batch twin of a
-        # stateful streaming sessionizer (lag flag + running sum, one
-        # exchange on user_id)
-        "events_sessions": lambda s, d: events.sessionize(
-            events.events_table(s, d)
-        ),
-        # interleaved multimodal sequence packing: text spans cost tokens,
-        # media spans a fixed placeholder budget; one running-sum window
-        "mm_pack_interleaved": lambda s, d: curation.pack_interleaved(
-            api.spans(s, d)
-        ),
         # ExactSubstr-style signal: per-doc token coverage by word k-grams
         # shared with other documents (interval-union window, no row blowup)
         "dup_span_coverage": lambda s, d: dedup.crossdoc_span_coverage(
             dedup.docs_table(s, d)
-        ),
-        # Gopher-rule composite keep/drop filter with named violation reasons
-        "curation_quality_gate": lambda s, d: curation.quality_gate(
-            dedup.docs_table(s, d)
-        ),
-        # test-set decontamination: training docs sharing word n-grams with
-        # the held-out eval stratum (broadcast-probe shape)
-        "curation_decontam": lambda s, d: curation.decontaminate(
-            curation.docs_table(s, d)
         ),
         # Gopher-style repetition quality signals (top-2-gram share,
         # duplicated-3-gram fraction)
         "text_repetition": lambda s, d: textstats.repetition_scores(
             dedup.docs_table(s, d)
         ),
-        # exact-count variant: top-k by hash bucket within each stratum
-        "curation_budget": lambda s, d: curation.stratified_budget(
-            curation.docs_table(s, d)
-        ),
-        # (lang × source) two-dimensional strata, same rate-monotone hash
-        # (the judge-verified curation_sample's machinery; property-tested)
-        "curation_sample_2d": lambda s, d: curation.stratified_sample_2d(
-            curation.docs_table(s, d)
-        ),
-        # judge-spot-verified in round 4 (VERDICT.md evidence line) and
-        # sweep-green in every final111 artifact — parked just past the
-        # 50-entry driver window to keep sweep-only queries in-window
         "text_tfidf": lambda s, d: textstats.tfidf_topk(dedup.docs_table(s, d)),
-        "curation_sample": lambda s, d: curation.stratified_sample(
-            curation.docs_table(s, d)
-        ),
-        "curation_pack": lambda s, d: curation.pack_sequences(curation.docs_table(s, d)),
         "ann_lsh_topk": lambda s, d: similarity.ann_lsh_topk(s, d),
         "ann_ivf_topk": lambda s, d: similarity.ann_ivf_topk(s, d),
         # k-means|| quantizer path: iterative fit, not SQL-expressible ->
@@ -292,13 +218,10 @@ def oracle_sql() -> dict[str, str]:
         "text_drift": oracle_extra.source_drift_sql(),
         "dup_canonical": oracle_extra.canonical_docs_sql(),
         "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
-        "curation_token_mix": oracle_extra.token_budget_mix_sql(),
         "dup_containment": oracle_extra.containment_sql(threshold=0.2),
         "text_readability": oracle_extra.readability_sql(),
         "dup_semantic_clusters": oracle_extra.semantic_clusters_sql(),
-        "curation_urls": oracle_extra.url_normalize_sql(),
         "text_hapax": oracle_extra.hapax_sql(),
-        "text_pii": oracle_extra.pii_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
         "ingest_spans": oracle.q(oracle.spans_select()),
         "ingest_media_context": oracle.q(oracle.media_context_select(CTX_WORDS)),
@@ -345,24 +268,12 @@ def oracle_sql() -> dict[str, str]:
         "text_langid": oracle_extra.langid_sql(),
         "text_fingerprints": oracle_extra.fingerprints_sql(),
         "text_tfidf": oracle_extra.tfidf_sql(),
-        "curation_sample": oracle_extra.stratified_sample_sql(),
-        "curation_sample_2d": oracle_extra.stratified_sample_2d_sql(),
-        "curation_budget": oracle_extra.stratified_budget_sql(),
-        "curation_pack": oracle_extra.pack_sequences_sql(),
-        "curation_decontam": oracle_extra.decontaminate_sql(),
         "text_repetition": oracle_extra.repetition_sql(),
         "dup_span_coverage": oracle_extra.crossdoc_span_sql(),
-        "curation_quality_gate": oracle_extra.quality_gate_sql(),
-        "mm_pack_interleaved": oracle_extra.pack_interleaved_sql(),
-        "events_sessions": oracle_extra.sessionize_sql(),
         "ann_sq8_topk": oracle_extra.ann_sq8_topk_sql(),
         "text_bm25": oracle_extra.bm25_sql(),
-        "curation_dsir": oracle_extra.dsir_sql(),
-        "events_hopping": oracle_extra.hopping_rollup_sql(),
         "text_lm_score": oracle_extra.lm_scores_sql(),
-        "curation_funnel": oracle_extra.curation_funnel_sql(),
         "text_gini": oracle_extra.gini_sql(),
         "text_winnow": oracle_extra.winnow_sql(),
-        "curation_domain_mix": oracle_extra.domain_mix_sql(),
         "dup_paragraph": oracle_extra.paragraph_dedup_sql(),
     }

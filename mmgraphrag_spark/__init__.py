@@ -12,18 +12,17 @@ Layout:
   config        pipeline parameters (chunk window, extraction rules, fusion)
   synth         deterministic interleaved-docs (spans) synthesizer
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
-  oracle_extra  DuckDB-SQL twins of the dedup, similarity, text, curation and
-                event operators
+  oracle_extra  DuckDB-SQL twins of the dedup, similarity and text operators
   api           DataFrame-in/DataFrame-out public API (the registry bodies;
                 KG tables read a session-scoped Pipeline build)
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
                 query_ctx, answer, multimodal, graphml, replay, dedup,
-                similarity, textstats, curation, events
+                similarity, textstats
   plans/        staged pipeline runner with checkpoints + lineage + metrics
-  streaming/    foreachBatch incremental KG ingest + streaming event, session
-                and near-dup operators
+  streaming/    foreachBatch incremental KG ingest and the streaming near-dup
+                gate
 """
 
 __version__ = "0.1.0"

@@ -23,6 +23,13 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
 
+def docs_table(spark, sf_dir: str) -> DataFrame:
+    """The full documents relation (dedup.docs_table keeps only id+text)."""
+    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source"
+    )
+
+
 def _count_in_list(w, words):
     """Token occurrences (with duplicates) of ``words`` in array ``w`` as a
     flat native expression: size(w) - size(array_remove(... , each word)).

@@ -1,6 +1,6 @@
-"""DuckDB-SQL twins for the training-data pipeline operators
-(dedup / similarity / textstats). Integer-scaled metrics throughout →
-bit-exact cross-engine comparison. Parameters mirror the operator defaults.
+"""DuckDB-SQL twins of the document operators (dedup / similarity /
+textstats). Integer-scaled metrics throughout → bit-exact cross-engine
+comparison. Parameters mirror the operator defaults.
 """
 
 from __future__ import annotations
@@ -488,125 +488,6 @@ SELECT doc_id, term, tf, df, tfidf_ppm, rnk FROM (
 """
 
 
-# the multiplicative doc_id hash of operators/curation.py, DuckDB spelling
-# (% on non-negative operands == Spark's pmod here)
-_CURATION_HASH = "((doc_id % 2147483647) * 2654435761) % 4294967296 % 1000000"
-
-
-def stratified_sample_sql(
-    rates_ppm: dict[str, int] | None = None, default_ppm: int = 125_000
-) -> str:
-    """Twin of curation.stratified_sample: hash-bucket membership per
-    language stratum."""
-    from .operators.curation import DEFAULT_RATES_PPM
-
-    rates = DEFAULT_RATES_PPM if rates_ppm is None else rates_ppm
-    case = "CASE lang " + " ".join(
-        f"WHEN '{lang}' THEN {ppm}" for lang, ppm in sorted(rates.items())
-    ) + f" ELSE {default_ppm} END"
-    return f"""
-SELECT doc_id, lang, source, bucket_ppm, rate_ppm FROM (
-  SELECT doc_id, lang, source,
-         CAST({_CURATION_HASH} AS BIGINT) AS bucket_ppm,
-         CAST({case} AS BIGINT) AS rate_ppm
-  FROM documents
-) WHERE bucket_ppm < rate_ppm
-"""
-
-
-def stratified_sample_2d_sql(
-    rates_2d_ppm: dict[tuple[str, str], int] | None = None,
-    lang_rates_ppm: dict[str, int] | None = None,
-    default_ppm: int = 125_000,
-) -> str:
-    """Twin of curation.stratified_sample_2d: nested CASE — (lang, source)
-    override, then per-lang rate, then default — over the same hash bucket."""
-    from .operators.curation import DEFAULT_RATES_2D_PPM, DEFAULT_RATES_PPM
-
-    rates2 = DEFAULT_RATES_2D_PPM if rates_2d_ppm is None else rates_2d_ppm
-    lang_rates = DEFAULT_RATES_PPM if lang_rates_ppm is None else lang_rates_ppm
-    lang_case = "CASE lang " + " ".join(
-        f"WHEN '{lang}' THEN {ppm}" for lang, ppm in sorted(lang_rates.items())
-    ) + f" ELSE {default_ppm} END"
-    pair_case = "CASE " + " ".join(
-        f"WHEN lang = '{lang}' AND source = '{source}' THEN {ppm}"
-        for (lang, source), ppm in sorted(rates2.items())
-    ) + f" ELSE {lang_case} END"
-    return f"""
-SELECT doc_id, lang, source, bucket_ppm, rate_ppm FROM (
-  SELECT doc_id, lang, source,
-         CAST({_CURATION_HASH} AS BIGINT) AS bucket_ppm,
-         CAST({pair_case} AS BIGINT) AS rate_ppm
-  FROM documents
-) WHERE bucket_ppm < rate_ppm
-"""
-
-
-def stratified_budget_sql(
-    budgets: dict[str, int] | None = None, default_budget: int = 5
-) -> str:
-    """Twin of curation.stratified_budget: per-stratum row_number over
-    (bucket_ppm, doc_id), kept while rank <= budget."""
-    from .operators.curation import DEFAULT_BUDGETS
-
-    bud = DEFAULT_BUDGETS if budgets is None else budgets
-    case = "CASE lang " + " ".join(
-        f"WHEN '{lang}' THEN {b}" for lang, b in sorted(bud.items())
-    ) + f" ELSE {default_budget} END"
-    return f"""
-SELECT doc_id, lang, source, bucket_ppm, stratum_rank, budget_n FROM (
-  SELECT doc_id, lang, source, bucket_ppm, budget_n,
-         CAST(ROW_NUMBER() OVER (
-           PARTITION BY lang ORDER BY bucket_ppm, doc_id) AS BIGINT)
-           AS stratum_rank
-  FROM (
-    SELECT doc_id, lang, source,
-           CAST({_CURATION_HASH} AS BIGINT) AS bucket_ppm,
-           CAST({case} AS BIGINT) AS budget_n
-    FROM documents
-  )
-) WHERE stratum_rank <= budget_n
-"""
-
-
-def decontaminate_sql(
-    n: int = 4, eval_from_ppm: int = 950_000, min_hits: int = 1
-) -> str:
-    """Twin of curation.decontaminate: md5 word n-grams, eval stratum =
-    top hash slice, hit positions counted against the DISTINCT eval set."""
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         CAST({_CURATION_HASH} AS BIGINT) AS bucket_ppm,
-         string_split(text, ' ') AS w
-  FROM documents
-),
-g AS (
-  SELECT doc_id, bucket_ppm,
-         [md5(array_to_string(list_slice(w, j + 1, j + {n}), ' '))
-          for j in range(greatest(len(w) - {n}, 0) + 1)] AS grams
-  FROM d
-),
-ev AS (
-  SELECT DISTINCT u.g AS gram
-  FROM g, UNNEST(grams) AS u(g) WHERE bucket_ppm >= {eval_from_ppm}
-),
-tr AS (
-  SELECT doc_id, len(grams) AS n_grams, u.g AS gram
-  FROM g, UNNEST(grams) AS u(g) WHERE bucket_ppm < {eval_from_ppm}
-),
-h AS (
-  SELECT tr.doc_id, count(*) AS hit_grams, min(tr.n_grams) AS n_grams
-  FROM tr JOIN ev ON ev.gram = tr.gram GROUP BY tr.doc_id
-)
-SELECT doc_id,
-       CAST(hit_grams AS BIGINT) AS hit_grams,
-       CAST(n_grams AS BIGINT) AS n_grams,
-       CAST(hit_grams * 1000000 // n_grams AS BIGINT) AS contam_ppm
-FROM h WHERE hit_grams >= {min_hits}
-"""
-
-
 def repetition_sql() -> str:
     """Twin of textstats.repetition_scores: most-frequent 2-gram share +
     duplicated 3-gram position fraction, exact integers."""
@@ -689,175 +570,6 @@ FROM sz s LEFT JOIN cov c USING (doc_id)
 """
 
 
-def quality_gate_sql() -> str:
-    """Twin of curation.quality_gate: Gopher-rule composite filter with
-    named violation reasons."""
-    from .operators.curation import (
-        GATE_MAX_DUP3GRAM_PPM,
-        GATE_MAX_TOKENS,
-        GATE_MAX_TOP2GRAM_PPM,
-        GATE_MAX_AVG_TOKEN_LEN_PPM,
-        GATE_MIN_AVG_TOKEN_LEN_PPM,
-        GATE_MIN_DISTINCT_PPM,
-        GATE_MIN_TOKENS,
-    )
-    from .operators.textstats import STOPWORDS
-
-    lst = ", ".join(f"'{s}'" for s in STOPWORDS)
-    rules = [
-        ("too_short", f"n_tokens < {GATE_MIN_TOKENS}"),
-        ("too_long", f"n_tokens > {GATE_MAX_TOKENS}"),
-        (
-            "bad_token_len",
-            f"avg_len_ppm < {GATE_MIN_AVG_TOKEN_LEN_PPM}"
-            f" OR avg_len_ppm > {GATE_MAX_AVG_TOKEN_LEN_PPM}",
-        ),
-        ("no_stopwords", "stopword_ppm = 0"),
-        ("low_diversity", f"distinct_ratio_ppm < {GATE_MIN_DISTINCT_PPM}"),
-        ("top2gram", f"top2gram_ppm > {GATE_MAX_TOP2GRAM_PPM}"),
-        ("dup3gram", f"dup3gram_ppm > {GATE_MAX_DUP3GRAM_PPM}"),
-    ]
-    reason_cols = ", ".join(
-        f"CASE WHEN {cond} THEN '{name}' END" for name, cond in rules
-    )
-    any_bad = " OR ".join(c for _, c in rules)
-    return f"""
-WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
-base AS (
-  SELECT doc_id,
-         CAST(len(w) AS BIGINT) AS n_tokens,
-         len(list_filter(w, x -> x IN ({lst}))) * 1000000::BIGINT // len(w)
-           AS stopword_ppm,
-         len(list_distinct(w)) * 1000000::BIGINT // len(w)
-           AS distinct_ratio_ppm,
-         (length(text) - len(w) + 1) * 1000000::BIGINT // len(w)
-           AS avg_len_ppm
-  FROM d
-),
-g2 AS (
-  SELECT doc_id, u.g AS gram FROM (
-    SELECT doc_id,
-           [array_to_string(list_slice(w, j + 1, j + 2), ' ')
-            for j in range(greatest(len(w) - 2, 0) + 1)] AS gs
-    FROM d), UNNEST(gs) AS u(g)
-),
-c2 AS (SELECT doc_id, gram, count(*) AS cnt FROM g2 GROUP BY doc_id, gram),
-top2 AS (
-  SELECT doc_id, cnt FROM (
-    SELECT doc_id, cnt,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY cnt DESC, gram ASC) AS rn
-    FROM c2) WHERE rn = 1
-),
-g3 AS (
-  SELECT doc_id, u.g AS gram FROM (
-    SELECT doc_id,
-           [array_to_string(list_slice(w, j + 1, j + 3), ' ')
-            for j in range(greatest(len(w) - 3, 0) + 1)] AS gs
-    FROM d), UNNEST(gs) AS u(g)
-),
-c3 AS (SELECT doc_id, gram, count(*) AS cnt FROM g3 GROUP BY doc_id, gram),
-dup3 AS (
-  SELECT doc_id,
-         COALESCE(SUM(CASE WHEN cnt >= 2 THEN cnt END), 0) AS dup_pos,
-         SUM(cnt) AS tot3
-  FROM c3 GROUP BY doc_id
-),
-sz AS (SELECT doc_id, greatest(len(w) - 2, 0) + 1 AS tot2 FROM d),
-rep AS (
-  SELECT t.doc_id,
-         CAST(t.cnt * 1000000 // s.tot2 AS BIGINT) AS top2gram_ppm,
-         CAST(d3.dup_pos * 1000000 // d3.tot3 AS BIGINT) AS dup3gram_ppm
-  FROM top2 t JOIN sz s USING (doc_id) JOIN dup3 d3 USING (doc_id)
-),
-j AS (SELECT * FROM base JOIN rep USING (doc_id))
-SELECT doc_id, n_tokens, stopword_ppm, distinct_ratio_ppm,
-       top2gram_ppm, dup3gram_ppm,
-       CAST(CASE WHEN {any_bad} THEN 0 ELSE 1 END AS BIGINT) AS keep,
-       concat_ws(',', {reason_cols}) AS reasons
-FROM j
-"""
-
-
-def sessionize_sql(gap_us: int = 1_800_000_000) -> str:
-    """Twin of events.sessionize: gap sessions via lag + running flag sum."""
-    return f"""
-WITH e AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
-),
-t AS (
-  SELECT user_id, event_id, ts_us,
-         CASE WHEN prev_us IS NULL OR ts_us - prev_us > {gap_us}
-              THEN 1 ELSE 0 END AS new_sess
-  FROM (SELECT user_id, event_id, ts_us,
-               lag(ts_us) OVER (PARTITION BY user_id
-                                ORDER BY ts_us, event_id) AS prev_us
-        FROM e)
-),
-s AS (
-  SELECT user_id, ts_us,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                             ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM t
-)
-SELECT user_id,
-       CAST(session_idx AS BIGINT) AS session_idx,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(min(ts_us) AS BIGINT) AS first_us,
-       CAST(max(ts_us) AS BIGINT) AS last_us,
-       CAST(max(ts_us) - min(ts_us) AS BIGINT) AS duration_us
-FROM s GROUP BY user_id, session_idx
-"""
-
-
-def pack_interleaved_sql(
-    budget: int = 512, image_tokens: int = 64, shards: int = 8
-) -> str:
-    """Twin of curation.pack_interleaved: interleaved text+media packing
-    over the spans relation (oracle.py's shared CTE prefix)."""
-    from .oracle import q
-
-    return q(f"""
-SELECT doc_id, span_offset, kind, media_ref, shard, cost_tokens,
-       CAST(start // {budget} AS BIGINT) AS seq_id,
-       CAST(start % {budget} AS BIGINT) AS offset_tokens
-FROM (
-  SELECT doc_id, span_offset, kind, media_ref, shard, cost_tokens,
-         COALESCE(SUM(cost_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id, span_offset
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM (
-    SELECT doc_id, "offset" AS span_offset, kind, media_ref,
-           CAST(substr(doc_id, 4) AS BIGINT) % {shards} AS shard,
-           CAST(CASE WHEN kind = 'image' THEN {image_tokens}
-                     ELSE len(string_split(text, ' ')) END AS BIGINT)
-             AS cost_tokens
-    FROM spans))
-""")
-
-
-def pack_sequences_sql(budget: int = 256, shards: int = 8) -> str:
-    """Twin of curation.pack_sequences: per-shard running token sum in
-    doc_id order, cut into fixed-budget sequences."""
-    return f"""
-SELECT doc_id, shard, n_tokens,
-       start // {budget} AS seq_id,
-       start % {budget} AS offset_tokens
-FROM (
-  SELECT doc_id, shard, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-           PARTITION BY shard ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS start
-  FROM (
-    SELECT doc_id, doc_id % {shards} AS shard,
-           len(string_split(text, ' ')) AS n_tokens
-    FROM documents
-  )
-)
-"""
-
-
 def bm25_sql(k: int = 10, n_query_terms: int = 3) -> str:
     """Twin of textstats.bm25_topk: rarest-terms query set, raw-ratio integer
     IDF, integer-cleared tf saturation (k1=1.2, b=0.75). All-integer => exact
@@ -888,35 +600,6 @@ SELECT term, doc_id, tf, df, score_ppm, rnk FROM (
 """
 
 
-def domain_mix_sql() -> str:
-    """Twin of curation.domain_mix: rank-proportional target shares, exact
-    integer ppm resampling rates (`//` == Spark `div` on non-negatives)."""
-    return """
-WITH per AS (
-  SELECT source,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-),
-ranked AS (
-  SELECT source, n_docs, n_tokens,
-         ROW_NUMBER() OVER (ORDER BY source) AS rnk,
-         COUNT(*) OVER () AS k,
-         SUM(n_tokens) OVER () AS total_tokens
-  FROM per
-)
-SELECT source, n_docs, n_tokens,
-       CAST(rnk * 2000000 // (k * (k + 1)) AS BIGINT) AS target_ppm,
-       CAST(total_tokens * (rnk * 2000000 // (k * (k + 1))) // 1000000
-            AS BIGINT) AS target_tokens,
-       CAST(least(1000000, total_tokens * (rnk * 2000000 // (k * (k + 1)))
-            // 1000000 * 1000000 // n_tokens) AS BIGINT) AS rate_ppm,
-       CAST(total_tokens * (rnk * 2000000 // (k * (k + 1)))
-            // 1000000 * 1000000 // n_tokens AS BIGINT) AS epochs_ppm
-FROM ranked
-"""
-
-
 def paragraph_dedup_sql(para_words: int = 16) -> str:
     """Twin of dedup.paragraph_dedup: identical block split, md5 hash, and
     keep-first occurrence rank by (doc_id, para_idx)."""
@@ -941,80 +624,6 @@ SELECT doc_id,
        CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) * 1000000 // COUNT(*)
             AS BIGINT) AS dup_ppm
 FROM flagged GROUP BY doc_id
-"""
-
-
-def dsir_sql(n: int = 2, buckets: int = 4096, target_lang: str = "en") -> str:
-    """Twin of curation.dsir_weights: identical md5 bucket hash, add-one
-    smoothed importance ratios in integer ppm, per-doc mean."""
-    return f"""
-WITH base AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-grams AS (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5(array_to_string(
-            w[g.j + 1 : g.j + {n}], ' ')), 1, 15))::BIGINT % {buckets} AS b
-  FROM base, UNNEST(generate_series(0, len(w) - {n})) AS g(j)
-  WHERE len(w) >= {n}
-),
-stats AS (
-  SELECT b,
-         COUNT(*) AS cr,
-         SUM(CASE WHEN lang = '{target_lang}' THEN 1 ELSE 0 END) AS ct,
-         SUM(COUNT(*)) OVER () AS r_tot,
-         SUM(SUM(CASE WHEN lang = '{target_lang}' THEN 1 ELSE 0 END))
-           OVER () AS t_tot
-  FROM grams GROUP BY b
-),
-ratios AS (
-  SELECT b,
-         (ct + 1) * (r_tot + {buckets}) * 1000000
-           // ((cr + 1) * (t_tot + {buckets})) AS ratio_ppm
-  FROM stats
-),
-per_doc AS (
-  SELECT doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_grams,
-         CAST(SUM(ratio_ppm) AS BIGINT) AS sum_ratio_ppm
-  FROM grams JOIN ratios USING (b) GROUP BY doc_id
-),
-mean AS (
-  SELECT SUM(sum_ratio_ppm) // SUM(n_grams) AS mean_ppm FROM per_doc
-)
-SELECT d.doc_id, d.lang,
-       COALESCE(p.n_grams, 0) AS n_grams,
-       COALESCE(p.sum_ratio_ppm, 0) AS sum_ratio_ppm,
-       CAST(COALESCE(p.sum_ratio_ppm, 0)
-            // greatest(COALESCE(p.n_grams, 0), 1) AS BIGINT)
-         AS avg_ratio_ppm,
-       CAST(CASE WHEN COALESCE(p.sum_ratio_ppm, 0)
-                      // greatest(COALESCE(p.n_grams, 0), 1) >= m.mean_ppm
-                 THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM (SELECT doc_id, lang FROM documents) d
-LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-CROSS JOIN mean m
-"""
-
-
-def hopping_rollup_sql(
-    width_us: int = 3_600_000_000, hop_us: int = 900_000_000
-) -> str:
-    """Twin of events.hopping_rollup: window-instance explode via
-    generate_series, identical integer bucket arithmetic."""
-    return f"""
-WITH inst AS (
-  SELECT g.s AS win_start_us, event_type, user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events,
-       UNNEST(generate_series(
-         epoch_us(ts) - epoch_us(ts) % {hop_us} - {width_us - hop_us},
-         epoch_us(ts) - epoch_us(ts) % {hop_us},
-         {hop_us})) AS g(s)
-)
-SELECT win_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(SUM(cents) AS BIGINT) AS sum_value_cents
-FROM inst GROUP BY win_start_us, event_type
 """
 
 
@@ -1097,77 +706,6 @@ SELECT doc_id,
        CAST(1000000 - SUM(c * c) * 1000000 // (SUM(c) * SUM(c)) AS BIGINT)
          AS gini_ppm
 FROM counts GROUP BY doc_id
-"""
-
-
-def curation_funnel_sql() -> str:
-    """Twin of curation.curation_funnel: the three stage twins composed as
-    CTEs (each stage's own oracle SQL verbatim), sequential attribution."""
-    return f"""
-WITH q AS ({quality_gate_sql()}),
-dd AS ({dup_exact_sql()}),
-samp AS ({stratified_sample_sql()})
-SELECT d.doc_id, d.lang, d.source,
-       q.keep AS q_keep,
-       CAST(CASE WHEN dd.doc_id IS NULL THEN 1 ELSE 0 END AS BIGINT)
-         AS dedup_keep,
-       CAST(CASE WHEN samp.doc_id IS NULL THEN 0 ELSE 1 END AS BIGINT)
-         AS sample_keep,
-       CAST(CASE WHEN q.keep = 1 AND dd.doc_id IS NULL
-                      AND samp.doc_id IS NOT NULL
-                 THEN 1 ELSE 0 END AS BIGINT) AS final_keep,
-       CASE WHEN q.keep = 0 THEN 'quality'
-            WHEN dd.doc_id IS NOT NULL THEN 'duplicate'
-            WHEN samp.doc_id IS NULL THEN 'sample'
-            ELSE 'kept' END AS stage
-FROM documents d
-JOIN q ON d.doc_id = q.doc_id
-LEFT JOIN dd ON d.doc_id = dd.doc_id
-LEFT JOIN samp ON d.doc_id = samp.doc_id
-"""
-
-
-def pii_sql() -> str:
-    """Twin of curation.pii_scrub over curation.pii_seeded_docs: identical
-    doc_id-seeded PII spans, RE2 patterns from the same Java∩RE2 subset,
-    and the same email → ip → phone redaction order ('g' = global, the
-    Java-regexp_replace default)."""
-    from .operators.curation import PII_EMAIL, PII_IPV4, PII_PHONE
-
-    return f"""
-WITH seeded AS (
-  SELECT doc_id,
-         concat(text,
-           CASE WHEN doc_id % 3 = 0
-                THEN concat(' contact user', CAST(doc_id AS VARCHAR),
-                            '@example.com for details') ELSE '' END,
-           CASE WHEN doc_id % 5 = 0
-                THEN concat(' node at 10.', CAST(doc_id % 256 AS VARCHAR),
-                            '.', CAST((doc_id // 7) % 256 AS VARCHAR),
-                            '.', CAST(doc_id % 250 AS VARCHAR)) ELSE '' END,
-           CASE WHEN doc_id % 7 = 0
-                THEN concat(' call +1-555-',
-                            lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
-                            ' now') ELSE '' END) AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{PII_EMAIL}')) AS BIGINT)
-         AS n_emails,
-       CAST(len(regexp_extract_all(text, '{PII_IPV4}')) AS BIGINT)
-         AS n_ipv4,
-       CAST(len(regexp_extract_all(text, '{PII_PHONE}')) AS BIGINT)
-         AS n_phones,
-       CAST(len(regexp_extract_all(text, '{PII_EMAIL}'))
-            + len(regexp_extract_all(text, '{PII_IPV4}'))
-            + len(regexp_extract_all(text, '{PII_PHONE}')) AS BIGINT)
-         AS n_pii,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(text, '{PII_EMAIL}', '<EMAIL>', 'g'),
-           '{PII_IPV4}', '<IP>', 'g'),
-         '{PII_PHONE}', '<PHONE>', 'g') AS redacted
-FROM seeded
 """
 
 
@@ -1260,76 +798,6 @@ reach(x, y) AS (
   SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
 )
 SELECT x AS vec_id, min(y) AS cluster_rep FROM reach GROUP BY x
-"""
-
-
-def url_normalize_sql() -> str:
-    """Twin of curation.url_normalize over curation.url_seeded_docs:
-    identical seeded URLs (same doc_id arithmetic and CASE precedence) and
-    the same canonicalization chain. DuckDB regexp_replace needs the 'g'
-    flag (Spark's is global by default) and \\1 backrefs (Spark: $1)."""
-    return r"""
-WITH seeded AS (
-  SELECT doc_id,
-         concat(
-           CASE WHEN doc_id % 2 = 0 THEN 'http://' ELSE 'https://' END,
-           CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END,
-           CASE WHEN doc_id % 5 = 0
-             THEN concat('SITE', CAST(doc_id % 50 AS VARCHAR), '.EXAMPLE.ORG')
-             ELSE concat('site', CAST(doc_id % 50 AS VARCHAR), '.example.org')
-           END,
-           CASE WHEN doc_id % 13 = 0 THEN ':80' ELSE '' END,
-           '/p/', CAST(doc_id % 100 AS VARCHAR),
-           CASE WHEN doc_id % 7 = 0 THEN '/' ELSE '' END,
-           CASE WHEN doc_id % 4 = 0 THEN '?utm_source=feed&utm_medium=rss'
-                WHEN doc_id % 9 = 0 THEN '?gclid=abc&b=2&a=1'
-                WHEN doc_id % 6 = 0 THEN '?ref=home&utm_campaign=x'
-                ELSE '' END,
-           CASE WHEN doc_id % 11 = 0 THEN '#section-2' ELSE '' END) AS url
-  FROM documents
-),
-s1 AS (
-  SELECT doc_id, url,
-         regexp_replace(regexp_replace(url, '^https?://', ''),
-                        '^www\.', '') AS u1
-  FROM seeded
-),
-s2 AS (
-  SELECT doc_id, url,
-         regexp_extract(u1, '^([^/?#]*)', 1) AS hostport,
-         regexp_extract(u1, '^[^/?#]*([^?#]*)', 1) AS path,
-         regexp_extract(u1, '\?([^#]*)', 1) AS query
-  FROM s1
-),
-s3 AS (
-  SELECT doc_id, url,
-         lower(regexp_replace(hostport, ':(80|443)$', '')) AS host,
-         CASE WHEN path IN ('', '/') THEN ''
-              ELSE regexp_replace(path, '/$', '') END AS path,
-         regexp_replace(
-           regexp_replace(query, '(^|&)(utm_[a-z]+|fbclid|gclid)=[^&]*',
-                          '\1', 'g'),
-           '&+', '&', 'g') AS q0
-  FROM s2
-),
-s4 AS (
-  SELECT doc_id, url, host, path,
-         array_to_string(
-           list_sort(string_split(
-             regexp_replace(q0, '^&|&$', '', 'g'), '&')), '&') AS q1
-  FROM s3
-),
-canon AS (
-  SELECT doc_id, url,
-         concat(host, path,
-                CASE WHEN q1 = '' THEN '' ELSE concat('?', q1) END)
-           AS canonical_url
-  FROM s4
-)
-SELECT doc_id, url, canonical_url,
-       CAST(row_number() OVER (PARTITION BY canonical_url ORDER BY doc_id)
-            AS BIGINT) AS dup_rank
-FROM canon
 """
 
 
@@ -1439,27 +907,6 @@ SELECT "left", "right", n_pairs, rnk FROM (
                  AS BIGINT) AS rnk
   FROM counts
 ) WHERE rnk <= {k}
-"""
-
-
-def token_budget_mix_sql(budget_tokens: int = 500) -> str:
-    """Twin of curation.token_budget_mix: identical md5 shuffle rank and
-    closed-prefix running-sum admission."""
-    return f"""
-WITH toks AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         md5(CAST(doc_id AS VARCHAR)) AS rk
-  FROM documents
-)
-SELECT doc_id, source, n_tokens,
-       CAST(SUM(n_tokens) OVER (PARTITION BY source ORDER BY rk, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS cum_tokens,
-       SUM(n_tokens) OVER (PARTITION BY source ORDER BY rk, doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         <= {budget_tokens} AS kept
-FROM toks
 """
 
 

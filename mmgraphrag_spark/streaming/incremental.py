@@ -8,12 +8,8 @@ when documents arrive as a feed:
   stream of documents drives chunk → extract → append-to-mentions via
   ``foreachBatch``; each micro-batch reuses the exact batch operators, so
   stream results equal batch results by construction (tested).
-* ``windowed_event_counts`` — the generic streaming demo over the events
-  table: event-time tumbling or hopping windows with a watermark for late
-  data.
 * ``stream_near_duplicates`` — a near-duplicate admission gate over a
   document stream.
-* ``stream_sessions`` — a stateful gap sessionizer over the events table.
 
 All run with ``Trigger.AvailableNow`` in tests (drain-and-stop), the
 recommended pattern for backfill + incremental jobs.
@@ -77,48 +73,6 @@ def _read_state(
     )
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string,"
-    " value double, props string"
-)
-
-
-def windowed_event_counts(
-    spark: SparkSession, events_dir: str, window: str = "1 hour",
-    watermark: str = "2 hours", slide: str | None = None,
-) -> DataFrame:
-    """Streaming event-time windowed aggregation with late-data watermark.
-    Pass ``slide`` < ``window`` for HOPPING windows (each event lands in
-    window/slide overlapping instances — the streaming form of
-    operators/events.hopping_rollup, whose batch explode is the exact twin
-    Structured Streaming maintains incrementally as per-instance state)."""
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide or window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type", "n", "total_value",
-        )
-    )
-    return stream
-
-
-def batch_event_counts(
-    spark: SparkSession, events_path: str, window: str = "1 hour",
-    slide: str | None = None,
-) -> DataFrame:
-    """Batch twin of windowed_event_counts (the correctness yardstick)."""
-    return (
-        spark.read.parquet(events_path)
-        .groupBy(F.window("ts", window, slide or window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type", "n", "total_value",
-        )
-    )
 
 
 def stream_extract(
@@ -338,86 +292,3 @@ def near_dup_process_batch(
     buckets.join(admit_ids, "doc_id", "left_semi").write.mode(
         "overwrite"
     ).parquet(f"{store_path}/{part}")
-
-
-
-def stream_sessions(
-    spark: SparkSession, events_dir: str, gap_us: int = 1_800_000_000
-) -> DataFrame:
-    """Stateful streaming sessionizer (applyInPandasWithState) — the online
-    twin of ``operators/events.sessionize``.
-
-    State per user = the OPEN session (start_us, last_us, n_events,
-    session_idx). Each micro-batch folds the user's new events in event-time
-    order: a gap > ``gap_us`` CLOSES the open session (emitted downstream —
-    append mode) and opens the next. The final open session stays in state —
-    exactly the tail a production sessionizer holds back until the
-    watermark expires it — so emissions are identical no matter how the
-    feed splits into micro-batches, and a restarted query resumes mid-
-    session from the checkpointed state store (tested).
-
-    The fold is VECTORIZED inside each Arrow batch (numpy diff -> cumsum
-    segment ids -> one pandas groupby); Python touches one row per
-    *session*, not per event. Assumes per-user event-time-ordered arrival
-    across micro-batches (the standard sessionizer contract; reorder with a
-    watermarked sort upstream if the feed interleaves).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fold(key, pdfs, state: GroupState):
-        parts = [pdf[["ts_us"]] for pdf in pdfs]
-        ts = (
-            pd.concat(parts).sort_values("ts_us")["ts_us"]
-            .to_numpy(dtype="int64")
-        )
-        if state.exists:
-            idx0, start0, last0, n0 = state.get
-            open_sess = [idx0, n0, start0, last0]
-        else:
-            idx0, open_sess = 0, None
-        prev = np.empty_like(ts)
-        prev[1:] = ts[:-1]
-        prev[0] = open_sess[3] if open_sess is not None else ts[0] - gap_us - 1
-        seg = np.cumsum((ts - prev) > gap_us)
-        stats = (
-            pd.DataFrame({"seg": seg, "ts": ts})
-            .groupby("seg")["ts"].agg(["count", "min", "max"]).reset_index()
-        )
-        closed, idx = [], idx0
-        for _seg, cnt, mn, mx in stats.itertuples(index=False):
-            if _seg == 0:
-                open_sess[1] += int(cnt)
-                open_sess[3] = int(mx)
-                continue
-            if open_sess is not None:
-                closed.append(open_sess)
-            idx += 1
-            open_sess = [idx, int(cnt), int(mn), int(mx)]
-        state.update((open_sess[0], open_sess[2], open_sess[3], open_sess[1]))
-        if closed:
-            out = pd.DataFrame(
-                closed, columns=["session_idx", "n_events", "first_us", "last_us"]
-            )
-            out.insert(0, "user_id", key[0])
-            out["duration_us"] = out["last_us"] - out["first_us"]
-            yield out
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
-        .select(
-            "user_id",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
-    )
-    return stream.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=(
-            "user_id long, session_idx long, n_events long, first_us long,"
-            " last_us long, duration_us long"
-        ),
-        stateStructType="idx long, start_us long, last_us long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 from conftest import SF_TINY
 
+import __spark_entry__ as entrymod
 from mmgraphrag_spark import oracle
 from mmgraphrag_spark.config import DEFAULT
 from mmgraphrag_spark.operators import canonicalize as canon
@@ -18,6 +19,14 @@ KG_TABLES = [
     "kg_img_triples", "kg_nodes", "kg_edges", "kg_merge_map", "kg_clusters",
     "kg_fused_nodes", "kg_fused_edges",
 ]
+
+
+def test_registry_pairs_every_query_with_its_oracle():
+    """Every oracle names a registered query, and every query has an oracle
+    except the two non-SQL ones (checked by row count and by golden pins)."""
+    qs, os_ = set(entrymod.queries()), set(entrymod.oracle_sql())
+    assert qs - os_ == {"kg_spectral", "ann_ivf_kmeans_topk"}
+    assert os_ <= qs
 
 
 @pytest.fixture(scope="module")

@@ -11,36 +11,6 @@ from pyspark.sql import functions as F
 from mmgraphrag_spark.streaming import incremental
 
 
-def test_windowed_event_counts_stream_equals_batch(spark, tmp_path):
-    # stream source must be a directory of parquet files
-    src = str(tmp_path / "events_src")
-    spark.read.parquet(f"{SF_TINY}/events.parquet").write.parquet(src)
-
-    q = (
-        incremental.windowed_event_counts(spark, src)
-        .writeStream.format("memory")
-        .queryName("evt_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.sql("select * from evt_counts").toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    want = (
-        incremental.batch_event_counts(spark, src).toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    # append mode with availableNow emits only windows older than the
-    # watermark; on a drained finite source Spark finalizes all of them
-    assert len(got) > 0
-    merged = got.merge(want, on=["window_start", "event_type"], suffixes=("_s", "_b"))
-    assert (merged["n_s"] == merged["n_b"]).all()
-    assert len(got) <= len(want)
-
-
 def test_stream_extract_matches_batch(spark, tmp_path):
     src = str(tmp_path / "docs_src")
     out = str(tmp_path / "out")
@@ -228,134 +198,3 @@ def test_near_dup_gate_micro_batch_replay_is_idempotent(spark, tmp_path):
     assert {
         r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
     } == admitted0
-
-
-def test_stream_sessions_equals_batch_closed_sessions_and_resumes(spark, tmp_path):
-    """Stateful sessionizer: emitted (closed) sessions equal the batch
-    twin's non-final sessions per user — on the first slice of the feed AND
-    after a restart over newly-arrived later events (open sessions straddle
-    the restart via the checkpointed state store)."""
-    from mmgraphrag_spark.operators import events as ev_ops
-
-    src = str(tmp_path / "events_src")
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sessions_sink")
-
-    ev = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    cutoff = ev.selectExpr("percentile(unix_micros(cast(ts as timestamp)), 0.6) p").first()["p"]
-    first = ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) < cutoff)
-    rest = ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) >= cutoff)
-    assert first.count() > 0 and rest.count() > 0
-    first.write.mode("append").parquet(src)
-
-    def drain():
-        q = (
-            incremental.stream_sessions(spark, src)
-            .writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("append").parquet(sink)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        try:
-            return (
-                spark.read.parquet(sink).toPandas()
-                .sort_values(["user_id", "session_idx"]).reset_index(drop=True)
-            )
-        except Exception:
-            import pandas as pd
-
-            return pd.DataFrame(
-                columns=["user_id", "session_idx", "n_events",
-                         "first_us", "last_us", "duration_us"])
-
-    def batch_closed(df):
-        """Batch twin restricted to CLOSED sessions: drop each user's last
-        (still-open) session."""
-        s = ev_ops.sessionize(df).toPandas()
-        last = s.groupby("user_id")["session_idx"].transform("max")
-        return (
-            s[s["session_idx"] < last]
-            .sort_values(["user_id", "session_idx"]).reset_index(drop=True)
-        )
-
-    got1 = drain()
-    want1 = batch_closed(first)
-    assert got1.to_dict("records") == want1.to_dict("records")
-
-    rest.write.mode("append").parquet(src)
-    got2 = drain()
-    want2 = batch_closed(ev)
-    assert got2.to_dict("records") == want2.to_dict("records")
-    # the restart must have CLOSED at least one session that was open in
-    # state at the end of run 1 (i.e. run 2 emitted something new)
-    assert len(got2) > len(got1)
-
-
-def test_hopping_windowed_counts_stream_equals_batch_and_explode_twin(
-    spark, tmp_path
-):
-    """Hopping windows (1 h sliding by 15 min): the streaming agg, its batch
-    F.window twin, and operators/events.hopping_rollup's explode form all
-    produce the same relation."""
-    import datetime
-
-    src = str(tmp_path / "events_hop_src")
-    spark.read.parquet(f"{SF_TINY}/events.parquet").write.parquet(src)
-
-    q = (
-        incremental.windowed_event_counts(
-            spark, src, window="1 hour", slide="15 minutes"
-        )
-        .writeStream.format("memory")
-        .queryName("evt_hop")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.sql("select * from evt_hop").toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    want = (
-        incremental.batch_event_counts(
-            spark, src, window="1 hour", slide="15 minutes"
-        ).toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    assert len(got) > 0
-    merged = got.merge(
-        want, on=["window_start", "event_type"], suffixes=("_s", "_b")
-    )
-    # append mode emits only watermark-finalized window instances: the
-    # emitted set is a prefix-subset of the batch relation (the unemitted
-    # remainder is the trailing horizon) and every emitted value agrees
-    assert len(merged) == len(got) <= len(want)
-    assert (merged["n_s"] == merged["n_b"]).all()
-    unemitted = want.merge(
-        got[["window_start", "event_type"]],
-        on=["window_start", "event_type"],
-        how="left",
-        indicator=True,
-    )
-    late = unemitted[unemitted["_merge"] == "left_only"]["window_start"]
-    assert late.min() > got["window_start"].max() - datetime.timedelta(hours=3)
-    # the explode-form batch operator (epoch-µs buckets) agrees on counts
-    from mmgraphrag_spark.operators import events as ev
-
-    explode_counts = {
-        (
-            datetime.datetime.utcfromtimestamp(r.win_start_us / 1_000_000),
-            r.event_type,
-        ): r.n_events
-        for r in ev.hopping_rollup(spark.read.parquet(src)).collect()
-    }
-    batch_counts = {
-        (r.window_start, r.event_type): r.n
-        for r in want.itertuples(index=False)
-    }
-    assert explode_counts == batch_counts
