@@ -18,7 +18,8 @@ REF_CONTENT_LIST = (
     "/root/reference/example_input/mineru_result/2020.acl-main.45/auto/"
     "2020.acl-main.45_content_list.json"
 )
-REF_PDF = "/root/reference/example_input/2020.acl-main.45.pdf"
+# the example paper's PDF sits beside its MinerU result
+REF_PDF = REF_CONTENT_LIST.split("mineru_result/")[0] + "2020.acl-main.45.pdf"
 
 needs_ref_content_list = pytest.mark.skipif(
     not os.path.exists(REF_CONTENT_LIST), reason="reference fixtures not present"
