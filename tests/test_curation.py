@@ -1,6 +1,9 @@
 """Text statistics over the documents table: TF-IDF keywords, repetition
 signals, BM25 retrieval, bigram-LM scores and hapax profiles — engine vs
-pure-Python twins and the operators' contracts."""
+pure-Python twins and the operators' contracts.
+
+The curation operators these tests once shared a file with are deleted; the
+file keeps its name so the textstats tests keep theirs."""
 
 from __future__ import annotations
 
