@@ -143,12 +143,6 @@ def assemble_graphml(out_dir: str, path: str) -> None:
         f.write(Path(out_dir, "footer.xml").read_text(encoding="utf-8"))
 
 
-def read_graphml_counts(path: str) -> tuple[int, int]:
-    """S5 (parity helper): node/edge counts from a GraphML file."""
-    nodes, edges = read_graphml(path)
-    return len(nodes), len(edges)
-
-
 def read_graphml(path: str) -> tuple[list[dict], list[dict]]:
     """S5: full GraphML reader -> (nodes, edges) as lists of plain dicts.
 

@@ -6,13 +6,19 @@ with table-per-stage checkpoints:
 
 * every stage writes its output as a parquet table under ``work_dir``
   (the layout is the Iceberg-table layout; the sandbox has no Iceberg runtime
-  jar, so the parquet directory + _SUCCESS marker stands in — swap the writer
-  for ``df.writeTo(...)`` on a cluster with an Iceberg catalog);
-* every stage appends a **lineage** row (stage, run_id, rows_out, wall_ms,
-  started_at, inputs) and per-partition **metrics** rows
-  (stage, partition_id, rows) — the north_rule observability surface;
-* ``run(resume=True)`` skips any stage whose outputs are complete, so a
-  killed run relaunches mid-pipeline (tested in tests/test_pipeline.py).
+  jar, so the parquet directory + _SUCCESS marker stands in — on a cluster
+  with an Iceberg catalog, swap the writer call in ``_write`` for
+  ``df.writeTo(...)`` and the reader call in ``read``);
+* once all its tables are written, a stage commits its per-partition
+  **metrics** rows (stage = table, partition_id, rows) to
+  ``_metrics/<stage>.parquet`` and then one **lineage** row per output
+  (stage, run_id, rows_out, wall_ms, started_at, inputs) to
+  ``_lineage/<stage>.parquet`` — the north_rule observability surface,
+  durable as soon as the stage is; a rerun stage replaces its own files;
+* ``run(resume=True)`` skips a stage only when every output has its
+  ``_SUCCESS`` marker AND the stage's lineage file exists, so a run killed
+  anywhere, SIGKILL included, relaunches mid-pipeline with one lineage row
+  per output (tested in tests/test_pipeline.py).
 
 DAG, one line per stage: ``stage{output tables} <- dependency stages``
 (every edge is a parquet checkpoint):
@@ -78,16 +84,6 @@ class Pipeline:
     #   ("docx",   ".../*.docx")                    sources/docx.py
     #   ("pdf",    ".../*.pdf")                     sources/pdf.py
     source: tuple[str, str] | None = None
-    # Checkpoint table format. The engine is format-agnostic: every stage
-    # writes/reads through DataFrameWriter/Reader.format(...), so the
-    # documented Iceberg swap is this knob plus a catalog (writeTo on a
-    # cluster with the runtime jar); "orc" proves the abstraction with a
-    # second built-in columnar format (tests/test_pipeline.py). The
-    # driver-side lineage/metrics bookkeeping stays parquet (engine-internal
-    # metadata, written with pyarrow, no executor involvement).
-    checkpoint_format: str = "parquet"
-    _metrics_buf: list = field(default_factory=list, repr=False)
-    _lineage_buf: list = field(default_factory=list, repr=False)
 
     def _source_spans(self) -> DataFrame:
         kind, path = self.source
@@ -135,7 +131,7 @@ class Pipeline:
         cluster's default parallelism, redistribute. At production scale the
         scan already yields thousands of partitions and this is a no-op.
         """
-        df = self.spark.read.format(self.checkpoint_format).load(self._path(table))
+        df = self.spark.read.parquet(self._path(table))
         # rehydrate columns the writer deliberately did not store because
         # they are derivable (see _decode): a projection at scan time costs
         # nothing, the stored bytes were real
@@ -172,116 +168,101 @@ class Pipeline:
         )
         return mentions, triples
 
-    def _footer_rows(self, table: str) -> list[int] | None:
-        """Per-file row counts from checkpoint file FOOTERS (driver-side
-        metadata, no data scan) — parquet via pyarrow.parquet, orc via
-        pyarrow.orc; None when the work_dir is remote (no local files) or
-        the format has no footer reader here (callers fall back to a
-        metadata-only Spark count)."""
-        ext = "orc" if self.checkpoint_format == "orc" else "parquet"
-        files = sorted(Path(self._path(table)).glob(f"*.{ext}"))
-        if not files:
-            return None
-        if self.checkpoint_format == "orc":
-            import pyarrow.orc as po
+    def _write(self, df: DataFrame, table: str) -> list[int]:
+        """Write a checkpoint; return its per-file row counts.
 
-            return [po.ORCFile(str(f)).nrows for f in files]
+        The counts come from the parquet FOOTERS of the files the write just
+        produced (one file per writer task) — a driver-side metadata read,
+        not a second data scan (the earlier rescan doubled stage IO; at
+        100 TB that is the difference between 1× and 2× the job's read
+        volume).
+        """
         import pyarrow.parquet as pq
 
-        return [pq.ParquetFile(str(f)).metadata.num_rows for f in files]
+        path = self._path(table)
+        df.write.mode("overwrite").parquet(path)
+        rows = [pq.ParquetFile(str(f)).metadata.num_rows
+                for f in sorted(Path(path).glob("*.parquet"))]
+        # remote work_dir (hdfs://, s3a://, Iceberg swap): no local footers —
+        # a metadata-only Spark count (parquet footer aggregation, no column
+        # data read) rather than silently recording 0 in the metrics table;
+        # partition granularity is lost, the total is not
+        return rows or [self.spark.read.parquet(path).count()]
 
-    def _write(self, df: DataFrame, table: str) -> int:
-        """Write checkpoint + per-partition metrics; return row count.
+    def _meta_path(self, kind: str, stage: str) -> Path:
+        return Path(self._path(kind)) / f"{stage}.parquet"
 
-        Per-partition rows come from the parquet FOOTERS of the files the
-        write just produced (one file per writer task) — a driver-side
-        metadata read, not a second data scan (the earlier rescan doubled
-        stage IO; at 100 TB that is the difference between 1× and 2× the
-        job's read volume).
-        """
-        (df.write.mode("overwrite").format(self.checkpoint_format)
-         .save(self._path(table)))
-        rows = self._footer_rows(table)
-        if rows is None:
-            # remote work_dir (hdfs://, s3a://, Iceberg swap): no local
-            # footers — a metadata-only Spark count (parquet footer
-            # aggregation, no column data read) rather than silently
-            # recording 0 in the metrics table; partition granularity is
-            # lost, the total is not
-            rows = [
-                self.spark.read.format(self.checkpoint_format)
-                .load(self._path(table)).count()
-            ]
-        per_part = [(i, n, table, self.run_id) for i, n in enumerate(rows)]
-        self._metrics_buf.extend(per_part)
-        return sum(n for _, n, _, _ in per_part)
+    def _done(self, stage: str, outputs: list[str]) -> bool:
+        """Every output committed, and then the stage's lineage file."""
+        return (all(self._complete(t) for t in outputs)
+                and self._meta_path("_lineage", stage).exists())
 
-    def _log_lineage(self, stage: str, outputs: dict[str, int],
-                     inputs: list[str], wall_ms: int) -> None:
-        self._lineage_buf.extend(
-            (self.run_id, stage, table, n, ",".join(inputs), wall_ms,
-             time.strftime("%Y-%m-%dT%H:%M:%S"))
-            for table, n in outputs.items()
-        )
+    # lineage/metrics are driver-side metadata (a few KB per stage): one
+    # small pyarrow file each, ~0.2 ms. A Spark write per stage
+    # (createDataFrame(...).coalesce(1).write) cost a single-task job each —
+    # measured 4-6 s apiece on this host, ~60 s of serial wall per build.
+    def _commit_meta(self, stage: str, inputs: list[str],
+                     parts: dict[str, list[int]], started_at: str,
+                     wall_ms: int) -> None:
+        """Write the stage's ``_metrics`` file, then its ``_lineage`` file.
 
-    # lineage/metrics are driver-side metadata (a few KB per run): buffered
-    # and flushed as ONE pyarrow file per table per run. The earlier
-    # createDataFrame(...).coalesce(1).write per stage cost a single-task
-    # Spark job each — measured 4-6 s apiece on this host, ~60 s of serial
-    # wall across the pipeline's stages, the dominant anti-scaling term.
-    def _flush_meta(self) -> None:
+        Each is written under a dot-prefixed name and renamed into place:
+        pyarrow and Spark skip dot-prefixed files, so no reader sees a
+        half-written one, and the lineage file appears only once everything
+        else of the stage is on disk."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if self._metrics_buf:
-            t = pa.table(
-                dict(zip(("partition_id", "rows", "stage", "run_id"),
-                         zip(*self._metrics_buf))),
-                schema=pa.schema([
-                    ("partition_id", pa.int32()), ("rows", pa.int64()),
-                    ("stage", pa.string()), ("run_id", pa.string()),
-                ]),
-            )
-            d = Path(self._path("_metrics")); d.mkdir(parents=True, exist_ok=True)
-            pq.write_table(t, d / f"part-{self.run_id}-{uuid.uuid4().hex[:8]}.parquet")
-            self._metrics_buf.clear()
-        if self._lineage_buf:
-            t = pa.table(
-                dict(zip(
-                    ("run_id", "stage", "output", "rows_out", "inputs",
-                     "wall_ms", "started_at"),
-                    zip(*self._lineage_buf))),
-                schema=pa.schema([
-                    ("run_id", pa.string()), ("stage", pa.string()),
-                    ("output", pa.string()), ("rows_out", pa.int64()),
-                    ("inputs", pa.string()), ("wall_ms", pa.int64()),
-                    ("started_at", pa.string()),
-                ]),
-            )
-            d = Path(self._path("_lineage")); d.mkdir(parents=True, exist_ok=True)
-            pq.write_table(t, d / f"part-{self.run_id}-{uuid.uuid4().hex[:8]}.parquet")
-            self._lineage_buf.clear()
+        metrics = pa.Table.from_pylist(
+            [{"partition_id": i, "rows": n, "stage": t, "run_id": self.run_id}
+             for t, rows in parts.items() for i, n in enumerate(rows)],
+            schema=pa.schema([
+                ("partition_id", pa.int32()), ("rows", pa.int64()),
+                ("stage", pa.string()), ("run_id", pa.string()),
+            ]),
+        )
+        lineage = pa.Table.from_pylist(
+            [{"run_id": self.run_id, "stage": stage, "output": t,
+              "rows_out": sum(rows), "inputs": ",".join(inputs),
+              "wall_ms": wall_ms, "started_at": started_at}
+             for t, rows in parts.items()],
+            schema=pa.schema([
+                ("run_id", pa.string()), ("stage", pa.string()),
+                ("output", pa.string()), ("rows_out", pa.int64()),
+                ("inputs", pa.string()), ("wall_ms", pa.int64()),
+                ("started_at", pa.string()),
+            ]),
+        )
+        for kind, table in (("_metrics", metrics), ("_lineage", lineage)):
+            final = self._meta_path(kind, stage)
+            final.parent.mkdir(parents=True, exist_ok=True)
+            tmp = final.with_name("." + final.name)
+            pq.write_table(table, tmp)
+            os.replace(tmp, final)
 
     def lineage(self) -> DataFrame:
-        self._flush_meta()
-        # bookkeeping is always parquet (pyarrow-written), independent of
-        # checkpoint_format
         return self.spark.read.parquet(self._path("_lineage"))
 
     def metrics(self) -> DataFrame:
-        self._flush_meta()
         return self.spark.read.parquet(self._path("_metrics"))
 
     # ---- stages -------------------------------------------------------------
 
     def _stage(self, name: str, inputs: list[str], outputs: list[str],
                fn, resume: bool) -> bool:
-        """Run one stage unless all outputs are complete. Returns ran?"""
-        if resume and all(self._complete(t) for t in outputs):
+        """Run one stage unless it is complete (``_done``). Returns ran?
+
+        The lineage file is the stage's commit marker: it is removed before
+        the tables are rewritten and written last, so a run killed anywhere
+        in between reruns the stage. Checkpoint writes are overwrites, so
+        the rerun is safe."""
+        if resume and self._done(name, outputs):
             return False
+        self._meta_path("_lineage", name).unlink(missing_ok=True)
         sc = self.spark.sparkContext
         # the label is this thread's local property: restore the caller's
         prev = sc.getLocalProperty("spark.job.description")
+        started_at = time.strftime("%Y-%m-%dT%H:%M:%S")
         t0 = time.perf_counter()
         sc.setJobDescription(f"stage:{name}")
         try:
@@ -298,32 +279,27 @@ class Pipeline:
             # checkpoint instead of recomputing its plan.
             plain = [(t, df) for t, df in produced.items() if not callable(df)]
             derived = [(t, df) for t, df in produced.items() if callable(df)]
-            counts: dict[str, int] = {}
             if len(plain) > 1 and _pinned_threads():
                 import concurrent.futures as cf
-
-                def _w(t, df):
-                    return t, self._write(df, t)
 
                 # each write thread inherits this thread's local properties:
                 # the caller's job group and tags, and the stage's job
                 # description
                 with cf.ThreadPoolExecutor(max_workers=len(plain)) as pool:
-                    futs = [pool.submit(inheritable_thread_target(self.spark)(_w), t, df)
-                            for t, df in plain]
-                    for fut in futs:
-                        t, n = fut.result()  # re-raises
-                        counts[t] = n
+                    futs = {t: pool.submit(
+                        inheritable_thread_target(self.spark)(self._write), df, t
+                    ) for t, df in plain}
+                parts = {t: fut.result() for t, fut in futs.items()}  # re-raises
             else:
-                for t, df in plain:
-                    counts[t] = self._write(df, t)
+                parts = {t: self._write(df, t) for t, df in plain}
             for t, df in derived:
-                counts[t] = self._write(df(), t)
+                parts[t] = self._write(df(), t)
             if cleanup is not None:
                 cleanup()
         finally:
             sc.setLocalProperty("spark.job.description", prev)
-        self._log_lineage(name, counts, inputs, int((time.perf_counter() - t0) * 1000))
+        self._commit_meta(name, inputs, parts, started_at,
+                          int((time.perf_counter() - t0) * 1000))
         return True
 
     def run(self, resume: bool = True, parallel: bool = True) -> dict[str, bool]:
@@ -464,41 +440,34 @@ class Pipeline:
         parallel = parallel and _pinned_threads()
 
         ran: dict[str, bool] = {}
-        # flush lineage/metrics even when a stage raises or the run is
-        # interrupted: the pyarrow write is cheap driver-side IO, and losing
-        # it would leave already-committed checkpoints with no lineage rows
-        # (a resume then skips those stages and never backfills them)
-        try:
-            if not parallel:
-                for name, (_, inputs, outputs, fn) in dag.items():  # topo order
-                    ran[name] = self._stage(name, inputs, outputs, fn, resume)
-            else:
-                import concurrent.futures as cf
+        if not parallel:
+            for name, (_, inputs, outputs, fn) in dag.items():  # topo order
+                ran[name] = self._stage(name, inputs, outputs, fn, resume)
+        else:
+            import concurrent.futures as cf
 
-                with cf.ThreadPoolExecutor(max_workers=3) as pool:
-                    futures: dict[cf.Future, str] = {}
-                    pending = dict(dag)
-                    while pending or futures:
-                        for name in list(pending):
-                            deps, inputs, outputs, fn = pending[name]
-                            if all(d in ran for d in deps):
-                                # the stage thread inherits the caller's
-                                # job group and tags
-                                futures[pool.submit(
-                                    inheritable_thread_target(self.spark)(self._stage),
-                                    name, inputs, outputs, fn, resume,
-                                )] = name
-                                del pending[name]
-                        if not futures:
-                            raise RuntimeError(
-                                f"unschedulable stages (dependency cycle or "
-                                f"unknown dep): {sorted(pending)}"
-                            )
-                        done, _ = cf.wait(
-                            set(futures), return_when=cf.FIRST_COMPLETED
+            with cf.ThreadPoolExecutor(max_workers=3) as pool:
+                futures: dict[cf.Future, str] = {}
+                pending = dict(dag)
+                while pending or futures:
+                    for name in list(pending):
+                        deps, inputs, outputs, fn = pending[name]
+                        if all(d in ran for d in deps):
+                            # the stage thread inherits the caller's job
+                            # group and tags
+                            futures[pool.submit(
+                                inheritable_thread_target(self.spark)(self._stage),
+                                name, inputs, outputs, fn, resume,
+                            )] = name
+                            del pending[name]
+                    if not futures:
+                        raise RuntimeError(
+                            f"unschedulable stages (dependency cycle or "
+                            f"unknown dep): {sorted(pending)}"
                         )
-                        for fut in done:
-                            ran[futures.pop(fut)] = fut.result()  # re-raises
-        finally:
-            self._flush_meta()
+                    done, _ = cf.wait(
+                        set(futures), return_when=cf.FIRST_COMPLETED
+                    )
+                    for fut in done:
+                        ran[futures.pop(fut)] = fut.result()  # re-raises
         return ran

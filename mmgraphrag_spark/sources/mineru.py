@@ -155,36 +155,6 @@ def content_list_spans(lists: DataFrame) -> DataFrame:
     )
 
 
-def content_list_media(lists: DataFrame) -> DataFrame:
-    """(doc_id, media_ref, img_path, kind, caption, page_idx): the media-item
-    side table — joins the renamed media_ref back to the ORIGINAL MinerU
-    ``img_path`` so a bytes loader (multimodal.py) can fetch the files."""
-    items = lists.select(
-        "doc_id",
-        F.posexplode(F.from_json("json", MINERU_ITEM)).alias("pos", "it"),
-    ).filter(F.col("it.img_path").isNotNull() & (F.col("it.img_path") != ""))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    empty = F.array().cast("array<string>")
-    return items.select(
-        "doc_id",
-        F.concat(
-            F.col("doc_id"), F.lit("/image_"),
-            F.row_number().over(w).cast("string"),
-        ).alias("media_ref"),
-        F.col("it.img_path").alias("img_path"),
-        F.col("it.type").alias("kind"),
-        F.when(
-            F.col("it.type") == "table",
-            F.concat_ws(" ", F.coalesce("it.table_caption", empty),
-                        F.coalesce("it.table_footnote", empty)),
-        ).otherwise(
-            F.concat_ws(" ", F.coalesce("it.img_caption", empty),
-                        F.coalesce("it.img_footnote", empty))
-        ).alias("caption"),
-        F.col("it.page_idx").alias("page_idx"),
-    )
-
-
 def media_context(flat_spans: DataFrame, n_words: int = 100) -> DataFrame:
     """(doc_id, media_ref, context): ±``n_words`` of neighboring text for
     every media span — the reference's fore/back context walk

@@ -5,10 +5,15 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from _kill import SPARK, run_child
 from conftest import SF_TINY
 
 from mmgraphrag_spark.operators import fusion
 from mmgraphrag_spark.plans.pipeline import Pipeline
+
+OUTPUTS = ["spans", "chunks", "extraction_raw", "mentions", "triples",
+           "img_mentions", "img_triples", "nodes", "edges", "fusion_blocks",
+           "fused_nodes", "fused_edges"]
 
 
 @pytest.fixture(scope="module")
@@ -20,10 +25,7 @@ def pipe(spark, tmp_path_factory):
 
 
 def test_all_stages_ran_and_checkpointed(pipe):
-    for t in ["spans", "chunks", "extraction_raw",
-              "mentions", "triples", "img_mentions", "img_triples",
-              "nodes", "edges", "fusion_blocks",
-              "fused_nodes", "fused_edges"]:
+    for t in OUTPUTS:
         assert pipe._complete(t), t
 
 
@@ -97,15 +99,15 @@ def test_resume_skips_complete_stages(pipe):
 
 def test_mid_pipeline_resume(spark, pipe):
     # simulate a crash after 'extract': later checkpoints lost
-    before = pipe.lineage().filter("stage = 'spans'").count()
+    before = pipe.lineage().filter("stage = 'spans'").collect()
     shutil.rmtree(pipe._path("nodes"))
     shutil.rmtree(pipe._path("edges"))
     ran = pipe.run(resume=True)
     assert ran == {"spans": False, "chunks": False, "extract_raw": False,
                    "decode": False, "media": False,
                    "fusion": False, "graph": True}
-    # earlier stages were not recomputed: no new lineage rows for them
-    after = pipe.lineage().filter("stage = 'spans'").count()
+    # earlier stages were not recomputed: their lineage rows are untouched
+    after = pipe.lineage().filter("stage = 'spans'").collect()
     assert after == before
     assert pipe._complete("edges")
 
@@ -224,26 +226,27 @@ def test_parallel_dag_equals_sequential(spark, tmp_path):
         assert b.exceptAll(a).count() == 0, table
 
 
-def test_checkpoint_format_orc_round_trips(spark, pipe, tmp_path):
-    """The checkpoint layer is format-agnostic (the documented Iceberg swap
-    is a writer/catalog knob, not a rewrite): the same pipeline run with
-    checkpoint_format='orc' produces value-identical tables, per-partition
-    footer metrics and resume markers — with zero parquet files among the
-    data checkpoints."""
-    from pathlib import Path
+def test_killed_build_resumes_with_every_lineage_row(spark, pipe, tmp_path):
+    """A build SIGKILLed (its whole process group) once img_triples commits
+    resumes to the clean build's tables, as multisets, with exactly one
+    lineage row per output whose rows_out is the table's row count: each
+    stage commits its lineage with its tables, so a kill loses none."""
+    work = tmp_path / "killed"
+    code = SPARK + (
+        "from mmgraphrag_spark.plans.pipeline import Pipeline\n"
+        f"Pipeline(spark, {SF_TINY!r}, {str(work)!r})"
+        ".run(resume=True, parallel=False)\n"
+    )
+    log = tmp_path / "child.log"
+    run_child(code, log, kill_on=str(work / "img_triples" / "_SUCCESS"))
+    assert not (work / "nodes" / "_SUCCESS").exists()
+    run_child(code, log)
 
-    p = Pipeline(spark, SF_TINY, str(tmp_path / "orc"), checkpoint_format="orc")
-    p.run(resume=False)
-    for table in ["spans", "chunks", "mentions", "edges", "fused_nodes"]:
+    p = Pipeline(spark, SF_TINY, str(work))
+    lin = p.lineage().toPandas()
+    assert sorted(lin["output"]) == sorted(OUTPUTS)
+    for table, rows_out in zip(lin["output"], lin["rows_out"]):
         a = p.read(table, spread=False)
         b = pipe.read(table, spread=False)
-        assert a.exceptAll(b).count() == 0, table
-        assert b.exceptAll(a).count() == 0, table
-        files = list(Path(p.work_dir, table).iterdir())
-        assert any(f.suffix == ".orc" for f in files), table
-        assert not any(f.suffix == ".parquet" for f in files), table
-        # footer metrics (no data scan) agree with the real count
-        assert sum(p._footer_rows(table)) == b.count(), table
-    # resume still recognizes completed stages; bookkeeping stays parquet
-    assert not any(p.run(resume=True).values())
-    assert p.lineage().count() > 0 and p.metrics().count() > 0
+        assert a.count() == rows_out, table
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import glob
 import shutil
 
+from _kill import SPARK, run_child
 from conftest import SF_TINY
 
 from pyspark.sql import functions as F
@@ -77,6 +79,37 @@ def test_resent_docs_cost_zero_extractor_work(spark, tmp_path):
     assert spark.read.parquet(f"{out}/mentions").count() == n1
     assert spark.read.parquet(f"{out}/raw_cache").count() == cache1
     shutil.rmtree(out, ignore_errors=True)
+
+
+def test_killed_ingest_restarts_to_the_clean_tables(spark, tmp_path):
+    """stream_extract SIGKILLed (its whole process group) once batch 0's
+    mentions commit, and restarted on the same checkpoint dir, ends with the
+    mentions, triples and raw_cache of an uninterrupted run, as multisets:
+    the replayed batch overwrites its own partial output."""
+    src = str(tmp_path / "docs_src")
+    spark.read.parquet(f"{SF_TINY}/documents.parquet").limit(50).write.parquet(src)
+    clean, killed = tmp_path / "clean", tmp_path / "killed"
+    incremental.stream_extract(
+        spark, src, str(clean / "sink"), str(clean / "ckpt")
+    ).awaitTermination(180)
+
+    code = SPARK + (
+        "from mmgraphrag_spark.streaming import incremental\n"
+        f"incremental.stream_extract(spark, {src!r}, {str(killed / 'sink')!r},"
+        f" {str(killed / 'ckpt')!r}).awaitTermination()\n"
+    )
+    log = tmp_path / "child.log"
+    run_child(code, log,
+              kill_on=str(killed / "sink/mentions/run=*/batch_id=0/_SUCCESS"))
+    assert not glob.glob(str(killed / "sink/raw_cache/run=*/batch_id=0/_SUCCESS"))
+    run_child(code, log)
+
+    for table in ("mentions", "triples", "raw_cache"):
+        # the run token names the checkpoint dir, which differs by design
+        a = spark.read.parquet(str(killed / "sink" / table)).drop("run")
+        b = spark.read.parquet(str(clean / "sink" / table)).drop("run")
+        assert not b.isEmpty(), table
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
 
 
 def test_stream_near_duplicate_gate_matches_batch_collapse(spark, tmp_path):
