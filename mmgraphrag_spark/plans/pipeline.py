@@ -198,9 +198,10 @@ class Pipeline:
                 and self._meta_path("_lineage", stage).exists())
 
     # lineage/metrics are driver-side metadata (a few KB per stage): one
-    # small pyarrow file each, ~0.2 ms. A Spark write per stage
-    # (createDataFrame(...).coalesce(1).write) cost a single-task job each —
-    # measured 4-6 s apiece on this host, ~60 s of serial wall per build.
+    # small pyarrow file each, about 2 ms for the pair on a 4-vCPU host. A
+    # Spark write per stage (createDataFrame(...).coalesce(1).write) cost a
+    # single-task job each — measured 4-6 s apiece, ~60 s of serial wall
+    # per build.
     def _commit_meta(self, stage: str, inputs: list[str],
                      parts: dict[str, list[int]], started_at: str,
                      wall_ms: int) -> None:

@@ -13,7 +13,7 @@ from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent.parent)
 
-# A session for the child: the test session's parallelism, a small heap
+# The child's session, with the test session's parallelism
 SPARK = ("from mmgraphrag_spark.session import get_spark\n"
          "spark = get_spark('child', cores=4, shuffle_partitions=8)\n")
 
