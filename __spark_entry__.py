@@ -6,9 +6,9 @@ twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
 The registry holds the KG build stages, the query path, the ingest readers
-and the text and dedup analytics over the documents, each keyed by name. Every entry except ``kg_spectral`` and
-``ann_ivf_kmeans_topk`` has an exact DuckDB twin, which ``tools/compare.py``
-checks.
+and the text and dedup analytics over the documents, each keyed by name.
+Every entry except ``kg_spectral`` has an exact DuckDB twin, which
+``tools/compare.py`` checks.
 
 The KG entries (``kg_*``, ``qctx_*``, ``mm_*`` and the rest of ``api``) read
 the checkpoints of one ``Pipeline`` build per (sf_dir, config) and session
@@ -31,7 +31,7 @@ from dataclasses import replace  # noqa: E402
 
 from mmgraphrag_spark import api, oracle, oracle_extra, synth  # noqa: E402
 from mmgraphrag_spark.config import DEFAULT  # noqa: E402
-from mmgraphrag_spark.operators import dedup, similarity, textstats  # noqa: E402
+from mmgraphrag_spark.operators import dedup, textstats  # noqa: E402
 from mmgraphrag_spark.sources import docx, mineru, pdf  # noqa: E402
 
 # S3 media-context word radius for the driver query (reference default is
@@ -58,9 +58,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # ---- text, similarity and dedup analytics over the documents -------
-        # sparse TF-IDF dot-product document similarity via df-capped
-        # inverted index (the encoder-free sibling of embedding near-dup)
+        # ---- text and dedup analytics over the documents ------------------
+        # sparse TF-IDF dot-product nearest documents via a df-capped
+        # inverted index
         "text_docsim": lambda s, d: textstats.docsim_topk(
             textstats.docs_table(s, d)
         ),
@@ -86,9 +86,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_readability": lambda s, d: textstats.readability(
             textstats.docs_table(s, d)
         ),
-        # SemDeDup-style semantic duplicate clusters: LSH-verified embedding
-        # pairs + large/small-star collapse (compositional twin)
-        "dup_semantic_clusters": lambda s, d: dedup.semantic_clusters(s, d),
         # per-doc vocabulary profile: type-token ratio + hapax share
         "text_hapax": lambda s, d: textstats.hapax_stats(
             textstats.docs_table(s, d)
@@ -113,9 +110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BM25 retrieval: rarest-terms query set, exact-integer scoring
         # (raw-ratio idf + integer-cleared tf saturation, k1=1.2 b=0.75)
         "text_bm25": lambda s, d: textstats.bm25_topk(dedup.docs_table(s, d)),
-        # SQ8 scalar-quantized ANN: per-dim [min,max] -> uint8 codes (8×
-        # memory shrink), exact integer reconstruction for scoring
-        "ann_sq8_topk": similarity.ann_sq8_topk,
         # ExactSubstr-style signal: per-doc token coverage by word k-grams
         # shared with other documents (interval-union window, no row blowup)
         "dup_span_coverage": lambda s, d: dedup.crossdoc_span_coverage(
@@ -127,13 +121,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             dedup.docs_table(s, d)
         ),
         "text_tfidf": lambda s, d: textstats.tfidf_topk(dedup.docs_table(s, d)),
-        "ann_lsh_topk": lambda s, d: similarity.ann_lsh_topk(s, d),
-        "ann_ivf_topk": lambda s, d: similarity.ann_ivf_topk(s, d),
-        # k-means|| quantizer path: iterative fit, not SQL-expressible ->
-        # rows-only driver check; recall vs brute force is pytest-asserted
-        "ann_ivf_kmeans_topk": lambda s, d: similarity.ann_ivf_topk(
-            s, d, quantizer="kmeans"
-        ),
         "text_token_stats": lambda s, d: textstats.token_stats(dedup.docs_table(s, d)),
         "text_quality": lambda s, d: textstats.quality_scores(dedup.docs_table(s, d)),
         "text_langid": lambda s, d: textstats.language_id(dedup.docs_table(s, d)),
@@ -187,7 +174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the FULL deterministic prompt chain incl. multimodal fills
         # (reference query.py:414-470), image info derived distributedly
         "qctx_prompt_chain": lambda s, d: api.qctx_prompt_chain(s, d, CHAIN_CFG),
-        # training-data pipeline: dedup / similarity / text analysis
+        # training-data pipeline: dedup
         "dup_exact": lambda s, d: dedup.exact_duplicates(dedup.docs_table(s, d)),
         "dup_clusters": lambda s, d: dedup.duplicate_clusters(dedup.docs_table(s, d)),
         # ---- variants and the rendered query deliverables ----------------
@@ -202,8 +189,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         "dup_minhash": lambda s, d: dedup.minhash_near_duplicates(dedup.docs_table(s, d)),
         "dup_simhash_pairs": lambda s, d: dedup.simhash_near_duplicates(dedup.docs_table(s, d)),
-        "dup_embedding": lambda s, d: dedup.embedding_near_duplicates(s, d),
-        "ann_topk": lambda s, d: similarity.ann_bruteforce_topk(s, d),
         "qctx_seeds_vdb": api.qctx_seeds_vdb,
         # the final query deliverables: rendered context CSV blocks + the
         # filled answer system prompt (reference query.py:263-311, 402-405)
@@ -220,7 +205,6 @@ def oracle_sql() -> dict[str, str]:
         "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
         "dup_containment": oracle_extra.containment_sql(threshold=0.2),
         "text_readability": oracle_extra.readability_sql(),
-        "dup_semantic_clusters": oracle_extra.semantic_clusters_sql(),
         "text_hapax": oracle_extra.hapax_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
         "ingest_spans": oracle.q(oracle.spans_select()),
@@ -259,10 +243,6 @@ def oracle_sql() -> dict[str, str]:
         "dup_ngram_jaccard": oracle_extra.ngram_jaccard_sql(),
         "dup_simhash": oracle_extra.dup_simhash_sql(),
         "dup_simhash_pairs": oracle_extra.dup_simhash_pairs_sql(),
-        "dup_embedding": oracle_extra.dup_embedding_sql(),
-        "ann_topk": oracle_extra.ann_topk_sql(),
-        "ann_lsh_topk": oracle_extra.ann_lsh_topk_sql(),
-        "ann_ivf_topk": oracle_extra.ann_ivf_topk_sql(),
         "text_token_stats": oracle_extra.token_stats_sql(),
         "text_quality": oracle_extra.quality_sql(),
         "text_langid": oracle_extra.langid_sql(),
@@ -270,7 +250,6 @@ def oracle_sql() -> dict[str, str]:
         "text_tfidf": oracle_extra.tfidf_sql(),
         "text_repetition": oracle_extra.repetition_sql(),
         "dup_span_coverage": oracle_extra.crossdoc_span_sql(),
-        "ann_sq8_topk": oracle_extra.ann_sq8_topk_sql(),
         "text_bm25": oracle_extra.bm25_sql(),
         "text_lm_score": oracle_extra.lm_scores_sql(),
         "text_gini": oracle_extra.gini_sql(),

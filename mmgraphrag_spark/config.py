@@ -65,7 +65,7 @@ class PipelineConfig:
     qctx_k: int = 5
     qctx_token_budget: int = 4000
 
-    # similarity / dedup
+    # document dedup (operators/dedup.py)
     minhash_perms: int = 16
     minhash_bands: int = 4
     shingle_size: int = 3

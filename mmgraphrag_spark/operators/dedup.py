@@ -10,17 +10,11 @@ an exact DuckDB oracle twin (see oracle_extra.py):
                   band-bucket self-join → verified n-gram Jaccard
 * simhash       — 16-bit simhash over tokens; near-dup pairs bucketed by
                   8-bit halves (pigeonhole: hamming ≤ 2 ⇒ one half equal)
-* embedding     — cosine near-dup over quantized (int) embeddings; integer
-                  dot products are bit-exact across engines, the cosine
-                  threshold is evaluated as 10^4·D² ≥ τ²·10^4·Na·Nb in int64
 
 Scale notes: exact/minhash/simhash are shuffle-bounded by their blocking key
 (hash, band bucket, simhash half) — candidate verification joins are
-per-bucket, never all-pairs. The embedding near-dup here is the brute-force
-*baseline* (quadratic — correctness yardstick only); the scale path is the
-sign-projection LSH variant in similarity.py. Skewed buckets (boilerplate
-shingles) hit AQE skew-join; signatures are fixed-width so map-side combine
-applies.
+per-bucket, never all-pairs. Skewed buckets (boilerplate shingles) hit AQE
+skew-join; signatures are fixed-width so map-side combine applies.
 """
 
 from __future__ import annotations
@@ -111,8 +105,7 @@ def minhash_signatures(docs: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFr
 
 def lsh_bucket_rows(docs: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """(doc_id, band, bkey): one row per LSH band bucket membership — the
-    joinable form of the signature (band rows equi-join on (band, bkey);
-    also the persistent bucket-store schema of the streaming dedup gate)."""
+    joinable form of the signature (band rows equi-join on (band, bkey))."""
     sigs = minhash_signatures(docs, cfg)
     r = cfg.minhash_perms // cfg.minhash_bands
     return sigs.select(
@@ -261,137 +254,6 @@ def simhash_near_duplicates(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
-    )
-
-
-# ---- embedding near-dup -----------------------------------------------------
-
-_dims_cache: dict = {}
-
-
-def embedding_dims(spark, sf_dir: str) -> int:
-    """Embedding width, probed once per table from one row (footer-cheap)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _dims_cache:
-        row = (
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            .select(F.size("embedding").alias("d")).first()
-        )
-        _dims_cache[key] = int(row["d"])
-    return _dims_cache[key]
-
-
-def quantized_embeddings(spark, sf_dir: str, scale: int = 1000) -> DataFrame:
-    """(vec_id, q array<long>, n long): integer-quantized embedding + its
-    integer squared norm. Integer math is bit-exact across engines.
-
-    Flat per-component projections (dims probed once) instead of
-    ``transform``/``aggregate`` lambdas: higher-order functions evaluate
-    interpreted and fall out of whole-stage codegen — measured ~30× slower
-    than flat expressions on the embedding hot path (PLANS.md §5)."""
-    dims = embedding_dims(spark, sf_dir)
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    comps = [
-        F.round(F.get("embedding", i).cast("double") * scale).cast("long").alias(f"_q{i}")
-        for i in range(dims)
-    ]
-    flat = e.select(F.col("vec_id").cast("long").alias("vec_id"), *comps)
-    n = None
-    for i in range(dims):
-        term = F.col(f"_q{i}") * F.col(f"_q{i}")
-        n = term if n is None else n + term
-    return flat.select(
-        "vec_id",
-        F.array(*[F.col(f"_q{i}") for i in range(dims)]).alias("q"),
-        n.alias("n"),
-    )
-
-
-def _flat_dot(qa: str, qb: str, dims: int):
-    """Exact integer dot product as a flat codegen expression (no HOF)."""
-    dot = None
-    for i in range(dims):
-        term = F.get(qa, i) * F.get(qb, i)
-        dot = term if dot is None else dot + term
-    return dot
-
-
-def embedding_near_duplicates(
-    spark, sf_dir: str, cos_threshold: float = 0.4,
-    tables: int = 8, planes: int = 3,
-) -> DataFrame:
-    """(a, b, dot, na, nb): near-duplicate pairs with cosine ≥ τ.
-
-    Scale shape: sign-projection LSH candidate generation (equi self-join on
-    (table, bucket) — similarity.lsh_buckets, never all-pairs) followed by
-    exact integer verification: dot > 0 ∧ 10^4·dot² ≥ ⌈τ²·10^4⌉·na·nb.
-    Recall is the standard LSH amplification bound (a qualifying pair is
-    missed only if it collides in NONE of the 8 tables); the DuckDB oracle
-    replicates candidates + verification bit-for-bit, and the quadratic
-    brute-force twin below stays as the pytest recall yardstick.
-    """
-    from .similarity import lsh_buckets
-
-    t2 = int(round(cos_threshold * cos_threshold * 10_000))
-    dims = embedding_dims(spark, sf_dir)
-    qe = lsh_buckets(quantized_embeddings(spark, sf_dir), tables, planes, dims)
-    x = qe.select(
-        F.col("vec_id").alias("a"), F.col("table").alias("ta"),
-        F.col("bucket").alias("ba"),
-    )
-    y = qe.select(
-        F.col("vec_id").alias("b"), F.col("table").alias("tb_"),
-        F.col("bucket").alias("bb"),
-    )
-    cand = (
-        x.join(
-            y,
-            (F.col("ta") == F.col("tb_")) & (F.col("ba") == F.col("bb"))
-            & (F.col("a") < F.col("b")),
-        )
-        .select("a", "b")
-        .distinct()
-    )
-    base = quantized_embeddings(spark, sf_dir)
-    pairs = cand.join(
-        base.select(F.col("vec_id").alias("a"), F.col("q").alias("qa"), F.col("n").alias("na")),
-        "a",
-    ).join(
-        base.select(F.col("vec_id").alias("b"), F.col("q").alias("qb"), F.col("n").alias("nb")),
-        "b",
-    )
-    return (
-        pairs.withColumn("dot", _flat_dot("qa", "qb", dims))
-        .filter(
-            (F.col("dot") > 0)
-            & (F.col("dot") * F.col("dot") * 10_000 >= F.lit(t2) * F.col("na") * F.col("nb"))
-        )
-        .select("a", "b", "dot", "na", "nb")
-    )
-
-
-def embedding_near_duplicates_bruteforce(
-    spark, sf_dir: str, cos_threshold: float = 0.4
-) -> DataFrame:
-    """Quadratic all-pairs twin — TEST-ONLY recall yardstick (O(n²) BNLJ;
-    never a driver query)."""
-    dims = embedding_dims(spark, sf_dir)
-    t2 = int(round(cos_threshold * cos_threshold * 10_000))
-    qe = quantized_embeddings(spark, sf_dir)
-    x = qe.select(
-        F.col("vec_id").alias("a"), F.col("q").alias("qa"), F.col("n").alias("na")
-    )
-    y = qe.select(
-        F.col("vec_id").alias("b"), F.col("q").alias("qb"), F.col("n").alias("nb")
-    )
-    return (
-        x.join(y, F.col("a") < F.col("b"))
-        .withColumn("dot", _flat_dot("qa", "qb", dims))
-        .filter(
-            (F.col("dot") > 0)
-            & (F.col("dot") * F.col("dot") * 10_000 >= F.lit(t2) * F.col("na") * F.col("nb"))
-        )
-        .select("a", "b", "dot", "na", "nb")
     )
 
 
@@ -799,45 +661,6 @@ def containment_pairs(
     return out.filter(
         F.col("containment_pm") >= int(threshold * 1_000_000)
     ).select("src", "dst", "containment_pm")
-
-
-def semantic_clusters(
-    spark, sf_dir: str, cos_threshold: float = 0.4,
-    tables: int = 8, planes: int = 3, method: str = "star",
-) -> DataFrame:
-    """(vec_id, cluster_rep): SemDeDup-style semantic duplicate clusters
-    (Abbas et al. 2023) — connected components over the embedding
-    near-duplicate pair graph, representative = min vec_id. The curation
-    move this enables: keep one exemplar per semantic cluster instead of
-    per byte-identical blob, which removes paraphrase/mirror redundancy
-    exact dedup can't see.
-
-    Pure composition of two already-audited stages: LSH-bucketed +
-    exact-integer-verified pairs (`embedding_near_duplicates` — equi-join
-    on (table, bucket), never all-pairs) feeding the large/small-star
-    collapse (`duplicate_clusters`, O(log n) rounds). The DuckDB twin
-    composes the pair twin with the recursive-closure twin VERBATIM, so
-    verification is compositional too.
-    """
-    pairs = embedding_near_duplicates(
-        spark, sf_dir, cos_threshold, tables, planes
-    ).select("a", "b")
-    # Dataset.(local)Checkpoint on this plan OOMs the driver in Spark 4.1's
-    # checkpoint plan normalization (the 8-table LSH + flat-dot subtree is
-    # ~10^5 expression nodes; count()/collect() handle it, checkpoint's
-    # transformDown does not) — cut lineage with an RDD round-trip instead,
-    # so the collapse loop below checkpoints only small post-cut frames.
-    # The pair list is bounded by true near-duplicates, and a production
-    # run would checkpoint it to the work_dir anyway (plans/pipeline.py),
-    # which cuts lineage identically.
-    pairs = spark.createDataFrame(pairs.rdd, pairs.schema)
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("doc_id")
-    )
-    out = duplicate_clusters(vecs, pairs, method=method)
-    return out.select(
-        F.col("doc_id").alias("vec_id"), F.col("cluster_rep")
-    )
 
 
 def canonical_documents(

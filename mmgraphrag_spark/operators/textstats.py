@@ -505,11 +505,9 @@ def docsim_topk(
 ) -> DataFrame:
     """(doc_id, other_id, dot_w, shared_terms, rnk): each document's top-k
     nearest documents by sparse TF-IDF dot product over a df-capped
-    inverted index — the classic sparse-retrieval dedup/similarity
-    primitive (Salton's vector model), complementary to the DENSE
-    embedding near-dup path (dedup.embedding_near_duplicates): it needs
-    no encoder and surfaces lexical overlap the embedding space smooths
-    away.
+    inverted index — the classic sparse-retrieval near-duplicate
+    primitive (Salton's vector model): it needs no encoder and surfaces
+    lexical overlap.
 
     Exact-integer contract: idf_mil = (N·1000) div df (raw-ratio IDF, the
     bm25_topk convention), weight w = min(tf, tf_cap) · idf_mil; the score

@@ -1,6 +1,6 @@
-"""DuckDB-SQL twins of the document operators (dedup / similarity /
-textstats). Integer-scaled metrics throughout → bit-exact cross-engine
-comparison. Parameters mirror the operator defaults.
+"""DuckDB-SQL twins of the document operators (dedup / textstats).
+Integer-scaled metrics throughout → bit-exact cross-engine comparison.
+Parameters mirror the operator defaults.
 """
 
 from __future__ import annotations
@@ -152,162 +152,6 @@ FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
 """
 
 
-_QE = """
-qe AS (
-  SELECT vec_id,
-         [CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS q
-  FROM embeddings
-),
-qn AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n FROM qe
-)"""
-
-def _dot_expr(qa: str, qb: str) -> str:
-    """Integer dot product, dimension-dynamic (len(q) like the Spark side's
-    size(q) — no hard-coded embedding width). list_sum over BIGINT products is
-    exact and order-irrelevant."""
-    return (
-        f"CAST(coalesce(list_sum([{qa}[i + 1] * {qb}[i + 1]"
-        f" for i in range(len({qa}))]), 0) AS BIGINT)"
-    )
-
-
-def dup_embedding_sql(
-    cos_threshold: float = 0.4, tables: int = 8, planes: int = 3
-) -> str:
-    """LSH-bucketed candidates + exact integer verification (twin of
-    dedup.embedding_near_duplicates — equi-join on (table, bucket), never
-    all-pairs)."""
-    t2 = int(round(cos_threshold * cos_threshold * 10_000))
-    dot = _dot_expr("a.q", "b.q")
-    per_table = " UNION ALL ".join(
-        f"SELECT vec_id, {_bucket_expr('q', t, planes)} AS bucket, {t} AS tbl FROM qn"
-        for t in range(tables)
-    )
-    return f"""
-WITH {_QE},
-qb AS ({per_table}),
-cand AS (
-  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-  FROM qb x JOIN qb y
-    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id
-)
-SELECT c.a, c.b, {dot} AS dot, a.n AS na, b.n AS nb
-FROM cand c JOIN qn a ON a.vec_id = c.a JOIN qn b ON b.vec_id = c.b
-WHERE {dot} > 0 AND {dot} * {dot} * 10000 >= {t2} * a.n * b.n
-"""
-
-
-_RANK_SQL = (
-    "(CASE WHEN {dot} >= 0 THEN 1 ELSE -1 END)"
-    " * (({dot} * {dot}) // greatest((na * nb) // 1000000, 1))"
-)
-
-
-def ann_topk_sql(k: int = 5, n_queries: int = 10) -> str:
-    dot = _dot_expr("q.q", "c.q")
-    rank = _RANK_SQL.format(dot="dot")
-    return f"""
-WITH {_QE},
-pairs AS (
-  SELECT q.vec_id AS qid, c.vec_id AS cid, {dot} AS dot,
-         q.n AS na, c.n AS nb
-  FROM qn q JOIN qn c ON q.vec_id < {n_queries} AND q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT qid, cid, dot, {rank} AS rank_key,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY {rank} DESC, cid ASC) AS rnk
-  FROM pairs
-)
-SELECT qid, cid, dot, rank_key, rnk FROM ranked WHERE rnk <= {k}
-"""
-
-
-def ann_sq8_topk_sql(k: int = 5, n_queries: int = 10) -> str:
-    """Twin of similarity.ann_sq8_topk: per-dim [min,max] stats (zipped
-    parallel UNNESTs -> one ordered list pair), 8-bit code + integer
-    reconstruction inside a list comprehension, then the shared
-    pairs/rank/top-k shape. All-integer => exact hash."""
-    dot = _dot_expr("q.q", "c.q")
-    rank = _RANK_SQL.format(dot="dot")
-    recon = (
-        "[mns[i + 1] + ((((q[i + 1] - mns[i + 1]) * 255)"
-        " // greatest(mxs[i + 1] - mns[i + 1], 1))"
-        " * (mxs[i + 1] - mns[i + 1])) // 255 for i in range(len(q))]"
-    )
-    return f"""
-WITH {_QE},
-sq_stats AS (
-  SELECT i, MIN(x) AS mn, MAX(x) AS mx
-  FROM (SELECT unnest(q) AS x, unnest(range(1, len(q) + 1)) AS i FROM qe)
-  GROUP BY i
-),
-sq_lists AS (
-  SELECT list(mn ORDER BY i) AS mns, list(mx ORDER BY i) AS mxs FROM sq_stats
-),
-sqn AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n
-  FROM (SELECT vec_id, {recon} AS q FROM qe, sq_lists)
-),
-pairs AS (
-  SELECT q.vec_id AS qid, c.vec_id AS cid, {dot} AS dot,
-         q.n AS na, c.n AS nb
-  FROM sqn q JOIN sqn c ON q.vec_id < {n_queries} AND q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT qid, cid, dot, {rank} AS rank_key,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY {rank} DESC, cid ASC) AS rnk
-  FROM pairs
-)
-SELECT qid, cid, dot, rank_key, rnk FROM ranked WHERE rnk <= {k}
-"""
-
-
-def _bucket_expr(q: str, table: int, planes: int = 3) -> str:
-    bits = []
-    for p in range(planes):
-        comp = (
-            f"list_sum([CASE WHEN ('0x' || substr(md5('{table}:{p}|' || CAST(d AS VARCHAR)), 1, 1))::BIGINT % 2 = 0"
-            f" THEN {q}[d + 1] ELSE -{q}[d + 1] END for d in range(len({q}))])"
-        )
-        bits.append(f"(CASE WHEN {comp} >= 0 THEN {1 << p} ELSE 0 END)")
-    return "CAST(" + " + ".join(bits) + " AS BIGINT)"
-
-
-def ann_lsh_topk_sql(
-    k: int = 5, n_queries: int = 10, tables: int = 8, planes: int = 3
-) -> str:
-    dot = _dot_expr("qq.q", "cc.q")
-    rank = _RANK_SQL.format(dot="dot")
-    per_table = " UNION ALL ".join(
-        f"SELECT vec_id, {_bucket_expr('q', t, planes)} AS bucket, {t} AS tbl FROM qn"
-        for t in range(tables)
-    )
-    return f"""
-WITH {_QE},
-qb AS ({per_table}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS qid, c.vec_id AS cid
-  FROM qb q JOIN qb c
-    ON q.tbl = c.tbl AND q.bucket = c.bucket
-   AND q.vec_id < {n_queries} AND q.vec_id <> c.vec_id
-),
-pairs AS (
-  SELECT cand.qid, cand.cid, {dot} AS dot, qq.n AS na, cc.n AS nb
-  FROM cand JOIN qn qq ON qq.vec_id = cand.qid JOIN qn cc ON cc.vec_id = cand.cid
-),
-ranked AS (
-  SELECT qid, cid, dot, {rank} AS rank_key,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY {rank} DESC, cid ASC) AS rnk
-  FROM pairs
-)
-SELECT qid, cid, dot, rank_key, rnk FROM ranked WHERE rnk <= {k}
-"""
-
-
 def token_stats_sql() -> str:
     return """
 WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents)
@@ -378,59 +222,6 @@ SELECT doc_id, md5(text) AS doc_md5,
        list_min([md5(array_to_string(list_slice(w, j + 1, j + {window}), ' '))
                  for j in range(greatest(len(w) - {window}, 0) + 1)]) AS winnow
 FROM d
-"""
-
-
-def ann_ivf_topk_sql(
-    k: int = 5, n_queries: int = 10, n_centroids: int = 16, nprobe: int = 4
-) -> str:
-    """Twin of similarity.ann_ivf_topk: md5-seeded centroids, argmax list
-    assignment, nprobe-list probing, exact integer scoring."""
-    dot_vc = _dot_expr("v.q", "c.cv")
-    dot = _dot_expr("qq.q", "cc.q")
-    rank = _RANK_SQL.format(dot="dot")
-    return f"""
-WITH {_QE},
-cents AS (
-  SELECT row_number() OVER (ORDER BY mk, vec_id) AS cent_id, q AS cv, n AS cn
-  FROM (SELECT md5(CAST(vec_id AS VARCHAR)) AS mk, vec_id, q, n FROM qn
-        ORDER BY mk, vec_id LIMIT {n_centroids}) seeds
-),
-arank AS (
-  SELECT v.vec_id, c.cent_id, {dot_vc} AS dot, v.n AS na, c.cn AS nb
-  FROM qn v CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY {rank} DESC, cent_id ASC) AS rn
-    FROM arank) t WHERE rn = 1
-),
-probe AS (
-  SELECT vec_id AS qid, cent_id FROM (
-    SELECT vec_id, cent_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY {rank} DESC, cent_id ASC) AS rn
-    FROM arank WHERE vec_id < {n_queries}) t WHERE rn <= {nprobe}
-),
-cand AS (
-  SELECT p.qid, a.vec_id AS cid
-  FROM probe p JOIN assign a ON a.cent_id = p.cent_id
-  WHERE p.qid <> a.vec_id
-),
-pairs AS (
-  SELECT cand.qid, cand.cid, {dot} AS dot, qq.n AS na, cc.n AS nb
-  FROM cand JOIN qn qq ON qq.vec_id = cand.qid
-            JOIN qn cc ON cc.vec_id = cand.cid
-),
-ranked AS (
-  SELECT qid, cid, dot, {rank} AS rank_key,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY {rank} DESC, cid ASC) AS rnk
-  FROM pairs
-)
-SELECT qid, cid, dot, rank_key, rnk FROM ranked WHERE rnk <= {k}
 """
 
 
@@ -762,42 +553,6 @@ SELECT doc_id, n_words, n_sentences,
        n_words * 1000000 // n_sentences
          + 100 * (n_long * 1000000 // n_words) AS lix_ppm
 FROM base
-"""
-
-
-def semantic_clusters_sql(
-    cos_threshold: float = 0.4, tables: int = 8, planes: int = 3
-) -> str:
-    """Twin of dedup.semantic_clusters: the dup_embedding_sql pair relation
-    verbatim, closed under a recursive min-reachability CTE over vec_ids."""
-    t2 = int(round(cos_threshold * cos_threshold * 10_000))
-    dot = _dot_expr("a.q", "b.q")
-    per_table = " UNION ALL ".join(
-        f"SELECT vec_id, {_bucket_expr('q', t, planes)} AS bucket, {t} AS tbl FROM qn"
-        for t in range(tables)
-    )
-    return f"""
-WITH RECURSIVE {_QE},
-qb AS ({per_table}),
-cand AS (
-  SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-  FROM qb x JOIN qb y
-    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id
-),
-pairs AS (
-  SELECT c.a, c.b
-  FROM cand c JOIN qn a ON a.vec_id = c.a JOIN qn b ON b.vec_id = c.b
-  WHERE {dot} > 0 AND {dot} * {dot} * 10000 >= {t2} * a.n * b.n
-),
-edges AS (
-  SELECT a AS x, b AS y FROM pairs UNION SELECT b, a FROM pairs
-),
-reach(x, y) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-)
-SELECT x AS vec_id, min(y) AS cluster_rep FROM reach GROUP BY x
 """
 
 

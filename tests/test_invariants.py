@@ -53,12 +53,11 @@ def test_rerun_deterministic(spark):
 
 
 def test_no_oracle_queries_match_pinned_goldens(spark):
-    """Committed golden value-hashes for the two driver queries whose
-    semantics are not SQL-expressible (kg_spectral: iterative eigh+DBSCAN;
-    ann_ivf_kmeans_topk: iterative k-means|| fit). Both already carry
-    independent algorithmic oracles (NumPy twin / recall floor); this pin
-    makes the exact output on the fixed testdata a regression contract too.
-    Hashes verified stable across local[4]/local[8]/local[32]
+    """Committed golden value-hash for the one driver query whose
+    semantics are not SQL-expressible (kg_spectral: iterative eigh+DBSCAN).
+    It already carries an independent algorithmic oracle (its NumPy twin);
+    this pin makes the exact output on the fixed testdata a regression
+    contract too. Hash verified stable across local[4]/local[8]/local[32]
     (tools/goldenpin.py). Regenerate with:  python tools/goldenpin.py
     """
     import __spark_entry__ as entry
@@ -67,7 +66,6 @@ def test_no_oracle_queries_match_pinned_goldens(spark):
     GOLDEN = {  # sf_dir -> {query: (rows, md5)}
         "/root/testdata/sf0.001": {
             "kg_spectral": (2174, "5278e604cc860e67cded94676351f47b"),
-            "ann_ivf_kmeans_topk": (50, "9776870db3ce94d359eaf6e7bb3ee823"),
         },
     }
     qs = entry.queries()

@@ -1,11 +1,11 @@
 """Optional-dependency integration smokes for the production swap points.
 
 The engine ships deterministic stand-ins (whitespace tokenizer, fake jpeg
-encoder, trigram embedding) with REAL Spark plumbing; these tests wire the
-actual production libraries — tiktoken, PIL, sentence-transformers — through
-the same mapInPandas / encoder-callable seams at least once, proving the
-batch shapes and schemas hold against a non-mock implementation. Each test
-skips cleanly where the library (or its model/BPE asset) is unavailable.
+encoder) with REAL Spark plumbing; these tests wire the actual production
+libraries — tiktoken, PIL — through the same mapInPandas / encoder-callable
+seams at least once, proving the batch shapes and schemas hold against a
+non-mock implementation. Each test skips cleanly where the library (or its
+BPE asset) is unavailable.
 """
 
 from __future__ import annotations
@@ -104,54 +104,3 @@ def test_compress_media_with_real_pil_encoder(spark):
     assert r.byte_len == len(bytes(r.payload))
     assert r.fits == (r.byte_len <= target)
     Image.open(io.BytesIO(bytes(r.payload))).verify()  # still a valid JPEG
-
-
-# ---- sentence-transformers through the embedding batch path ----------------
-
-
-@pytest.mark.skipif(
-    not _has("sentence_transformers"), reason="sentence-transformers not installed"
-)
-def test_embedding_path_with_real_sentence_encoder(spark):
-    """A real SentenceTransformer (the reference's encoder,
-    parameter.py:14-20) driven through the engine's Arrow-batched embedding
-    shape: mapInPandas batch encode -> integer quantization -> exact cosine
-    top-1 must return a paraphrase above an unrelated sentence."""
-    try:
-        from sentence_transformers import SentenceTransformer
-
-        model = SentenceTransformer("all-MiniLM-L6-v2")
-    except Exception as exc:  # model download needs network
-        pytest.skip(f"sentence model unavailable: {exc}")
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    sents = [
-        (0, "the cat sat on the mat"),
-        (1, "a feline rested on the rug"),
-        (2, "quarterly revenue grew by twelve percent"),
-    ]
-    df = spark.createDataFrame(sents, "vec_id long, sentence string")
-
-    def encode(batches):
-        for pdf in batches:
-            vecs = model.encode(list(pdf["sentence"]), convert_to_numpy=True)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "embedding": [v.tolist() for v in vecs]}
-            )
-
-    emb = df.mapInPandas(encode, schema="vec_id long, embedding array<float>")
-    rows = {r.vec_id: r.embedding for r in emb.collect()}
-    dims = len(rows[0])
-    assert dims > 0 and all(len(v) == dims for v in rows.values())
-    # integer-quantized cosine, the engine's exact-arithmetic contract
-    q = {k: [round(x * 1000) for x in v] for k, v in rows.items()}
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb)
-
-    assert cos(q[0], q[1]) > cos(q[0], q[2])

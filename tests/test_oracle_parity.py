@@ -4,6 +4,9 @@ checks on the oracle's own SQL that parity on the test data cannot reach."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import duckdb
 import pytest
 from conftest import SF_TINY
@@ -23,10 +26,21 @@ KG_TABLES = [
 
 def test_registry_pairs_every_query_with_its_oracle():
     """Every oracle names a registered query, and every query has an oracle
-    except the two non-SQL ones (checked by row count and by golden pins)."""
+    except the non-SQL kg_spectral (checked by row count and by its golden
+    pin)."""
     qs, os_ = set(entrymod.queries()), set(entrymod.oracle_sql())
-    assert qs - os_ == {"kg_spectral", "ann_ivf_kmeans_topk"}
+    assert qs - os_ == {"kg_spectral"}
     assert os_ <= qs
+
+
+def test_coverage_names_only_registry_queries():
+    """Every backticked registry-style name in COVERAGE.md is a key of
+    ``queries()``, so the coverage matrix cannot cite a deleted entry."""
+    text = (Path(entrymod.__file__).parent / "COVERAGE.md").read_text()
+    cited = set(re.findall(
+        r"`((?:kg|qctx|ingest|mm|text|dup|ann|curation|events)_\w+)`", text))
+    assert cited, "no registry names found in COVERAGE.md"
+    assert sorted(cited - set(entrymod.queries())) == []
 
 
 @pytest.fixture(scope="module")

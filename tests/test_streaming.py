@@ -8,8 +8,6 @@ import shutil
 from _kill import SPARK, run_child
 from conftest import SF_TINY
 
-from pyspark.sql import functions as F
-
 from mmgraphrag_spark.streaming import incremental
 
 
@@ -111,123 +109,3 @@ def test_killed_ingest_restarts_to_the_clean_tables(spark, tmp_path):
         assert not b.isEmpty(), table
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
 
-
-def test_stream_near_duplicate_gate_matches_batch_collapse(spark, tmp_path):
-    """Streaming MinHash+LSH admission gate: feeding doc_id-ordered batches
-    admits exactly the batch pipeline's cluster representatives when
-    near-dup components are replica cliques — across TWO separate gate runs
-    sharing state (checkpoint + bucket store), and within one batch that
-    contains its own duplicates."""
-    from mmgraphrag_spark.operators import dedup
-
-    src = str(tmp_path / "gate_src")
-    out = str(tmp_path / "gate_out")
-    ckpt = str(tmp_path / "gate_ckpt")
-
-    base = (
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-        .orderBy("doc_id").limit(12)
-    )
-    # replica families: each original gets an exact-duplicate twin at
-    # doc_id+1000 (clique components; Jaccard 1.0)
-    originals = base
-    replicas = base.withColumn("doc_id", F.col("doc_id") + F.lit(1000))
-    # a brand-new family arriving entirely inside batch 2: two duplicates
-    # of each other and of nothing admitted before
-    novel_text = "zebra quantum lattice " * 40
-    novel = spark.createDataFrame(
-        [(2001, novel_text, "en", "synt", len(novel_text)),
-         (2002, novel_text, "en", "synt", len(novel_text))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    all_docs = originals.unionByName(replicas).unionByName(novel)
-
-    def drain():
-        q = incremental.stream_near_duplicates(spark, src, out, ckpt)
-        q.awaitTermination(180)
-
-    # batch 1: originals only (low ids first = doc_id-ordered feed)
-    originals.write.mode("append").parquet(src)
-    drain()
-    admitted1 = set(
-        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
-    )
-    # originals share no near-dups among themselves at sf_tiny? verify via
-    # the batch operator rather than assuming:
-    want1 = set(
-        r.doc_id
-        for r in dedup.duplicate_clusters(originals)
-        .filter(F.col("doc_id") == F.col("cluster_rep")).collect()
-    )
-    assert admitted1 == want1
-
-    # batch 2: replicas + the novel family, same checkpoint -> state resumes
-    replicas.unionByName(novel).write.mode("append").parquet(src)
-    drain()
-    admitted2 = set(
-        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
-    )
-    want_all = set(
-        r.doc_id
-        for r in dedup.duplicate_clusters(all_docs)
-        .filter(F.col("doc_id") == F.col("cluster_rep")).collect()
-    )
-    assert admitted2 == want_all
-    # every replica was rejected; exactly one of the novel pair admitted
-    assert not any(d >= 1000 and d < 2000 for d in admitted2)
-    assert len(admitted2 & {2001, 2002}) == 1
-    # the bucket store indexes exactly the admitted docs
-    store_docs = set(
-        r.doc_id
-        for r in spark.read.parquet(f"{out}/lsh_buckets")
-        .select("doc_id").distinct().collect()
-    )
-    assert store_docs == admitted2
-
-
-def test_near_dup_gate_micro_batch_replay_is_idempotent(spark, tmp_path):
-    """A replayed micro-batch (same batch_id) must converge to the same
-    state even when the prior attempt was PARTIAL — only the admitted table
-    written, the bucket store not yet (the non-atomic window foreachBatch
-    replay can land in)."""
-    out = str(tmp_path / "replay_out")
-
-    docs = (
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-        .orderBy("doc_id").limit(6)
-    )
-    dup = docs.limit(3).withColumn("doc_id", F.col("doc_id") + F.lit(1000))
-
-    # batch 0 admits the originals
-    incremental.near_dup_process_batch(spark, docs, 0, out)
-    admitted0 = {r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()}
-    store0 = sorted(
-        (r.doc_id, r.band, r.bkey)
-        for r in spark.read.parquet(f"{out}/lsh_buckets").collect()
-    )
-
-    # simulate a PARTIAL attempt of batch 1: admitted written, store not.
-    # A naive gate reading that state would see the dup docs as "already
-    # admitted" text but form no candidates (no bucket rows) and re-admit.
-    dup.withColumn("lang", F.col("lang")).write.mode("overwrite").parquet(
-        f"{out}/admitted/run=direct/batch_id=1"
-    )
-
-    # replay batch 1 in full: must ignore its own partial rows, reject the
-    # duplicates of batch 0's admissions, and leave both tables consistent
-    incremental.near_dup_process_batch(spark, dup, 1, out)
-    admitted_replay = {
-        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
-    }
-    store_replay = sorted(
-        (r.doc_id, r.band, r.bkey)
-        for r in spark.read.parquet(f"{out}/lsh_buckets").collect()
-    )
-    assert admitted_replay == admitted0          # every dup rejected
-    assert store_replay == store0                # store matches admitted
-
-    # replaying AGAIN changes nothing (fixpoint)
-    incremental.near_dup_process_batch(spark, dup, 1, out)
-    assert {
-        r.doc_id for r in spark.read.parquet(f"{out}/admitted").collect()
-    } == admitted0

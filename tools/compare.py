@@ -17,7 +17,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from mmgraphrag_spark import oracle  # noqa: E402
 from mmgraphrag_spark.session import get_spark  # noqa: E402
 
-TABLES = ["documents", "embeddings"]
+TABLES = ["documents"]
 
 
 def norm(df, cols):

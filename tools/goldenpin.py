@@ -1,7 +1,9 @@
-"""Compute (and check stability of) driver-style value hashes for the two
-no-oracle driver queries, so tests can pin them as committed goldens.
+"""Compute (and check stability of) the driver-style value hash of the
+no-oracle driver query, kg_spectral, so tests can pin it as a committed
+golden.
 
 Usage: python tools/goldenpin.py [cores] [sf_dir]
+sf_dir defaults to the sf0.001 tier, the one tests/test_invariants.py pins.
 Prints one line per query: <name> <rows> <md5-of-normed-rows>.
 """
 
@@ -33,13 +35,13 @@ def value_hash(pdf) -> str:
 
 def main() -> None:
     cores = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
     import __spark_entry__ as entry
     from mmgraphrag_spark.session import get_spark
 
     spark = get_spark("goldenpin", cores=cores)
     qs = entry.queries()
-    for name in ("kg_spectral", "ann_ivf_kmeans_topk"):
+    for name in ("kg_spectral",):
         pdf = qs[name](spark, sf_dir).toPandas()
         print(name, len(pdf), value_hash(pdf), flush=True)
 
