@@ -6,7 +6,7 @@ twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
 The registry holds the KG build stages, the query path, the ingest readers
-and the text and dedup analytics over the documents, each keyed by name.
+and the text analytics over the documents, each keyed by name.
 Every entry except ``kg_spectral`` has an exact DuckDB twin, which
 ``tools/compare.py`` checks.
 
@@ -31,7 +31,7 @@ from dataclasses import replace  # noqa: E402
 
 from mmgraphrag_spark import api, oracle, oracle_extra, synth  # noqa: E402
 from mmgraphrag_spark.config import DEFAULT  # noqa: E402
-from mmgraphrag_spark.operators import dedup, textstats  # noqa: E402
+from mmgraphrag_spark.operators import textstats  # noqa: E402
 from mmgraphrag_spark.sources import docx, mineru, pdf  # noqa: E402
 
 # S3 media-context word radius for the driver query (reference default is
@@ -58,7 +58,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # ---- text and dedup analytics over the documents ------------------
+        # ---- text analytics over the documents ----------------------------
         # sparse TF-IDF dot-product nearest documents via a df-capped
         # inverted index
         "text_docsim": lambda s, d: textstats.docsim_topk(
@@ -68,19 +68,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_drift": lambda s, d: textstats.source_drift(
             textstats.docs_table(s, d)
         ),
-        # canonical-document election: keep the highest-quality member of
-        # each near-dup cluster (clusters × quality, compositional twin)
-        "dup_canonical": lambda s, d: dedup.canonical_documents(
-            dedup.docs_table(s, d)
-        ),
         # first BPE merge round: corpus adjacent char-pair counts, top-k
         "text_bpe_pairs": lambda s, d: textstats.bpe_pair_counts(
             textstats.docs_table(s, d)
-        ),
-        # directed shingle containment (doc-in-doc detection, Broder 1997's
-        # asymmetric sibling of Jaccard) — inverted-index join, df-capped
-        "dup_containment": lambda s, d: dedup.containment_pairs(
-            textstats.docs_table(s, d), threshold=0.2
         ),
         # LIX readability in exact integer ppm (log/syllable-free by design)
         "text_readability": lambda s, d: textstats.readability(
@@ -92,39 +82,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ),
         # exact Gini-impurity lexical diversity (the log-free entropy twin)
         "text_gini": lambda s, d: textstats.gini_diversity(
-            dedup.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # corpus bigram-LM fluency scores (KenLM-style filtering in exact
         # integer ppm): rare transitions given the corpus score low
-        "text_lm_score": lambda s, d: textstats.lm_scores(dedup.docs_table(s, d)),
+        "text_lm_score": lambda s, d: textstats.lm_scores(textstats.docs_table(s, d)),
         # full winnowing fingerprint selection (MOSS): strict local-min
         # selector + cross-doc sharing counts; ~1/window fp density
         "text_winnow": lambda s, d: textstats.winnow_fingerprints(
-            dedup.docs_table(s, d)
-        ),
-        # CCNet-style paragraph-grain exact dedup: keep-first occurrence
-        # rank per block hash, linear in corpus size (rank, not pairs)
-        "dup_paragraph": lambda s, d: dedup.paragraph_dedup(
-            dedup.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
         # BM25 retrieval: rarest-terms query set, exact-integer scoring
         # (raw-ratio idf + integer-cleared tf saturation, k1=1.2 b=0.75)
-        "text_bm25": lambda s, d: textstats.bm25_topk(dedup.docs_table(s, d)),
-        # ExactSubstr-style signal: per-doc token coverage by word k-grams
-        # shared with other documents (interval-union window, no row blowup)
-        "dup_span_coverage": lambda s, d: dedup.crossdoc_span_coverage(
-            dedup.docs_table(s, d)
-        ),
+        "text_bm25": lambda s, d: textstats.bm25_topk(textstats.docs_table(s, d)),
         # Gopher-style repetition quality signals (top-2-gram share,
         # duplicated-3-gram fraction)
         "text_repetition": lambda s, d: textstats.repetition_scores(
-            dedup.docs_table(s, d)
+            textstats.docs_table(s, d)
         ),
-        "text_tfidf": lambda s, d: textstats.tfidf_topk(dedup.docs_table(s, d)),
-        "text_token_stats": lambda s, d: textstats.token_stats(dedup.docs_table(s, d)),
-        "text_quality": lambda s, d: textstats.quality_scores(dedup.docs_table(s, d)),
-        "text_langid": lambda s, d: textstats.language_id(dedup.docs_table(s, d)),
-        "text_fingerprints": lambda s, d: textstats.fingerprints(dedup.docs_table(s, d)),
+        "text_tfidf": lambda s, d: textstats.tfidf_topk(textstats.docs_table(s, d)),
+        "text_token_stats": lambda s, d: textstats.token_stats(
+            textstats.docs_table(s, d)
+        ),
+        "text_quality": lambda s, d: textstats.quality_scores(
+            textstats.docs_table(s, d)
+        ),
+        "text_langid": lambda s, d: textstats.language_id(textstats.docs_table(s, d)),
+        "text_fingerprints": lambda s, d: textstats.fingerprints(
+            textstats.docs_table(s, d)
+        ),
         # ---- core pipeline -------------------------------------------------
         "kg_spans": api.spans,
         "kg_chunks": api.chunks,
@@ -174,21 +160,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the FULL deterministic prompt chain incl. multimodal fills
         # (reference query.py:414-470), image info derived distributedly
         "qctx_prompt_chain": lambda s, d: api.qctx_prompt_chain(s, d, CHAIN_CFG),
-        # training-data pipeline: dedup
-        "dup_exact": lambda s, d: dedup.exact_duplicates(dedup.docs_table(s, d)),
-        "dup_clusters": lambda s, d: dedup.duplicate_clusters(dedup.docs_table(s, d)),
         # ---- variants and the rendered query deliverables ----------------
-        "dup_ngram_jaccard": lambda s, d: dedup.ngram_jaccard_pairs(dedup.docs_table(s, d)),
-        "dup_simhash": lambda s, d: dedup.simhash(dedup.docs_table(s, d)),
         "kg_mentions_gleaned": lambda s, d: api.mentions(s, d, GLEANED_CFG),
         "kg_mentions_gleaned2": lambda s, d: api.mentions(s, d, GLEANED2_CFG),
-        # large-star/small-star components (O(log n) rounds on stringy
-        # graphs): same relation, same oracle — a physical-strategy variant
-        "dup_clusters_star": lambda s, d: dedup.duplicate_clusters(
-            dedup.docs_table(s, d), method="star"
-        ),
-        "dup_minhash": lambda s, d: dedup.minhash_near_duplicates(dedup.docs_table(s, d)),
-        "dup_simhash_pairs": lambda s, d: dedup.simhash_near_duplicates(dedup.docs_table(s, d)),
         "qctx_seeds_vdb": api.qctx_seeds_vdb,
         # the final query deliverables: rendered context CSV blocks + the
         # filled answer system prompt (reference query.py:263-311, 402-405)
@@ -201,9 +175,7 @@ def oracle_sql() -> dict[str, str]:
     return {
         "text_docsim": oracle_extra.docsim_sql(),
         "text_drift": oracle_extra.source_drift_sql(),
-        "dup_canonical": oracle_extra.canonical_docs_sql(),
         "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
-        "dup_containment": oracle_extra.containment_sql(threshold=0.2),
         "text_readability": oracle_extra.readability_sql(),
         "text_hapax": oracle_extra.hapax_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
@@ -236,23 +208,14 @@ def oracle_sql() -> dict[str, str]:
         "qctx_render": oracle.qctx_render_sql(),
         "qctx_prompt": oracle.qctx_prompt_sql(),
         "qctx_prompt_chain": oracle.qctx_prompt_chain_sql(CHAIN_CFG),
-        "dup_exact": oracle_extra.dup_exact_sql(),
-        "dup_minhash": oracle_extra.dup_minhash_sql(),
-        "dup_clusters": oracle_extra.dup_clusters_sql(),
-        "dup_clusters_star": oracle_extra.dup_clusters_sql(),
-        "dup_ngram_jaccard": oracle_extra.ngram_jaccard_sql(),
-        "dup_simhash": oracle_extra.dup_simhash_sql(),
-        "dup_simhash_pairs": oracle_extra.dup_simhash_pairs_sql(),
         "text_token_stats": oracle_extra.token_stats_sql(),
         "text_quality": oracle_extra.quality_sql(),
         "text_langid": oracle_extra.langid_sql(),
         "text_fingerprints": oracle_extra.fingerprints_sql(),
         "text_tfidf": oracle_extra.tfidf_sql(),
         "text_repetition": oracle_extra.repetition_sql(),
-        "dup_span_coverage": oracle_extra.crossdoc_span_sql(),
         "text_bm25": oracle_extra.bm25_sql(),
         "text_lm_score": oracle_extra.lm_scores_sql(),
         "text_gini": oracle_extra.gini_sql(),
         "text_winnow": oracle_extra.winnow_sql(),
-        "dup_paragraph": oracle_extra.paragraph_dedup_sql(),
     }

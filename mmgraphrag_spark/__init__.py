@@ -12,14 +12,13 @@ Layout:
   config        pipeline parameters (chunk window, extraction rules, fusion)
   synth         deterministic interleaved-docs (spans) synthesizer
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
-  oracle_extra  DuckDB-SQL twins of the dedup and text operators
+  oracle_extra  DuckDB-SQL twins of the text operators
   api           DataFrame-in/DataFrame-out public API (the registry bodies;
                 KG tables read a session-scoped Pipeline build)
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
-                query_ctx, answer, multimodal, graphml, replay, dedup,
-                textstats
+                query_ctx, answer, multimodal, graphml, replay, textstats
   plans/        staged pipeline runner with checkpoints + lineage + metrics
   streaming/    foreachBatch incremental KG ingest
 """

@@ -65,10 +65,5 @@ class PipelineConfig:
     qctx_k: int = 5
     qctx_token_budget: int = 4000
 
-    # document dedup (operators/dedup.py)
-    minhash_perms: int = 16
-    minhash_bands: int = 4
-    shingle_size: int = 3
-
 
 DEFAULT = PipelineConfig()

@@ -438,7 +438,7 @@ def fusion_blocks(
         if len(part):
             yield _fuse_partition(part, eps, merge_t2, cluster_t2, dims, knn)
 
-    # project to exactly what _fuse_block consumes BEFORE the exchange and
+    # project to exactly what _fuse_partition consumes BEFORE the exchange and
     # the Python boundary (the join key 'surface' duplicated the vec's
     # information into every shuffled row)
     cols = both.select("doc_id", "media_ref", "entity_name", "side", "vec")

@@ -24,7 +24,7 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
 
 def docs_table(spark, sf_dir: str) -> DataFrame:
-    """The full documents relation (dedup.docs_table keeps only id+text)."""
+    """The documents relation: id, text, language and source."""
     return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text", "lang", "source"
     )

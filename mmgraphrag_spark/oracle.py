@@ -330,7 +330,7 @@ nearby AS (
    AND t.wpos >= a.anchor - {K} AND t.wpos < a.anchor + {K}
   WHERE len(t.tok) >= {mlen}
 ),
--- trigram-embedding fusion twin (fusion.py trigram_vector/_fuse_block, exact
+-- trigram-embedding fusion twin (fusion.py trigram_vector/_fuse_partition, exact
 -- int64 fixed-point throughout): signed feature-hashed char-3-gram vectors,
 -- M6 clusters = connected components of the cos>=cluster_cos affinity
 -- (recursive min-label propagation), M5 = kNN majority-label transfer over
@@ -434,7 +434,7 @@ knn_top AS (
 ),
 maj AS (
   -- majority component over the k nearest; ties -> component of the nearest
-  -- candidate (min rn), mirroring _fuse_block
+  -- candidate (min rn), mirroring _fuse_partition
   SELECT doc_id, media_ref, img_name, rep FROM (
     SELECT g.*, row_number() OVER (PARTITION BY doc_id, media_ref, img_name
                                    ORDER BY cnt DESC, best_rn ASC) AS rn

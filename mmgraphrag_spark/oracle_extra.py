@@ -1,155 +1,9 @@
-"""DuckDB-SQL twins of the document operators (dedup / textstats).
+"""DuckDB-SQL twins of the textstats operators.
 Integer-scaled metrics throughout → bit-exact cross-engine comparison.
 Parameters mirror the operator defaults.
 """
 
 from __future__ import annotations
-
-from .config import DEFAULT, PipelineConfig
-
-
-def dup_exact_sql() -> str:
-    return """
-WITH h AS (SELECT doc_id, md5(text) AS content_hash FROM documents)
-SELECT doc_id, keep_id, content_hash FROM (
-  SELECT doc_id, content_hash,
-         min(doc_id) OVER (PARTITION BY content_hash) AS keep_id
-  FROM h
-) t WHERE doc_id <> keep_id
-"""
-
-
-def _shingle_cte(cfg: PipelineConfig) -> str:
-    k = cfg.shingle_size
-    return f"""
-d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-sh AS (
-  SELECT doc_id,
-         list_distinct([array_to_string(list_slice(w, j + 1, j + {k}), ' ')
-                        for j in range(greatest(len(w) - {k}, 0) + 1)]) AS sh
-  FROM d
-)"""
-
-
-def dup_minhash_sql(threshold: float = 0.5, cfg: PipelineConfig = DEFAULT) -> str:
-    perms, bands = cfg.minhash_perms, cfg.minhash_bands
-    r = perms // bands
-    t = int(threshold * 1_000_000)
-    return f"""
-WITH {_shingle_cte(cfg)},
-mh AS (
-  SELECT doc_id, CAST(p.i AS INT) AS i,
-         min(md5(CAST(p.i AS VARCHAR) || '|' || u.s)) AS m
-  FROM sh, UNNEST(sh.sh) AS u(s), UNNEST(range({perms})) AS p(i)
-  GROUP BY doc_id, p.i
-),
-bands AS (
-  SELECT doc_id, i // {r} AS band,
-         md5(string_agg(m, '|' ORDER BY i)) AS bkey
-  FROM mh GROUP BY doc_id, i // {r}
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM bands x JOIN bands y
-    ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-)
-SELECT c.a, c.b,
-       len(list_intersect(sa.sh, sb.sh)) * 1000000
-         // len(list_distinct(sa.sh || sb.sh)) AS jaccard_pm
-FROM cand c JOIN sh sa ON sa.doc_id = c.a JOIN sh sb ON sb.doc_id = c.b
-WHERE len(list_intersect(sa.sh, sb.sh)) * 1000000
-      // len(list_distinct(sa.sh || sb.sh)) >= {t}
-"""
-
-
-def dup_clusters_sql(threshold: float = 0.5, cfg: PipelineConfig = DEFAULT) -> str:
-    """Connected components over the verified minhash pair graph via a
-    recursive transitive-closure CTE: cluster_rep = min doc_id reachable
-    (singletons are their own representative) — the exact twin of the
-    Spark min-label-propagation fixpoint."""
-    perms, bands = cfg.minhash_perms, cfg.minhash_bands
-    r = perms // bands
-    t = int(threshold * 1_000_000)
-    return f"""
-WITH RECURSIVE {_shingle_cte(cfg)},
-mh AS (
-  SELECT doc_id, CAST(p.i AS INT) AS i,
-         min(md5(CAST(p.i AS VARCHAR) || '|' || u.s)) AS m
-  FROM sh, UNNEST(sh.sh) AS u(s), UNNEST(range({perms})) AS p(i)
-  GROUP BY doc_id, p.i
-),
-bands AS (
-  SELECT doc_id, i // {r} AS band,
-         md5(string_agg(m, '|' ORDER BY i)) AS bkey
-  FROM mh GROUP BY doc_id, i // {r}
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM bands x JOIN bands y
-    ON x.band = y.band AND x.bkey = y.bkey AND x.doc_id < y.doc_id
-),
-pairs AS (
-  SELECT c.a, c.b
-  FROM cand c JOIN sh sa ON sa.doc_id = c.a JOIN sh sb ON sb.doc_id = c.b
-  WHERE len(list_intersect(sa.sh, sb.sh)) * 1000000
-        // len(list_distinct(sa.sh || sb.sh)) >= {t}
-),
-edges AS (
-  SELECT a AS x, b AS y FROM pairs UNION SELECT b, a FROM pairs
-),
-reach(x, y) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-)
-SELECT x AS doc_id, min(y) AS cluster_rep FROM reach GROUP BY x
-"""
-
-
-def _simhash_cte() -> str:
-    from .operators.dedup import SIMHASH_BITS
-
-    return f"""
-st AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-hv AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, {SIMHASH_BITS // 4}))::BIGINT AS hv FROM st),
-votes AS (
-  SELECT doc_id, CAST(r.j AS INT) AS j,
-         sum(CASE WHEN (hv >> CAST(r.j AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-  FROM hv, UNNEST(range({SIMHASH_BITS})) AS r(j) GROUP BY doc_id, r.j
-),
-sim AS (
-  SELECT doc_id,
-         CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << j) ELSE 0 END) AS BIGINT) AS simhash
-  FROM votes GROUP BY doc_id
-)"""
-
-
-def dup_simhash_sql() -> str:
-    return f"WITH {_simhash_cte()} SELECT doc_id, simhash FROM sim"
-
-
-def dup_simhash_pairs_sql(max_hamming: int = 2) -> str:
-    from .operators.dedup import SIMHASH_BLOCKS, _BLOCK_BITS, _BLOCK_MASK
-
-    blocks = " UNION ALL ".join(
-        f"SELECT doc_id, simhash, {i} AS h,"
-        f" (simhash >> {i * _BLOCK_BITS}) & {_BLOCK_MASK} AS hk FROM sim"
-        for i in range(SIMHASH_BLOCKS)
-    )
-    return f"""
-WITH {_simhash_cte()},
-halves AS (
-  SELECT doc_id, simhash, h, hk FROM ({blocks}) u
-),
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b,
-         x.simhash AS sa, y.simhash AS sb
-  FROM halves x JOIN halves y
-    ON x.h = y.h AND x.hk = y.hk AND x.doc_id < y.doc_id
-)
-SELECT a, b, bit_count(xor(sa, sb)) AS hamming
-FROM cand WHERE bit_count(xor(sa, sb)) <= {max_hamming}
-"""
 
 
 def token_stats_sql() -> str:
@@ -225,36 +79,6 @@ FROM d
 """
 
 
-def ngram_jaccard_sql(
-    threshold: float = 0.5, max_df: int = 100000, cfg: PipelineConfig = DEFAULT
-) -> str:
-    """Twin of dedup.ngram_jaccard_pairs: inverted-index exact Jaccard with
-    the identical stop-shingle df cap; union sizes from the FULL sets."""
-    t = int(threshold * 1_000_000)
-    return f"""
-WITH {_shingle_cte(cfg)},
-posted0 AS (
-  SELECT doc_id, u.s AS s FROM sh, UNNEST(sh.sh) AS u(s)
-),
-rare AS (
-  SELECT s FROM posted0 GROUP BY s HAVING count(*) <= {max_df}
-),
-posted AS (
-  SELECT p.doc_id, p.s FROM posted0 p JOIN rare r ON r.s = p.s
-),
-inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-  FROM posted x JOIN posted y ON x.s = y.s AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM posted0 GROUP BY doc_id)
-SELECT i.a, i.b,
-       i.inter * 1000000 // (sa.n + sb.n - i.inter) AS jaccard_pm
-FROM inter i JOIN sizes sa ON sa.doc_id = i.a JOIN sizes sb ON sb.doc_id = i.b
-WHERE i.inter * 1000000 // (sa.n + sb.n - i.inter) >= {t}
-"""
-
-
 def tfidf_sql(k: int = 5) -> str:
     """Twin of textstats.tfidf_topk: raw-ratio integer IDF, top-k per doc by
     (tfidf_ppm desc, term asc)."""
@@ -321,46 +145,6 @@ FROM top2 t JOIN sz s USING (doc_id) JOIN dup3 d3 USING (doc_id)
 """
 
 
-def crossdoc_span_sql(n: int = 8, min_docs: int = 2, max_df: int = 100_000) -> str:
-    """Twin of dedup.crossdoc_span_coverage: cross-document duplicated
-    k-gram interval-union coverage per doc, exact integers."""
-    return f"""
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-occ AS (
-  SELECT doc_id, u.o.j AS j, u.o.g AS g FROM (
-    SELECT doc_id,
-           CASE WHEN len(w) >= {n} THEN
-             [{{'j': j,
-                'g': md5(array_to_string(list_slice(w, j + 1, j + {n}), ' '))}}
-              for j in range(len(w) - {n} + 1)]
-           ELSE [] END AS os
-    FROM d), UNNEST(os) AS u(o)
-),
-dup AS (
-  SELECT g FROM occ GROUP BY g
-  HAVING count(DISTINCT doc_id) >= {min_docs}
-     AND count(DISTINCT doc_id) <= {max_df}
-),
-hit AS (SELECT doc_id, j FROM occ WHERE g IN (SELECT g FROM dup)),
-cov AS (
-  SELECT doc_id, count(*) AS dup_starts,
-         SUM(CASE WHEN prev IS NULL THEN {n}
-                  ELSE least({n}, j - prev) END) AS covered
-  FROM (SELECT doc_id, j,
-               lag(j) OVER (PARTITION BY doc_id ORDER BY j) AS prev
-        FROM hit)
-  GROUP BY doc_id
-),
-sz AS (SELECT doc_id, len(w) AS n_tokens FROM d)
-SELECT s.doc_id,
-       CAST(s.n_tokens AS BIGINT) AS n_tokens,
-       CAST(COALESCE(c.dup_starts, 0) AS BIGINT) AS dup_starts,
-       CAST(COALESCE(c.covered, 0) AS BIGINT) AS covered_tokens,
-       CAST(COALESCE(c.covered, 0) * 1000000 // s.n_tokens AS BIGINT) AS dup_ppm
-FROM sz s LEFT JOIN cov c USING (doc_id)
-"""
-
-
 def bm25_sql(k: int = 10, n_query_terms: int = 3) -> str:
     """Twin of textstats.bm25_topk: rarest-terms query set, raw-ratio integer
     IDF, integer-cleared tf saturation (k1=1.2, b=0.75). All-integer => exact
@@ -388,33 +172,6 @@ SELECT term, doc_id, tf, df, score_ppm, rnk FROM (
          ) AS rnk
   FROM tf t2 JOIN qterms t USING (term) JOIN dls l USING (doc_id), n
 ) WHERE rnk <= {k}
-"""
-
-
-def paragraph_dedup_sql(para_words: int = 16) -> str:
-    """Twin of dedup.paragraph_dedup: identical block split, md5 hash, and
-    keep-first occurrence rank by (doc_id, para_idx)."""
-    return f"""
-WITH base AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-paras AS (
-  SELECT doc_id, g.i AS para_idx,
-         md5(array_to_string(
-           w[g.i * {para_words} + 1 : g.i * {para_words} + {para_words}],
-           ' ')) AS para_hash
-  FROM base, UNNEST(generate_series(0, (len(w) - 1) // {para_words})) AS g(i)
-),
-flagged AS (
-  SELECT doc_id,
-         ROW_NUMBER() OVER (PARTITION BY para_hash
-                            ORDER BY doc_id, para_idx) AS rn
-  FROM paras
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_paras,
-       CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
-       CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) * 1000000 // COUNT(*)
-            AS BIGINT) AS dup_ppm
-FROM flagged GROUP BY doc_id
 """
 
 
@@ -497,41 +254,6 @@ SELECT doc_id,
        CAST(1000000 - SUM(c * c) * 1000000 // (SUM(c) * SUM(c)) AS BIGINT)
          AS gini_ppm
 FROM counts GROUP BY doc_id
-"""
-
-
-def containment_sql(
-    threshold: float = 0.5, max_df: int = 100_000, cfg: PipelineConfig = DEFAULT
-) -> str:
-    """Twin of dedup.containment_pairs: directed shingle containment
-    |S_src ∩ S_dst| / |S_src| with the identical stop-shingle df cap;
-    denominators from the FULL sets."""
-    t = int(threshold * 1_000_000)
-    return f"""
-WITH {_shingle_cte(cfg)},
-posted0 AS (
-  SELECT doc_id, u.s AS s FROM sh, UNNEST(sh.sh) AS u(s)
-),
-rare AS (
-  SELECT s FROM posted0 GROUP BY s HAVING count(*) <= {max_df}
-),
-posted AS (
-  SELECT p.doc_id, p.s FROM posted0 p JOIN rare r ON r.s = p.s
-),
-inter AS (
-  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS inter
-  FROM posted x JOIN posted y ON x.s = y.s AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-),
-dirs AS (
-  SELECT a AS src, b AS dst, inter FROM inter
-  UNION ALL
-  SELECT b AS src, a AS dst, inter FROM inter
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM posted0 GROUP BY doc_id)
-SELECT b.src, b.dst, b.inter * 1000000 // s.n AS containment_pm
-FROM dirs b JOIN sizes s ON s.doc_id = b.src
-WHERE b.inter * 1000000 // s.n >= {t}
 """
 
 
@@ -662,29 +384,4 @@ SELECT "left", "right", n_pairs, rnk FROM (
                  AS BIGINT) AS rnk
   FROM counts
 ) WHERE rnk <= {k}
-"""
-
-
-def canonical_docs_sql() -> str:
-    """Twin of dedup.canonical_documents: the dup_clusters and quality
-    stage twins composed verbatim, then one full-frame first_value window
-    per cluster with the identical (quality DESC, doc_id ASC) election."""
-    return f"""
-WITH cl AS ({dup_clusters_sql()}),
-q AS ({quality_sql()})
-SELECT doc_id, cluster_rep, quality_ppm,
-       FIRST_VALUE(doc_id) OVER (
-         PARTITION BY cluster_rep
-         ORDER BY quality_ppm DESC, doc_id ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-       ) AS canonical_id,
-       doc_id = FIRST_VALUE(doc_id) OVER (
-         PARTITION BY cluster_rep
-         ORDER BY quality_ppm DESC, doc_id ASC
-         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-       ) AS kept
-FROM (
-  SELECT cl.doc_id, cl.cluster_rep, q.quality_ppm
-  FROM cl JOIN q USING (doc_id)
-)
 """

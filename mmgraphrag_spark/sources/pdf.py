@@ -54,7 +54,12 @@ from .docx import MEDIA_SCHEMA, SPAN_SCHEMA, _context
 
 _OBJ_RE = re.compile(rb"(\d+)\s+0\s+obj(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
-_BT_RE = re.compile(rb"BT(.*?)ET", re.S)
+# a BT/ET block. Its literal strings are skipped whole, so a shown "ET" does
+# not end the block; a "(" that opens no escaped-paren literal (nested
+# parens) is read as one byte. The alternatives are exclusive, so a block
+# with no ET fails without backtracking.
+_LIT = rb"(?:[^()\\]|\\.)*\)"
+_BT_RE = re.compile(rb"BT((?:\(" + _LIT + rb"|\((?!" + _LIT + rb")|[^(])*?)ET", re.S)
 # in-order BT-block tokens: font select, literal show, hex show, TJ array
 _BT_TOK_RE = re.compile(
     rb"/(\w+)\s+[-\d.]+\s+Tf"

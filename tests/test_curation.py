@@ -11,7 +11,7 @@ from conftest import SF_TINY
 
 from pyspark.sql import functions as F
 
-from mmgraphrag_spark.operators import dedup, textstats
+from mmgraphrag_spark.operators import textstats
 
 
 def _docs(spark):
@@ -19,7 +19,7 @@ def _docs(spark):
 
 
 def test_tfidf_topk_matches_python_twin(spark):
-    docs = dedup.docs_table(spark, SF_TINY).limit(40)
+    docs = textstats.docs_table(spark, SF_TINY).limit(40)
     rows = docs.collect()
     n_docs = len(rows)
     tf: dict[tuple[int, str], int] = {}
@@ -86,7 +86,7 @@ def test_repetition_scores_degenerate_bounds(spark):
 
 
 def test_bm25_topk_matches_python_twin(spark):
-    docs = dedup.docs_table(spark, SF_TINY).limit(40)
+    docs = textstats.docs_table(spark, SF_TINY).limit(40)
     rows = docs.collect()
     n_docs = len(rows)
     tf: dict[tuple[int, str], int] = {}

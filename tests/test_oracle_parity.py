@@ -4,6 +4,7 @@ checks on the oracle's own SQL that parity on the test data cannot reach."""
 
 from __future__ import annotations
 
+import dataclasses
 import re
 from pathlib import Path
 
@@ -12,7 +13,7 @@ import pytest
 from conftest import SF_TINY
 
 import __spark_entry__ as entrymod
-from mmgraphrag_spark import oracle
+from mmgraphrag_spark import config, oracle
 from mmgraphrag_spark.config import DEFAULT
 from mmgraphrag_spark.operators import canonicalize as canon
 from tools.compare import compare, oracle_connection
@@ -41,6 +42,19 @@ def test_coverage_names_only_registry_queries():
         r"`((?:kg|qctx|ingest|mm|text|dup|ann|curation|events)_\w+)`", text))
     assert cited, "no registry names found in COVERAGE.md"
     assert sorted(cited - set(entrymod.queries())) == []
+
+
+def test_every_config_field_is_read():
+    """Every ``PipelineConfig`` field is read as ``.<field>`` by some package
+    module besides ``config.py``, so a deleted operator cannot leave its
+    knob behind."""
+    pkg = Path(config.__file__).parent
+    src = "\n".join(
+        p.read_text() for p in pkg.rglob("*.py") if p != Path(config.__file__)
+    )
+    unread = [f.name for f in dataclasses.fields(config.PipelineConfig)
+              if not re.search(rf"\.{f.name}\b", src)]
+    assert unread == []
 
 
 @pytest.fixture(scope="module")

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import string
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from mmgraphrag_spark.sources import docx, pdf
 
@@ -24,9 +24,11 @@ _jpeg = st.binary(min_size=4, max_size=64).map(
 @settings(max_examples=25, deadline=None)
 @given(st.lists(st.one_of(_line, st.tuples(st.just("image"), _jpeg)),
                 min_size=1, max_size=8))
+@example(items=["ET", "a (ET) b"])
 def test_pdf_write_parse_round_trip(tmp_path_factory, items):
     """write_pdf ∘ parse_pdf preserves every text line (escapes included)
-    and every image byte-for-byte, in order."""
+    and every image byte-for-byte, in order. A shown "ET" must not end its
+    text block."""
     p = tmp_path_factory.mktemp("pdfprop") / "doc.pdf"
     pdf.write_pdf([items], str(p))
     spans, media = pdf.parse_pdf("doc", p.read_bytes())

@@ -14,7 +14,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from mmgraphrag_spark import oracle  # noqa: E402
 from mmgraphrag_spark.session import get_spark  # noqa: E402
 
 TABLES = ["documents"]
@@ -65,15 +64,9 @@ def compare(spark, con, sf_dir: str, name: str) -> tuple[bool, str]:
     """Run registry query ``name`` in Spark and its DuckDB twin; return
     (parity, report). Parity means equal column names, equal row counts and
     equal ``norm`` rows; on a value mismatch the report names up to three
-    rows found on one side only.
-
-    Every CTE of the oracle SQL is materialised (``oracle.materialized``,
-    which ``oracle.cte_prefix`` already applies to its own): the same rows,
-    but each CTE is evaluated once instead of once per reference (the
-    inlined ``oracle_extra`` dedup twins run up to 7x slower at sf0.001)."""
+    rows found on one side only."""
     sdf = entrymod.queries()[name](spark, sf_dir).toPandas()
-    sql = oracle.materialized(entrymod.oracle_sql()[name])
-    odf = con.execute(sql).df()
+    odf = con.execute(entrymod.oracle_sql()[name]).df()
     scols, ocols = sorted(sdf.columns), sorted(odf.columns)
     ok_schema = scols == ocols
     report = (
