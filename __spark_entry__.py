@@ -5,8 +5,8 @@
 twin (mmgraphrag_spark.oracle). Column names are aliased identically on both
 sides.
 
-The registry holds the KG build stages, the query path, the ingest readers
-and the text analytics over the documents, each keyed by name.
+The registry holds the KG build stages, the query path and the ingest
+readers, each keyed by name.
 Every entry except ``kg_spectral`` has an exact DuckDB twin, which
 ``tools/compare.py`` checks.
 
@@ -29,9 +29,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from dataclasses import replace  # noqa: E402
 
-from mmgraphrag_spark import api, oracle, oracle_extra, synth  # noqa: E402
+from mmgraphrag_spark import api, oracle, synth  # noqa: E402
 from mmgraphrag_spark.config import DEFAULT  # noqa: E402
-from mmgraphrag_spark.operators import textstats  # noqa: E402
 from mmgraphrag_spark.sources import docx, mineru, pdf  # noqa: E402
 
 # S3 media-context word radius for the driver query (reference default is
@@ -58,59 +57,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # ---- text analytics over the documents ----------------------------
-        # sparse TF-IDF dot-product nearest documents via a df-capped
-        # inverted index
-        "text_docsim": lambda s, d: textstats.docsim_topk(
-            textstats.docs_table(s, d)
-        ),
-        # per-source unigram total-variation drift vs the corpus blend
-        "text_drift": lambda s, d: textstats.source_drift(
-            textstats.docs_table(s, d)
-        ),
-        # first BPE merge round: corpus adjacent char-pair counts, top-k
-        "text_bpe_pairs": lambda s, d: textstats.bpe_pair_counts(
-            textstats.docs_table(s, d)
-        ),
-        # LIX readability in exact integer ppm (log/syllable-free by design)
-        "text_readability": lambda s, d: textstats.readability(
-            textstats.docs_table(s, d)
-        ),
-        # per-doc vocabulary profile: type-token ratio + hapax share
-        "text_hapax": lambda s, d: textstats.hapax_stats(
-            textstats.docs_table(s, d)
-        ),
-        # exact Gini-impurity lexical diversity (the log-free entropy twin)
-        "text_gini": lambda s, d: textstats.gini_diversity(
-            textstats.docs_table(s, d)
-        ),
-        # corpus bigram-LM fluency scores (KenLM-style filtering in exact
-        # integer ppm): rare transitions given the corpus score low
-        "text_lm_score": lambda s, d: textstats.lm_scores(textstats.docs_table(s, d)),
-        # full winnowing fingerprint selection (MOSS): strict local-min
-        # selector + cross-doc sharing counts; ~1/window fp density
-        "text_winnow": lambda s, d: textstats.winnow_fingerprints(
-            textstats.docs_table(s, d)
-        ),
-        # BM25 retrieval: rarest-terms query set, exact-integer scoring
-        # (raw-ratio idf + integer-cleared tf saturation, k1=1.2 b=0.75)
-        "text_bm25": lambda s, d: textstats.bm25_topk(textstats.docs_table(s, d)),
-        # Gopher-style repetition quality signals (top-2-gram share,
-        # duplicated-3-gram fraction)
-        "text_repetition": lambda s, d: textstats.repetition_scores(
-            textstats.docs_table(s, d)
-        ),
-        "text_tfidf": lambda s, d: textstats.tfidf_topk(textstats.docs_table(s, d)),
-        "text_token_stats": lambda s, d: textstats.token_stats(
-            textstats.docs_table(s, d)
-        ),
-        "text_quality": lambda s, d: textstats.quality_scores(
-            textstats.docs_table(s, d)
-        ),
-        "text_langid": lambda s, d: textstats.language_id(textstats.docs_table(s, d)),
-        "text_fingerprints": lambda s, d: textstats.fingerprints(
-            textstats.docs_table(s, d)
-        ),
         # ---- core pipeline -------------------------------------------------
         "kg_spans": api.spans,
         "kg_chunks": api.chunks,
@@ -173,11 +119,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "text_docsim": oracle_extra.docsim_sql(),
-        "text_drift": oracle_extra.source_drift_sql(),
-        "text_bpe_pairs": oracle_extra.bpe_pairs_sql(),
-        "text_readability": oracle_extra.readability_sql(),
-        "text_hapax": oracle_extra.hapax_sql(),
         "kg_spans": oracle.q(oracle.spans_select()),
         "ingest_spans": oracle.q(oracle.spans_select()),
         "ingest_media_context": oracle.q(oracle.media_context_select(CTX_WORDS)),
@@ -208,14 +149,4 @@ def oracle_sql() -> dict[str, str]:
         "qctx_render": oracle.qctx_render_sql(),
         "qctx_prompt": oracle.qctx_prompt_sql(),
         "qctx_prompt_chain": oracle.qctx_prompt_chain_sql(CHAIN_CFG),
-        "text_token_stats": oracle_extra.token_stats_sql(),
-        "text_quality": oracle_extra.quality_sql(),
-        "text_langid": oracle_extra.langid_sql(),
-        "text_fingerprints": oracle_extra.fingerprints_sql(),
-        "text_tfidf": oracle_extra.tfidf_sql(),
-        "text_repetition": oracle_extra.repetition_sql(),
-        "text_bm25": oracle_extra.bm25_sql(),
-        "text_lm_score": oracle_extra.lm_scores_sql(),
-        "text_gini": oracle_extra.gini_sql(),
-        "text_winnow": oracle_extra.winnow_sql(),
     }

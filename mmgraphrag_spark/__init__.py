@@ -12,13 +12,12 @@ Layout:
   config        pipeline parameters (chunk window, extraction rules, fusion)
   synth         deterministic interleaved-docs (spans) synthesizer
   oracle        DuckDB-SQL twins of every SQL-expressible stage (parity gate)
-  oracle_extra  DuckDB-SQL twins of the text operators
   api           DataFrame-in/DataFrame-out public API (the registry bodies;
                 KG tables read a session-scoped Pipeline build)
   sources/      MinerU, .docx and PDF readers -> spans
   functions/    shared codegen helpers (trigram hashing, cleaning, prompts)
   operators/    chunker, extractor, canonicalize, media, fusion, entity_vdb,
-                query_ctx, answer, multimodal, graphml, replay, textstats
+                query_ctx, answer, multimodal, graphml, replay
   plans/        staged pipeline runner with checkpoints + lineage + metrics
   streaming/    foreachBatch incremental KG ingest
 """

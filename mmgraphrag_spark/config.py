@@ -11,9 +11,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 GRAPH_FIELD_SEP = "<SEP>"  # reference: /root/reference/mmgraphrag/prompt.py:1
-TUPLE_DELIM = "<|>"  # reference prompt delimiters: prompt.py:189-192
-RECORD_DELIM = "##"
-COMPLETE_DELIM = "<|COMPLETE|>"
 
 
 @dataclass(frozen=True)

@@ -88,11 +88,9 @@ def get_spark(
         # 18.2 s isolated @32, within this host's noise); at cluster scale
         # the shuffle crosses a network where zstd's ratio gain over lz4
         # multiplies effective bisection bandwidth, and checkpoint bytes
-        # hit remote storage. Override via extra_conf / SPARK_GRAFT_CODEC.
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_CODEC", "zstd"))
-        .config("spark.sql.parquet.compression.codec",
-                os.environ.get("SPARK_GRAFT_CODEC", "zstd"))
+        # hit remote storage. Override via extra_conf.
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

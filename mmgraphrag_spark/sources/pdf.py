@@ -54,25 +54,18 @@ from .docx import MEDIA_SCHEMA, SPAN_SCHEMA, _context
 
 _OBJ_RE = re.compile(rb"(\d+)\s+0\s+obj(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.S)
-# a BT/ET block. Its literal strings are skipped whole, so a shown "ET" does
-# not end the block; a "(" that opens no escaped-paren literal (nested
-# parens) is read as one byte. The alternatives are exclusive, so a block
-# with no ET fails without backtracking.
-_LIT = rb"(?:[^()\\]|\\.)*\)"
-_BT_RE = re.compile(rb"BT((?:\(" + _LIT + rb"|\((?!" + _LIT + rb")|[^(])*?)ET", re.S)
-# in-order BT-block tokens: font select, literal show, hex show, TJ array
+# a literal string's parens and escapes: a backslash escapes the byte after it
+_PAREN_RE = re.compile(rb"\\.|[()]", re.S)
+# what ends a BT block's scan: ET, unless it sits inside a literal string
+_BT_END_RE = re.compile(rb"\(|ET")
+# in-order BT-block tokens: font select, literal string, hex show, TJ array
 _BT_TOK_RE = re.compile(
-    rb"/(\w+)\s+[-\d.]+\s+Tf"
-    rb"|\(((?:[^()\\]|\\.)*)\)\s*(?:Tj|')"
-    rb"|<([0-9A-Fa-f\s]*)>\s*(?:Tj|')"
-    rb"|\[((?:[^\]\\]|\\.)*)\]\s*TJ",
-    re.S,
+    rb"/(\w+)\s+[-\d.]+\s+Tf|\(|<([0-9A-Fa-f\s]*)>\s*(?:Tj|')|\[", re.S
 )
 # inside a TJ array: literal/hex strings interleaved with kerning numbers
-_ARRAY_TOK_RE = re.compile(
-    rb"\(((?:[^()\\]|\\.)*)\)|<([0-9A-Fa-f\s]*)>|(-?\d+(?:\.\d+)?)", re.S
-)
-_ARRAY_STR_RE = re.compile(rb"\(((?:[^()\\]|\\.)*)\)", re.S)
+_ARRAY_TOK_RE = re.compile(rb"\(|<([0-9A-Fa-f\s]*)>|(-?\d+(?:\.\d+)?)|\]", re.S)
+_SHOW_RE = re.compile(rb"\s*(?:Tj|')")
+_TJ_RE = re.compile(rb"\s*TJ")
 # a TJ kern adjustment at or beyond this magnitude (thousandths of an em,
 # applied negatively) renders as an inter-word gap — the standard heuristic
 # for PDFs that kern word spaces instead of emitting space glyphs
@@ -650,6 +643,87 @@ def _decode_show(raw: bytes, font) -> str:
     return "".join(out)
 
 
+def _literal_ends(data: bytes) -> dict[int, int]:
+    """Offset of each ``(`` that opens a literal string -> the offset just
+    past its closing ``)``. A literal string may hold balanced, unescaped
+    parentheses, and a backslash escapes the byte after it. A ``(`` that
+    never closes has no entry; the scanners read it as one byte."""
+    ends: dict[int, int] = {}
+    opened: list[int] = []
+    for m in _PAREN_RE.finditer(data):
+        if m.group() == b"(":
+            opened.append(m.start())
+        elif m.group() == b")" and opened:
+            ends[opened.pop()] = m.end()
+    return ends
+
+
+def _bt_blocks(cs: bytes, ends: dict[int, int]) -> Iterator[tuple[int, int]]:
+    """(start, end) of each BT/ET block's payload in ``cs``, in order. Its
+    literal strings are skipped whole, so a shown "ET" does not end it."""
+    p = cs.find(b"BT")
+    while p >= 0:
+        j = p + 2
+        while (m := _BT_END_RE.search(cs, j)) and m.group() == b"(":
+            j = ends.get(m.start(), m.end())
+        if m:
+            yield p + 2, m.start()
+            p = cs.find(b"BT", m.end())
+        else:  # no ET: try the next BT, as a regex search would
+            p = cs.find(b"BT", p + 1)
+
+
+def _tj_array(cs: bytes, i: int, end: int, ends: dict[int, int]):
+    """The ``[ .. ] TJ`` array opening at ``cs[i]``: (items, offset past
+    TJ), or None when ``cs[i:end]`` holds no such array. An item is a show
+    string's bytes or a kern number."""
+    items: list[bytes | float] = []
+    j = i + 1
+    while m := _ARRAY_TOK_RE.search(cs, j, end):
+        j = m.end()
+        if m.group(1) is not None:
+            items.append(_hexbytes(m.group(1)))
+        elif m.group(2) is not None:
+            items.append(float(m.group(2)))
+        elif m.group() == b"]":
+            tj = _TJ_RE.match(cs, j, end)
+            return (items, tj.end()) if tj else None
+        elif m.start() in ends:
+            j = ends[m.start()]
+            items.append(_unescape(cs[m.start() + 1:j - 1]))
+    return None
+
+
+def _block_text(cs: bytes, start: int, end: int, ends: dict[int, int], fonts,
+                font) -> tuple[str, object]:
+    """The text a BT/ET payload ``cs[start:end]`` shows, and the font active
+    after it (text state persists across blocks)."""
+    parts: list[str] = []
+    j = start
+    while sm := _BT_TOK_RE.search(cs, j, end):
+        j = sm.end()
+        if sm.group(1) is not None:  # /Name size Tf
+            font = fonts.get(sm.group(1), _SIMPLE)
+        elif sm.group(2) is not None:  # <hex> Tj | '
+            parts.append(_decode_show(_hexbytes(sm.group(2)), font))
+        elif sm.group() == b"(":  # (..) Tj | '
+            if sm.start() in ends:
+                j = ends[sm.start()]
+                show = _SHOW_RE.match(cs, j, end)
+                if show:
+                    raw = _unescape(cs[sm.start() + 1:j - 1])
+                    parts.append(_decode_show(raw, font))
+                    j = show.end()
+        elif arr := _tj_array(cs, sm.start(), end, ends):  # [ .. ] TJ
+            items, j = arr
+            for x in items:
+                if isinstance(x, bytes):
+                    parts.append(_decode_show(x, font))
+                elif x <= -TJ_SPACE_KERN:
+                    parts.append(" ")
+    return "".join(parts).strip(), font
+
+
 def parse_pdf(doc_id: str, blob: bytes, context_length: int = 100):
     """One document -> (span rows, media rows); pure function."""
     pieces = []       # ('text', decoded) | ('image',) placeholders in order
@@ -663,43 +737,23 @@ def parse_pdf(doc_id: str, blob: bytes, context_length: int = 100):
             continue
         if b"/Subtype" in body and b"/Image" in body:
             img_objs.append(data)
-        elif _BT_RE.search(data) or _DO_RE.search(data):
-            content_streams.append(data)
+        else:
+            ends = _literal_ends(data)
+            if next(_bt_blocks(data, ends), None) or _DO_RE.search(data):
+                content_streams.append((data, ends))
     fonts = _font_cmaps(bodies)
 
     draw_n = 0
     cur_font: object = _SIMPLE  # text state persists across BT blocks
-    for cs in content_streams:
+    for cs, ends in content_streams:
         # walk the stream once, emitting text blocks and draws in order
-        events = []
-        for bt in _BT_RE.finditer(cs):
-            events.append((bt.start(), "bt", bt.group(1)))
+        events = [(a, "bt", b) for a, b in _bt_blocks(cs, ends)]
         for do in _DO_RE.finditer(cs):
             # Do inside a BT/ET block is not legal PDF; treat all as draws
             events.append((do.start(), "do", None))
-        for _, kind, payload in sorted(events, key=lambda e: e[0]):
+        for start, kind, end in sorted(events, key=lambda e: e[0]):
             if kind == "bt":
-                parts: list[str] = []
-                for sm in _BT_TOK_RE.finditer(payload):
-                    if sm.group(1) is not None:  # /Name size Tf
-                        cur_font = fonts.get(sm.group(1), _SIMPLE)
-                    elif sm.group(2) is not None:  # (..) Tj | '
-                        parts.append(_decode_show(_unescape(sm.group(2)), cur_font))
-                    elif sm.group(3) is not None:  # <hex> Tj | '
-                        parts.append(_decode_show(_hexbytes(sm.group(3)), cur_font))
-                    else:  # [ .. ] TJ
-                        for x in _ARRAY_TOK_RE.finditer(sm.group(4)):
-                            if x.group(1) is not None:
-                                parts.append(
-                                    _decode_show(_unescape(x.group(1)), cur_font)
-                                )
-                            elif x.group(2) is not None:
-                                parts.append(
-                                    _decode_show(_hexbytes(x.group(2)), cur_font)
-                                )
-                            elif float(x.group(3)) <= -TJ_SPACE_KERN:
-                                parts.append(" ")
-                text = "".join(parts).strip()
+                text, cur_font = _block_text(cs, start, end, ends, fonts, cur_font)
                 if text:
                     pieces.append(("text", text))
             else:

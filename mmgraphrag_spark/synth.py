@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import DEFAULT, PipelineConfig
 
-SPAN_STRUCT = "struct<kind:string,text:string,media_ref:string,offset:int>"
-
 
 def flat_spans(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """Exploded spans relation: (doc_id, kind, text, media_ref, offset)."""

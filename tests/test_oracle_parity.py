@@ -4,8 +4,10 @@ checks on the oracle's own SQL that parity on the test data cannot reach."""
 
 from __future__ import annotations
 
+import ast
 import dataclasses
 import re
+from collections import Counter
 from pathlib import Path
 
 import duckdb
@@ -55,6 +57,38 @@ def test_every_config_field_is_read():
     unread = [f.name for f in dataclasses.fields(config.PipelineConfig)
               if not re.search(rf"\.{f.name}\b", src)]
     assert unread == []
+
+
+def test_every_package_name_is_used():
+    """Every top-level def, class or assigned name of the package appears
+    somewhere besides its defining statement: in the package, the tests, the
+    tools, perfbench or the driver contract. A name that only a test reads
+    counts as used, since a test's recompute is a reference."""
+    root = Path(entrymod.__file__).parent
+    corpus = [root / "__spark_entry__.py"] + [
+        p for d in ("mmgraphrag_spark", "tests", "tools", "perfbench")
+        for p in (root / d).rglob("*.py")
+    ]
+    words = Counter(w for p in corpus for w in re.findall(r"\w+", p.read_text()))
+    unused = []
+    for p in (root / "mmgraphrag_spark").rglob("*.py"):
+        src = p.read_text()
+        lines = src.splitlines()
+        for node in ast.parse(src).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name)]
+            else:
+                continue
+            first = min([node.lineno]
+                        + [d.lineno for d in getattr(node, "decorator_list", [])])
+            stmt = Counter(re.findall(r"\w+", "\n".join(lines[first - 1:node.end_lineno])))
+            unused += [f"{p.relative_to(root)}:{n}" for n in names
+                       if not re.fullmatch(r"__\w+__", n) and words[n] <= stmt[n]]
+    assert unused == []
 
 
 @pytest.fixture(scope="module")
