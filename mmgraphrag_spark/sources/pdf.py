@@ -673,24 +673,24 @@ def _bt_blocks(cs: bytes, ends: dict[int, int]) -> Iterator[tuple[int, int]]:
             p = cs.find(b"BT", p + 1)
 
 
-def _tj_array(cs: bytes, i: int, end: int, ends: dict[int, int]):
-    """The ``[ .. ] TJ`` array opening at ``cs[i]``: (items, offset past
-    TJ), or None when ``cs[i:end]`` holds no such array. An item is a show
-    string's bytes or a kern number."""
-    items: list[bytes | float] = []
+def _tj_array(cs: bytes, i: int, end: int, ends: dict[int, int], font):
+    """The text of the ``[ .. ] TJ`` array opening at ``cs[i]`` and the
+    offset past TJ, or None when ``cs[i:end]`` holds no such array."""
+    parts: list[str] = []
     j = i + 1
     while m := _ARRAY_TOK_RE.search(cs, j, end):
         j = m.end()
         if m.group(1) is not None:
-            items.append(_hexbytes(m.group(1)))
+            parts.append(_decode_show(_hexbytes(m.group(1)), font))
         elif m.group(2) is not None:
-            items.append(float(m.group(2)))
+            if float(m.group(2)) <= -TJ_SPACE_KERN:
+                parts.append(" ")
         elif m.group() == b"]":
             tj = _TJ_RE.match(cs, j, end)
-            return (items, tj.end()) if tj else None
+            return ("".join(parts), tj.end()) if tj else None
         elif m.start() in ends:
             j = ends[m.start()]
-            items.append(_unescape(cs[m.start() + 1:j - 1]))
+            parts.append(_decode_show(_unescape(cs[m.start() + 1:j - 1]), font))
     return None
 
 
@@ -714,13 +714,9 @@ def _block_text(cs: bytes, start: int, end: int, ends: dict[int, int], fonts,
                     raw = _unescape(cs[sm.start() + 1:j - 1])
                     parts.append(_decode_show(raw, font))
                     j = show.end()
-        elif arr := _tj_array(cs, sm.start(), end, ends):  # [ .. ] TJ
-            items, j = arr
-            for x in items:
-                if isinstance(x, bytes):
-                    parts.append(_decode_show(x, font))
-                elif x <= -TJ_SPACE_KERN:
-                    parts.append(" ")
+        elif arr := _tj_array(cs, sm.start(), end, ends, font):  # [ .. ] TJ
+            text, j = arr
+            parts.append(text)
     return "".join(parts).strip(), font
 
 
