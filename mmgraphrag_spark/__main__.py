@@ -81,13 +81,15 @@ def main() -> None:
     pipe = Pipeline(spark, args.sf_dir, args.work_dir, source=source)
     ran = pipe.run(resume=not args.no_resume)
     if args.export_graphml:
-        from .operators.graphml import export_graphml
+        from .operators import graphml
 
-        export_graphml(
+        frags = f"{args.work_dir}/_graphml"
+        graphml.export_graphml_distributed(
             spark.read.parquet(f"{args.work_dir}/nodes"),
             spark.read.parquet(f"{args.work_dir}/edges"),
-            args.export_graphml,
+            frags,
         )
+        graphml.assemble_graphml(frags, args.export_graphml)
     lin = pipe.lineage().toPandas()
     rows = lin.drop_duplicates("output").set_index("output")["rows_out"]
     print(json.dumps({

@@ -150,7 +150,7 @@ def _qctx_blocks(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
 
 def qctx_render(spark: SparkSession, sf_dir: str, cfg: PipelineConfig = DEFAULT) -> DataFrame:
     """The three rendered context CSV blocks as (block, body) rows — the
-    driver-checked form of query_ctx.render_context (the rendering itself is
+    driver-checked form of query_ctx.context_blocks (the rendering itself is
     the documented driver-side serialization boundary over budget-truncated
     context sets; the oracle twin re-derives every byte in SQL)."""
     e, r, t = _qctx_blocks(spark, sf_dir, cfg)

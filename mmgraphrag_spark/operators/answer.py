@@ -19,7 +19,7 @@ calls themselves are the production swap point, exactly like the extractor):
 a reference user can hand these to their model client unchanged. Driver-side
 by design — inputs are the already-budget-truncated context (tens of rows)
 and a handful of response strings; this is the serialization boundary, the
-same tier as query_ctx.render_context.
+same tier as query_ctx.context_blocks.
 """
 
 from __future__ import annotations

@@ -5,13 +5,12 @@ The reference persists every graph as GraphML
 description, source_id; edge keys d3-d6 = weight, description, source_id,
 order; ``edgedefault="undirected"``). Our canonical store is the checkpoint
 tables — GraphML is an export artifact for parity diffs against the
-reference's example_output, produced driver-side (graphs at human-diff scale;
-the distributed path would be ``df.write.text`` of rendered fragments).
+reference's example_output: executors render the XML fragments
+(:func:`export_graphml_distributed`) and the driver concatenates them into
+one file (:func:`assemble_graphml`).
 """
 
 from __future__ import annotations
-
-from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame
 
@@ -27,52 +26,6 @@ HEADER = """<?xml version='1.0' encoding='utf-8'?>
   <graph edgedefault="undirected">
 """
 FOOTER = "  </graph>\n</graphml>\n"
-
-
-def export_graphml(
-    nodes: DataFrame, edges: DataFrame, path: str, max_rows: int = 1_000_000
-) -> int:
-    """Write nodes+edges as reference-shaped GraphML; returns element count.
-
-    Single-file DRIVER-side serializer — intended for parity-diff exports at
-    reference scale (thousands of elements). It streams every row through the
-    driver via toLocalIterator, so it guards itself: above ``max_rows`` total
-    elements it raises and points at :func:`export_graphml_distributed`,
-    which renders XML executor-side and never moves a row to the driver.
-    """
-    total = nodes.count() + edges.count()
-    if total > max_rows:
-        raise ValueError(
-            f"export_graphml is a driver-side single-file writer; {total} "
-            f"elements exceeds max_rows={max_rows}. Use "
-            "export_graphml_distributed(nodes, edges, out_dir) for large "
-            "graphs (executor-side rendering, part-file output)."
-        )
-    parts: list[str] = [HEADER]
-    n = 0
-    for r in nodes.orderBy("entity_name").toLocalIterator():
-        parts.append(
-            f'    <node id="{escape(r.entity_name)}">\n'
-            f'      <data key="d0">{escape(r.entity_type)}</data>\n'
-            f'      <data key="d1">{escape(r.description)}</data>\n'
-            f'      <data key="d2">{escape(r.source_id)}</data>\n'
-            "    </node>\n"
-        )
-        n += 1
-    for r in edges.orderBy("src", "dst").toLocalIterator():
-        parts.append(
-            f'    <edge source="{escape(r.src)}" target="{escape(r.dst)}">\n'
-            f'      <data key="d3">{r.weight}</data>\n'
-            f'      <data key="d4">{escape(r.description)}</data>\n'
-            f'      <data key="d5">{escape(r.source_id)}</data>\n'
-            f'      <data key="d6">{r["order"]}</data>\n'
-            "    </edge>\n"
-        )
-        n += 1
-    parts.append(FOOTER)
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("".join(parts))
-    return n
 
 
 def _xml_escape_col(col):
@@ -94,9 +47,10 @@ def export_graphml_distributed(nodes: DataFrame, edges: DataFrame, out_dir: str)
         out_dir/edges/part-*    (distributed)
         out_dir/footer.xml      (driver, constant)
 
-    Concatenating header + nodes/* + edges/* + footer in that order yields a
-    valid GraphML document (element order within a section is irrelevant to
-    GraphML semantics); :func:`assemble_graphml` does it driver-side for
+    Nodes are sorted by ``entity_name`` and edges by (``src``, ``dst``), so
+    the part files hold the elements in that order. Concatenating header +
+    nodes/* + edges/* + footer in that order yields one deterministic
+    GraphML document; :func:`assemble_graphml` does it driver-side for
     parity-diff-sized graphs."""
     from pathlib import Path
 
@@ -121,8 +75,10 @@ def export_graphml_distributed(nodes: DataFrame, edges: DataFrame, out_dir: str)
         F.lit('      <data key="d6">'), F.col("order").cast("string"), F.lit("</data>\n"),
         F.lit("    </edge>"),
     )
-    nodes.select(node_xml.alias("value")).write.mode("overwrite").text(f"{out_dir}/nodes")
-    edges.select(edge_xml.alias("value")).write.mode("overwrite").text(f"{out_dir}/edges")
+    (nodes.orderBy("entity_name").select(node_xml.alias("value"))
+     .write.mode("overwrite").text(f"{out_dir}/nodes"))
+    (edges.orderBy("src", "dst").select(edge_xml.alias("value"))
+     .write.mode("overwrite").text(f"{out_dir}/edges"))
     Path(out_dir, "header.xml").write_text(HEADER, encoding="utf-8")
     Path(out_dir, "footer.xml").write_text(FOOTER, encoding="utf-8")
 

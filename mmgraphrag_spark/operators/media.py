@@ -50,7 +50,7 @@ def scene_mentions(media: DataFrame, cfg: PipelineConfig = DEFAULT) -> DataFrame
     toks = _caption_tokens(media)
     # scene entities are block-local (named '<TOK>@<REF>'): the mm-extractor
     # names image entities independently of the text side (reference: the
-    # mm-LLM invents names, img2graph.py:419-441); the fusion stage (M2-M7)
+    # mm-LLM invents names, img2graph.py:419-441); fusion (M2-M7)
     # decides which of them merge into text entities.
     # Dedup FIRST on the short natural key (doc, ref, tok, type) — every
     # output column is a pure function of it, so projecting the
@@ -164,34 +164,22 @@ def ori_img_mentions(media: DataFrame) -> DataFrame:
 
 
 def image_mentions(
-    media: DataFrame,
-    cfg: PipelineConfig = DEFAULT,
-    scene: DataFrame | None = None,
-    objects: DataFrame | None = None,
+    media: DataFrame, scene: DataFrame, objects: DataFrame
 ) -> DataFrame:
-    """E7+E8+E10a union: all image-side entity mentions.
-
-    ``scene`` / ``objects`` accept precomputed (possibly persisted)
-    scene_mentions / detect_objects relations so a caller materializing
-    both image outputs (the pipeline media stage) evaluates each
-    distinct-bearing subtree once instead of once per output.
-    """
-    scene = (scene if scene is not None else scene_mentions(media, cfg)).select(
-        "doc_id", "entity_name", "entity_type", "description", "source_id"
+    """E7+E8+E10a union: all image-side entity mentions, from the
+    :func:`scene_mentions` and :func:`detect_objects` relations (the
+    pipeline's media stage persists both and shares them across its
+    outputs)."""
+    cols = ["doc_id", "entity_name", "entity_type", "description", "source_id"]
+    return (
+        scene.select(cols)
+        .unionByName(object_mentions(objects).select(cols))
+        .unionByName(ori_img_mentions(media))
     )
-    objs = object_mentions(
-        objects if objects is not None else detect_objects(media, cfg)
-    ).select(
-        "doc_id", "entity_name", "entity_type", "description", "source_id"
-    )
-    return scene.unionByName(objs).unionByName(ori_img_mentions(media))
 
 
 def alignment_triples(
-    media: DataFrame,
-    cfg: PipelineConfig = DEFAULT,
-    scene: DataFrame | None = None,
-    objects: DataFrame | None = None,
+    scene: DataFrame, objects: DataFrame, cfg: PipelineConfig = DEFAULT
 ) -> DataFrame:
     """E9: explicit crop→scene alignment relations
     (/root/reference/mmgraphrag/img2graph.py:386-417: per object crop, an
@@ -222,8 +210,7 @@ def alignment_triples(
     # distinct on the short (doc, ref, label) key, concats projected after
     # (same value set — obj_name/osurf are functions of the key)
     objs = (
-        (objects if objects is not None else detect_objects(media, cfg))
-        .select("doc_id", "media_ref", "label")
+        objects.select("doc_id", "media_ref", "label")
         .distinct()
         .select(
             "doc_id", "media_ref",
@@ -233,7 +220,7 @@ def alignment_triples(
             F.upper("label").alias("osurf"),
         )
     )
-    scns = (scene if scene is not None else scene_mentions(media, cfg)).select(
+    scns = scene.select(
         "doc_id", F.col("source_id").alias("media_ref"),
         F.col("entity_name").alias("scn_name"),
         F.expr("split(entity_name, '@')[0]").alias("ssurf"),
@@ -298,20 +285,15 @@ def alignment_triples(
 
 
 def image_triples(
-    media: DataFrame,
-    cfg: PipelineConfig = DEFAULT,
-    scene: DataFrame | None = None,
-    objects: DataFrame | None = None,
+    scene: DataFrame, objects: DataFrame, cfg: PipelineConfig = DEFAULT
 ) -> DataFrame:
     """E10b: weight-10 containment edges (entity -> its ORI_IMG node), plus
     E9 crop→scene alignment relations (alignment_triples). ``scene`` /
     ``objects`` as in :func:`image_mentions`."""
-    scn = scene if scene is not None else scene_mentions(media, cfg)
-    obj = objects if objects is not None else detect_objects(media, cfg)
     members = (
-        scn.select("doc_id", "media_ref", "entity_name")
+        scene.select("doc_id", "media_ref", "entity_name")
         .unionByName(
-            object_mentions(obj).select("doc_id", "media_ref", "entity_name")
+            object_mentions(objects).select("doc_id", "media_ref", "entity_name")
         )
     )
     contained = members.select(
@@ -323,6 +305,4 @@ def image_triples(
         F.col("media_ref").alias("source_id"),
         F.lit(1).alias("order"),
     )
-    return contained.unionByName(
-        alignment_triples(media, cfg, scene=scn, objects=obj)
-    )
+    return contained.unionByName(alignment_triples(scene, objects, cfg))

@@ -305,24 +305,15 @@ def local_context(
     )
 
 
-def render_context(
-    seeds: DataFrame, edges: DataFrame, chunks: DataFrame, chunk_table: DataFrame
-) -> str:
-    """T-group context assembly (reference query.py:263-311): three CSV
-    blocks — entities (id, entity, type, description, rank), relationships
-    (id, source, target, description, weight, rank), sources (id, content) —
-    wrapped in the reference's exact section layout. A caller that also
-    needs the blocks calls :func:`context_blocks` and :func:`wrap_context`,
-    so the context is computed once."""
-    return wrap_context(context_blocks(seeds, edges, chunks, chunk_table))
-
-
 def context_blocks(
     seeds: DataFrame, edges: DataFrame, chunks: DataFrame, chunk_table: DataFrame
 ) -> tuple[str, str, str]:
-    """The three CSV blocks (entities, relationships, sources) separately —
-    the answer-prompt assembler scrapes ORI_IMG rows from the entities block
-    exactly like the reference does (query.py:414-421).
+    """T-group context assembly (reference query.py:263-311): three CSV
+    blocks — entities (id, entity, type, description, rank), relationships
+    (id, source, target, description, weight, rank), sources (id, content).
+    :func:`wrap_context` lays them out in the reference's exact sections;
+    the answer-prompt assembler also scrapes ORI_IMG rows from the entities
+    block exactly like the reference does (query.py:414-421).
 
     The three context sets are collected in the order they hold: the steps
     return them ranked, as local frames whose collect runs no Spark job. The

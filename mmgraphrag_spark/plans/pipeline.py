@@ -21,15 +21,15 @@ with table-per-stage checkpoints:
   per output (tested in tests/test_pipeline.py).
 
 DAG, one line per stage: ``stage{output tables} <- dependency stages``
-(every edge is a parquet checkpoint):
+(every edge is a parquet checkpoint; a stage depends on the stages that
+write the tables it reads):
 
-    spans{spans}                          <- documents.parquet
-    chunks{chunks}                        <- spans
-    extract_raw{extraction_raw}           <- chunks
-    decode{mentions,triples}              <- extract_raw
-    media{img_mentions,img_triples}       <- spans
-    fusion{fusion_blocks}                 <- spans, media
-    graph{nodes,edges,fused_nodes,fused_edges} <- decode, media, fusion
+    spans{spans}                                   <- documents.parquet
+    chunks{chunks}                                 <- spans
+    extract_raw{extraction_raw}                    <- chunks
+    decode{mentions,triples}                       <- extract_raw
+    media{img_mentions,img_triples,fusion_blocks}  <- spans
+    graph{nodes,edges,fused_nodes,fused_edges}     <- decode, media
 
 graph is the one aggregation of the mention/triple checkpoints: it rewires
 them through the fusion merge map and serves the fused graph as
@@ -137,11 +137,13 @@ class Pipeline:
         # nothing, the stored bytes were real
         if table in ("mentions", "triples") and "source_id" not in df.columns:
             df = df.withColumn("source_id", F.col("chunk_id"))
-        if spread:
-            want = self.spark.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() < want:
-                df = df.repartition(want)
-        return df
+        return self._spread(df) if spread else df
+
+    def _spread(self, df: DataFrame) -> DataFrame:
+        """Repartition ``df`` up to the cluster's default parallelism when
+        its scan yields fewer partitions (see :meth:`read`)."""
+        want = self.spark.sparkContext.defaultParallelism
+        return df.repartition(want) if df.rdd.getNumPartitions() < want else df
 
     def graph_inputs(self) -> tuple[DataFrame, DataFrame]:
         """The text+image mention and triple unions, read from the decode
@@ -277,7 +279,8 @@ class Pipeline:
             # loser wait, not recompute). A callable value is resolved only
             # after EVERY plain output has been written, in dict order —
             # lets a later output derive from an earlier output's
-            # checkpoint instead of recomputing its plan.
+            # checkpoint instead of recomputing its plan, or keeps a heavy
+            # output from running beside the plain writes.
             plain = [(t, df) for t, df in produced.items() if not callable(df)]
             derived = [(t, df) for t, df in produced.items() if callable(df)]
             if len(plain) > 1 and _pinned_threads():
@@ -309,7 +312,7 @@ class Pipeline:
         ``parallel=True`` submits independent stages concurrently from worker
         threads (Spark's scheduler interleaves their jobs across the same
         executors — the standard way to keep a cluster busy through stage
-        tails; e.g. the media/fusion branch overlaps the chunk/extract/decode
+        tails; e.g. the media branch overlaps the chunk/extract/decode
         chain). Checkpoint edges make this safe: a stage only starts when
         every dependency stage has COMMITTED its parquet outputs.
         """
@@ -323,10 +326,7 @@ class Pipeline:
             # parallelism so the span derivation + write use every core.
             # No-op at production scale (scans already yield many splits).
             docs = self.spark.read.parquet(f"{self.sf_dir}/documents.parquet")
-            want = self.spark.sparkContext.defaultParallelism
-            if docs.rdd.getNumPartitions() < want:
-                docs = docs.repartition(want)
-            return {"spans": synth.spans_from_docs(docs, cfg)}
+            return {"spans": synth.spans_from_docs(self._spread(docs), cfg)}
 
         def _chunks():
             return {"chunks": chunker.chunk_docs(self.read("spans"), cfg)}
@@ -359,31 +359,24 @@ class Pipeline:
             }
 
         def _media():
-            med = media.media_spans(self.read("spans"))
-            # the two outputs share the scene-mention and object-detection
+            sp = self.read("spans")
+            med = media.media_spans(sp)
+            # the outputs share the scene-mention and object-detection
             # subtrees (each carries its own distinct-exchange): persist both
             # for the stage's writes so the caption explode + dedup runs once
             # per relation instead of once per consuming output (3x for
-            # detect_objects: mentions, containment members, alignment)
+            # detect_objects: mentions, containment members, alignment).
+            # fusion_blocks fuses the persisted scene mentions (the only
+            # image mentions its P7 filter keeps) with the text nearby; as a
+            # callable it is written after the two image tables, so its
+            # Python workers do not run beside their writes.
             scene = media.scene_mentions(med, cfg).persist()
             objs = media.detect_objects(med, cfg).persist()
             return {
-                "img_mentions": media.image_mentions(
-                    med, cfg, scene=scene, objects=objs
-                ),
-                "img_triples": media.image_triples(
-                    med, cfg, scene=scene, objects=objs
-                ),
+                "img_mentions": media.image_mentions(med, scene, objs),
+                "img_triples": media.image_triples(scene, objs, cfg),
+                "fusion_blocks": lambda: fusion.fusion_blocks(sp, med, scene, cfg),
                 "__cleanup__": lambda: (scene.unpersist(), objs.unpersist()),
-            }
-
-        def _fusion():
-            sp = self.read("spans")
-            med = media.media_spans(sp)
-            return {
-                "fusion_blocks": fusion.fusion_blocks(
-                    sp, med, self.read("img_mentions"), cfg
-                )
             }
 
         def _graph():
@@ -418,22 +411,18 @@ class Pipeline:
                 ),
             }
 
-        # name -> (dep stages, lineage inputs, output tables, builder)
-        dag: dict[str, tuple[list[str], list[str], list[str], object]] = {
+        # name -> (lineage inputs, output tables, builder), in topo order
+        dag: dict[str, tuple[list[str], list[str], object]] = {
             "spans": (
-                [],
                 [self.source[1] if self.source else f"{self.sf_dir}/documents.parquet"],
                 ["spans"], _spans,
             ),
-            "chunks": (["spans"], ["spans"], ["chunks"], _chunks),
-            "extract_raw": (["chunks"], ["chunks"], ["extraction_raw"], _extract_raw),
-            "decode": (["extract_raw"], ["extraction_raw"],
-                       ["mentions", "triples"], _decode),
-            "media": (["spans"], ["spans"], ["img_mentions", "img_triples"], _media),
-            "fusion": (["spans", "media"], ["spans", "img_mentions"],
-                       ["fusion_blocks"], _fusion),
-            "graph": (["decode", "media", "fusion"],
-                      ["mentions", "triples", "img_mentions", "img_triples",
+            "chunks": (["spans"], ["chunks"], _chunks),
+            "extract_raw": (["chunks"], ["extraction_raw"], _extract_raw),
+            "decode": (["extraction_raw"], ["mentions", "triples"], _decode),
+            "media": (["spans"], ["img_mentions", "img_triples", "fusion_blocks"],
+                      _media),
+            "graph": (["mentions", "triples", "img_mentions", "img_triples",
                        "fusion_blocks"],
                       ["nodes", "edges", "fused_nodes", "fused_edges"], _graph),
         }
@@ -442,18 +431,22 @@ class Pipeline:
 
         ran: dict[str, bool] = {}
         if not parallel:
-            for name, (_, inputs, outputs, fn) in dag.items():  # topo order
+            for name, (inputs, outputs, fn) in dag.items():
                 ran[name] = self._stage(name, inputs, outputs, fn, resume)
         else:
             import concurrent.futures as cf
 
+            # a stage's deps are the stages that write its inputs
+            writer = {t: name for name, (_, outs, _) in dag.items() for t in outs}
+            deps = {name: {writer[t] for t in inputs if t in writer}
+                    for name, (inputs, _, _) in dag.items()}
             with cf.ThreadPoolExecutor(max_workers=3) as pool:
                 futures: dict[cf.Future, str] = {}
                 pending = dict(dag)
                 while pending or futures:
                     for name in list(pending):
-                        deps, inputs, outputs, fn = pending[name]
-                        if all(d in ran for d in deps):
+                        inputs, outputs, fn = pending[name]
+                        if deps[name] <= ran.keys():
                             # the stage thread inherits the caller's job
                             # group and tags
                             futures[pool.submit(
@@ -463,8 +456,8 @@ class Pipeline:
                             del pending[name]
                     if not futures:
                         raise RuntimeError(
-                            f"unschedulable stages (dependency cycle or "
-                            f"unknown dep): {sorted(pending)}"
+                            f"unschedulable stages (dependency cycle): "
+                            f"{sorted(pending)}"
                         )
                     done, _ = cf.wait(
                         set(futures), return_when=cf.FIRST_COMPLETED

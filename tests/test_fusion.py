@@ -55,7 +55,8 @@ def test_merge_fires_on_near_unequal_surface(spark):
     ])
     flat = synth.explode_spans(docs)
     med = media.media_spans(flat)
-    mm = fusion.merge_map(flat, med, media.image_mentions(med)).collect()
+    mm = fusion.merge_map(flat, med, media.image_mentions(
+        med, media.scene_mentions(med), media.detect_objects(med))).collect()
     got = {(r.old_name, r.new_name) for r in mm}
     assert ("WINDOW@DOC0/IMAGE_1", "WINDOWS") in got
     # sanity: the surfaces really are unequal and the cosine really is < 1
@@ -72,7 +73,8 @@ def test_cluster_components_near_variants_co_cluster(spark):
     ])
     flat = synth.explode_spans(docs)
     med = media.media_spans(flat)
-    blocks = fusion.fusion_blocks(flat, med, media.image_mentions(med))
+    blocks = fusion.fusion_blocks(flat, med, media.image_mentions(
+        med, media.scene_mentions(med), media.detect_objects(med)))
     cl = {r.entity_name: r.cluster_rep
           for r in fusion.cluster_assignments(blocks).collect()}
     assert cl["STREAM"] == cl["STREAMS"] == "STREAM"
@@ -93,7 +95,8 @@ def test_spectral_labels_match_numpy_oracle(spark):
     ])
     flat = synth.explode_spans(docs)
     med = media.media_spans(flat)
-    blocks = fusion.fusion_blocks(flat, med, media.image_mentions(med))
+    blocks = fusion.fusion_blocks(flat, med, media.image_mentions(
+        med, media.scene_mentions(med), media.detect_objects(med)))
     got = {r.entity_name: r.label
            for r in fusion.spectral_assignments(blocks).collect()}
 
@@ -169,7 +172,8 @@ def test_merge_map_semantics_crafted(spark):
     ])
     flat = synth.explode_spans(docs)
     med = media.media_spans(flat)
-    mm = fusion.merge_map(flat, med, media.image_mentions(med)).collect()
+    mm = fusion.merge_map(flat, med, media.image_mentions(
+        med, media.scene_mentions(med), media.detect_objects(med))).collect()
     got = {(r.old_name, r.new_name) for r in mm}
     # 'ALPHA@DOC0/IMAGE_1' merges into nearby text entity 'ALPHA';
     # 'PICT' is len-4 -> an IMG object, excluded from fusion (P7)
@@ -179,7 +183,8 @@ def test_merge_map_semantics_crafted(spark):
 def test_fusion_blocks_deterministic_across_parallelism(spark):
     flat = synth.flat_spans(spark, SF_TINY)
     med = media.media_spans(flat)
-    img = media.image_mentions(med)
+    img = media.image_mentions(
+        med, media.scene_mentions(med), media.detect_objects(med))
     a = (
         fusion.fusion_blocks(flat.repartition(2), med, img).toPandas()
         .sort_values(["media_ref", "kind", "entity_name"]).reset_index(drop=True)

@@ -29,7 +29,8 @@ def test_detector_udf_matches_column_op(spark):
 
 def test_containment_edges_weight_10(spark):
     m = _media(spark)
-    trips = media.image_triples(m).collect()
+    trips = media.image_triples(
+        media.scene_mentions(m), media.detect_objects(m)).collect()
     assert len(trips) > 0
     contained = [t for t in trips if t.description == "contained in image"]
     depicts = [t for t in trips if t.description == "depicts"]
@@ -58,7 +59,8 @@ def test_alignment_picks_most_similar_scene_entity(spark):
                   ("image", "alpha pictures pict", "doc0/image_1", 1)]),
     ])
     med = media.media_spans(synth.explode_spans(docs))
-    al = media.alignment_triples(med).collect()
+    al = media.alignment_triples(
+        media.scene_mentions(med), media.detect_objects(med)).collect()
     got = {tuple(sorted((r.subj, r.obj))) for r in al}
     assert ("DOC0/IMAGE_1/PICT", "PICTURES@DOC0/IMAGE_1") in got
     assert not any("ALPHA@" in a or "ALPHA@" in b for a, b in got)

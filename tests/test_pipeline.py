@@ -104,8 +104,7 @@ def test_mid_pipeline_resume(spark, pipe):
     shutil.rmtree(pipe._path("edges"))
     ran = pipe.run(resume=True)
     assert ran == {"spans": False, "chunks": False, "extract_raw": False,
-                   "decode": False, "media": False,
-                   "fusion": False, "graph": True}
+                   "decode": False, "media": False, "graph": True}
     # earlier stages were not recomputed: their lineage rows are untouched
     after = pipe.lineage().filter("stage = 'spans'").collect()
     assert after == before
@@ -181,6 +180,27 @@ def test_cli_query_answers_like_the_api(spark, pipe):
     assert got == api.local_answer_prompts(spark, SF_TINY, query=query)
 
 
+def test_cli_exports_graphml_sorted(spark, pipe, tmp_path, monkeypatch):
+    """``python -m mmgraphrag_spark --export-graphml PATH`` over a built work
+    dir writes the served nodes and edges, nodes sorted by name and edges by
+    (src, dst): reading the file back gives exactly those rows."""
+    from mmgraphrag_spark import __main__ as cli
+    from mmgraphrag_spark.operators import canonicalize as canon
+    from mmgraphrag_spark.operators.graphml import read_graphml
+
+    out = tmp_path / "kg.graphml"
+    monkeypatch.setattr("sys.argv", [
+        "mmgraphrag_spark", "--sf-dir", SF_TINY, "--work-dir", pipe.work_dir,
+        "--export-graphml", str(out),
+    ])
+    cli.main()
+    nodes, edges = read_graphml(str(out))
+    assert nodes == [r.asDict() for r in pipe.read("nodes", spread=False)
+                     .select(canon.NODE_COLS).orderBy("entity_name").collect()]
+    assert edges == [r.asDict() for r in pipe.read("edges", spread=False)
+                     .select(canon.EDGE_COLS).orderBy("src", "dst").collect()]
+
+
 def test_lineage_and_metrics_rows(pipe):
     lin = pipe.lineage().toPandas()
     assert set(lin["output"]) >= {"spans", "chunks", "mentions", "triples",
@@ -217,8 +237,7 @@ def test_parallel_dag_equals_sequential(spark, tmp_path):
     ran_par = p_par.run(resume=False, parallel=True)
     ran_seq = p_seq.run(resume=False, parallel=False)
     assert ran_par == ran_seq
-    for table in ["spans", "chunks", "mentions", "triples", "img_mentions",
-                  "nodes", "edges", "fused_nodes", "fused_edges"]:
+    for table in OUTPUTS:
         a = p_par.read(table, spread=False)
         b = p_seq.read(table, spread=False)
         assert a.count() == b.count(), table

@@ -103,7 +103,8 @@ def test_render_context_reference_layout(spark):
     ctx_chunks = query_ctx.context_chunks(
         nodes, edges, chunks, DEFAULT.qctx_query, DEFAULT.qctx_k
     )
-    out = query_ctx.render_context(seeds, ctx_edges, ctx_chunks, chunks)
+    out = query_ctx.wrap_context(
+        query_ctx.context_blocks(seeds, ctx_edges, ctx_chunks, chunks))
     for section in ("-----Entities-----", "-----Relationships-----", "-----Sources-----"):
         assert section in out
     assert out.count("```csv") == 3

@@ -162,9 +162,10 @@ def test_graphml_roundtrip_against_reference_shape(replayed, spark, tmp_path):
     one_n = nodes_df.filter(F.col("doc_id") == "image_1").drop("doc_id")
     one_e = edges_df.filter(F.col("doc_id") == "image_1").drop("doc_id")
     out = str(tmp_path / "replayed_image_1.graphml")
-    count = graphml.export_graphml(one_n, one_e, out)
+    graphml.export_graphml_distributed(one_n, one_e, str(tmp_path / "frags"))
+    graphml.assemble_graphml(str(tmp_path / "frags"), out)
     rn, re_ = graphml.read_graphml(out)
-    assert count == len(rn) + len(re_)
+    assert one_n.count() + one_e.count() == len(rn) + len(re_)
     back_nodes = {(n["entity_name"], n["entity_type"]) for n in rn}
     orig_nodes = {(r.entity_name, r.entity_type) for r in one_n.collect()}
     assert back_nodes == orig_nodes
@@ -247,37 +248,3 @@ def test_merge_rewiring_matches_merged_goldens(spark, prev_img, img):
         f"merged_{img} edge P/R {p_e:.3f}/{r_e:.3f} "
         f"only-mine={sorted(got_edges - me)[:6]} only-gold={sorted(me - got_edges)[:6]}"
     )
-
-
-def test_distributed_graphml_export_equals_driver_export(replayed, spark, tmp_path):
-    """S6 scale path: executor-side XML fragments + assembly produce the same
-    graph (node/edge sets and attributes) as the driver-side exporter."""
-    _, _, _, nodes_df, edges_df = replayed
-    one_n = nodes_df.filter(F.col("doc_id") == "image_3").drop("doc_id")
-    one_e = edges_df.filter(F.col("doc_id") == "image_3").drop("doc_id")
-    frag_dir = str(tmp_path / "dist")
-    out = str(tmp_path / "assembled.graphml")
-    graphml.export_graphml_distributed(one_n, one_e, frag_dir)
-    graphml.assemble_graphml(frag_dir, out)
-    ref = str(tmp_path / "driver.graphml")
-    graphml.export_graphml(one_n, one_e, ref)
-    n1, e1 = graphml.read_graphml(out)
-    n2, e2 = graphml.read_graphml(ref)
-    key_n = lambda n: tuple(sorted(n.items()))
-    assert sorted(map(key_n, n1)) == sorted(map(key_n, n2))
-    key_e = lambda e: tuple(sorted((k, v) for k, v in e.items()))
-    assert sorted(map(key_e, e1)) == sorted(map(key_e, e2))
-
-
-def test_export_graphml_size_guard_trips(replayed, spark, tmp_path):
-    """The single-file driver-side exporter must refuse graphs above its
-    max_rows bound and point at the distributed variant."""
-    import pytest
-
-    _, _, _, nodes_df, edges_df = replayed
-    one_n = nodes_df.filter(F.col("doc_id") == "image_1").drop("doc_id")
-    one_e = edges_df.filter(F.col("doc_id") == "image_1").drop("doc_id")
-    out = str(tmp_path / "guarded.graphml")
-    with pytest.raises(ValueError, match="export_graphml_distributed"):
-        graphml.export_graphml(one_n, one_e, out, max_rows=1)
-    assert not (tmp_path / "guarded.graphml").exists()
